@@ -65,8 +65,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (q_embed_neardup_pairs, q_mutual_nn_pairs) stay in: their explicit
 # >100k-row guards make them bounded at any bench SF, and their cost
 # vs the sub-quadratic production paths is exactly what the record
-# should show. _LEGACY_HEADLINE is kept (unused) only so per-query
-# deltas vs BENCH_r01–r04 remain interpretable.
+# should show.
 HEADLINE: list[str] = []  # filled from catalog() in main()
 
 # Drift canary (round-8 verdict item 3; methodology rebuilt in round 9
@@ -219,164 +218,6 @@ def _drift_median(
     if not ratios:
         return None, 0
     return _median(ratios), len(ratios)
-
-_LEGACY_HEADLINE = [
-    "q1_pricing_summary",
-    "q4_order_priority",
-    "q5_region_nation_revenue",
-    "q6_forecast_revenue",
-    "q7_nation_pair_volume",
-    "q9_profit_by_nation_year",
-    "q10_returned_item_topk",
-    "q13_order_count_distribution",
-    "q18_large_volume_customers",
-    "q21_sole_supplier_orders",
-    "q_events_sessionization",
-    "q_events_sliding_10m_5m",
-    "q_conditional_agg_segment",
-    "q_distinct_counts",
-    "q_window_latest_order_per_customer",
-    "q_window_running_revenue",
-    "q_topk_orders_per_priority",
-    "q_date_extraction_revenue",
-    "q_json_extraction_events",
-    "q_dedup_exact_groups",
-    "q_dedup_minhash_lsh",
-    "q_dedup_simhash",
-    "q_dedup_clusters",
-    "q_dedup_incremental_batch",
-    "q_text_quality_by_source",
-    "q_text_repetition",
-    "q_decontaminate_ngram",
-    "q_events_funnel",
-    "q_events_retention",
-    "q12_returnflag_priority",
-    "q_word_frequency_topk",
-    "q_tfidf_top_terms",
-    "q_histogram_order_values",
-    "q_text_langid_confusion",
-    "q_text_fingerprints",
-    "q_ann_bruteforce_topk",
-    "q_ann_batch_topk",
-    "q_sql_cte_window",
-    "q_pivot_priority_counts",
-    "q_pack_sequences",
-    "q_quality_percentile_filter",
-    "q_embedding_dim_stats",
-    "q_heavy_hitter_words",
-    "q_sketch_rollup_customers",
-    "q_corpus_prep_funnel",
-    "q_bm25_doc_ranking",
-    "q_psi_price_drift_by_month",
-    "q_target_encoding_loo",
-    "q_ohlc_weekly_orders",
-    "q_hybrid_rrf_retrieval",
-    "q_column_profile_orders",
-    # round-3 additions (semantic decontam + advanced analytics)
-    "q_semantic_decontam",
-    "q_market_basket_lift",
-    "q_seasonal_decompose_revenue",
-    "q_cusum_changepoint_revenue",
-    "q_ndcg_ranker_eval",
-    "q_concurrent_sessions_peak",
-    "q_matryoshka_recall",
-    "q_theilsen_revenue_trend",
-    "q_zipf_exponent",
-    "q_session_bounce_rate",
-    "q_rfm_segments",
-    "q_cohort_ltv",
-    "q_session_return_time",
-    "q_embed_class_separation",
-    "q_ab_test_welch",
-    "q_seasonal_naive_mase",
-    "q_price_quantity_corr",
-    "q_user_activity_gini",
-    "q_funnel_latency_histogram",
-    "q_decay_attribution",
-    "q_dup_cluster_size_histogram",
-    "q_rolling_active_users",
-    "q_order_backlog_aging",
-    "q_market_concentration_hhi",
-    "q_readability_by_source",
-    "q_session_entry_conversion",
-    "q_effective_tokens_by_source",
-    "q_event_burstiness",
-    "q_monthly_value_percentile_bands",
-    "q_neyman_allocation",
-    "q_seasonal_adjusted_anomalies",
-    # mllite family (distributed ML primitives)
-    "q_ridge_gram_regression",
-    "q_naive_bayes_langid",
-    "q_chi2_term_selection",
-    "q_bucketed_colocated_join",
-    "q_countmin_word_frequency",
-    "q_ridge_kfold_cv",
-    "q_hll_overlap_event_types",
-    "q_benford_price_audit",
-    # structural family (exact similarity join, intervals, skyline,
-    # weighted order statistics, iterative closure)
-    "q_setsim_prefix_join",
-    "q_interval_merge_islands",
-    "q_pareto_frontier_days",
-    "q_weighted_median_price",
-    "q_hierarchy_rollup",
-    # inference family (TWAP, Poisson bootstrap, sequential testing)
-    "q_twap_by_event_type",
-    "q_bootstrap_ci_mean",
-    "q_sprt_ab_daily",
-    # mining family (mutual-NN pairs, MAD outliers, graph diagnostics)
-    "q_mutual_nn_pairs",
-    "q_mad_robust_outlier_days",
-    "q_dupgraph_assortativity",
-    # stream-hygiene family (event-time measurements behind streaming config)
-    "q_event_lateness_audit",
-    "q_event_gap_percentiles",
-    "q_watermark_coverage_curve",
-    # survival/trend family (KM, Mann-Kendall, segmented fit, DiD)
-    "q_km_survival_conversion",
-    "q_mann_kendall_trend",
-    "q_segmented_regression_break",
-    "q_did_order_value",
-    # spectral family
-    "q_pca_power_iteration",
-    "q_kcore_dup_graph",
-    "q_conformal_interval_ridge",
-    # rank/association family
-    "q_spearman_price_quantity",
-    "q_cramers_v_status_priority",
-    "q_auc_quality_dup",
-    "q_lsh_blocking_quality",
-    "q_mcf_repeat_purchases",
-    "q_embedding_dim_drift",
-    # spatial family
-    "q_spatial_nn_join",
-    # distributional comparison
-    "q_ks_two_sample",
-    "q_quantile_treatment_effects",
-    # forecast/econ + ER survivorship
-    "q_holt_linear_forecast",
-    "q_laspeyres_price_index",
-    "q_golden_record_survivorship",
-    "q_bootstrap_ci_uplift",
-    # curation family (Gopher rules, DSIR, char-entropy)
-    "q_gopher_quality_rules",
-    "q_dsir_importance_topk",
-    "q_char_trigram_entropy",
-    # semantic dedup + tokenizer training
-    "q_semdedup_cluster_prune",
-    "q_bpe_merge_candidates",
-    "q_acf_daily_revenue",
-    # round-4 additions (ANN-fed mutual NN, decimal money mode,
-    # BH-FDR multiple-testing control, IRLS logistic trainer)
-    "q_mutual_nn_ann",
-    "q_decimal_revenue_by_priority",
-    "q_decimal_warehouse_roundtrip",
-    "q_bh_fdr_event_tests",
-    "q_logistic_irls_status",
-    "q_cuped_adjusted_uplift",
-    "q_shapley_channel_attribution",
-    "q_james_stein_brand_price",
-]
 
 
 def _fingerprint(df, fn=None) -> str:

@@ -379,6 +379,116 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # connected-components dedup clustering
 # ---------------------------------------------------------------------------
 
+# Alternating large/small-star settles star-like dup families in a few
+# rounds; star_components raises when this budget does not settle the
+# graph, so a pathological graph fails loudly instead of mislabeling.
+CC_STAR_MAX_ROUNDS = 12
+
+
+def star_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components over (doc_id_1, doc_id_2) pairs by
+    alternating LARGE-STAR / SMALL-STAR (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). ``docs`` is the
+    full node frame (column ``id``), so documents in no pair label
+    themselves. Returns (doc_id, cluster_id = min doc_id of its
+    component).
+
+    Star contraction converges in O(log² n) rounds whatever the graph's
+    diameter (label propagation needs O(diameter): long chains such as
+    crawl redirect families or quote chains defeat it). Raises
+    RuntimeError if CC_STAR_MAX_ROUNDS rounds do not settle the graph.
+
+    With m(u) = min(N(u) ∪ {u}), one round is
+      large-star: link every neighbor v > u to m(u);
+      small-star: on the result, link every neighbor v ≤ u, and u
+                  itself, to the new m(u).
+    Edges stay (node, node) pairs, so a round shuffles ids only, never
+    text. The graph is settled when every node has only larger
+    neighbors or exactly one neighbor: then each component is a star
+    around its min and m(u) is the label. Each round is one linear plan
+    ending in an eager localCheckpoint; that job also computes the next
+    m(u) and observes the count of unsettled edges, so the convergence
+    test costs no extra job.
+    """
+    from pyspark.sql import Observation, Window
+
+    by_u = Window.partitionBy("u")
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+
+    def undirected(links: DataFrame) -> DataFrame:
+        # (a, b) links -> (u, v) edges in both directions, without a
+        # union: a union's branches would each replan the round so far
+        return links.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                    F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+                )
+            ).alias("e")
+        ).select("e.u", "e.v")
+
+    def with_min(edges: DataFrame) -> DataFrame:
+        return edges.withColumn("m", F.least(F.min("v").over(by_u), u))
+
+    def settle(edges: DataFrame) -> tuple[DataFrame, Observation]:
+        unsettled = Observation()
+        edges = (
+            with_min(edges)
+            .withColumn("degree", F.count(F.lit(1)).over(by_u))
+            .observe(
+                unsettled,
+                F.count(F.when((m != u) & (F.col("degree") != 1), True)).alias(
+                    "edges"
+                ),
+            )
+            .select("u", "v", "m")
+        )
+        return edges.transform(eager_checkpoint), unsettled
+
+    edges, unsettled = settle(
+        undirected(pairs.selectExpr("doc_id_1 AS a", "doc_id_2 AS b"))
+    )
+    # In a plan-only pass (functions/checkpoints.py) the checkpoints are
+    # lazy and observe no rows, so no round runs and the analyzed plan
+    # has the same shape.
+    rounds = 0
+    while unsettled.get["edges"]:
+        if rounds == CC_STAR_MAX_ROUNDS:
+            raise RuntimeError(
+                f"star_components did not converge in {CC_STAR_MAX_ROUNDS} "
+                "large/small-star rounds; raise CC_STAR_MAX_ROUNDS for this "
+                "graph (rounds needed grow ~log² of the largest component)"
+            )
+        large = edges.filter(v > u).select(v.alias("a"), m.alias("b")).distinct()
+        # the small-star arm for v > u emits (m, m), dropped by a != b
+        small = (
+            with_min(undirected(large))
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.when(v <= u, v).otherwise(m).alias("a"), m.alias("b")
+                        ),
+                        F.struct(u.alias("a"), m.alias("b")),
+                    )
+                ).alias("l")
+            )
+            .select("l.a", "l.b")
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        edges, unsettled = settle(undirected(small))
+        rounds += 1
+
+    labels = edges.groupBy(F.col("u").alias("doc_id")).agg(
+        F.min("m").alias("cluster_id")
+    )
+    return docs.join(labels, docs["id"] == labels["doc_id"], "left").select(
+        F.col("id").cast("long").alias("doc_id"),
+        F.coalesce("cluster_id", "id").cast("long").alias("cluster_id"),
+    )
+
+
 _CLUSTERS_ORACLE = f"""
 WITH RECURSIVE
 nodes AS (SELECT doc_id FROM documents),
@@ -405,64 +515,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph → cluster_id
     per document (min doc_id in the component; singletons are their own
     cluster). THE production dedup output: keep rows where
-    doc_id == cluster_id, drop the rest.
-
-    Iterative min-label propagation: each round, every node takes the
-    min of its own and its neighbors' labels; converges in
-    graph-diameter rounds (near-dup components are shallow — dup
-    families, not social graphs). Each round is one shuffle-join on
-    ids; ``localCheckpoint`` truncates lineage so plans don't grow
-    exponentially; convergence is detected by the monotone decrease of
-    sum(label) — one cheap aggregate per round, no driver-side
-    collect of labels. The DuckDB oracle computes the same components
-    via a recursive CTE (label transitive closure), so this iterative
-    algorithm is hash-verified, not rows-only.
+    doc_id == cluster_id, drop the rest. The components come from
+    star_components; the DuckDB oracle computes them with a recursive
+    CTE (label transitive closure), so the labels are hash-verified.
     """
     docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     pairs = minhash_pair_plan(spark, sf_dir).select("doc_id_1", "doc_id_2")
-    edges = pairs.selectExpr("doc_id_1 AS src", "doc_id_2 AS dst").unionAll(
-        pairs.selectExpr("doc_id_2 AS src", "doc_id_1 AS dst")
-    )
-    edges = edges.transform(eager_checkpoint)  # pair plan runs once, not per round
-
-    # Iterate ONLY over nodes that touch an edge: documents in no pair
-    # are their own cluster by definition and never change label, so
-    # they are excluded from every round and re-attached at the end.
-    # At corpus scale this shrinks the per-round shuffles from |docs|
-    # to |dup-family members| — typically orders of magnitude smaller.
-    # The node-set build IS propagation round one: one groupBy gives
-    # every edge-touching node its min(self, neighbors) label.
-    labels = (
-        edges.groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("nlbl"))
-        .select("id", F.least("id", "nlbl").alias("lbl"))
-        .transform(eager_checkpoint)
-    )
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(20):  # >= diameter of any plausible dup family
-        nmin = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("nid"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(nmin, labels.id == nmin.nid, "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
-            .transform(eager_checkpoint)
-        )
-        new_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return docs.join(labels, docs.id == labels.id, "left").select(
-        docs.id.alias("doc_id"),
-        F.coalesce("lbl", docs.id).alias("cluster_id"),
-    )
+    return star_components(docs, pairs)
 
 
 # ---------------------------------------------------------------------------

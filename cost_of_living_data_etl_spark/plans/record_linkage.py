@@ -204,12 +204,13 @@ def fs_candidates(
     # integers; the string cast is injective per field, so the value
     # counts are unchanged. Injectivity requires string/integral field
     # types — a float field could merge 0.0/-0.0 or split on rendering
-    # (ADVICE r09) — so pin it:
+    # — so pin it (a raise, not an assert, so it holds under python -O):
     for _f, _t in prof.select(*FS_FIELDS).dtypes:
-        assert _t in ("string", "int", "bigint", "smallint", "tinyint"), (
-            f"fs_candidates u-estimator melts {_f}:{_t}; the string cast "
-            "is only count-preserving for string/integral fields"
-        )
+        if _t not in ("string", "int", "bigint", "smallint", "tinyint"):
+            raise TypeError(
+                f"fs_candidates u-estimator melts {_f}:{_t}; the string cast "
+                "is only count-preserving for string/integral fields"
+            )
     melted = prof.select(
         F.explode(
             F.array(

@@ -23,6 +23,11 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
+from cost_of_living_data_etl_spark.operators.dedup import (
+    _CLUSTERS_ORACLE,
+    minhash_pair_plan,
+    star_components,
+)
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
@@ -1296,171 +1301,22 @@ def q_rolling_zscore_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame
 # 18. connected components by alternating large-star / small-star
 # --------------------------------------------------------------------------
 
-CC_STAR_MAX_ROUNDS = 12  # ample for real dup graphs (alternating
-# large/small-star contracts star-like dup families in 2-4 rounds);
-# star_components RAISES if the fixed point is not reached, so a
-# pathological graph fails loudly instead of mislabeling
-
 
 @register(
     "q_dedup_clusters_star",
-    oracle=None,  # set below: shares q_dedup_clusters' recursive-CTE oracle
+    oracle=_CLUSTERS_ORACLE,
     tags=("dedup", "clustering", "iterative", "graph"),
 )
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) over the near-dup pair graph — same output contract as
-    q_dedup_clusters (doc_id → min doc_id of its component, singletons
-    included), different algorithm: label propagation needs
-    O(diameter) rounds, star contraction converges in O(log² n)
-    WHATEVER the diameter, which is why it is the 100 TB-scale CC
-    algorithm (long chains — crawl redirect families, quote chains —
-    kill propagation, not contraction).
-
-    Round shape (both phases are one groupBy over the edge list):
-      large-star: per node u, m = min(N(u) ∪ {u}); link every
-                  LARGER neighbor v > u to m.
-      small-star: per node u, m = min(N(u) ∪ {u}); link every
-                  neighbor v ≤ u (and u itself) to m.
-    Edges stay (node, node) pairs — the shuffle is |edges| ids per
-    round, text never enters. Convergence = edge multiset stable,
-    detected by a 2-scalar aggregate (count + xor-ish hash sum), so
-    the driver never collects data-scale state; localCheckpoint per
-    round truncates lineage exactly like the sibling implementation.
-    """
-    from cost_of_living_data_etl_spark.operators.dedup import (
-        minhash_pair_plan,
-    )
-
+    """Large-star/small-star connected components (star_components)
+    over the near-dup pair graph: doc_id → min doc_id of its component,
+    singletons included. Same computation and recursive-CTE oracle as
+    q_dedup_clusters, registered under the graph tag as well."""
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
     )
     pairs = minhash_pair_plan(spark, sf_dir).select("doc_id_1", "doc_id_2")
     return star_components(docs, pairs)
-
-
-def star_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Large-star/small-star CC over (doc_id_1, doc_id_2) pairs; docs
-    is the full node frame (column ``id``) so singletons label
-    themselves. Factored out of the catalog query so the O(log² n)
-    round-count claim is testable on synthetic long-chain graphs
-    (tests/test_round5.py) where label propagation's O(diameter)
-    would need hundreds of rounds."""
-    # undirected edge list, both directions
-    edges = (
-        pairs.selectExpr("doc_id_1 AS u", "doc_id_2 AS v")
-        .unionAll(pairs.selectExpr("doc_id_2 AS u", "doc_id_1 AS v"))
-        .transform(eager_checkpoint)
-    )
-
-    def edge_fingerprint(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v") % F.lit(1_000_000_007)), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # m = min(N(u) ∪ {u}) as a WINDOW over the edge list's own join
-        # key (round 10; previously a groupBy("u") rollup joined back
-        # on "u"): one exchange on u serves both the min and the edge
-        # rows — the same one-exchange-per-keyed-pass discipline as the
-        # LSH bucket cap (operators/dedup.py). Interleaved A/B vs the
-        # rollup+join form: 3.20 → 2.95 s min / 3.38 → 3.24 s med over
-        # 5 reps, rows identical. (A lazier variant checkpointing once
-        # per ROUND was also tried and REJECTED: without the per-star
-        # checkpoint the large-star subtree replicates across the
-        # small-star's branches — 44 Exchange / 24 Window nodes in one
-        # round's static plan, 0 reused — the round-9 "branches with
-        # different pruning need the materialization" rule in action.)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("u")
-        j = e.withColumn("m", F.least(F.min("v").over(w), F.col("u")))
-        if large:
-            linked = j.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            # the per-u self-link (u, m) rides as per-EDGE duplicates;
-            # the .distinct() below collapses them, so the emitted edge
-            # SET is identical to the old per-distinct-u union arm
-            linked = (
-                j.filter(F.col("v") <= F.col("u"))
-                .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                .unionAll(
-                    j.select(F.col("u").alias("a"), F.col("m").alias("b"))
-                )
-            )
-        out = (
-            linked.filter(F.col("a") != F.col("b"))
-            .distinct()
-            .selectExpr("a AS u", "b AS v")
-            .unionAll(
-                linked.filter(F.col("a") != F.col("b"))
-                .distinct()
-                .selectExpr("b AS u", "a AS v")
-            )
-        )
-        return out.transform(eager_checkpoint)
-
-    fp = edge_fingerprint(edges)
-    converged = False
-    for _ in range(CC_STAR_MAX_ROUNDS):
-        edges = star(edges, large=True)
-        edges = star(edges, large=False)
-        nfp = edge_fingerprint(edges)
-        if nfp == fp:
-            converged = True
-            break
-        fp = nfp
-    if not converged:
-        # falling through silently would mislabel: the post-loop code
-        # assumes every edge is (member, component-min), which only
-        # holds at the fixed point (round-6 review catch — log²(10⁶)
-        # is ~400 alternations in the worst pathological case, not 12)
-        raise RuntimeError(
-            f"star_components did not converge in {CC_STAR_MAX_ROUNDS} "
-            "large/small-star rounds; raise CC_STAR_MAX_ROUNDS for this "
-            "graph (rounds needed grow ~log² of the largest component)"
-        )
-
-    # at the fixed point every edge is (member, component-min)
-    labels = edges.groupBy("u").agg(F.min("v").alias("lbl"))
-    members = labels.select(
-        F.col("u").alias("doc_id"),
-        F.least("u", "lbl").alias("cluster_id"),
-    )
-    return (
-        docs.join(members, docs["id"] == members["doc_id"], "left")
-        .select(
-            F.col("id").cast("long").alias("doc_id"),
-            F.coalesce("cluster_id", "id").cast("long").alias("cluster_id"),
-        )
-    )
-
-
-def _wire_star_oracle() -> None:
-    """Share q_dedup_clusters' recursive-CTE oracle verbatim: both
-    algorithms must produce the identical component labeling.
-    dataclasses.replace keeps every other QuerySpec field (including
-    any added later) instead of a field-by-field rebuild."""
-    import dataclasses
-
-    from cost_of_living_data_etl_spark.operators.dedup import (
-        _CLUSTERS_ORACLE,
-    )
-    from cost_of_living_data_etl_spark.plans.catalog import _REGISTRY
-
-    _REGISTRY["q_dedup_clusters_star"] = dataclasses.replace(
-        _REGISTRY["q_dedup_clusters_star"], oracle=_CLUSTERS_ORACLE
-    )
-
-
-_wire_star_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -2095,8 +1951,6 @@ def q_dupgraph_source_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; the pair plan runs once (localCheckpoint), |sources|-bounded
     state thereafter.
     """
-    from cost_of_living_data_etl_spark.operators.dedup import minhash_pair_plan
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     pairs = (
         minhash_pair_plan(spark, sf_dir)

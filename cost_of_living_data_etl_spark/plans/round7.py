@@ -505,9 +505,9 @@ def q_dedup_keeper_source_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRE-dedup counts silently over-weight it. share_before vs
     share_after is the correction factor a mixture designer applies.
 
-    Composition: the hash-verified CC labels (q_dedup_clusters — same
-    iterative min-label propagation, replayed in the oracle as the
-    same recursive CTE) joined back to source labels; everything after
+    Composition: the hash-verified CC labels (q_dedup_clusters — star
+    contraction, replayed in the oracle as the same recursive CTE)
+    joined back to source labels; everything after
     the labels is one partial-aggregated groupBy(source) plus a
     broadcast 2-scalar total. Scale: inherits CC's edge-bounded
     shuffles; the audit adds one |docs| join on doc_id.

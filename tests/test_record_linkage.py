@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from cost_of_living_data_etl_spark.plans.record_linkage import (
+    fs_candidates,
     q_fellegi_sunter_linkage,
 )
 
@@ -55,6 +58,20 @@ def test_fs_match_and_nonmatch_closed_form(spark, tmp_path):
     nm = got[("rad gear", "red gear")]
     assert nm["n_agree"] == 0 and nm["decision"] == "nonmatch"
     assert abs(nm["fs_weight"] - w_nonmatch) < 1e-12
+
+
+def test_fs_candidates_rejects_float_field(spark, tmp_path):
+    """The u-estimator casts field values to string, which only keeps
+    value counts for string/integral fields: a double ``p_size`` must
+    be refused with a TypeError (not an assert, which python -O drops)."""
+    spark.createDataFrame(
+        [(k, n, b, t, float(s), 900.0) for (k, n, b, t, s) in _PARTS],
+        "p_partkey long, p_name string, p_brand string, p_type string,"
+        " p_size double, p_retailprice double",
+    ).write.mode("overwrite").parquet(f"{tmp_path}/part.parquet")
+
+    with pytest.raises(TypeError, match="size:double"):
+        fs_candidates(spark, str(tmp_path))
 
 
 def test_fs_em_separates_clean_mixture(spark, tmp_path):

@@ -12,6 +12,8 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from cost_of_living_data_etl_spark.operators import dedup
+from cost_of_living_data_etl_spark.operators.dedup import star_components
 from cost_of_living_data_etl_spark.plans.catalog import catalog
 
 
@@ -178,26 +180,44 @@ def test_negative_sampling_shape_and_determinism(spark, sf_smoke):
     assert max(per_doc.values()) <= 3
 
 
+def _chain(spark, n):
+    docs = spark.range(n).selectExpr("id")
+    pairs = spark.range(n - 1).selectExpr("id AS doc_id_1", "id + 1 AS doc_id_2")
+    return docs, pairs
+
+
 def test_star_components_long_chain_converges_in_fixed_rounds(spark):
     """A 400-node PATH graph (diameter 399): min-label propagation
     needs ~399 rounds; star contraction must label the whole chain as
     ONE component within its fixed CC_STAR_MAX_ROUNDS budget — the
     O(log² n) claim on the adversarial topology."""
-    from cost_of_living_data_etl_spark.plans.round5 import star_components
-
     n = 400
-    docs = spark.range(n).selectExpr("id")
-    pairs = spark.range(n - 1).selectExpr(
-        "id AS doc_id_1", "id + 1 AS doc_id_2"
-    )
-    labels = star_components(docs, pairs).collect()
+    labels = star_components(*_chain(spark, n)).collect()
     assert len(labels) == n
     assert {r["cluster_id"] for r in labels} == {0}
 
 
-def test_star_components_labels_singletons_and_two_cliques(spark):
-    from cost_of_living_data_etl_spark.plans.round5 import star_components
+def test_star_components_raises_when_round_budget_is_too_small(spark, monkeypatch):
+    """The same chain cannot settle in one round: the
+    loop must raise, never return unconverged labels."""
+    monkeypatch.setattr(dedup, "CC_STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        star_components(*_chain(spark, 400))
 
+
+def test_star_components_no_pairs_labels_every_doc_itself(spark):
+    """An empty pair frame: the unsettled-edge count observed on an
+    empty checkpoint must read as settled, and every doc is a singleton."""
+    docs = spark.range(5).selectExpr("id")
+    pairs = spark.createDataFrame([], "doc_id_1 long, doc_id_2 long")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in star_components(docs, pairs).collect()
+    }
+    assert got == {i: i for i in range(5)}
+
+
+def test_star_components_labels_singletons_and_two_cliques(spark):
     docs = spark.range(10).selectExpr("id")
     # clique {1,2,3}, pair {7,8}; 0,4,5,6,9 singletons
     pairs = spark.createDataFrame(
