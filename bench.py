@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -138,18 +139,52 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
+def _runs_of_round(r: int) -> list[Path]:
+    """Round ``r``'s full snapshots in ``history/``, newest first: its
+    ``bench_full_rNN_runK.json`` re-runs by descending K, then the
+    round's first run ``bench_full_rNN.json``."""
+    hist = Path(_REPO, "history")
+    pat = re.compile(rf"bench_full_r{r:02d}_run(\d+)\.json")
+    runs = {
+        int(m.group(1)): p
+        for p in hist.glob(f"bench_full_r{r:02d}_run*.json")
+        if (m := pat.fullmatch(p.name))
+    }
+    newest_first = [runs[k] for k in sorted(runs, reverse=True)]
+    return newest_first + [hist / f"bench_full_r{r:02d}.json"]
+
+
+def _snapshot_path(round_n: int) -> Path:
+    """Where this run's full snapshot goes: ``bench_full_rNN.json`` for
+    the round's first run, else ``bench_full_rNN_runK.json`` with K one
+    past the newest existing re-run — a snapshot is never overwritten."""
+    newest = _runs_of_round(round_n)[0]
+    if not newest.exists():
+        return newest
+    m = re.search(r"_run(\d+)\.json$", newest.name)
+    k = int(m.group(1)) + 1 if m else 1
+    return newest.with_name(f"bench_full_r{round_n:02d}_run{k}.json")
+
+
+def _prior_snapshots(round_n: int):
+    """(round, record) for each readable full snapshot before
+    ``round_n``, newest first: rounds descending, and within a round
+    the newest run first."""
+    for r in range(round_n - 1, 0, -1):
+        for p in _runs_of_round(r):
+            try:
+                yield r, json.loads(p.read_text())
+            except (OSError, ValueError):
+                continue
+
+
 def _canary_reference(round_n: int) -> tuple[dict[str, float], int | None]:
     """Newest prior full-run snapshot at the same SF with every canary
     timing present -> (per-query reference timings, its round).
     Prefers the snapshot's dedicated start-of-run pass
-    (``canary.first``, round 9+) over its scattered in-loop timings so
-    the ratio compares like positions. ({}, None) if none."""
-    for r in range(round_n - 1, 0, -1):
-        p = Path(_REPO, "history", f"bench_full_r{r:02d}.json")
-        try:
-            rec = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
+    (``canary.first``, when recorded) over its scattered in-loop
+    timings so the ratio compares like positions. ({}, None) if none."""
+    for r, rec in _prior_snapshots(round_n):
         if rec.get("sf") != SF_DIR:
             continue
         first = rec.get("canary", {}).get("first") or {}
@@ -168,12 +203,7 @@ DRIFT_FLOOR_SEC = 0.2
 def _drift_reference(round_n: int) -> tuple[dict, int | None]:
     """Newest prior same-SF snapshot for the ALL-QUERY drift median ->
     (snapshot record, its round). ({}, None) if none."""
-    for r in range(round_n - 1, 0, -1):
-        p = Path(_REPO, "history", f"bench_full_r{r:02d}.json")
-        try:
-            rec = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
+    for r, rec in _prior_snapshots(round_n):
         if rec.get("sf") == SF_DIR and rec.get("queries"):
             return rec, r
     return {}, None
@@ -517,17 +547,15 @@ def main() -> None:
         }
         full["normalized_value"] = round(full["value"] / drift, 3)
     Path(_REPO, "BENCH_LOCAL.json").write_text(json.dumps(full, indent=1))
-    # Per-round FULL snapshot (round-5 verdict item 4): BENCH_LOCAL.json
-    # is overwritten per run and the driver's BENCH_r{N}.json keeps only
-    # the ~40 slowest timings, which made cross-round regression
-    # analysis a biased sample. The round about to be recorded is
-    # 1 + the number of driver artifacts already on disk; re-runs
-    # within a round overwrite the same snapshot (latest wins).
-    hist = Path(_REPO, "history")
-    hist.mkdir(exist_ok=True)
-    (hist / f"bench_full_r{round_n:02d}.json").write_text(
-        json.dumps(full, indent=1)
-    )
+    # Per-round FULL snapshot: BENCH_LOCAL.json is overwritten per run
+    # and the recorded BENCH_r{N}.json keeps only the ~40 slowest
+    # timings, a biased sample for cross-round regression analysis.
+    # The round about to be recorded is 1 + the number of BENCH_r*.json
+    # files already on disk; a re-run within a round gets its own
+    # _runK file, and the reference lookups read the newest run of
+    # each round.
+    Path(_REPO, "history").mkdir(exist_ok=True)
+    _snapshot_path(round_n).write_text(json.dumps(full, indent=1))
     print(json.dumps({"detail": "cold_run", "queries_cold": cold}))
     print(json.dumps({"detail": "warm_run", "queries": timings}))
 

@@ -4,11 +4,22 @@ Four dedup families, all deterministic (salted-md5 hashing, no RNG) so
 the DuckDB oracles can mirror them bit-for-bit:
 
 - exact:        md5(text) hash-groupBy; keeper = min(doc_id)
-- MinHash LSH:  word-3-gram shingles → 16 salted-md5 minhashes →
-                4 bands × 4 rows → band-bucket self-join → exact
-                Jaccard verification of candidates
+- MinHash LSH:  one chain in three phases, each implemented once and
+                called by every MinHash consumer:
+                1. signatures — ``signature_table`` (word-3-gram
+                   shingles → hashed set + 16 salted minhashes per doc,
+                   re-keyed scan, persisted);
+                2. candidates — ``lsh_candidates`` (4 bands × 4 rows →
+                   band-bucket self-join, optional bucket cap and
+                   new-batch predicate);
+                3. verify — ``join_hsets`` attaches both hashed sets to
+                   each candidate; the consumer filters on its
+                   predicate (``hset_jaccard`` in
+                   ``neardup_pairs_from_sigs``, ``hset_containment`` in
+                   q_containment_neardup_pairs).
 - SimHash:      60-bit sign-aggregated word hashes → nibble-band
-                blocking → Hamming-distance filter
+                blocking → Hamming-distance filter (its own banding:
+                it verifies bit distance, not set overlap)
 - n-gram Jaccard: exact shingle-set Jaccard (one-vs-all form)
 
 Scale shape (the whole point of the LSH designs): the only shuffles
@@ -208,72 +219,18 @@ WHERE length(list_intersect(s1.hset, s2.hset)) * 1.0
 """
 
 
-def minhash_pair_plan(
-    spark: SparkSession, sf_dir: str, max_bucket=USE_PROFILE
-) -> DataFrame:
-    """MinHash-LSH near-duplicate pairs, Jaccard-verified.
-
-    ``max_bucket`` is the production skew guard: band buckets larger
-    than the cap are dropped BEFORE the self-join (a bucket of size b
-    emits b² candidate pairs — boilerplate/empty documents at 100 TB
-    produce million-row buckets that would dominate the join). Capped
-    buckets are near-exact-dup families, which exact dedup already
-    catches upstream. Defaults to the active profile's
-    ``lsh_max_bucket`` (profiles.py): None under parity — exact oracle
-    replay — and capped under SPARK_GRAFT_PROFILE=production.
-
-    shingle → minhash (map-only) → band-bucket join (shuffle on band
-    hash) → exact verification on candidates only. With 16 perms in
-    4×4 bands, a 0.9-Jaccard pair is caught with p≈0.986.
-
-    The hash + minhash computation is ARRAY-NATIVE (transform /
-    array_min inside one projection) rather than explode + groupBy:
-    exploding ~300 shingle rows per doc costs 4× the whole map pass in
-    GenerateExec row materialization AND forces a 1.5M-row hash
-    aggregate, while the array form needs zero shuffles before the
-    band join (measured 4.3s → 1.1s at sf0.1). Verification compares
-    the hashed shingle sets computed in the same pass; ``mh`` (a
-    long-array + 16 longs per doc — far smaller than the text) is
-    persisted because three downstream branches consume it. At 100 TB
-    the same role is played by checkpointing ``mh`` to parquet;
-    column-pruned branch plans would otherwise each re-shingle the
-    corpus.
-    """
-    from pyspark import StorageLevel
-
-    # parallel=True: the shingle+md5+minhash map pass is the chain's
-    # single most expensive kernel and runs as ONE task on the
-    # single-split fixture files; every emitted value downstream is
-    # order-insensitive (md5/xxhash ints, array_min, exact-count
-    # Jaccard ratios), so the re-key is parity-safe. Measured −20% on
-    # q_dedup_minhash_lsh (2.80 → 2.21 s interleaved, round 9).
-    #
-    # Float-contract caveat (ADVICE r09): ONE transitive consumer emits
-    # a plain double sum — q_pagerank_neardup_graph's per-node
-    # Σ pr/outd. Its addend ORDER depends on shuffle arrival, which
-    # Spark does not contractually fix; parity holds EMPIRICALLY
-    # (exact-hash green at sf0.001/0.01/0.1 across rounds 9-10) because
-    # each node's contributions arrive within one sort-free hash
-    # aggregate. Pagerank is CANARY_HEAVY (bench.py contract: never
-    # rewrite), so the sum is documented rather than routed through a
-    # det_sum fold; if its oracle gate ever flickers, that fold is the
-    # fix — not removing this re-key.
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
-    mh = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    return neardup_pairs_from_sigs(mh, max_bucket=max_bucket)
-
-
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, hset, mh0..mhN): hashed shingle set + minhash signature
     per document — one map-only projection, no shuffle.
 
     One md5 per shingle inside transform(); minhash per permutation as
     array_min over the hashed set (min is duplicate-insensitive, so
-    hset and the raw hash array give identical signatures). This is
-    the table to PERSIST (warehouse parquet at 100 TB): it is ~100
-    bytes/doc vs KBs of text, and every downstream near-dup consumer —
-    full pair mining, clustering, and incremental batch dedup — reads
-    it instead of re-shingling the corpus.
+    hset and the raw hash array give identical signatures). The
+    array-native form avoids exploding ~300 shingle rows per doc into
+    a hash aggregate: no shuffle before the band join (4.3 s → 1.1 s
+    at sf0.1). This is the table to persist (warehouse parquet at
+    100 TB): ~100 bytes/doc vs KBs of text, and every near-dup consumer
+    reads it instead of re-shingling the corpus.
     """
     sh = shingle_docs(docs)
     return sh.selectExpr(
@@ -290,21 +247,57 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def neardup_pairs_from_sigs(
+def signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's persisted signature table (minhash_signatures over
+    ``documents``): the one loading policy for every near-dup consumer.
+
+    The scan is re-keyed by doc_id (``parallel=True``) because the
+    shingle+md5+minhash map pass is the chain's most expensive kernel
+    and would otherwise run as ONE task on a single-split file (−20% on
+    q_dedup_minhash_lsh, 2.80 → 2.21 s at sf0.1); every value derived
+    from it is order-insensitive (md5/xxhash ints, array_min,
+    exact-count set ratios), so the re-key cannot change a row. The table is persisted because the band join and both verify
+    joins read it: unpersisted, each branch re-shingles the corpus.
+
+    Float-contract caveat: ONE transitive consumer emits a plain double
+    sum — q_pagerank_neardup_graph's per-node Σ pr/outd, whose addend
+    order depends on shuffle arrival. Parity holds empirically (each
+    node's contributions arrive within one sort-free hash aggregate)
+    and pagerank is CANARY_HEAVY in bench.py, so the sum is documented
+    rather than routed through det_sum; if its oracle gate ever
+    flickers, that fold is the fix — not removing this re-key.
+    """
+    from pyspark import StorageLevel
+
+    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    return minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def lsh_candidates(
     mh: DataFrame,
     max_bucket=USE_PROFILE,
     touching_only: str | None = None,
 ) -> DataFrame:
-    """Band-join + Jaccard-verify over an existing signature table.
+    """Candidate generation: distinct (doc_id_1 < doc_id_2) pairs that
+    share at least one band bucket of the signature table ``mh``.
 
-    ``max_bucket`` defaults to the active profile's ``lsh_max_bucket``
-    (profiles.py); an explicit value — including None for lossless —
-    always wins over the profile.
+    ``max_bucket`` is the production skew guard: band buckets larger
+    than the cap are dropped BEFORE the self-join (a bucket of size b
+    emits b² candidate pairs — boilerplate/empty documents at 100 TB
+    produce million-row buckets that would dominate the join). Capped
+    buckets are near-exact-dup families, which exact dedup already
+    catches upstream. Defaults to the active profile's
+    ``lsh_max_bucket`` (profiles.py): None under parity — exact oracle
+    replay — and capped under SPARK_GRAFT_PROFILE=production; an
+    explicit value, including None for lossless, always wins.
 
     ``touching_only``: name of a boolean column in ``mh``; when given,
     only pairs where at least one side has it true are mined — the
     incremental-dedup path (new batch vs corpus) where corpus-internal
     pairs are already known and must not be recomputed.
+
+    With 16 perms in 4×4 bands, a 0.9-Jaccard pair is caught with
+    p≈0.986. The join shuffles (doc_id, band_hash) rows only.
     """
     max_bucket = resolve(max_bucket, "lsh_max_bucket")
     # one row → BANDS rows via posexplode: minhashes computed once per
@@ -319,14 +312,13 @@ def neardup_pairs_from_sigs(
 
     if max_bucket is not None:
         # drop pathological buckets before the b² self-join. A window
-        # count partitioned on EXACTLY the self-join's equi keys: one
-        # derivation of the banded frame, and the window's required
-        # partitioning matches the join's. The previous rollup +
-        # left-semi form consumed `bands` on two independent branches,
-        # re-running the shingle→minhash subtree — measured +26-40% on
-        # the pair consumers on a corpus where the cap drops nothing;
-        # the window form is 35% faster per rep in an interleaved A/B
-        # (SCALE.md round-9 production-profile decade table).
+        # count partitioned on EXACTLY the self-join's equi keys keeps
+        # one derivation of the banded frame, and the window's required
+        # partitioning matches the join's. A rollup + left-semi form
+        # would consume `bands` on two branches and re-run the
+        # shingle→minhash subtree: +26-40% on the pair consumers on a
+        # corpus where the cap drops nothing (SCALE.md
+        # production-profile decade table).
         from pyspark.sql import Window
 
         wspec = Window.partitionBy("band_idx", "band_hash")
@@ -346,7 +338,7 @@ def neardup_pairs_from_sigs(
         join_cond = join_cond & (
             F.col(f"a.{touching_only}") | F.col(f"b.{touching_only}")
         )
-    candidates = (
+    return (
         a.join(bb, join_cond)
         .select(
             F.col("a.doc_id").alias("doc_id_1"),
@@ -355,18 +347,53 @@ def neardup_pairs_from_sigs(
         .distinct()
     )
 
+
+def join_hsets(cands: DataFrame, mh: DataFrame) -> DataFrame:
+    """Verification input: ``cands`` (doc_id_1, doc_id_2) with each
+    side's hashed shingle set attached as ``hs1`` / ``hs2``. Only
+    candidate pairs re-read the signature table, never the text."""
     s1 = mh.select(F.col("doc_id").alias("doc_id_1"), F.col("hset").alias("hs1"))
     s2 = mh.select(F.col("doc_id").alias("doc_id_2"), F.col("hset").alias("hs2"))
-    jaccard = F.size(F.array_intersect("hs1", "hs2")) / F.size(
+    return cands.join(s1, "doc_id_1").join(s2, "doc_id_2")
+
+
+def hset_jaccard():
+    """|A∩B| / |A∪B| of the hashed shingle sets on a join_hsets frame."""
+    return F.size(F.array_intersect("hs1", "hs2")) / F.size(
         F.array_union("hs1", "hs2")
     )
+
+
+def hset_containment():
+    """|A∩B| / min(|A|,|B|) of the hashed shingle sets on a join_hsets
+    frame."""
+    return F.size(F.array_intersect("hs1", "hs2")) / F.least(
+        F.size("hs1"), F.size("hs2")
+    )
+
+
+def neardup_pairs_from_sigs(
+    mh: DataFrame,
+    max_bucket=USE_PROFILE,
+    touching_only: str | None = None,
+) -> DataFrame:
+    """(doc_id_1, doc_id_2, jaccard) near-dup pairs over a signature
+    table: lsh_candidates, then join_hsets, then the exact Jaccard
+    filter at JACCARD_THRESHOLD. Arguments as in lsh_candidates."""
     return (
-        candidates.join(s1, "doc_id_1")
-        .join(s2, "doc_id_2")
-        .withColumn("jaccard", jaccard)
+        join_hsets(lsh_candidates(mh, max_bucket, touching_only), mh)
+        .withColumn("jaccard", hset_jaccard())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_id_1", "doc_id_2", "jaccard")
     )
+
+
+def minhash_pair_plan(
+    spark: SparkSession, sf_dir: str, max_bucket=USE_PROFILE
+) -> DataFrame:
+    """MinHash-LSH near-duplicate pairs of the fixture corpus,
+    Jaccard-verified: neardup_pairs_from_sigs over signature_table."""
+    return neardup_pairs_from_sigs(signature_table(spark, sf_dir), max_bucket)
 
 
 @register("q_dedup_minhash_lsh", oracle=_MINHASH_ORACLE, tags=("dedup", "minhash", "lsh"))
@@ -739,18 +766,8 @@ def q_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set; the plan shape is identical when the corpus half comes
     from parquet.
     """
-    from pyspark import StorageLevel
-
-    # parallel=True + persist (round 9): same justification as
-    # minhash_pair_plan — the signature map pass is the serial kernel
-    # and the band join + two verify joins consume `sigs` on THREE
-    # branches; unpersisted, the shingle+minhash pipeline re-ran per
-    # branch.
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
-    sigs = (
-        minhash_signatures(docs)
-        .withColumn("is_new", F.col("doc_id") % NEW_BATCH_MOD == 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = signature_table(spark, sf_dir).withColumn(
+        "is_new", F.col("doc_id") % NEW_BATCH_MOD == 0
     )
     return neardup_pairs_from_sigs(sigs, touching_only="is_new")
 

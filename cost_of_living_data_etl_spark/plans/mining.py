@@ -535,9 +535,10 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from cost_of_living_data_etl_spark.operators.dedup import (
         JACCARD_THRESHOLD,
+        hset_jaccard,
+        join_hsets,
+        lsh_candidates,
         minhash_signatures,
-        _band_hash_spark,
-        BANDS,
     )
     from cost_of_living_data_etl_spark.plans.structural import (
         q_setsim_prefix_join,
@@ -545,16 +546,17 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # parallel=True: the signature map pass is the serial kernel and
     # every output is an exact-integer count or a ratio of two counts
-    # (round 9; same justification as minhash_pair_plan)
+    # (the signature_table re-key policy)
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     # The LSH signature checkpoint and the truth side's setsim chain
     # (whose build eager-checkpoints its own shingle table) are
-    # INDEPENDENT pipelines that ran as sequential job barriers —
-    # overlap them from a 2-thread pool (guide §2.6; round 10, the
-    # bucketed-join/data-Shapley move). Results are bit-identical:
-    # materialization order cannot affect either side's content.
-    # Order-alternating interleaved A/B: med 2.47 → 2.25 s, min 2.34 →
-    # 2.07, rows identical (CHECK).
+    # INDEPENDENT pipelines; run sequentially they are two job
+    # barriers, so overlap them from a 2-thread pool. Results are
+    # bit-identical: materialization order cannot affect either side's
+    # content. Order-alternating interleaved A/B: med 2.47 → 2.25 s,
+    # min 2.34 → 2.07, rows identical (CHECK). The signatures are
+    # eager-checkpointed here instead of taken from signature_table,
+    # whose persist is lazy and would not materialize inside the pool.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -563,39 +565,14 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         truth_fut = pool.submit(q_setsim_prefix_join, spark, sf_dir)
         mh, truth = mh_fut.result(), truth_fut.result()
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.expr(_band_hash_spark(b)) for b in range(BANDS)])
-        ).alias("band_idx", "band_hash"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        .distinct()
-    )
+    # ONE candidate frame feeds both counts, so the band self-join is
+    # planned once and n_found ⊆ n_candidates by construction;
+    # max_bucket=None because the oracle replays the uncapped join
+    cand = lsh_candidates(mh, max_bucket=None)
     n_cand = cand.groupBy().agg(F.count(F.lit(1)).alias("n_candidates"))
-    # verify the SAME candidate set (review finding: a second call to
-    # neardup_pairs_from_sigs rebuilt the band self-join from scratch,
-    # doubling the dominant join and duplicating blocking logic)
-    s1 = mh.select(F.col("doc_id").alias("d1"), F.col("hset").alias("hs1"))
-    s2 = mh.select(F.col("doc_id").alias("d2"), F.col("hset").alias("hs2"))
     n_found = (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .filter(
-            F.size(F.array_intersect("hs1", "hs2"))
-            / F.size(F.array_union("hs1", "hs2"))
-            >= JACCARD_THRESHOLD
-        )
+        join_hsets(cand, mh)
+        .filter(hset_jaccard() >= JACCARD_THRESHOLD)
         .groupBy()
         .agg(F.count(F.lit(1)).alias("n_found"))
     )

@@ -174,56 +174,27 @@ def q_containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard misses the quote/boilerplate case an LLM pipeline cares
     about most — a short doc fully embedded in a long one scores
     |A|/|B| ≈ 0 Jaccard but 1.0 containment (Lee et al. 2022 dedup
-    uses exactly this asymmetric test). Same banding, same candidate
-    discipline as q_dedup_minhash_lsh (shuffles ids + band hashes,
-    never text); only the verification predicate differs. Note the
-    recall caveat: MinHash collides on high JACCARD, so low-Jaccard/
-    high-containment pairs are found only when the small doc still
-    dominates a band — the production variant for exhaustive
+    uses exactly this asymmetric test). Same signature table and
+    candidate join as q_dedup_minhash_lsh (operators/dedup.py; shuffles
+    ids + band hashes, never text); only the verification predicate
+    differs. Note the recall caveat: MinHash collides on high JACCARD,
+    so low-Jaccard/high-containment pairs are found only when the small
+    doc still dominates a band — the production variant for exhaustive
     containment is the chunk-hash plan (q_crossdoc_substring_dups).
     """
     from cost_of_living_data_etl_spark.operators.dedup import (
-        BANDS,
-        _band_hash_spark,
-        minhash_signatures,
+        hset_containment,
+        join_hsets,
+        lsh_candidates,
+        signature_table,
     )
-    from pyspark import StorageLevel
 
-    # parallel=True (round 10): this query rebuilds the minhash chain
-    # outside minhash_pair_plan and was missed by the r9 re-key pass;
-    # same justification (shingle+md5+minhash is the serial kernel;
-    # containment is a ratio of exact set sizes — order-insensitive).
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
-    mh = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.expr(_band_hash_spark(b)) for b in range(BANDS)])
-        ).alias("band_idx", "band_hash"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .distinct()
-    )
-    s1 = mh.select(F.col("doc_id").alias("doc_id_1"), F.col("hset").alias("hs1"))
-    s2 = mh.select(F.col("doc_id").alias("doc_id_2"), F.col("hset").alias("hs2"))
-    containment = F.size(F.array_intersect("hs1", "hs2")) / F.least(
-        F.size("hs1"), F.size("hs2")
-    )
+    # max_bucket=None: the oracle replays the uncapped band join under
+    # every profile
+    mh = signature_table(spark, sf_dir)
     return (
-        candidates.join(s1, "doc_id_1")
-        .join(s2, "doc_id_2")
-        .withColumn("containment", containment)
+        join_hsets(lsh_candidates(mh, max_bucket=None), mh)
+        .withColumn("containment", hset_containment())
         .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
         .select("doc_id_1", "doc_id_2", "containment")
     )

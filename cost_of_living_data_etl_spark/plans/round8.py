@@ -561,21 +561,16 @@ def q_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     all-pairs); the SAME persisted signature table feeds both the
     miner and the two calibration joins, so the corpus is shingled
     exactly once (a separate minhash_pair_plan call would shingle it
-    twice — measured 5.1× on the sf0.1→sf1.0 decade before this
-    reuse); the result is ≤ NUM_PERM+1 rows. Exact means fold via
-    det_sum.
+    twice, which grew 5.1× over the sf0.1→sf1.0 decade); the result
+    is ≤ NUM_PERM+1 rows. Exact means fold via det_sum.
     """
-    from pyspark import StorageLevel
-
     from cost_of_living_data_etl_spark.operators.dedup import (
         NUM_PERM,
-        minhash_signatures,
         neardup_pairs_from_sigs,
+        signature_table,
     )
 
-    mh_full = minhash_signatures(
-        load_table(spark, sf_dir, "documents")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    mh_full = signature_table(spark, sf_dir)
     pairs = neardup_pairs_from_sigs(mh_full)
     mh = mh_full.select("doc_id", *[f"mh{j}" for j in range(NUM_PERM)])
     s1 = mh.select(

@@ -157,3 +157,55 @@ def test_drift_reference_newest_same_sf(tmp_path, monkeypatch):
     )
     rec, rnd = bench._drift_reference(round_n=9)
     assert rnd == 7 and rec["queries"] == {"a": 1.0}
+
+
+def test_snapshot_rerun_never_overwrites(tmp_path, monkeypatch):
+    """A second (and third) bench run in the same round writes
+    bench_full_rNN_runK.json with the next K; earlier files keep their
+    bytes."""
+    bench = _bench()
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    hist = tmp_path / "history"
+    hist.mkdir()
+    first = bench._snapshot_path(11)
+    assert first.name == "bench_full_r11.json"
+    first.write_text("first")
+    second = bench._snapshot_path(11)
+    assert second.name == "bench_full_r11_run1.json"
+    second.write_text("second")
+    assert bench._snapshot_path(11).name == "bench_full_r11_run2.json"
+    assert first.read_text() == "first" and second.read_text() == "second"
+    # a different round starts at its own base name
+    assert bench._snapshot_path(12).name == "bench_full_r12.json"
+
+
+def test_references_read_newest_run_of_a_round(tmp_path, monkeypatch):
+    """Latest wins within a round: _run2 beats _run1 and the base file
+    (numeric K order, so _run10 beats _run9), for both the canary and
+    the drift reference."""
+    bench = _bench()
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    hist = tmp_path / "history"
+    hist.mkdir()
+    for suffix, t in [("", 0.1), ("_run1", 0.2), ("_run2", 0.3)]:
+        (hist / f"bench_full_r07{suffix}.json").write_text(
+            json.dumps(
+                {"sf": bench.SF_DIR, "queries": {c: t for c in bench.CANARY_ALL}}
+            )
+        )
+    ref, rnd = bench._canary_reference(round_n=8)
+    assert rnd == 7 and set(ref.values()) == {0.3}
+    rec, rnd = bench._drift_reference(round_n=8)
+    assert rnd == 7 and set(rec["queries"].values()) == {0.3}
+    (hist / "bench_full_r07_run10.json").write_text(
+        json.dumps({"sf": bench.SF_DIR, "queries": {"a": 1.0}})
+    )
+    (hist / "bench_full_r07_run9.json").write_text(
+        json.dumps({"sf": bench.SF_DIR, "queries": {"a": 9.0}})
+    )
+    rec, _ = bench._drift_reference(round_n=8)
+    assert rec["queries"] == {"a": 1.0}
+    # run10 lacks the canary set, so the canary lookup falls back to
+    # the newest complete run of the same round
+    ref, rnd = bench._canary_reference(round_n=8)
+    assert rnd == 7 and set(ref.values()) == {0.3}

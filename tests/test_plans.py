@@ -170,6 +170,41 @@ def test_simhash_signature_is_shuffle_free(spark, sf_smoke):
     assert sig.count("md5") == 1
 
 
+SIGNATURE_TABLE_CONSUMERS = [
+    "q_dedup_minhash_lsh",
+    "q_containment_neardup_pairs",
+    "q_dedup_incremental_batch",
+    "q_minhash_jaccard_calibration",
+]
+
+
+@pytest.mark.parametrize("name", SIGNATURE_TABLE_CONSUMERS)
+def test_signature_consumers_rekey_documents_scan(spark, sf_smoke, name):
+    """Every MinHash signature-table consumer scans ``documents`` the
+    way load_table(parallel=True) does: each documents relation in the
+    analyzed plan sits directly under a RepartitionByExpression on
+    doc_id whenever _scan_parallelized re-keys that file (the
+    shingle+minhash pass is otherwise one task on a single split)."""
+    from cost_of_living_data_etl_spark.sources import tables
+
+    probe = tables.load_table(spark, sf_smoke, "documents")
+    rekeyed = tables._scan_parallelized(
+        spark, probe, f"{sf_smoke}/documents.parquet", "documents"
+    ) is not probe
+    df = catalog()[name].fn(spark, sf_smoke)
+    lines = df._jdf.queryExecution().analyzed().toString().splitlines()
+    scans = [
+        i for i, l in enumerate(lines)
+        if re.search(r"Relation \[doc_id#\d+L,text#", l)
+    ]
+    assert scans, name
+    for i in scans:
+        over_rekey = re.search(
+            r"RepartitionByExpression \[doc_id#\d+L\]", lines[i - 1]
+        )
+        assert bool(over_rekey) == rekeyed, (name, lines[i - 1].strip())
+
+
 HEADLINE_NO_PYTHON_ROW_UDF = [
     "q1_pricing_summary",
     "q5_region_nation_revenue",
