@@ -139,6 +139,16 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
+def _round_n() -> int:
+    """This run's round: one past the rounds recorded as
+    ``BENCH_rNN.json`` at the repo root. Extra runs of a round, such as
+    ``BENCH_r09_c8.json``, are not rounds and do not count."""
+    pat = re.compile(r"BENCH_r\d+\.json")
+    return 1 + sum(
+        1 for p in Path(_REPO).glob("BENCH_r*.json") if pat.fullmatch(p.name)
+    )
+
+
 def _runs_of_round(r: int) -> list[Path]:
     """Round ``r``'s full snapshots in ``history/``, newest first: its
     ``bench_full_rNN_runK.json`` re-runs by descending K, then the
@@ -501,7 +511,7 @@ def main() -> None:
     #    ramp, not state accumulation). The 19-query canary median vs
     #    the reference round is kept for continuity but is NOT the
     #    gating number (per-pass JIT state made it swing ±15%).
-    round_n = 1 + len(list(Path(_REPO).glob("BENCH_r*.json")))
+    round_n = _round_n()
     retimed = set(to_run) | set(CANARY_ALL)
     full["retimed"] = sorted(retimed)
     full["fingerprints_recorded"] = True  # r9+: snapshot carries them

@@ -50,6 +50,7 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
+from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.mllite import (
     _DSUM_SQL,
@@ -314,34 +315,29 @@ def q_data_shapley_source_groups(
         F.count(F.lit(1)).cast("long").alias("n")
     )
     # The three bounded materializations are INDEPENDENT full-corpus
-    # rollups that ran as sequential job barriers; submit them from a
-    # thread pool so their (serial, single-split) scan+agg pipelines
-    # overlap (guide §2.6; round 10 — same move as the bucketed-join
-    # writes). Then the two phase-2 driver actions (vocab top-V and the
-    # eval-panel count — both over just-checkpointed bounded frames)
-    # overlap the same way. Order-alternating interleaved A/B: med
-    # 4.28 → 3.92 s, min 3.96 → 3.23, rows identical (CHECK).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(eager_checkpoint, f)
-            for f in (test_lazy, cglw_lazy, ngl_lazy)
-        ]
-        test, cglw_all, ngl = [f.result() for f in futs]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        vocab_fut = pool.submit(
-            lambda: [
-                r["word"]
-                for r in cglw_all.groupBy("word")
-                .agg(F.sum("c").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), "word")
-                .limit(NB_V)
-                .collect()
-            ]
-        )
-        n_test_fut = pool.submit(test.count)
-        vocab, n_test = vocab_fut.result(), n_test_fut.result()
+    # rollups; each is a serial, single-split scan+agg pipeline, so run
+    # one after another they are three job barriers with idle cores.
+    # Running them at once overlaps the pipelines. The two phase-2
+    # driver actions (vocab top-V and the eval-panel count, both over
+    # just-checkpointed bounded frames) overlap the same way.
+    # Order-alternating interleaved A/B: med 4.28 → 3.92 s, min
+    # 3.96 → 3.23, rows identical (CHECK).
+    test, cglw_all, ngl = run_concurrently(
+        lambda: eager_checkpoint(test_lazy),
+        lambda: eager_checkpoint(cglw_lazy),
+        lambda: eager_checkpoint(ngl_lazy),
+    )
+    vocab, n_test = run_concurrently(
+        lambda: [
+            r["word"]
+            for r in cglw_all.groupBy("word")
+            .agg(F.sum("c").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), "word")
+            .limit(NB_V)
+            .collect()
+        ],
+        test.count,
+    )
     cglw = cglw_all.filter(F.col("word").isin(vocab))
 
     memb = spark.createDataFrame(_memb_rows(), "mask int, grp int")

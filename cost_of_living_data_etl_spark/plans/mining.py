@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
+from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 from cost_of_living_data_etl_spark.operators.dedup import (
     _MINHASH_ORACLE,
     minhash_pair_plan,
@@ -550,21 +551,18 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     # The LSH signature checkpoint and the truth side's setsim chain
     # (whose build eager-checkpoints its own shingle table) are
-    # INDEPENDENT pipelines; run sequentially they are two job
-    # barriers, so overlap them from a 2-thread pool. Results are
-    # bit-identical: materialization order cannot affect either side's
-    # content. Order-alternating interleaved A/B: med 2.47 → 2.25 s,
-    # min 2.34 → 2.07, rows identical (CHECK). The signatures are
+    # INDEPENDENT pipelines; run in sequence they are two job
+    # barriers, so they run at once. Results are bit-identical:
+    # materialization order cannot affect either side's content.
+    # Order-alternating interleaved A/B: med 2.47 → 2.25 s, min
+    # 2.34 → 2.07, rows identical (CHECK). The signatures are
     # eager-checkpointed here instead of taken from signature_table,
-    # whose persist is lazy and would not materialize inside the pool.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        mh_fut = pool.submit(
-            lambda: minhash_signatures(docs).transform(eager_checkpoint)
-        )
-        truth_fut = pool.submit(q_setsim_prefix_join, spark, sf_dir)
-        mh, truth = mh_fut.result(), truth_fut.result()
+    # whose persist is lazy and would not materialize alongside the
+    # truth side.
+    mh, truth = run_concurrently(
+        lambda: minhash_signatures(docs).transform(eager_checkpoint),
+        lambda: q_setsim_prefix_join(spark, sf_dir),
+    )
     # ONE candidate frame feeds both counts, so the band self-join is
     # planned once and n_found ⊆ n_candidates by construction;
     # max_bucket=None because the oracle replays the uncapped join

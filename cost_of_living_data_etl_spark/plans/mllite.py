@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cost_of_living_data_etl_spark.functions.columns import det_sum
+from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.reshape import (
     _BUCKET_SPARK,
@@ -917,31 +918,23 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    # The two bucketed writes are INDEPENDENT jobs — submit them from a
-    # 2-thread pool so the customer write back-fills executors freed by
-    # the orders write's tail (guide §2.6 overlap; round 10).
-    # Interleaved order-alternating A/B: med 1.90 → 1.65 s, min 1.56 →
-    # 1.21, rows identical. Job descriptions are thread-local, so the
-    # writes stay correctly labeled; table contents are byte-identical
-    # to the sequential form (same data, same bucketing, same sort).
-    from concurrent.futures import ThreadPoolExecutor
-
-    write_jobs = [
-        (orders, f"bkt_orders_{tag}"),
-        (
+    # The two bucketed writes are INDEPENDENT jobs; run at once, the
+    # customer write back-fills the cores freed by the orders write's
+    # tail instead of waiting behind it. Interleaved order-alternating
+    # A/B: med 1.90 → 1.65 s, min 1.56 → 1.21, rows identical. Table
+    # contents are byte-identical to the sequential form (same data,
+    # same bucketing, same sort).
+    run_concurrently(
+        lambda: wh.save_bucketed(
+            orders, f"bkt_orders_{tag}", ["o_custkey"], n_buckets=16
+        ),
+        lambda: wh.save_bucketed(
             customer.withColumnRenamed("c_custkey", "o_custkey"),
             f"bkt_customer_{tag}",
+            ["o_custkey"],
+            n_buckets=16,
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                lambda j: wh.save_bucketed(
-                    j[0], j[1], ["o_custkey"], n_buckets=16
-                ),
-                write_jobs,
-            )
-        )
+    )
     o = spark.table(f"bkt_orders_{tag}").filter(F.col("o_orderstatus") == "O")
     c = spark.table(f"bkt_customer_{tag}")
     return (

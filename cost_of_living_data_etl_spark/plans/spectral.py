@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
+from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
@@ -158,25 +159,19 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.posexplode("qv").alias("i", "qi"), "qv"
     )
     # The moment job and the marginal job are INDEPENDENT rollups of
-    # the checkpointed quantized table — overlap their collects from a
-    # 2-thread pool instead of running two sequential job barriers
-    # (guide §2.6; round 10). Exact-integer results, order-free.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cells_fut = pool.submit(
-            flat.select("i", "qi", F.posexplode("qv").alias("j", "qj"))
-            .groupBy("i", "j")
-            .agg(F.sum(F.col("qi") * F.col("qj")).alias("sxx"))
-            .collect
-        )
+    # the checkpointed quantized table; collecting them at once
+    # replaces two sequential job barriers with one. Exact-integer
+    # results, so the order the jobs finish in cannot change them.
+    cells, marg = run_concurrently(
+        flat.select("i", "qi", F.posexplode("qv").alias("j", "qj"))
+        .groupBy("i", "j")
+        .agg(F.sum(F.col("qi") * F.col("qj")).alias("sxx"))
+        .collect,
         # marginals and n in ONE job (count rides along per dimension)
-        marg_fut = pool.submit(
-            flat.groupBy("i")
-            .agg(F.sum("qi").alias("s"), F.count(F.lit(1)).alias("cnt"))
-            .collect
-        )
-        cells, marg = cells_fut.result(), marg_fut.result()
+        flat.groupBy("i")
+        .agg(F.sum("qi").alias("s"), F.count(F.lit(1)).alias("cnt"))
+        .collect,
+    )
     sxs = {r["i"]: r["s"] for r in marg}
     n = marg[0]["cnt"]
     d = PCA_DIMS

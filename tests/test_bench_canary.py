@@ -44,6 +44,22 @@ def test_median():
     assert bench._median([1.0, 1.0, 1.0, 1.0, 100.0]) == 1.0
 
 
+def test_round_n_counts_only_round_files(tmp_path, monkeypatch):
+    """Extra runs of a round (``BENCH_r02_c8.json``) and the local
+    ``BENCH_LOCAL.json`` do not push the round number ahead."""
+    bench = _bench()
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    assert bench._round_n() == 1
+    for name in [
+        "BENCH_r01.json",
+        "BENCH_r02.json",
+        "BENCH_r02_c8.json",
+        "BENCH_LOCAL.json",
+    ]:
+        (tmp_path / name).write_text("{}")
+    assert bench._round_n() == 3
+
+
 def test_canary_reference_prefers_newest_complete_snapshot(tmp_path, monkeypatch):
     bench = _bench()
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))

@@ -8,6 +8,7 @@ cases (SURVEY.md §7 "what's hard" #3).
 from __future__ import annotations
 
 import datetime as dt
+import threading
 
 import pytest
 
@@ -141,6 +142,54 @@ def test_pipeline_golden(spark, lake_root, warehouse):
     assert lw[5]["SNAPSHOT_DATE_ID"] == 20240601
     sal = warehouse.read(spark, "FACT_TYPICAL_ANNUAL_SALARY")
     assert sal.columns == ["OCCUPATION", "SALARY", "SNAPSHOT_DATE_ID", "LOCATION_ID"]
+
+
+def _fresh_warehouse(spark, warehouse, cls, root) -> Warehouse:
+    wh = cls(str(root))
+    wh.overwrite(warehouse.read(spark, "dim_location"), "dim_location")
+    wh.overwrite(warehouse.read(spark, "dim_date"), "dim_date")
+    return wh
+
+
+class _BarrierWarehouse(Warehouse):
+    """Each append waits until all three loads are in flight, so a
+    pipeline that loads one table after another fails with
+    ``BrokenBarrierError`` instead of passing."""
+
+    def __init__(self, root: str):
+        super().__init__(root)
+        self.barrier = threading.Barrier(3, timeout=30)
+
+    def append(self, df, table, fmt="parquet"):
+        self.barrier.wait()
+        super().append(df, table, fmt)
+
+
+class _FailingWarehouse(Warehouse):
+    def append(self, df, table, fmt="parquet"):
+        if table == "FACT_LIVING_WAGE":
+            raise OSError(f"disk full while loading {table}")
+        super().append(df, table, fmt)
+
+
+def test_pipeline_loads_facts_at_once(spark, lake_root, warehouse, tmp_path):
+    wh = _fresh_warehouse(spark, warehouse, _BarrierWarehouse, tmp_path / "wh")
+    counts = run_pipeline(spark, lake_root, wh, EXTRACT, as_of=AS_OF)
+    assert list(counts.items()) == [
+        ("FACT_ANNUAL_EXPENSE", 3),
+        ("FACT_LIVING_WAGE", 2),
+        ("FACT_TYPICAL_ANNUAL_SALARY", 2),
+    ]
+    assert {t: wh.read(spark, t).count() for t in counts} == counts
+
+
+def test_failing_load_raises_after_others_load(spark, lake_root, warehouse, tmp_path):
+    wh = _fresh_warehouse(spark, warehouse, _FailingWarehouse, tmp_path / "wh")
+    with pytest.raises(OSError, match="FACT_LIVING_WAGE"):
+        run_pipeline(spark, lake_root, wh, EXTRACT, as_of=AS_OF)
+    # every load was attempted; the ones that succeeded stay loaded
+    assert wh.read(spark, "FACT_ANNUAL_EXPENSE").count() == 3
+    assert wh.read(spark, "FACT_TYPICAL_ANNUAL_SALARY").count() == 2
 
 
 def test_missing_dim_date_yields_zero_rows(spark, lake_root, warehouse):
