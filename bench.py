@@ -124,6 +124,11 @@ CANARY = [
 # optimization this round and resume as drift instruments from the
 # next snapshot. The gating number (all-query drift median) excludes
 # changed plans by fingerprint automatically.
+# q_kcore_dup_graph's plan changes once more when its peeling moves
+# from a fixed 8 rounds to functions/checkpoints.py::until_settled
+# (stop when no node has degree < k, raise at the cap): the first
+# snapshot after that change measures the change itself, and the name
+# resumes as a drift instrument from the next one.
 CANARY_HEAVY = [
     "q_pagerank_neardup_graph",
     "q_isotonic_calibration_quality_dup",

@@ -26,13 +26,19 @@ also set ``spark.sql.adaptive.enabled=false`` for its duration —
 bench.py's selection pass and tools/plan_audit.py both do. A lazy
 checkpoint created with AQE off still computes correctly when later
 actioned with AQE back on.
+
+``until_settled`` is the one stopping rule for the iterative plans
+built on these checkpoints: run rounds until an exact "unsettled" count
+reads 0, and raise at a round cap instead of returning an unconverged
+state.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 PLAN_ONLY_ENV = "SPARK_GRAFT_PLAN_ONLY"
 
@@ -49,3 +55,45 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     at build time, identical analyzed plan, materialization deferred
     to the first action. Use via ``.transform(eager_checkpoint)``."""
     return df.localCheckpoint(eager=not plan_only())
+
+
+def until_settled(
+    start: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    unsettled: Column,
+    max_rounds: int,
+    error: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` from ``start`` until settled.
+
+    ``start`` and every ``step(state)`` are checkpointed through
+    ``eager_checkpoint``; that same job observes ``unsettled``, an
+    aggregate over the frame's rows (a count of the rows that are not
+    yet final), so the convergence test costs no extra job. Returns the
+    first state that reads 0, after at most ``max_rounds`` steps;
+    raises ``RuntimeError(error)`` if ``max_rounds`` steps leave it
+    unsettled. The count must be exact: reading 0 has to mean that
+    another step would change nothing.
+
+    In a plan-only pass the checkpoints are lazy and observe no rows,
+    so the count reads 0 and no step runs: the analyzed plan keeps the
+    same shape.
+
+    Loops with a fixed round count that their oracle pins and no
+    settled test (PageRank, Lloyd, PQ, IRLS, PCA, EM) do not use this:
+    there is nothing for it to stop early or to check.
+    """
+
+    def settle(df: DataFrame) -> tuple[DataFrame, Observation]:
+        obs = Observation()
+        df = df.observe(obs, unsettled.alias("unsettled"))
+        return df.transform(eager_checkpoint), obs
+
+    state, obs = settle(start)
+    rounds = 0
+    while obs.get["unsettled"]:
+        if rounds == max_rounds:
+            raise RuntimeError(error)
+        state, obs = settle(step(state))
+        rounds += 1
+    return state

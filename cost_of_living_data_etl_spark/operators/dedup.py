@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
+    until_settled,
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
@@ -432,12 +433,12 @@ def star_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     Edges stay (node, node) pairs, so a round shuffles ids only, never
     text. The graph is settled when every node has only larger
     neighbors or exactly one neighbor: then each component is a star
-    around its min and m(u) is the label. Each round is one linear plan
-    ending in an eager localCheckpoint; that job also computes the next
-    m(u) and observes the count of unsettled edges, so the convergence
-    test costs no extra job.
+    around its min and m(u) is the label. Rounds run through
+    until_settled: each round is one linear plan ending in an eager
+    localCheckpoint, and that job also computes the next m(u) and
+    observes the count of unsettled edges.
     """
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Window
 
     by_u = Window.partitionBy("u")
     u, v, m = F.col("u"), F.col("v"), F.col("m")
@@ -457,35 +458,10 @@ def star_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     def with_min(edges: DataFrame) -> DataFrame:
         return edges.withColumn("m", F.least(F.min("v").over(by_u), u))
 
-    def settle(edges: DataFrame) -> tuple[DataFrame, Observation]:
-        unsettled = Observation()
-        edges = (
-            with_min(edges)
-            .withColumn("degree", F.count(F.lit(1)).over(by_u))
-            .observe(
-                unsettled,
-                F.count(F.when((m != u) & (F.col("degree") != 1), True)).alias(
-                    "edges"
-                ),
-            )
-            .select("u", "v", "m")
-        )
-        return edges.transform(eager_checkpoint), unsettled
+    def with_min_degree(edges: DataFrame) -> DataFrame:
+        return with_min(edges).withColumn("degree", F.count(F.lit(1)).over(by_u))
 
-    edges, unsettled = settle(
-        undirected(pairs.selectExpr("doc_id_1 AS a", "doc_id_2 AS b"))
-    )
-    # In a plan-only pass (functions/checkpoints.py) the checkpoints are
-    # lazy and observe no rows, so no round runs and the analyzed plan
-    # has the same shape.
-    rounds = 0
-    while unsettled.get["edges"]:
-        if rounds == CC_STAR_MAX_ROUNDS:
-            raise RuntimeError(
-                f"star_components did not converge in {CC_STAR_MAX_ROUNDS} "
-                "large/small-star rounds; raise CC_STAR_MAX_ROUNDS for this "
-                "graph (rounds needed grow ~log² of the largest component)"
-            )
+    def large_small_star(edges: DataFrame) -> DataFrame:
         large = edges.filter(v > u).select(v.alias("a"), m.alias("b")).distinct()
         # the small-star arm for v > u emits (m, m), dropped by a != b
         small = (
@@ -504,9 +480,17 @@ def star_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        edges, unsettled = settle(undirected(small))
-        rounds += 1
+        return with_min_degree(undirected(small))
 
+    edges = until_settled(
+        with_min_degree(undirected(pairs.selectExpr("doc_id_1 AS a", "doc_id_2 AS b"))),
+        large_small_star,
+        F.count(F.when((m != u) & (F.col("degree") != 1), True)),
+        CC_STAR_MAX_ROUNDS,
+        f"star_components did not converge in {CC_STAR_MAX_ROUNDS} "
+        "large/small-star rounds; raise CC_STAR_MAX_ROUNDS for this "
+        "graph (rounds needed grow ~log² of the largest component)",
+    )
     labels = edges.groupBy(F.col("u").alias("doc_id")).agg(
         F.min("m").alias("cluster_id")
     )

@@ -54,14 +54,6 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def pii_counts(text: Column) -> dict[str, Column]:
-    """Per-type match counts for audit/stats (regexp_count, native)."""
-    return {
-        name: F.regexp_count(text, F.lit(pattern))
-        for name, (pattern, _) in PII_PATTERNS.items()
-    }
-
-
 def redact_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus scrub: redacted text + per-type counts + total flag.
 

@@ -68,12 +68,6 @@ def stopword_ratio(text: Column) -> Column:
     )
 
 
-def mean_word_length(text: Column) -> Column:
-    n_words = word_token_count(text)
-    total = F.length(F.regexp_replace(text, r"[^A-Za-z0-9]", ""))
-    return total / F.greatest(n_words, F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """Composite heuristic quality in [0,1]: long enough, word-like,
     some stopwords, not digit/punct-soup. Deterministic, monotone in
@@ -107,29 +101,6 @@ ZH_CHAR_RE = r"[一-鿿]"
 LANG_ORDER = (*LANG_MARKERS, "zh")
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    words = lower_word_array(text)
-    scores = {
-        lang: word_set_count(words, vocab) for lang, vocab in LANG_MARKERS.items()
-    }
-    scores["zh"] = F.regexp_count(text, F.lit(ZH_CHAR_RE))
-    return scores
-
-
-def predicted_lang(text: Column) -> Column:
-    """argmax over marker scores; ties resolve to the earlier language
-    in LANG_ORDER; all-zero → 'und'."""
-    scores = lang_scores(text)
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
-    # build the when-chain in reverse so earlier languages win ties
-    for lang in reversed(LANG_ORDER):
-        expr = F.when(
-            (scores[lang] == best) & (best > 0), F.lit(lang)
-        ).otherwise(expr)
-    return expr
-
-
 def fingerprint(text_col: str = "text", n: int = 8, stride: int = 4) -> Column:
     """Rolling-hash document fingerprint: min md5 over stride-sampled
     character n-grams (winnowing-lite). Identical docs → identical
@@ -149,23 +120,6 @@ def fingerprint(text_col: str = "text", n: int = 8, stride: int = 4) -> Column:
             )
         )
         """
-    )
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full per-document feature set in one projection."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        whitespace_token_count(t).cast("long").alias("n_tokens_ws"),
-        word_token_count(t).cast("long").alias("n_tokens_word"),
-        punct_ratio(t).alias("punct_ratio"),
-        digit_ratio(t).alias("digit_ratio"),
-        stopword_ratio(t).alias("stopword_ratio"),
-        mean_word_length(t).alias("mean_word_len"),
-        quality_score(t).alias("quality"),
-        predicted_lang(t).alias("lang_pred"),
-        fingerprint(text_col).alias("fingerprint"),
     )
 
 

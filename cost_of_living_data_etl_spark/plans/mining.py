@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
+    until_settled,
 )
 from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 from cost_of_living_data_etl_spark.operators.dedup import (
@@ -357,7 +358,10 @@ def q_dupgraph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- k-core of the dup graph -------------------------------------------------
 
 KCORE_K = 2
-KCORE_ROUNDS = 8  # fixed peeling rounds (PR_ITERS convention)
+# Peeling-round cap. The oracle unrolls exactly this many rounds, so
+# the engine, which stops once no node has degree < KCORE_K and raises
+# at this cap, either matches the oracle or fails.
+KCORE_ROUNDS = 8
 
 
 def _kcore_oracle() -> str:
@@ -401,42 +405,48 @@ def q_kcore_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise dedup (complementing assortativity's one-number read
     with the actual member set).
 
-    Third iterative-graph operator discipline (CC, PageRank): a FIXED
-    number of peeling rounds, so both engines reach the identical —
-    converged or not — state and the oracle (which unrolls the same
-    rounds) hash-matches regardless; 8 rounds converge for any graph
-    whose peel-chains are shorter than 8 (the fixture's are ≤ 2;
-    production uses the CC-style 1-scalar convergence check instead).
-    localCheckpoint truncates lineage per round.
+    Peeling runs through until_settled: every edge row carries its
+    src's degree as a window count, the round's checkpoint job counts
+    the rows whose degree is < KCORE_K, and peeling stops at the first
+    edge set where that count is 0 (the fixture's peel-chains settle in
+    one round). Raises RuntimeError if KCORE_ROUNDS rounds do not
+    settle the graph; the oracle unrolls KCORE_ROUNDS rounds, which
+    reach the same fixed point whenever the engine settles.
 
-    100 TB: each round shuffles (src, dst) id pairs and |nodes|
-    degree rows — never documents; the edge set only shrinks.
+    100 TB: each round shuffles (src, dst) id pairs — never documents;
+    the edge set only shrinks.
     """
+    by_src = Window.partitionBy("src")
+    degree = F.col("degree")
+
+    def with_degree(e: DataFrame) -> DataFrame:
+        return e.withColumn("degree", F.count(F.lit(1)).over(by_src))
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = e.filter(degree >= KCORE_K)
+        return with_degree(
+            keep.join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
+        )
+
     pairs = minhash_pair_plan(spark, sf_dir).select("doc_id_1", "doc_id_2")
-    e = pairs.select(
-        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-    ).unionAll(
-        pairs.select(
-            F.col("doc_id_2").alias("src"), F.col("doc_id_1").alias("dst")
-        )
-    ).transform(eager_checkpoint)  # EAGER (CC convention): LSH plan runs once —
-    # each round references e twice (degree agg + join), and a lazy
-    # checkpoint let the whole upstream re-run per reference (measured
-    # 137 s -> ~10 s at sf0.001)
-    for _ in range(KCORE_ROUNDS):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= KCORE_K)
-            .select("src")
-        )
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+    e = until_settled(
+        # the first checkpoint runs the LSH plan once; every round then
+        # reads the checkpointed edges
+        with_degree(
+            pairs.select(
+                F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
+            ).unionAll(
+                pairs.select(
+                    F.col("doc_id_2").alias("src"), F.col("doc_id_1").alias("dst")
+                )
             )
-            .transform(eager_checkpoint)
-        )
+        ),
+        peel,
+        F.count(F.when(degree < KCORE_K, True)),
+        KCORE_ROUNDS,
+        f"q_kcore_dup_graph did not converge in {KCORE_ROUNDS} peeling rounds; "
+        "raise KCORE_ROUNDS (the oracle unrolls the same count)",
+    )
     return (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("core_degree"))

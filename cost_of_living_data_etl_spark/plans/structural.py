@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
+    until_settled,
 )
 from cost_of_living_data_etl_spark.operators.dedup import SHINGLES_SQL, shingle_docs
 from cost_of_living_data_etl_spark.plans.catalog import register
@@ -48,7 +49,7 @@ from cost_of_living_data_etl_spark.sources.tables import load_table
 SETSIM_T = 0.5  # exact-join Jaccard threshold
 IDLE_GAP_US = 300_000_000  # activity interval: event covers [ts, ts+5min)
 HIER_ROOTS = 5  # synthetic supplier forest: nodes 0..4 are roots
-HIER_ROUNDS = 8  # pointer-doubling rounds: reaches depth 2^8 = 256
+HIER_ROUNDS = 8  # pointer-doubling round cap: resolves depth < 2^8
 
 
 # --- exact set-similarity self-join (prefix filtering) ----------------------
@@ -187,7 +188,8 @@ def setsim_pairs(
     )
     # J >= t  ⟺  overlap >= t/(1+t) * (na+nb); with t = 1/2 that is
     # alpha = ceil((na+nb)/3), kept in exact integer arithmetic
-    assert SETSIM_T == 0.5, "alpha expression below is derived for t=1/2"
+    if SETSIM_T != 0.5:
+        raise ValueError("alpha expression below is derived for SETSIM_T = 1/2")
     alpha = F.expr("(na + nb + 2) div 3")
     cands = (
         a.join(b, "h")
@@ -480,48 +482,60 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per LEVEL — is O(depth) shuffles. This uses POINTER DOUBLING
     instead: iterate ``anc ← anc(anc)``, accumulating hop counts, so
     round i resolves ancestors 2^i hops up; roots self-loop at
-    distance 0, making convergence absorbing. 8 rounds reach depth
-    256 — any industrial hierarchy. The DuckDB oracle is a genuine
-    ``WITH RECURSIVE`` — the definition, independent of the doubling.
+    distance 0, making convergence absorbing. Each row carries
+    ``anc_is_root``: true on a root's own row, then the flag of the hop
+    row it joins, so it is true exactly when ``anc`` is a root that
+    exists. Rounds run through until_settled and stop once every row's
+    flag is true; a forest deeper than 2^HIER_ROUNDS - 1 = 255 raises
+    RuntimeError instead of returning wrong roots. The DuckDB oracle is
+    a genuine ``WITH RECURSIVE`` — the definition, independent of the
+    doubling.
 
-    100 TB: each round shuffles only (node, anc, d) triples — never
-    payload — and `localCheckpoint` truncates the self-referencing
-    lineage that would otherwise double the plan per round (same
-    discipline as connected components, `operators/dedup.py`).
-    Balances total in integral cents, one division at the end.
+    100 TB: each round shuffles only (node, anc, d, flag) tuples —
+    never payload — and each round's checkpoint truncates the
+    self-referencing lineage that would otherwise double the plan per
+    round. Balances total in integral cents, one division at the end.
     """
     sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"),
         F.round(F.col("s_acctbal") * 100).cast("long").alias("cents"),
     )
-    anc = sup.select(
-        "node",
-        F.when(
-            F.col("node") < HIER_ROOTS, F.col("node")
-        ).otherwise(
-            # integer div: exact at any key magnitude (float / would
-            # misround past 2^53)
-            F.expr(f"(node - {HIER_ROOTS}) div 2")
-        ).alias("anc"),
-        F.when(F.col("node") < HIER_ROOTS, F.lit(0))
-        .otherwise(F.lit(1))
-        .alias("d"),
-    )
-    for _ in range(HIER_ROUNDS):
+    is_root = F.col("node") < HIER_ROOTS
+
+    def double(anc: DataFrame) -> DataFrame:
         hop = anc.select(
             F.col("node").alias("j_node"),
             F.col("anc").alias("j_anc"),
             F.col("d").alias("j_d"),
+            F.col("anc_is_root").alias("j_is_root"),
         )
-        anc = (
-            anc.join(hop, anc.anc == hop.j_node)
-            .select(
-                "node",
-                F.col("j_anc").alias("anc"),
-                (F.col("d") + F.col("j_d")).alias("d"),
+        return anc.join(hop, anc.anc == hop.j_node).select(
+            "node",
+            F.col("j_anc").alias("anc"),
+            (F.col("d") + F.col("j_d")).alias("d"),
+            F.col("j_is_root").alias("anc_is_root"),
+        )
+
+    anc = until_settled(
+        sup.select(
+            "node",
+            F.when(is_root, F.col("node"))
+            .otherwise(
+                # integer div: exact at any key magnitude (float / would
+                # misround past 2^53)
+                F.expr(f"(node - {HIER_ROOTS}) div 2")
             )
-            .localCheckpoint(eager=False)
-        )
+            .alias("anc"),
+            F.when(is_root, F.lit(0)).otherwise(F.lit(1)).alias("d"),
+            is_root.alias("anc_is_root"),
+        ),
+        double,
+        F.count(F.when(~F.col("anc_is_root"), True)),
+        HIER_ROUNDS,
+        f"q_hierarchy_rollup did not converge in {HIER_ROUNDS} pointer-doubling "
+        f"rounds: the hierarchy is deeper than {2 ** HIER_ROUNDS - 1}; raise "
+        "HIER_ROUNDS",
+    )
     return (
         anc.join(sup, "node")
         .groupBy(F.col("anc").alias("root"))

@@ -55,9 +55,16 @@ def test_fingerprint_identical_in_plan_only_mode(spark, monkeypatch):
     same analyzed LogicalRDD node — or selection would re-run every
     checkpoint-bearing query forever."""
     cat = catalog()
-    # a checkpoint-bearing builder (winnowing fingerprint table) and a
-    # plain one
-    for name in ["q_winnowing_overlap_pairs", "q1_pricing_summary"]:
+    # a checkpoint-bearing builder (winnowing fingerprint table), the
+    # three until_settled loops (connected components, k-core peeling,
+    # pointer doubling) and a plain one
+    for name in [
+        "q_winnowing_overlap_pairs",
+        "q_dedup_clusters",
+        "q_kcore_dup_graph",
+        "q_hierarchy_rollup",
+        "q1_pricing_summary",
+    ]:
         monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
         lazy_fp = _fingerprint(cat[name].fn(spark, SF), cat[name].fn)
         monkeypatch.delenv("SPARK_GRAFT_PLAN_ONLY")

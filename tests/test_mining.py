@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from cost_of_living_data_etl_spark.plans.mining import (
 
     q_dupgraph_assortativity,
@@ -74,17 +76,22 @@ def test_assortativity_null_on_regular_graph(spark, tmp_path):
     assert r["assortativity"] is None
 
 
-def test_kcore_keeps_cliques_peels_pendant_pairs(spark, tmp_path):
-    """Four identical docs (K4) survive the 2-core with degree 3; an
-    isolated identical PAIR (one edge, degree 1 each) must peel away,
-    as must singletons with no edges at all."""
+def _write_clique_and_pair(spark, path):
+    """Four identical docs (a K4), one identical pair, one singleton."""
     clique = "alpha beta gamma delta epsilon zeta eta theta"
     pair = "one two three four five six seven eight nine"
     texts = [clique] * 4 + [pair] * 2 + ["solo unique text number ten eleven"]
     spark.createDataFrame(
         [(i, t, "en", "test", len(t)) for i, t in enumerate(texts)],
         "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    ).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_kcore_keeps_cliques_peels_pendant_pairs(spark, tmp_path):
+    """Four identical docs (K4) survive the 2-core with degree 3; an
+    isolated identical PAIR (one edge, degree 1 each) must peel away,
+    as must singletons with no edges at all."""
+    _write_clique_and_pair(spark, tmp_path)
     from cost_of_living_data_etl_spark.plans.mining import q_kcore_dup_graph
 
     got = {
@@ -92,6 +99,17 @@ def test_kcore_keeps_cliques_peels_pendant_pairs(spark, tmp_path):
         for r in q_kcore_dup_graph(spark, str(tmp_path)).collect()
     }
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
+
+
+def test_kcore_raises_when_round_cap_leaves_it_unsettled(spark, tmp_path, monkeypatch):
+    """The pendant pair needs one peeling round: with a cap of 0 the
+    builder must raise instead of returning the unpeeled graph."""
+    from cost_of_living_data_etl_spark.plans import mining
+
+    _write_clique_and_pair(spark, tmp_path)
+    monkeypatch.setattr(mining, "KCORE_ROUNDS", 0)
+    with pytest.raises(RuntimeError, match="KCORE_ROUNDS"):
+        mining.q_kcore_dup_graph(spark, str(tmp_path))
 
 
 def test_mutual_nn_dense_guard_refuses_large_input(spark, monkeypatch):

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from cost_of_living_data_etl_spark.plans.structural import (
     q_hierarchy_rollup,
     q_interval_merge_islands,
@@ -162,15 +164,19 @@ def test_weighted_median_even_split_picks_lower(spark, tmp_path):
     ]
 
 
+def _write_forest(spark, path, keys):
+    spark.createDataFrame(
+        [(k, f"s{k}", 0, float(k)) for k in keys],
+        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
+    ).write.mode("overwrite").parquet(f"{path}/supplier.parquet")
+
+
 def test_hierarchy_matches_python_walk(spark, tmp_path):
     """Pointer doubling must agree with a plain Python parent walk on
     a 37-node forest (deep enough that several doubling rounds do real
     work: depth 4 > 2^1)."""
     n = 37
-    spark.createDataFrame(
-        [(k, f"s{k}", 0, float(k)) for k in range(n)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/supplier.parquet")
+    _write_forest(spark, tmp_path, range(n))
 
     def walk(k):
         depth = 0
@@ -193,6 +199,41 @@ def test_hierarchy_matches_python_walk(spark, tmp_path):
         for r in rows
     }
     assert got == {r: (c, d, b) for r, (c, d, b) in agg.items()}
+
+
+def test_hierarchy_drops_subtrees_of_an_absent_root(spark, tmp_path):
+    """Root 0 is missing: like the oracle's recursive walk, which starts
+    from the roots present, its children (nodes 5 and 6) must not appear
+    under root 0. Every parent pointer of this depth-1 forest already
+    names a root, which does not prove that the root exists: the loop
+    must still run the round that joins each node to its root's row."""
+    _write_forest(spark, tmp_path, range(1, 15))
+    got = {r["root"] for r in q_hierarchy_rollup(spark, str(tmp_path)).collect()}
+    assert got == {1, 2, 3, 4}
+
+
+def test_hierarchy_raises_when_round_cap_leaves_it_unsettled(
+    spark, tmp_path, monkeypatch
+):
+    """The 37-node forest is depth 4; one doubling round resolves depth
+    1 only, so a cap of 1 must raise instead of returning wrong roots."""
+    from cost_of_living_data_etl_spark.plans import structural
+
+    _write_forest(spark, tmp_path, range(37))
+    monkeypatch.setattr(structural, "HIER_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="HIER_ROUNDS"):
+        structural.q_hierarchy_rollup(spark, str(tmp_path))
+
+
+def test_setsim_guard_raises_off_its_derived_threshold(spark, sf_smoke, monkeypatch):
+    """The prefix join's overlap bound is derived for SETSIM_T = 1/2;
+    any other threshold must be refused with ValueError, also under
+    ``python -O``."""
+    from cost_of_living_data_etl_spark.plans import structural
+
+    monkeypatch.setattr(structural, "SETSIM_T", 0.6)
+    with pytest.raises(ValueError, match="SETSIM_T"):
+        structural.q_setsim_prefix_join(spark, sf_smoke)
 
 
 def test_setsim_no_text_or_shingles_in_any_exchange(spark, sf_smoke):
