@@ -6,8 +6,10 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": "..."}
 
-Each query is forced end-to-end with a noop sink (full computation,
-no collect/driver materialization cost) and timed twice:
+Every timing follows one run-once contract (``time_once``): build the
+frame inside the timer, force it end-to-end into the noop sink (full
+computation, no collect/driver materialization cost), stop the timer,
+then clear the data cache. Each query is timed twice:
 
 - **cold**: first execution of the plan — includes whole-stage-codegen
   compilation and class loading, a per-PLAN fixed cost that is
@@ -22,7 +24,7 @@ the 0.5-3 s one-time compile per plan is noise against minutes of
 scan/shuffle, so steady-state engine cost is the number that predicts
 cluster behavior. Both totals are printed for transparency.
 
-Drift measurement (round 9): ``normalized_value`` = raw warm total ÷
+Drift measurement: ``normalized_value`` = raw warm total ÷
 the median per-query warm ratio vs the newest prior same-SF snapshot,
 taken over every re-timed, plan-unchanged query above a 0.2 s noise
 floor (~300 names) — measured reproducible to 0.03% across identical
@@ -36,48 +38,51 @@ under --changed-only.
 full): re-times only queries whose normalized ANALYZED-plan
 fingerprint differs from the last run at the same SF, reusing prior
 timings for the rest — all non-canary queries reuse on an unchanged
-catalog (q_bucketed_colocated_join's managed-table name was made
-content-deterministic in round 9, so it no longer churns).
+catalog (managed-table names such as q_bucketed_colocated_join's are
+content-deterministic, so they do not churn the fingerprint).
 Fingerprints live in history/plan_fingerprints.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
 from pathlib import Path
+from statistics import median
 
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from cost_of_living_data_etl_spark.functions.checkpoints import (  # noqa: E402
+    plan_only_pass,
+)
 from cost_of_living_data_etl_spark.plans import catalog  # noqa: E402
 from cost_of_living_data_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Round 5 on, the bench set IS the catalog: every registered query is
-# perf-tracked (round-4 verdict item 5 — no hand-curated exclusion
-# list, so a correctness-covered query can never silently drop out of
-# the perf record). The quadratic validation baselines
+# The bench set IS the catalog: every registered query is perf-tracked.
+# There is no hand-curated exclusion list, so a correctness-covered
+# query can never silently drop out of the perf record. The quadratic validation baselines
 # (q_embed_neardup_pairs, q_mutual_nn_pairs) stay in: their explicit
 # >100k-row guards make them bounded at any bench SF, and their cost
 # vs the sub-quadratic production paths is exactly what the record
 # should show.
 HEADLINE: list[str] = []  # filled from catalog() in main()
 
-# Drift canary (round-8 verdict item 3; methodology rebuilt in round 9
-# per the round-8 verdict item 1): cross-snapshot totals are dominated
-# by host noise (untouched queries moved up to 4x between rounds 6 and
-# 7 with zero code change), which turns every round's perf story into
-# re-litigation. The canary queries are PLAN-STABLE (no session-keyed
-# table names, no fit caches), UNTOUCHED since early rounds, and span
-# the engine's families (scan+agg, join, window, pivot, text, events,
-# dedup, corpus). Round-9 changes, each closing a measured hole in the
-# round-8 numbers (two runs of identical code normalized 22% apart):
+# Drift canary: cross-snapshot totals are dominated by host noise
+# (untouched queries have moved up to 4x between snapshots with zero
+# code change), so a raw total cannot show whether a change helped.
+# The canary queries are PLAN-STABLE (no session-keyed table names, no
+# fit caches), rarely edited, and span the engine's families
+# (scan+agg, join, window, pivot, text, events, dedup, corpus). Each
+# rule below closes a measured hole in a simpler design, under which
+# two runs of identical code normalized 22% apart:
 #
 # 1. STRATIFIED: four EXPENSIVE plan-stable queries (3.8-6 s warm each
 #    at sf0.1) join the fifteen cheap ones, so the canary is no longer
@@ -93,8 +98,8 @@ HEADLINE: list[str] = []  # filled from catalog() in main()
 #    first_ref[c]) — one outlier query (or one noisy timing) can no
 #    longer swing the ratio the way total-over-total did.
 # 4. ALWAYS FRESH: the canary passes run unconditionally, including
-#    under --changed-only (ADVICE r08: reusing plan-stable canary
-#    timings made the ratio normalize fresh timings by a stale host).
+#    under --changed-only: reusing plan-stable canary timings would
+#    normalize fresh timings by a stale host.
 #
 # Contract: NEVER rewrite a canary query; replace the entry here (and
 # in SCALE.md) if one must change.
@@ -115,20 +120,14 @@ CANARY = [
     "q_pack_sequences",
     "q_join_key_skew_profile",
 ]
-# round-9 stratification: expensive, fixed-iteration, plan-stable.
-# NOTE (optimization round 9): three of the four consume shared
-# operators optimized this round (the LSH chain re-key; the isotonic
-# grid checkpoint), so their plans churn ONCE in the r9 snapshots. The
-# within-run first/last inflation instrument is unaffected (same plan
-# inside one run); cross-round ratios for those names measure the
-# optimization this round and resume as drift instruments from the
-# next snapshot. The gating number (all-query drift median) excludes
-# changed plans by fingerprint automatically.
-# q_kcore_dup_graph's plan changes once more when its peeling moves
-# from a fixed 8 rounds to functions/checkpoints.py::until_settled
-# (stop when no node has degree < k, raise at the cap): the first
-# snapshot after that change measures the change itself, and the name
-# resumes as a drift instrument from the next one.
+# The expensive stratum: fixed-iteration, plan-stable queries. Three of
+# the four consume shared operators (the LSH chain, the isotonic grid
+# checkpoint, k-core peeling through until_settled), so an edit there
+# churns their plans. The within-run first/last inflation instrument is
+# unaffected (same plan inside one run); a cross-snapshot ratio for a
+# changed name measures the edit, and the name resumes as a drift
+# instrument from the next snapshot. The gating number (all-query drift
+# median) excludes changed plans by fingerprint automatically.
 CANARY_HEAVY = [
     "q_pagerank_neardup_graph",
     "q_isotonic_calibration_quality_dup",
@@ -138,10 +137,26 @@ CANARY_HEAVY = [
 CANARY_ALL = CANARY + CANARY_HEAVY
 
 
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
+def time_once(spark, fn, sf_dir: str):
+    """The run-once contract -> (seconds, the built frame).
+
+    ``fn(spark, sf_dir)`` is built INSIDE the timer, so fit-heavy
+    queries pay their driver-side passes (eager checkpoints, fit
+    collects) in their timing; the frame is forced end-to-end into the
+    noop sink; the timer stops; then the data cache is cleared, outside
+    the timed span, so the next run gets no advantage from
+    intermediates this one persisted. The frame is returned so a caller
+    can fingerprint it without building it again."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    seconds = time.perf_counter() - t0
+    # Unpersisting every RDD as well was measured and rejected: it made
+    # the full-catalog warm total ~35% slower (blocking unpersist calls
+    # outweigh any block-manager pressure), and the late-session
+    # slowdown it targeted was host-state noise (SCALE.md "Pinned").
+    spark.catalog.clearCache()
+    return seconds, df
 
 
 def _round_n() -> int:
@@ -233,7 +248,7 @@ def _drift_median(
     """Median per-query warm ratio vs the reference snapshot — the
     host-drift estimate that normalizes cross-round totals.
 
-    Measured (round 9, SCALE.md "Drift normalization rebuilt"): two
+    Measured (SCALE.md "Drift normalization rebuilt"): two
     back-to-back full runs of identical code disagreed 16% when
     normalized by the 19-query canary median (per-pass JIT state varies
     run to run), but agreed within 0.1% when normalized by the median
@@ -246,8 +261,7 @@ def _drift_median(
     DRIFT_FLOOR_SEC on both sides, and its plan fingerprint is
     UNCHANGED vs the reference snapshot's recorded fingerprints (a
     changed plan's ratio measures the edit, not the host; unknown when
-    the reference predates fingerprint recording — r9+ snapshots carry
-    them)."""
+    the reference snapshot carries no fingerprints)."""
     ref_q = ref.get("queries", {})
     ref_retimed = set(ref.get("retimed", ref_q))
     ratios = sorted(
@@ -262,7 +276,7 @@ def _drift_median(
     )
     if not ratios:
         return None, 0
-    return _median(ratios), len(ratios)
+    return median(ratios), len(ratios)
 
 
 def _fingerprint(df, fn=None) -> str:
@@ -280,8 +294,8 @@ def _fingerprint(df, fn=None) -> str:
     GENUINE column names ending in _<digits> (doc_id_1/doc_id_2 both
     become doc_id_#), so a change expressed only in such names would
     fingerprint identical. Folding in the builder function's source
-    text closes that hole (round-6 review catch): any edit to the
-    query's code re-times it, at worst slightly over-eagerly."""
+    text closes that hole: any edit to the query's code re-times it,
+    at worst slightly over-eagerly."""
     import hashlib
     import inspect
     import re
@@ -302,16 +316,19 @@ def _fingerprint(df, fn=None) -> str:
     return hashlib.md5(plan.encode()).hexdigest()
 
 
-def main() -> None:
-    # --changed-only (round-5 verdict item 8): re-time only queries
-    # whose optimized plan fingerprint differs from the last FULL run
-    # at the same SF, reusing the previous timings for the rest — the
-    # full cold+warm catalog run costs ~10 min at sf0.1 and iterating
-    # on one operator should not pay it. The driver's plain
-    # `python bench.py` is unchanged (always full). Fingerprints are
-    # recorded on every run; the flag is a no-op (full run) when no
-    # prior fingerprint map exists for this SF.
-    changed_only = "--changed-only" in sys.argv
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser()
+    # Iterating on one operator should not pay the full cold+warm
+    # catalog run (~10 min at sf0.1). The flag is a no-op (full run)
+    # when no prior fingerprint map exists for this SF; fingerprints
+    # are recorded on every run.
+    ap.add_argument(
+        "--changed-only",
+        action="store_true",
+        help="re-time only queries whose plan fingerprint changed since "
+        "the last run at this SF; reuse the prior timings for the rest",
+    )
+    changed_only = ap.parse_args(argv).changed_only
 
     # Fold any NEW driver-correctness greens into the verified-
     # fingerprint map BEFORE this run overwrites plan_fingerprints.json
@@ -347,44 +364,20 @@ def main() -> None:
 
     fingerprints: dict[str, str] = {}
     if changed_only:
-        # selection pass: building fn() runs any driver-side fit code
-        # (IVF centroids, PQ codebooks) and memoizes it in the
-        # quantizer caches — so those caches are EXPLICITLY cleared
-        # below before the timed loop, or a changed fit-heavy query
-        # would be re-timed without its fit cost and the fake
-        # improvement would land in BENCH_LOCAL.json and the round's
-        # history snapshot (round-6 review catch). Eager
-        # localCheckpoint sites (winnowing fingerprints, MMR pool)
-        # would ALSO run near-full-scale jobs at build time (ADVICE
-        # r06) — SPARK_GRAFT_PLAN_ONLY degrades them to lazy for the
-        # duration of this pass; the analyzed plan (hence the
-        # fingerprint) is identical in both modes
+        # Selection pass: build every plan only to fingerprint it. The
+        # analyzed plan (hence the fingerprint) is identical inside a
+        # plan-only pass, where eager checkpoints run no job
         # (functions/checkpoints.py, pinned by
         # tests/test_bench_fingerprint.py).
-        from cost_of_living_data_etl_spark.functions.checkpoints import (
-            PLAN_ONLY_ENV,
-        )
-
-        # AQE must be OFF for the pass: under AQE, even a LAZY
-        # checkpoint materializes upstream query stages when the
-        # wrapped RDD is created (toRdd), which re-runs the very jobs
-        # plan-only mode exists to skip. Restored before the timed
-        # loop (timings keep the production AQE-on contract).
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-        plan_only_prev = os.environ.get(PLAN_ONLY_ENV)  # restore, don't clobber (ADVICE r07)
-        os.environ[PLAN_ONLY_ENV] = "1"
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with plan_only_pass(spark):
             fingerprints = {
                 name: _fingerprint(specs[name].fn(spark, SF_DIR), specs[name].fn)
                 for name in HEADLINE
             }
-        finally:
-            if plan_only_prev is None:
-                os.environ.pop(PLAN_ONLY_ENV, None)
-            else:
-                os.environ[PLAN_ONLY_ENV] = plan_only_prev
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+        # Building fn() also runs driver-side fit code (IVF centroids,
+        # PQ codebooks) and memoizes it in the quantizer caches. Clear
+        # them, or a changed fit-heavy query would be timed without its
+        # fit cost.
         from cost_of_living_data_etl_spark.operators.similarity import (
             clear_quantizer_caches,
         )
@@ -401,8 +394,8 @@ def main() -> None:
         ]
     else:
         to_run = [n for n in HEADLINE if n not in CANARY_ALL]
-    # Canary queries NEVER reuse prior timings (ADVICE r08): they run in
-    # the dedicated first/last passes below on every invocation, so the
+    # Canary queries NEVER reuse prior timings: they run in the
+    # dedicated first/last passes below on every invocation, so the
     # drift ratio always reflects THIS run's host.
     reused = [n for n in HEADLINE if n not in to_run and n not in CANARY_ALL]
     if changed_only:
@@ -414,31 +407,13 @@ def main() -> None:
 
     # warm the JVM/codegen path once so timings measure the engine,
     # not first-call class-loading
-    specs["q1_pricing_summary"].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    time_once(spark, specs["q1_pricing_summary"].fn, SF_DIR)
 
     cold: dict[str, float] = {}
 
-    # NOTE (round 7): an unpersist-all-RDDs-between-queries variant was
-    # measured and REJECTED — it made the full-catalog warm total ~35%
-    # slower (blocking unpersist calls per query outweigh any block-
-    # manager pressure), and the late-session slowdown it targeted
-    # turned out to be host-state noise (untouched sentinel queries
-    # moved 2-4x between runs with zero code change; SCALE.md "Pinned").
-    def run_once(name: str):
-        """Timed end-to-end run; fn() construction stays INSIDE the
-        timer (fit-heavy queries pay their driver-side passes here,
-        same contract as every prior round's numbers). Returns the
-        built df so the warm run can fingerprint it for free."""
-        t0 = time.perf_counter()
-        df = specs[name].fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0, df
-
     # --- canary FIRST pass (start-of-run host baseline) ----------------
     # These timings double as the canary queries' in-loop cold/warm
-    # numbers (same run_once contract), so the pass costs nothing extra
+    # numbers (same run-once contract), so the pass costs nothing extra
     # versus timing them inside the main loop. The cold runs for ALL
     # canaries complete BEFORE any warm run is timed: a measured sf0.01
     # run showed last/first = 0.65 when cold and warm were interleaved —
@@ -447,47 +422,41 @@ def main() -> None:
     # run pushes the timed pass past the steepest part of the JIT curve.
     canary_first: dict[str, float] = {}
     for name in CANARY_ALL:
-        c, _ = run_once(name)
+        c, _ = time_once(spark, specs[name].fn, SF_DIR)
         cold[name] = round(c, 3)
-        spark.catalog.clearCache()
     for name in CANARY_ALL:
-        w, df = run_once(name)
+        w, df = time_once(spark, specs[name].fn, SF_DIR)
         canary_first[name] = round(w, 3)
         timings[name] = canary_first[name]
         fingerprints[name] = _fingerprint(df, specs[name].fn)
-        spark.catalog.clearCache()
 
     for name in reused:
         cold[name] = prior_cold.get(name, 0.0)
         timings[name] = prior_timings[name]
     for name in to_run:
-        c, _ = run_once(name)
+        c, _ = time_once(spark, specs[name].fn, SF_DIR)
         cold[name] = round(c, 3)
-        spark.catalog.clearCache()
-        w, df = run_once(name)
+        w, df = time_once(spark, specs[name].fn, SF_DIR)
         timings[name] = round(w, 3)
         fingerprints[name] = _fingerprint(df, specs[name].fn)
-        spark.catalog.clearCache()
 
     # --- canary LAST pass (end-of-run re-time, codegen already hot) ----
     # last/first on identical plans in one process is the DIRECT
-    # measurement of late-bench session-state inflation (round-8
-    # verdict item 2) — previously a hypothesis inferred from cross-run
-    # totals.
+    # measurement of late-bench session-state inflation, which cross-run
+    # totals can only hint at.
     canary_last: dict[str, float] = {}
     for name in CANARY_ALL:
-        w, _ = run_once(name)
+        w, _ = time_once(spark, specs[name].fn, SF_DIR)
         canary_last[name] = round(w, 3)
-        spark.catalog.clearCache()
 
     fp_path.parent.mkdir(exist_ok=True)
     fp_path.write_text(
         json.dumps({"sf": SF_DIR, "fingerprints": fingerprints}, indent=1)
     )
 
-    # The recorder keeps only a bounded TAIL of stdout (~2000 chars in
-    # BENCH_r03), so a final line carrying all 130 per-query timings can
-    # never survive. Contract, round 4 on:
+    # The recorder keeps only a bounded TAIL of stdout (~2000 chars), so
+    # a final line carrying every per-query timing can never survive.
+    # Contract:
     #   1. FULL results (warm + cold maps) go to BENCH_LOCAL.json next to
     #      this script — always parseable, committed per round.
     #   2. The detail lines (full warm + cold maps) still print first for
@@ -504,7 +473,7 @@ def main() -> None:
         "queries_cold": cold,
         "sf": SF_DIR,
     }
-    # Drift correction, two instruments (round 9):
+    # Drift correction, two instruments:
     #
     # 1. normalized_value — raw total ÷ the ALL-QUERY drift median
     #    (_drift_median): the cross-round comparable number regression
@@ -519,7 +488,7 @@ def main() -> None:
     round_n = _round_n()
     retimed = set(to_run) | set(CANARY_ALL)
     full["retimed"] = sorted(retimed)
-    full["fingerprints_recorded"] = True  # r9+: snapshot carries them
+    full["fingerprints_recorded"] = True
     full["fingerprints"] = fingerprints
     canary_ref, canary_ref_round = _canary_reference(round_n)
     full["canary"] = {
@@ -529,7 +498,7 @@ def main() -> None:
         "ref": canary_ref or None,
         "ref_round": canary_ref_round,
         "inflation": round(
-            _median([canary_last[c] / canary_first[c] for c in CANARY_ALL]), 4
+            median([canary_last[c] / canary_first[c] for c in CANARY_ALL]), 4
         ),
     }
     if canary_ref:
@@ -537,7 +506,7 @@ def main() -> None:
             c: round(canary_first[c] / canary_ref[c], 4) for c in CANARY_ALL
         }
         full["canary"]["ratios"] = ratios
-        full["canary"]["ratio"] = round(_median(list(ratios.values())), 4)
+        full["canary"]["ratio"] = round(median(list(ratios.values())), 4)
     drift_ref, drift_ref_round = _drift_reference(round_n)
     ref_fp = drift_ref.get("fingerprints", {})
     changed_names = {
@@ -547,8 +516,8 @@ def main() -> None:
     drift, n_drift = _drift_median(timings, retimed, drift_ref, changed_names)
     if drift is not None:
         # A scalar drift correction assumes the host moved UNIFORMLY
-        # within the run; the canary inflation is the check. Measured
-        # (round 9): two runs with inflation 0.79/0.89 normalized to
+        # within the run; the canary inflation is the check. Measured:
+        # two runs with inflation 0.79/0.89 normalized to
         # within 0.03% of each other; a third with inflation 0.59 (host
         # state shifted mid-run) landed 5.7% off. Regression claims
         # should ignore runs flagged unstable and re-run instead.

@@ -5,27 +5,23 @@ Several plans materialize a bounded intermediate with an EAGER
 times (dedup signature tables, MMR pool similarities, EM pattern
 tables) or whose expression tree would otherwise re-inline past
 codegen limits (winnowing fingerprints). Eager means the Spark job
-runs at PLAN-BUILD time — correct for query execution, but it made
-``bench.py --changed-only``'s selection pass (which only builds every
-plan to fingerprint it) execute near-full-scale jobs for those queries
-before the timed loop (ADVICE r06).
+runs at PLAN-BUILD time: correct for query execution, but a pass that
+only builds plans to inspect them (``bench.py --changed-only``'s
+fingerprint selection, tools/plan_audit.py) would run near-full-scale
+jobs for those queries.
 
 ``eager_checkpoint`` keeps the eager default and degrades to a LAZY
-checkpoint when the ``SPARK_GRAFT_PLAN_ONLY`` env marks a
-fingerprint-only pass. Lazy is semantics-free: the checkpoint
-materializes on the frame's first action and stays materialized, and
-the ANALYZED logical plan is the same ``LogicalRDD`` node in both
-modes (pinned by tests/test_bench_fingerprint.py), so plan
-fingerprints cannot drift between a plan-only selection pass and a
-timed run.
+checkpoint inside ``plan_only_pass(spark)``. Lazy is semantics-free:
+the checkpoint materializes on the frame's first action and stays
+materialized, and the ANALYZED logical plan is the same ``LogicalRDD``
+node in both modes (pinned by tests/test_bench_fingerprint.py), so plan
+fingerprints cannot drift between a plan-only pass and a timed run.
 
-Caveat a plan-only caller must honor: under AQE, creating even a lazy
-checkpoint materializes the upstream query stages (AdaptiveSparkPlan
-executes exchanges when the wrapped RDD is built), so the pass must
-also set ``spark.sql.adaptive.enabled=false`` for its duration —
-bench.py's selection pass and tools/plan_audit.py both do. A lazy
-checkpoint created with AQE off still computes correctly when later
-actioned with AQE back on.
+The pass also turns AQE off for its duration: under AQE, creating even
+a lazy checkpoint materializes the upstream query stages
+(AdaptiveSparkPlan executes exchanges when the wrapped RDD is built).
+A lazy checkpoint created with AQE off still computes correctly when
+later actioned with AQE back on.
 
 ``until_settled`` is the one stopping rule for the iterative plans
 built on these checkpoints: run rounds until an exact "unsettled" count
@@ -35,25 +31,49 @@ state.
 
 from __future__ import annotations
 
-import os
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-PLAN_ONLY_ENV = "SPARK_GRAFT_PLAN_ONLY"
+# A plain module global, not a ContextVar or thread-local: plan builders
+# run eager_checkpoint in run_concurrently worker threads too, and those
+# must see the pass their caller opened.
+_plan_only = False
 
 
 def plan_only() -> bool:
-    """True inside a fingerprint/plan-audit pass that must not run
-    Spark jobs while building plans."""
-    return os.environ.get(PLAN_ONLY_ENV, "") not in ("", "0")
+    """True inside ``plan_only_pass``: plans are being built to be
+    inspected, and building them must not run Spark jobs."""
+    return _plan_only
+
+
+@contextmanager
+def plan_only_pass(spark: SparkSession) -> Iterator[None]:
+    """Build plans without running their eager checkpoints.
+
+    For the body's duration ``plan_only()`` reads True and
+    ``spark.sql.adaptive.enabled`` is false; both are restored on exit,
+    also when the body raises. Frames built inside stay usable after
+    the pass: their checkpoints materialize on the first action."""
+    global _plan_only
+    prev_flag = _plan_only
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    _plan_only = True
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        _plan_only = prev_flag
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint()`` (eager), except during a plan-only
-    pass, where the checkpoint is registered lazily instead — no job
-    at build time, identical analyzed plan, materialization deferred
-    to the first action. Use via ``.transform(eager_checkpoint)``."""
+    """``df.localCheckpoint()`` (eager), except inside
+    ``plan_only_pass``, where the checkpoint is registered lazily
+    instead — no job at build time, identical analyzed plan,
+    materialization deferred to the first action. Use via
+    ``.transform(eager_checkpoint)``."""
     return df.localCheckpoint(eager=not plan_only())
 
 

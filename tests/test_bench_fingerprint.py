@@ -8,6 +8,10 @@ be cached)."""
 from __future__ import annotations
 
 from bench import _fingerprint
+from cost_of_living_data_etl_spark.functions.checkpoints import (
+    eager_checkpoint,
+    plan_only_pass,
+)
 from cost_of_living_data_etl_spark.plans import catalog
 from conftest import TESTDATA
 
@@ -47,11 +51,11 @@ def test_fingerprint_ignores_cache_state(spark):
     assert before == cached == after
 
 
-def test_fingerprint_identical_in_plan_only_mode(spark, monkeypatch):
-    """ADVICE r06: the --changed-only selection pass builds plans with
-    SPARK_GRAFT_PLAN_ONLY=1 (eager localCheckpoints degrade to lazy so
-    no data-scale job runs before the timed loop). The fingerprint must
-    be IDENTICAL in both modes — lazy and eager checkpoints produce the
+def test_fingerprint_identical_in_plan_only_mode(spark):
+    """The --changed-only selection pass builds plans inside
+    ``plan_only_pass`` (eager localCheckpoints degrade to lazy so no
+    data-scale job runs before the timed loop). The fingerprint must be
+    IDENTICAL in both modes — lazy and eager checkpoints produce the
     same analyzed LogicalRDD node — or selection would re-run every
     checkpoint-bearing query forever."""
     cat = catalog()
@@ -65,40 +69,35 @@ def test_fingerprint_identical_in_plan_only_mode(spark, monkeypatch):
         "q_hierarchy_rollup",
         "q1_pricing_summary",
     ]:
-        monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
-        lazy_fp = _fingerprint(cat[name].fn(spark, SF), cat[name].fn)
-        monkeypatch.delenv("SPARK_GRAFT_PLAN_ONLY")
+        with plan_only_pass(spark):
+            lazy_fp = _fingerprint(cat[name].fn(spark, SF), cat[name].fn)
         eager_fp = _fingerprint(cat[name].fn(spark, SF), cat[name].fn)
         assert lazy_fp == eager_fp, name
 
 
-def test_plan_only_mode_skips_checkpoint_jobs(spark, monkeypatch):
-    """In plan-only mode, building a checkpoint-bearing plan must not
-    run the checkpoint's Spark job (the ADVICE r06 cost): the lazy
-    checkpoint defers materialization to the first action."""
+def test_plan_only_mode_skips_checkpoint_jobs(spark):
+    """Inside ``plan_only_pass``, building a checkpoint-bearing plan
+    must not run the checkpoint's Spark job: the lazy checkpoint defers
+    materialization to the first action. On exit AQE reads its prior
+    value and ``eager_checkpoint`` runs its job at build time again."""
     import pyspark.sql.functions as F
-
-    from cost_of_living_data_etl_spark.functions.checkpoints import (
-        eager_checkpoint,
-    )
 
     tracker = spark.sparkContext.statusTracker()
     base = spark.range(1000).select("id", (F.col("id") % 7).alias("g"))
 
-    # the pass's full contract (bench.py selection): PLAN_ONLY env +
-    # AQE off — under AQE even a lazy checkpoint materializes its
-    # upstream stages when the wrapped RDD is created
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
+    def jobs() -> int:
+        return len(tracker.getJobIdsForGroup() or [])
+
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        jobs_before = len(tracker.getJobIdsForGroup() or [])
+    with plan_only_pass(spark):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        jobs_before = jobs()
         lazy_df = base.groupBy("g").count().transform(eager_checkpoint)
-        jobs_after = len(tracker.getJobIdsForGroup() or [])
-        assert jobs_after == jobs_before, "plan-only build ran a Spark job"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-        monkeypatch.delenv("SPARK_GRAFT_PLAN_ONLY")
+        assert jobs() == jobs_before, "plan-only build ran a Spark job"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_prev
     # the deferred checkpoint still materializes and computes correctly
     # once AQE is back on
     assert lazy_df.count() == 7
+    jobs_before = jobs()
+    base.groupBy("g").count().transform(eager_checkpoint)
+    assert jobs() > jobs_before, "eager_checkpoint stayed lazy after the pass"

@@ -1,14 +1,20 @@
 """``until_settled``: the one stop rule of the iterative plans. It returns
 the first state whose unsettled count reads 0, runs no step on a settled
 or empty start, raises at its round cap, and runs no step in a
-plan-only pass."""
+plan-only pass. ``plan_only_pass`` restores what it sets, also when its
+body raises, and reaches ``run_concurrently`` worker threads."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from cost_of_living_data_etl_spark.functions.checkpoints import until_settled
+from cost_of_living_data_etl_spark.functions.checkpoints import (
+    plan_only,
+    plan_only_pass,
+    until_settled,
+)
+from cost_of_living_data_etl_spark.functions.concurrent import run_concurrently
 
 
 def _countdown(spark, ns):
@@ -59,20 +65,32 @@ def test_raises_when_max_rounds_is_too_small(spark):
         _run(_countdown(spark, [0, 4]), max_rounds=3)
 
 
-def test_plan_only_pass_runs_no_step_and_no_job(spark, monkeypatch):
+def test_plan_only_pass_runs_no_step_and_no_job(spark):
     """Lazy checkpoints observe no rows, so the count reads 0: the
-    builder returns without stepping and without a Spark job (AQE off,
-    as a plan-only pass sets it)."""
+    builder returns without stepping and without a Spark job."""
     start = _countdown(spark, [2, 5])
     tracker = spark.sparkContext.statusTracker()
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with plan_only_pass(spark):
         jobs_before = len(tracker.getJobIdsForGroup() or [])
         _, steps = _run(start, max_rounds=1)
         jobs_after = len(tracker.getJobIdsForGroup() or [])
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
     assert steps == 0
     assert jobs_after == jobs_before
+
+
+def test_plan_only_pass_restores_when_body_raises(spark):
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+    with pytest.raises(ValueError, match="body failed"):
+        with plan_only_pass(spark):
+            assert plan_only()
+            raise ValueError("body failed")
+    assert not plan_only()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_prev
+
+
+def test_plan_only_pass_reaches_run_concurrently_workers(spark):
+    """Plan builders checkpoint inside run_concurrently threads too; a
+    per-thread or per-context flag would read False there."""
+    with plan_only_pass(spark):
+        assert run_concurrently(plan_only, plan_only) == [True, True]
+    assert run_concurrently(plan_only) == [False]

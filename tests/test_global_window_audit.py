@@ -31,6 +31,9 @@ from plan_audit import (  # noqa: E402
     count_global_windows,
 )
 
+from cost_of_living_data_etl_spark.functions.checkpoints import (  # noqa: E402
+    plan_only_pass,
+)
 from cost_of_living_data_etl_spark.plans import catalog  # noqa: E402
 
 SPECS = sorted(catalog().values(), key=lambda s: s.name)
@@ -71,15 +74,12 @@ def test_detector_clean_on_partitioned_and_unordered_shapes(spark):
 
 
 @pytest.fixture
-def _plan_only(spark, monkeypatch):
-    """Plan-only contract (functions/checkpoints.py): lazy checkpoints
-    + AQE off, so building every catalog plan runs no data-scale jobs.
-    The Window census is unaffected (identical analyzed plans)."""
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield
-    spark.conf.set("spark.sql.adaptive.enabled", prev)
+def _plan_only(spark):
+    """Plan-only pass (functions/checkpoints.py): lazy checkpoints + AQE
+    off, so building every catalog plan runs no data-scale jobs. The
+    Window census is unaffected (identical analyzed plans)."""
+    with plan_only_pass(spark):
+        yield
 
 
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])

@@ -300,7 +300,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
 
     wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
 
-    def run_once():
+    def run_stream():
         stream = read_events_stream(spark, str(src), max_files_per_trigger=1)
         q = (
             write_stream_to_warehouse(stream, wh, "events_sink", ckpt)
@@ -311,16 +311,16 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
         out = spark.read.parquet(f"{wh}/events_sink")
         return out.count(), out.select("event_id").distinct().count()
 
-    total1, distinct1 = run_once()
+    total1, distinct1 = run_stream()
     assert total1 == distinct1 == n // 2
 
     # new file lands; restart from the same checkpoint
     pq.write_table(table.slice(n // 2), str(src / "batch2.parquet"))
-    total2, distinct2 = run_once()
+    total2, distinct2 = run_stream()
     assert total2 == distinct2 == n  # batch1 not re-read, batch2 fully read
 
     # restart with no new data: a no-op, not a replay
-    total3, distinct3 = run_once()
+    total3, distinct3 = run_stream()
     assert (total3, distinct3) == (n, n)
 
 
@@ -530,7 +530,7 @@ def test_stateful_totals_survive_restart(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     wh = str(tmp_path / "wh")
 
-    def run_once():
+    def run_stream():
         # memory sinks can't recover from a checkpoint; the
         # foreachBatch parquet sink (batch_id-partitioned) can
         stream = stateful_user_totals(read_events_stream(spark, str(src)))
@@ -541,9 +541,9 @@ def test_stateful_totals_survive_restart(spark, tmp_path):
         )
         _await(q)
 
-    run_once()
+    run_stream()
     pq.write_table(table.slice(n // 2), str(src / "batch2.parquet"))
-    run_once()  # restart from checkpoint; only batch2 is processed
+    run_stream()  # restart from checkpoint; only batch2 is processed
 
     # final state per user = the row from that user's LATEST batch
     from pyspark.sql import Window

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Interleaved same-session A/B timing harness (round-9 methodology).
+"""Interleaved same-session A/B timing harness.
 
 Solo back-to-back runs drift with host noise and JIT ramp (OPTIMIZATION_r09
 "Measurement notes"); interleaving the arms inside ONE session makes those
@@ -8,10 +8,18 @@ factors hit both arms equally, so the per-rep ratios are comparable.
     python tools/ab_interleaved.py VARIANTS_FILE [--sf DIR] [--reps N]
 
 VARIANTS_FILE is a python file defining ``VARIANTS: dict[str, fn]`` where
-each fn is ``fn(spark, sf_dir) -> DataFrame``; arms are timed noop-sink,
-cold rep discarded, clearCache between reps. If the file also defines
-``CHECK = True``, the arms' results are first compared row-for-row
-(sorted collect) and the A/B aborts on any mismatch.
+each fn is ``fn(spark, sf_dir) -> DataFrame``; every run follows
+bench.py's run-once contract (``bench.time_once``: built inside the
+timer, noop sink, clearCache after), and the cold rep is discarded. If
+the file also defines ``CHECK = True``, the arms' results are first
+compared row-for-row (sorted collect) and the A/B aborts on any
+mismatch.
+
+To re-time catalog queries in a fresh session, away from the position
+and session state of a full bench run, the variants file is:
+
+    from cost_of_living_data_etl_spark.plans import catalog
+    VARIANTS = {n: catalog()[n].fn for n in ["q1_pricing_summary", "q4_order_priority"]}
 """
 
 from __future__ import annotations
@@ -19,12 +27,13 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import sys
-import time
 from pathlib import Path
+from statistics import median
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import time_once  # noqa: E402
 from cost_of_living_data_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -67,22 +76,16 @@ def main() -> int:
         print(f"CHECK ok: {len(base[0])} rows identical across arms")
         spark.catalog.clearCache()
 
-    def run_once(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     # cold pass (codegen compile), discarded
     for label, fn in variants.items():
-        t = run_once(fn)
-        spark.catalog.clearCache()
+        t, _ = time_once(spark, fn, args.sf)
         print(f"cold {label}: {t:.2f}s")
 
     times: dict[str, list[float]] = {k: [] for k in variants}
     for rep in range(args.reps):
-        # ALTERNATE arm order per rep (round 10): a fixed order lets
-        # every later arm ride the earlier arm's page-cache/JIT warmth
-        # — a fixed-order A/B of a conf that provably changed NOTHING
+        # ALTERNATE arm order per rep: a fixed order lets every later
+        # arm ride the earlier arm's page-cache/JIT warmth — a
+        # fixed-order A/B of a conf that provably changed NOTHING
         # (identical executed plans) showed a reproducible −10-20%
         # "win" for whichever arm ran second. Alternation cancels the
         # position bias across reps.
@@ -90,15 +93,12 @@ def main() -> int:
         if rep % 2 == 1:
             order.reverse()
         for label, fn in order:
-            t = run_once(fn)
-            spark.catalog.clearCache()
+            t, _ = time_once(spark, fn, args.sf)
             times[label].append(t)
             print(f"rep{rep} {label}: {t:.2f}s", flush=True)
     print("---")
     for label, ts in times.items():
-        s = sorted(ts)
-        med = s[len(s) // 2] if len(s) % 2 else (s[len(s)//2 - 1] + s[len(s)//2]) / 2
-        print(f"{label}: min {min(ts):.2f}  med {med:.2f}  reps {['%.2f' % t for t in ts]}")
+        print(f"{label}: min {min(ts):.2f}  med {median(ts):.2f}  reps {['%.2f' % t for t in ts]}")
     return 0
 
 

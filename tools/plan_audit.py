@@ -19,6 +19,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from cost_of_living_data_etl_spark.functions.checkpoints import (  # noqa: E402
+    plan_only_pass,
+)
 from cost_of_living_data_etl_spark.plans.catalog import catalog  # noqa: E402
 from cost_of_living_data_etl_spark.session import get_spark  # noqa: E402
 
@@ -26,15 +29,12 @@ import os
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-# Round 4 on, the audit covers the ENTIRE catalog (verdict item 8).
-# Round 6 fix (ADVICE r05): bench.HEADLINE is populated only inside
-# bench.main(), so importing it here always saw [] and the ordering
-# silently degraded to name order. The bench now runs the full catalog
-# in REGISTRATION order, so the audit uses the same source of truth —
-# catalog() registration order — and the two can never disagree.
-
 
 def _audit_names() -> list[str]:
+    """The ENTIRE catalog, in registration order: the order bench.py
+    runs it in, read from the same source, so the two cannot disagree.
+    (bench.HEADLINE is filled only inside bench.main(), so importing it
+    here would see an empty list.)"""
     return list(catalog())
 
 
@@ -116,8 +116,8 @@ def count_global_windows(df) -> int:
 #: bound; tests/test_global_window_audit.py fails on any query with a
 #: global window NOT in this dict, and on any STALE entry (listed but
 #: no longer emitting one), so the list cannot rot in either
-#: direction. Anything data-scaled was rewritten onto
-#: operators/distributed_rank.py in round 7 (16 queries).
+#: direction. Anything data-scaled is rewritten onto
+#: operators/distributed_rank.py instead.
 GLOBAL_WINDOW_BOUNDED_OK: dict[str, str] = {
     # -- calendar-bounded daily/monthly rollups (|days| ~ thousands
     #    over a decade, invariant in corpus size) --
@@ -195,22 +195,7 @@ def fingerprint(df) -> dict[str, object]:
 
 
 def main() -> None:
-    # plan-only pass: degrade eager localCheckpoints to lazy so
-    # building 293 plans runs no data-scale jobs
-    # (functions/checkpoints.py — analyzed plans are identical)
-    from cost_of_living_data_etl_spark.functions.checkpoints import (
-        PLAN_ONLY_ENV,
-    )
-
-    os.environ[PLAN_ONLY_ENV] = "1"
-    # AQE wraps pre-execution plans in AdaptiveSparkPlan, hiding the
-    # codegen span markers; the audit reads the static plan instead
-    # (production runs keep AQE on — session.py)
-    spark = get_spark(
-        master="local[8]",
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
     cat = catalog()
     lines = [
         "# PLAN_AUDIT — physical-plan fingerprints (generated by tools/plan_audit.py)",
@@ -229,18 +214,25 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|---|",
     ]
     names = _audit_names()
-    for name in names:
-        fp = fingerprint(cat[name].fn(spark, SF_DIR))
-        if fp["gwin"] and name in GLOBAL_WINDOW_BOUNDED_OK:
-            gwin = f"{fp['gwin']} (bounded: {GLOBAL_WINDOW_BOUNDED_OK[name]})"
-        else:
-            gwin = str(fp["gwin"])
-        lines.append(
-            f"| {name} | {fp['shuffles']} | {fp['bhj']} | {fp['smj']} "
-            f"| {fp['wsc']} | {'✓' if fp['pushed'] else '–'} "
-            f"| {'✗PY' if fp['python'] else 'no'} "
-            f"| {'✓' if fp['arrow'] else '–'} | {gwin} |"
-        )
+    # A plan-only pass: eager checkpoints degrade to lazy, so building
+    # every catalog plan runs no data-scale jobs (analyzed plans are
+    # identical; functions/checkpoints.py). Its AQE-off also makes the
+    # audit read the static plan, whose codegen span markers
+    # AdaptiveSparkPlan would hide (production runs keep AQE on —
+    # session.py).
+    with plan_only_pass(spark):
+        for name in names:
+            fp = fingerprint(cat[name].fn(spark, SF_DIR))
+            if fp["gwin"] and name in GLOBAL_WINDOW_BOUNDED_OK:
+                gwin = f"{fp['gwin']} (bounded: {GLOBAL_WINDOW_BOUNDED_OK[name]})"
+            else:
+                gwin = str(fp["gwin"])
+            lines.append(
+                f"| {name} | {fp['shuffles']} | {fp['bhj']} | {fp['smj']} "
+                f"| {fp['wsc']} | {'✓' if fp['pushed'] else '–'} "
+                f"| {'✗PY' if fp['python'] else 'no'} "
+                f"| {'✓' if fp['arrow'] else '–'} | {gwin} |"
+            )
     out = REPO / "PLAN_AUDIT.md"
     out.write_text("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(names)} queries)")
