@@ -117,7 +117,7 @@ def _checked_bucket_for(df: DataFrame, bucket: Column) -> Column:
     16-bit Morton interleave: ~32 shift/mask terms) that tripled
     per-row evaluation across every duplicated scan subtree — measured
     2.0× on q_zorder_layout_manifest at sf0.1 (4.5 s -> 2.3 s,
-    SCALE.md round 9). Routing is unchanged, only the guard shrinks:
+    SCALE.md). Routing is unchanged, only the guard shrinks:
 
     - float/double: NaN is representable -> full NULL+NaN CASE;
     - nullable everything-else (integral/decimal can't hold NaN):
@@ -186,7 +186,7 @@ def _bucket_prefix_totals(
     w = Window.partitionBy(*gc, _SB).orderBy(_BKT).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    # NOTE (round 9): an explicit F.broadcast(sb_off) was A/B-tested
+    # NOTE: an explicit F.broadcast(sb_off) was A/B-tested
     # here and REJECTED — interleaved same-session runs on five
     # prefix-scan consumers were flat to slightly SLOWER (AQE already
     # converts this join at runtime when sb_off is small, and the
@@ -288,7 +288,7 @@ def select_global_ranks(
     is read twice (rollup + pruned position pass) — materialize
     expensive inputs first.
 
-    When to use (measured, round 9): the pruning pays when the frame
+    When to use (measured): the pruning pays when the frame
     is pair-scale (millions of rows, e.g. the Hodges-Lehmann 5.8M-row
     diff frame: −40% interleaved) AND cheap to re-derive. For frames
     of ~60k-600k skinny rows the full position exchange+sort is
@@ -432,7 +432,7 @@ def with_global_ntiles(
     """Several exact global ntiles over the SAME frame in ONE shared
     pass — the amortized form of calling :func:`with_global_ntile` k
     times (e.g. RFM's three quartile codes over one per-customer
-    rollup, the round-7 verdict's `weak` item).
+    rollup).
 
     ``specs``: ``(sort_cols, bucket, out_col)`` per requested ntile.
     ``sort_cols`` are ASCENDING sort expressions forming a TOTAL order

@@ -182,8 +182,7 @@ def extract_features(
     """mapInPandas decode + featurize: Arrow batches in, Arrow batches
     out, bounded memory per batch, no driver involvement.
 
-    ``decoder`` is the EXPLICIT production seam (round-8 verdict item
-    5): any callable ``(payload: bytes, kind: str) -> np.ndarray`` of
+    ``decoder`` is the EXPLICIT production seam: any callable ``(payload: bytes, kind: str) -> np.ndarray`` of
     samples — e.g. PIL/ffmpeg wrappers outside this sandbox — drops in
     as a one-line swap; it must be cloudpickle-serializable (a module-
     level function or a closure over picklable state). The default is

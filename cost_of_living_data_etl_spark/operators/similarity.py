@@ -43,7 +43,7 @@ def corpus_cache_key(sf_dir: str, table: str = "embeddings") -> str:
     codebooks): path PLUS a content fingerprint (relpath, mtime_ns,
     size) of every data file under ``{sf_dir}/{table}.parquet``.
 
-    Keying on the bare path (rounds 1-3) silently reused stale
+    Keying on the bare path alone silently reused stale
     centroids when a fixture dir was rewritten in-session while the
     DuckDB oracle re-derived them from the new bytes — a confusing
     hash mismatch. The fingerprint makes rewrite → automatic refit; it
@@ -501,7 +501,7 @@ def _assign_cells(
     the |x|² term is constant per vector), tie-broken toward the
     smaller cell id by struct ordering.
 
-    The rounds-1-3 form (crossJoin(broadcast) ×k then groupBy(vec_id)
+    The earlier form (crossJoin(broadcast) ×k then groupBy(vec_id)
     min(struct)) re-shuffled every VECTOR through an Exchange just to
     reduce the k scores — at 100 TB that is a full-corpus embedding
     shuffle per assignment pass (and per Lloyd round inside the fit).
@@ -546,9 +546,9 @@ _IVF_CENT_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
 #: which requires the allow_nonstandard_k escape hatch). The
 #: oversized-corpus guards stand down ONLY for scale-path primes: a
 #: standard fixed-k artifact reproduces exactly the within-cell
-#: quadratic geometry the guards exist to refuse (round-7 review
-#: catch — a k=IVF_K prime used to silently re-enable the quadratic
-#: job on an oversized corpus).
+#: quadratic geometry the guards exist to refuse (a k=IVF_K prime
+#: would otherwise silently re-enable the quadratic job on an
+#: oversized corpus).
 _ARTIFACT_PRIMED: dict[str, bool] = {}
 
 
@@ -700,8 +700,8 @@ def use_quantizer_artifact(
     replays the pinned IVF_K={IVF_K} Lloyd chain would hash-MISMATCH —
     so that requires ``allow_nonstandard_k=True``, the production
     escape hatch that takes the session off the oracle-replayable
-    path (round-6 review catch: silently accepting any k broke the
-    under-cap consumers' parity).
+    path (silently accepting any k would break the under-cap
+    consumers' parity).
     """
     cents = load_quantizer(spark, path)
     if len(cents) != IVF_K and not allow_nonstandard_k:

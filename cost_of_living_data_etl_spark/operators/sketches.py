@@ -38,6 +38,10 @@ SPACE itself is too large to shuffle, broadcast, or hold exactly:
 The reference has no aggregation layer at all (SURVEY §2.5 — verified
 absent, reference app.py:1-206); both operators are north-star
 extensions sized for the 100 TB target.
+
+`q_join_size_estimate_cms` estimates a self-join's size from Count-Min
+sketch inner products without executing the join: the optimizer-side
+cardinality-estimation use of the same sketch.
 """
 
 from __future__ import annotations
@@ -821,4 +825,91 @@ def q_quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return est.join(n, "cell").select(
         F.col("cell").alias("priority"), "est_p50", "est_p90", "n_rows"
+    )
+
+
+# --------------------------------------------------------------------------
+# CMS join-size estimation
+
+_JS_DEPTH = 4
+_JS_WIDTH = 512
+
+_JS_BUCKET_SPARK = (
+    "cast(conv(substring(md5(concat(cast(l_partkey AS STRING), '#',"
+    " CAST(i AS STRING))), 1, 15), 16, 10) AS BIGINT) % " + str(_JS_WIDTH)
+)
+_JS_BUCKET_SQL = (
+    "CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR) || '#' ||"
+    f" CAST(i AS VARCHAR)), 1, 15)) AS BIGINT) % {_JS_WIDTH}"
+)
+
+_JS_ORACLE = f"""
+WITH kc AS (
+    SELECT l_partkey, CAST(count(*) AS BIGINT) AS n
+    FROM lineitem GROUP BY l_partkey
+),
+exact AS (
+    SELECT CAST(sum(n * n) AS BIGINT) AS exact_join_size FROM kc
+),
+cells AS (
+    SELECT i, {_JS_BUCKET_SQL} AS bucket, CAST(sum(n) AS BIGINT) AS cell
+    FROM kc CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i)
+    GROUP BY i, bucket
+),
+est AS (
+    SELECT CAST(min(ip) AS BIGINT) AS cms_estimate
+    FROM (SELECT i, sum(cell * cell) AS ip FROM cells GROUP BY i)
+)
+SELECT exact_join_size, cms_estimate,
+       CAST(cms_estimate - exact_join_size AS BIGINT) AS overcount
+FROM exact CROSS JOIN est
+"""
+
+
+@register(
+    "q_join_size_estimate_cms",
+    oracle=_JS_ORACLE,
+    tags=("sketch", "count-min", "cardinality-estimation", "optimizer"),
+)
+def q_join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-cardinality estimation WITHOUT executing the join: the
+    self-join size |lineitem ⋈ lineitem ON l_partkey| = Σ_k n(k)²
+    estimated as the minimum over CMS rows of the sketch inner product
+    Σ_b cell² (AGMS/Count-Min join-size estimate, Alon-Matias-Szegedy
+    F₂ / Cormode-Muthukrishnan §4.2), next to the exact answer. The
+    estimate structurally never undercounts — ``overcount ≥ 0`` is
+    pinned by the oracle hash.
+
+    Optimizer relevance at 100 TB: a {_JS_DEPTH}×{_JS_WIDTH} integer
+    sketch per table (mergeable cell-wise across partitions/shards)
+    prices any equi-join before running it — the difference between
+    choosing a broadcast and materializing a 10¹² -row blow-up. All
+    arithmetic is BIGINT-exact; md5-derived row hashes, no RNG.
+    """
+    kc = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    exact = kc.agg(
+        F.sum(F.col("n") * F.col("n")).cast("long").alias("exact_join_size")
+    )
+    rows = F.array([F.lit(i) for i in range(_JS_DEPTH)])
+    cells = (
+        kc.select("l_partkey", "n", F.explode(rows).alias("i"))
+        .select("i", F.expr(_JS_BUCKET_SPARK).alias("bucket"), "n")
+        .groupBy("i", "bucket")
+        .agg(F.sum("n").cast("long").alias("cell"))
+    )
+    est = (
+        cells.groupBy("i")
+        .agg(F.sum(F.col("cell") * F.col("cell")).alias("ip"))
+        .agg(F.min("ip").cast("long").alias("cms_estimate"))
+    )
+    return exact.crossJoin(F.broadcast(est)).select(
+        "exact_join_size",
+        "cms_estimate",
+        (F.col("cms_estimate") - F.col("exact_join_size"))
+        .cast("long")
+        .alias("overcount"),
     )

@@ -26,17 +26,28 @@ Both run on the catalog's standard md5-parity arm assignment over
 users. 100 TB: one partial-agg pass to per-user rows, then per-arm
 moments — the Welch scale shape; the SRM path shuffles only distinct
 user ids.
+
+The family tests sit beside the gates:
+
+- **Benjamini-Hochberg FDR** (`q_bh_fdr_event_tests`) over the
+  per-event-type Welch tests: false-discovery control across the
+  family instead of per-test α. Normal-tail p-values come from the
+  Abramowitz-Stegun 26.2.17 approximation rendered as ONE shared SQL
+  text (``_AS_P``; neither engine has erf), so p-values, and therefore
+  the BH ranks and cutoffs, are bit-identical cross-engine.
+- **CUPED** (`q_cuped_adjusted_uplift`): the pre-period covariate
+  adjustment that shrinks the uplift's variance.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
+from cost_of_living_data_etl_spark.functions.checkpoints import eager_checkpoint
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
-from cost_of_living_data_etl_spark.plans.round4_stats import _AS_P
 from cost_of_living_data_etl_spark.plans.reshape import (
     _BUCKET_SPARK,
     _BUCKET_SQL,
@@ -46,6 +57,327 @@ from cost_of_living_data_etl_spark.plans.stats_analytics import (
     _ARM_SQL,
 )
 from cost_of_living_data_etl_spark.sources.tables import load_table
+
+
+# --- Benjamini-Hochberg FDR over the Welch test family ----------------------
+
+FDR_Q = "0.10"  # target false-discovery rate (SQL literal)
+
+# Abramowitz & Stegun 26.2.17: upper-tail Q(x) = φ(x)·poly(1/(1+px)) for
+# x ≥ 0, |ε| < 7.5e-8 — far below any BH decision margin here. ONE text,
+# rendered with {t} = the t-statistic expression; two-sided p = 2·Q(|t|).
+_AS_P = (
+    "(2.0 * (exp(-(abs({t}) * abs({t})) / 2.0) / sqrt(2.0 * pi())) * "
+    "((((( 1.330274429 * (1.0 / (1.0 + 0.2316419 * abs({t}))) "
+    "- 1.821255978) * (1.0 / (1.0 + 0.2316419 * abs({t}))) "
+    "+ 1.781477937) * (1.0 / (1.0 + 0.2316419 * abs({t}))) "
+    "- 0.356563782) * (1.0 / (1.0 + 0.2316419 * abs({t}))) "
+    "+ 0.319381530) * (1.0 / (1.0 + 0.2316419 * abs({t})))))"
+)
+
+#: degenerate-margin guard (mirrors the _CHI2_EXPR CASE guard): an arm
+#: with n=1 has an undefined sample variance (the `w` stage divides by
+#: n-1=0) and equal-mean zero-variance pairs give 0/0 — either way the
+#: test is undefined, so the shared text defines t=0, p=1 (never
+#: rejected, excluded from the BH family by construction) instead of
+#: letting NaN flow into the p-value ranking and step-up cutoff.
+_WELCH_OK_SQL = (
+    "(n_a > 1 AND n_b > 1 AND (var_a / n_a + var_b / n_b) > 0.0)"
+)
+_WELCH_T_RAW = "(mean_a - mean_b) / sqrt(var_a / n_a + var_b / n_b)"
+_WELCH_T_SQL = (
+    f"CASE WHEN {_WELCH_OK_SQL} THEN {_WELCH_T_RAW} "
+    "ELSE CAST(0.0 AS DOUBLE) END"
+)
+#: n=1 makes the n-1 divisor zero, and float x/0 DIVERGES cross-engine
+#: (DuckDB NULL, Spark NaN) — so the variance itself is guarded in the
+#: shared text, not just the t-statistic.
+_WELCH_VAR_SQL = (
+    "CASE WHEN {n} > 1 THEN greatest({ssq} - {s} * {s} / {n}, "
+    "CAST(0.0 AS DOUBLE)) / ({n} - 1) ELSE CAST(0.0 AS DOUBLE) END"
+)
+_WELCH_P_SQL = (
+    f"CASE WHEN {_WELCH_OK_SQL} THEN {_AS_P.format(t=_WELCH_T_RAW)} "
+    "ELSE CAST(1.0 AS DOUBLE) END"
+)
+
+_BH_ORACLE = f"""
+WITH assigned AS (
+    SELECT event_type, value,
+           {_ARM_SQL.format(k="user_id")} AS arm
+    FROM events
+),
+m AS (
+    SELECT event_type, arm,
+           CAST(count(*) AS BIGINT) AS n,
+           {_DSUM_SQL.format(x="value")} AS s,
+           {_DSUM_SQL.format(x="value * value")} AS ssq
+    FROM assigned GROUP BY event_type, arm
+),
+w AS (
+    SELECT a.event_type,
+           a.n AS n_a, b.n AS n_b,
+           a.s / a.n AS mean_a, b.s / b.n AS mean_b,
+           {_WELCH_VAR_SQL.format(n="a.n", s="a.s", ssq="a.ssq")} AS var_a,
+           {_WELCH_VAR_SQL.format(n="b.n", s="b.s", ssq="b.ssq")} AS var_b
+    FROM m a JOIN m b ON a.event_type = b.event_type
+                     AND a.arm = 0 AND b.arm = 1
+),
+tested AS (
+    SELECT event_type, {_WELCH_T_SQL} AS t_stat,
+           {_WELCH_P_SQL} AS p_value
+    FROM w
+),
+ranked AS (
+    SELECT event_type, t_stat, p_value,
+           row_number() OVER (ORDER BY p_value, event_type) AS p_rank,
+           count(*) OVER () AS m_tests
+    FROM tested
+),
+flagged AS (
+    SELECT *,
+           CASE WHEN p_value <= CAST({FDR_Q} AS DOUBLE) * p_rank / m_tests
+                THEN p_rank ELSE 0 END AS hit
+    FROM ranked
+)
+SELECT event_type, t_stat, p_value,
+       CAST(p_rank AS BIGINT) AS p_rank,
+       CAST({FDR_Q} AS DOUBLE) * p_rank / m_tests AS bh_threshold,
+       p_rank <= max(hit) OVER () AS rejected
+FROM flagged
+ORDER BY p_rank
+"""
+
+
+@register(
+    "q_bh_fdr_event_tests",
+    oracle=_BH_ORACLE,
+    tags=("statistics", "ab-test", "multiple-testing", "fdr"),
+)
+def q_bh_fdr_event_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benjamini-Hochberg FDR control over the family of per-event-type
+    Welch A/B tests: p-values ranked ascending, the largest rank k with
+    p_(k) ≤ q·k/m wins, hypotheses 1..k are rejected. Per-test α (the
+    `significant` flag of q_ab_test_welch) lets expected false
+    positives grow linearly with the test count; BH caps the EXPECTED
+    FALSE-DISCOVERY FRACTION at q across the whole readout table — the
+    correction every experimentation platform applies before anyone
+    acts on a dashboard of dozens of metrics.
+
+    Normal-tail p-values via the A&S 26.2.17 rational approximation in
+    one shared SQL text (|ε| < 7.5e-8; neither engine has erf) —
+    p-values, ranks, and the step-up cutoff are bit-identical
+    cross-engine. The step-up rule is rank arithmetic over the tested
+    family (|event_types| rows): `max(hit) OVER ()` finds k, rejection
+    is `p_rank <= k`.
+
+    Scale: identical to the Welch plan — one partial-aggregated pass
+    to |event_type × 2| moment rows; everything after is O(m) on the
+    m-row test family. With thousands of metric×segment hypotheses the
+    same plan holds (m rows is still tiny); the det_sum folds are the
+    oracle-replay variant of plain partial-agg moments.
+    """
+    events = load_table(spark, sf_dir, "events")
+    assigned = events.select(
+        "event_type",
+        "value",
+        F.expr(_ARM_SPARK.format(k="user_id")).alias("arm"),
+    )
+    m = assigned.groupBy("event_type", "arm").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        det_sum("value").alias("s"),
+        det_sum("value * value").alias("ssq"),
+    )
+    var = F.expr(_WELCH_VAR_SQL.format(n="n", s="s", ssq="ssq"))
+    a = m.filter(F.col("arm") == 0).select(
+        "event_type",
+        F.col("n").alias("n_a"),
+        (F.col("s") / F.col("n")).alias("mean_a"),
+        var.alias("var_a"),
+    )
+    b = m.filter(F.col("arm") == 1).select(
+        "event_type",
+        F.col("n").alias("n_b"),
+        (F.col("s") / F.col("n")).alias("mean_b"),
+        var.alias("var_b"),
+    )
+    tested = a.join(b, "event_type").select(
+        "event_type",
+        F.expr(_WELCH_T_SQL).alias("t_stat"),
+        F.expr(_WELCH_P_SQL).alias("p_value"),
+    )
+    wall = Window.orderBy("p_value", "event_type")
+    whole = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    ranked = tested.select(
+        "event_type",
+        "t_stat",
+        "p_value",
+        F.row_number().over(wall).alias("p_rank"),
+        F.count(F.lit(1)).over(whole).alias("m_tests"),
+    )
+    flagged = ranked.withColumn(
+        "hit",
+        F.when(
+            F.col("p_value")
+            <= F.expr(f"CAST({FDR_Q} AS DOUBLE)") * F.col("p_rank") / F.col("m_tests"),
+            F.col("p_rank"),
+        ).otherwise(F.lit(0)),
+    )
+    return flagged.select(
+        "event_type",
+        "t_stat",
+        "p_value",
+        F.col("p_rank").cast("long").alias("p_rank"),
+        (
+            F.expr(f"CAST({FDR_Q} AS DOUBLE)")
+            * F.col("p_rank")
+            / F.col("m_tests")
+        ).alias("bh_threshold"),
+        (F.col("p_rank") <= F.max("hit").over(whole)).alias("rejected"),
+    ).orderBy("p_rank")
+
+
+# --- CUPED variance-reduced uplift -------------------------------------------
+
+#: HARD CONTRACT: treatment exposure starts at day CUPED_SPLIT_DAY.
+#: The covariate (days 1..SPLIT-1) is only arm-independent — the CUPED
+#: premise — if no treatment touches the early-month window; a
+#: whole-month treatment leaks effect into theta and biases
+#: uplift_cuped (pinned by test_cuped_biased_when_treatment_precedes_split).
+CUPED_SPLIT_DAY = 15  # pre-period = days 1-14 of the event month
+
+#: final-stage arithmetic on the arm-level moments, ONE text per value;
+#: theta = cov(pre, post) / var(pre) pooled over all users.
+_CUPED_THETA = (
+    "((sxy - sx * sy / n) / (sxx - sx * sx / n))"
+)
+
+_CUPED_ORACLE = f"""
+WITH per_user AS (
+    SELECT user_id,
+           {_ARM_SQL.format(k="user_id")} AS arm,
+           {_DSUM_SQL.format(x=f"CASE WHEN extract(day FROM ts) < {CUPED_SPLIT_DAY} THEN value ELSE 0.0 END")} AS pre,
+           {_DSUM_SQL.format(x=f"CASE WHEN extract(day FROM ts) >= {CUPED_SPLIT_DAY} THEN value ELSE 0.0 END")} AS post
+    FROM events GROUP BY user_id
+),
+pooled AS (
+    SELECT CAST(count(*) AS DOUBLE) AS n,
+           {_DSUM_SQL.format(x="pre")} AS sx,
+           {_DSUM_SQL.format(x="post")} AS sy,
+           {_DSUM_SQL.format(x="pre * pre")} AS sxx,
+           {_DSUM_SQL.format(x="pre * post")} AS sxy,
+           {_DSUM_SQL.format(x="post * post")} AS syy
+    FROM per_user
+),
+arms AS (
+    SELECT arm,
+           CAST(count(*) AS DOUBLE) AS n_arm,
+           {_DSUM_SQL.format(x="pre")} AS sx_arm,
+           {_DSUM_SQL.format(x="post")} AS sy_arm
+    FROM per_user GROUP BY arm
+),
+wide AS (
+    SELECT p.n, p.sx, p.sy, p.sxx, p.sxy, p.syy,
+           a0.n_arm AS n0, a0.sx_arm AS sx0, a0.sy_arm AS sy0,
+           a1.n_arm AS n1, a1.sx_arm AS sx1, a1.sy_arm AS sy1
+    FROM pooled p, arms a0, arms a1
+    WHERE a0.arm = 0 AND a1.arm = 1
+)
+SELECT CAST(n AS BIGINT) AS n_users,
+       {_CUPED_THETA} AS theta,
+       sy1 / n1 - sy0 / n0 AS uplift_raw,
+       (sy1 / n1 - {_CUPED_THETA} * (sx1 / n1 - sx / n))
+       - (sy0 / n0 - {_CUPED_THETA} * (sx0 / n0 - sx / n)) AS uplift_cuped,
+       ({_CUPED_THETA} * {_CUPED_THETA}) * (sxx - sx * sx / n)
+         / (syy - sy * sy / n) AS variance_reduction
+FROM wide
+"""
+
+
+@register(
+    "q_cuped_adjusted_uplift",
+    oracle=_CUPED_ORACLE,
+    tags=("statistics", "ab-test", "cuped", "variance-reduction"),
+)
+def q_cuped_adjusted_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUPED variance-reduced A/B uplift (Deng et al. 2013): each
+    user's post-period metric is adjusted by their PRE-period activity,
+    y* = y − θ(x − x̄) with θ = cov(x,y)/var(x). The adjustment changes
+    no expectation ONLY when the covariate is arm-independent; here
+    that is a HARD CONTRACT, not a derived fact: treatment exposure is
+    assumed to start at day CUPED_SPLIT_DAY, so days 1..14 of the same
+    month are genuinely pre-exposure. If a treatment is active the
+    whole month, θ absorbs part of the effect and uplift_cuped is
+    biased toward zero — the semantic tests pin BOTH sides (unbiased
+    recovery when the effect is post-only; measurable bias when the
+    contract is violated).
+    The single highest-leverage sensitivity trick in online
+    experimentation: the same uplift read with θ²·var(x)/var(y) of the
+    metric variance gone (reported as `variance_reduction`).
+
+    Pre/post = first/second half of the event month per user, both as
+    per-user sorted folds; θ, the two uplifts, and the variance ratio
+    are ONE shared expression text over 12 arm/pooled moments —
+    bit-identical cross-engine.
+
+    Scale: one user-level aggregate (partial-aggregated; det_sum is
+    the oracle-replay form of plain sums), then a 2-row arm rollup and
+    a broadcast single-row join. Nothing scales past |users| rows, and
+    only moment scalars reach the final stage.
+    """
+    events = load_table(spark, sf_dir, "events")
+    pre_case = (
+        f"CASE WHEN extract(day FROM ts) < {CUPED_SPLIT_DAY}"
+        " THEN value ELSE 0.0 END"
+    )
+    post_case = (
+        f"CASE WHEN extract(day FROM ts) >= {CUPED_SPLIT_DAY}"
+        " THEN value ELSE 0.0 END"
+    )
+    per_user = events.groupBy("user_id").agg(
+        F.expr(_ARM_SPARK.format(k="first(user_id)")).alias("arm"),
+        det_sum(pre_case).alias("pre"),
+        det_sum(post_case).alias("post"),
+    ).transform(eager_checkpoint)  # consumed by pooled AND arm branches; slim
+    # (user_id, arm, pre, post) rows — without it the user-level
+    # aggregate pass over raw events runs twice (no shared subplan)
+    pooled = per_user.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        det_sum("pre").alias("sx"),
+        det_sum("post").alias("sy"),
+        det_sum("pre * pre").alias("sxx"),
+        det_sum("pre * post").alias("sxy"),
+        det_sum("post * post").alias("syy"),
+    )
+    arms = per_user.groupBy("arm").agg(
+        F.count(F.lit(1)).cast("double").alias("n_arm"),
+        det_sum("pre").alias("sx_arm"),
+        det_sum("post").alias("sy_arm"),
+    )
+    a0 = arms.filter(F.col("arm") == 0).select(
+        F.col("n_arm").alias("n0"),
+        F.col("sx_arm").alias("sx0"),
+        F.col("sy_arm").alias("sy0"),
+    )
+    a1 = arms.filter(F.col("arm") == 1).select(
+        F.col("n_arm").alias("n1"),
+        F.col("sx_arm").alias("sx1"),
+        F.col("sy_arm").alias("sy1"),
+    )
+    wide = pooled.crossJoin(F.broadcast(a0)).crossJoin(F.broadcast(a1))
+    return wide.selectExpr(
+        "CAST(n AS BIGINT) AS n_users",
+        f"{_CUPED_THETA} AS theta",
+        "sy1 / n1 - sy0 / n0 AS uplift_raw",
+        f"(sy1 / n1 - {_CUPED_THETA} * (sx1 / n1 - sx / n))"
+        f" - (sy0 / n0 - {_CUPED_THETA} * (sx0 / n0 - sx / n))"
+        " AS uplift_cuped",
+        f"({_CUPED_THETA} * {_CUPED_THETA}) * (sxx - sx * sx / n)"
+        " / (syy - sy * sy / n) AS variance_reduction",
+    )
+
 
 _BUCKET_SPARK_K = _BUCKET_SPARK.format(k="o_orderkey")
 _BUCKET_SQL_K = _BUCKET_SQL.format(k="o_orderkey")

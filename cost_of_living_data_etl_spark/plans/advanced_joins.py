@@ -13,6 +13,10 @@ grouped-map transforms. Each is implemented with the scale strategy a
 - skewed agg   → two-phase salted aggregation (partial on (key, salt),
                  final on key) so one hot key spreads over N reducers.
 - grouped map  → applyInPandas with bounded group count (25 nations).
+- as-of view   → `q_asof_join_purchase_view`: each purchase takes the
+                 latest view at or before it.
+- lateral join → `q_lateral_topk_orders`: per-customer top-3 through a
+                 correlated LATERAL subquery with ORDER BY + LIMIT.
 """
 
 from __future__ import annotations
@@ -572,4 +576,127 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("edit_dist") <= FUZZY_MAX_DIST)
         .select("name_1", "name_2", "edit_dist", "n_parts_1", "n_parts_2")
+    )
+
+
+# --------------------------------------------------------------------------
+# as-of join: each purchase ↔ the user's latest view at-or-before it
+# --------------------------------------------------------------------------
+
+_ASOF_ORACLE = """
+WITH ve AS (
+    SELECT user_id, ts, event_id,
+           CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS kind
+    FROM events WHERE event_type IN ('view', 'purchase')
+),
+joined AS (
+    SELECT user_id, ts, event_id, kind,
+           max(CASE WHEN kind = 0 THEN ts END) OVER (
+               PARTITION BY user_id ORDER BY ts
+               RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS last_view_ts
+    FROM ve
+)
+SELECT CAST(event_id AS BIGINT) AS purchase_id,
+       CAST(user_id AS BIGINT) AS user_id,
+       ts AS purchase_ts,
+       last_view_ts,
+       epoch(ts) - epoch(last_view_ts) AS gap_seconds
+FROM joined
+WHERE kind = 1 AND last_view_ts IS NOT NULL
+"""
+
+
+@register(
+    "q_asof_join_purchase_view",
+    oracle=_ASOF_ORACLE,
+    tags=("join", "asof", "event-time"),
+)
+def q_asof_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AS-OF JOIN — the time-series join Spark has no native operator
+    for (kdb `aj`, DuckDB `ASOF JOIN`, Flink temporal join): each
+    purchase matched to the same user's latest view at-or-before it.
+
+    Composition shape: UNION the two sides with a kind marker, one
+    window pass per user ordered by ts with a RANGE frame (ties at
+    identical ts are ALL in-frame, so the result is deterministic
+    without a tiebreak column), keep the right-side rows. One shuffle
+    on user_id total — versus the naive equi-join-then-filter-then-
+    argmax which shuffles the |views|×|purchases| per-user product.
+    At 100 TB this is the canonical log-enrichment join (impressions
+    as-of features, trades as-of quotes).
+    """
+    ve = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin("view", "purchase"))
+        .selectExpr(
+            "user_id",
+            "ts",
+            "event_id",
+            "CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS kind",
+        )
+    )
+    joined = ve.selectExpr(
+        "user_id",
+        "ts",
+        "event_id",
+        "kind",
+        "max(CASE WHEN kind = 0 THEN ts END) OVER ("
+        "PARTITION BY user_id ORDER BY ts "
+        "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_view_ts",
+    )
+    return joined.filter("kind = 1 AND last_view_ts IS NOT NULL").selectExpr(
+        "CAST(event_id AS BIGINT) AS purchase_id",
+        "CAST(user_id AS BIGINT) AS user_id",
+        "ts AS purchase_ts",
+        "last_view_ts",
+        "CAST(ts AS DOUBLE) - CAST(last_view_ts AS DOUBLE) AS gap_seconds",
+    )
+
+
+# --------------------------------------------------------------------------
+# correlated LATERAL subquery top-k
+# --------------------------------------------------------------------------
+
+_LATERAL_ORACLE = """
+SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+FROM customer c, LATERAL (
+    SELECT o_orderkey, o_totalprice FROM orders
+    WHERE o_custkey = c.c_custkey
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 3
+) o
+"""
+
+
+@register(
+    "q_lateral_topk_orders",
+    oracle=_LATERAL_ORACLE,
+    tags=("sql", "lateral", "topk"),
+)
+def q_lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer top-3 orders by value via a correlated LATERAL
+    subquery with ORDER BY + LIMIT — the Spark 4 lateral-join SQL
+    surface (reference capability S5's pushed-SQL idiom generalized;
+    the window-function formulation of per-group top-k is
+    q_topk_orders_per_priority). Total order (o_totalprice DESC,
+    o_orderkey) makes the 3-set deterministic under ties; customers
+    with no orders drop (inner lateral), matching the oracle.
+
+    Scale: Catalyst de-correlates the lateral into a join + per-key
+    limit (rank-based), so this plans like the window top-k — one
+    shuffle on the key, no per-customer driver loop.
+    """
+    for t in ("customer", "orders"):
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(
+        """
+        SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+        FROM customer c JOIN LATERAL (
+            SELECT o_orderkey, o_totalprice FROM orders
+            WHERE o_custkey = c.c_custkey
+            ORDER BY o_totalprice DESC, o_orderkey
+            LIMIT 3
+        ) o
+        """
     )

@@ -511,7 +511,7 @@ def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session (user_id, session_seq, s, e, n_events) under the
     shared 30-min gap rule — the Spark twin of ``_SESSIONS_CTE``.
 
-    NOTE (round 9): scan-parallelization + an eager checkpoint of the
+    NOTE: scan-parallelization + an eager checkpoint of the
     interval frame were A/B-tested on the concurrency consumer and
     REJECTED (3.20 s old vs 3.65 s new min, interleaved) — the window
     already rides one user_id exchange and ReuseExchange dedups the

@@ -29,6 +29,9 @@ lag windows (shuffle key (user_id, day), ~20-byte rows) and the
 solve happens on one row. More channels grow the pivot quadratically
 (n² q-columns); at n ≳ 50 switch the solve to an iterated DataFrame
 join over the (src, dst, p) edge table instead of the pivot.
+
+The Shapley model (`q_shapley_channel_attribution`) is defined first
+in this module; the Markov model reuses its ``SHAPLEY_CHANNELS``.
 """
 
 from __future__ import annotations
@@ -39,9 +42,165 @@ from pyspark.sql import functions as F
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
+from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
-from cost_of_living_data_etl_spark.plans.round4_stats import SHAPLEY_CHANNELS
+from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
+
+
+# --- Shapley channel attribution ---------------------------------------------
+
+#: the non-conversion channels, alphabetical; bit i = position here.
+SHAPLEY_CHANNELS = ("click", "error", "signup", "view")
+
+
+def _shapley_const_rows() -> list[tuple[str, int, int, float]]:
+    """(channel, mask_with, mask_without, weight) for every channel ×
+    coalition-not-containing-it: weight = |S|!·(n−1−|S|)!/n!. Exact
+    small rationals in float64; ONE Python source feeds Spark's
+    createDataFrame and (via repr) the oracle's VALUES list, so both
+    engines hold identical doubles."""
+    import math
+
+    n = len(SHAPLEY_CHANNELS)
+    rows = []
+    for i, ch in enumerate(SHAPLEY_CHANNELS):
+        for s in range(1 << n):
+            if s & (1 << i):
+                continue
+            k = bin(s).count("1")
+            w = math.factorial(k) * math.factorial(n - 1 - k) / math.factorial(n)
+            rows.append((ch, s | (1 << i), s, w))
+    return rows
+
+
+_CH_BIT_CASE = "CASE event_type " + " ".join(
+    f"WHEN '{ch}' THEN {1 << i}" for i, ch in enumerate(SHAPLEY_CHANNELS)
+) + " ELSE 0 END"
+
+#: per (constant row × observed coalition) marginal indicator: the
+#: journeys of coalition m contribute to v(S∪{ch}) − v(S) exactly when
+#: m ⊆ S∪{ch} and m ⊄ S — i.e. ch ∈ m and the rest of m ⊆ S. ONE
+#: shared text (& is bitwise AND on both engines).
+_SHAPLEY_DELTA = (
+    "CASE WHEN (mask & mask_with) = mask"
+    " AND (mask & mask_without) <> mask"
+    " THEN w * CAST(conv AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
+)
+
+
+def _shapley_oracle() -> str:
+    values = ",\n        ".join(
+        f"('{ch}', {mw}, {mo}, CAST({w!r} AS DOUBLE))"
+        for ch, mw, mo, w in _shapley_const_rows()
+    )
+    return f"""
+WITH bits AS (
+    SELECT user_id, date_trunc('day', ts) AS day,
+           {_CH_BIT_CASE} AS bit,
+           CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
+    FROM events
+),
+journeys AS (
+    SELECT user_id, day, bit_or(bit) AS mask, max(conv) AS converted
+    FROM bits GROUP BY user_id, day
+),
+v AS (
+    SELECT mask, CAST(sum(converted) AS BIGINT) AS conv
+    FROM journeys WHERE mask <> 0 GROUP BY mask
+),
+const(channel, mask_with, mask_without, w) AS (
+    VALUES {values}
+),
+contrib AS (
+    SELECT c.channel, {_SHAPLEY_DELTA} AS term
+    FROM const c CROSS JOIN v
+),
+phi AS (
+    SELECT channel, {_DSUM_SQL.format(x="term")} AS shapley_conversions
+    FROM contrib GROUP BY channel
+),
+tot AS (SELECT CAST(sum(converted) AS DOUBLE) AS total
+        FROM journeys WHERE mask <> 0)
+SELECT channel, shapley_conversions,
+       shapley_conversions / total AS share
+FROM phi, tot ORDER BY channel
+"""
+
+
+@register(
+    "q_shapley_channel_attribution",
+    oracle=_shapley_oracle(),
+    tags=("attribution", "shapley", "marketing", "game-theory"),
+)
+def q_shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Shapley-value conversion attribution over channel
+    coalitions: a journey = one (user, day); its coalition = the set
+    of non-purchase channels touched; the cooperative game is the
+    COUNTING game v(S) = conversions from journeys whose coalition
+    ⊆ S — monotone by construction, v(∅) = 0, defined for every S from
+    observed data alone. φ_ch = Σ_S |S|!(n−1−|S|)!/n!·(v(S∪{ch})−v(S))
+    is then the unique efficient/symmetric/marginal credit split:
+    Σφ = v(all channels) = total attributed conversions, a channel
+    touched by no converting journey gets EXACTLY 0 (the exact-set
+    "v = observed rate, unobserved = 0" variant violates both — it
+    hands negative credit to never-seen channels), and the credits are
+    in conversion units, directly comparable to `q_decay_attribution`'s
+    heuristic weights.
+
+    Exactness over approximation: n = 4 channels ⇒ 2ⁿ coalitions, so
+    the game is solved EXACTLY with a constant (channel, S∪ch, S,
+    weight) table built once in Python and shared verbatim with the
+    oracle (identical doubles by repr round-trip). The marginal
+    v(S∪{ch}) − v(S) collapses to one subset-mask indicator per
+    (constant row × observed coalition) — conversion counts stay exact
+    BIGINTs; only the ≤ 32×15-term weighted det-fold is float.
+
+    Scale: the per-journey aggregate is the only data-scale shuffle
+    (|users|×|days| groups, partial-aggregated); everything after
+    happens on ≤ 2ⁿ−1 coalition rows × a 32-row broadcast constant.
+    More channels grow the constant table 2ⁿ — at n ≳ 20 switch to
+    permutation-sampled Shapley (same journey table, sampled coalition
+    chains).
+    """
+    events = load_table(spark, sf_dir, "events")
+    bits = events.select(
+        "user_id",
+        F.date_trunc("day", F.col("ts")).alias("day"),
+        F.expr(_CH_BIT_CASE).alias("bit"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
+    )
+    journeys = bits.groupBy("user_id", "day").agg(
+        F.expr("bit_or(bit)").alias("mask"),
+        F.max("conv").alias("converted"),
+    ).filter(F.col("mask") != 0).transform(eager_checkpoint)  # ≤15-coalition base
+    # consumed by v AND the total; slim (user, day, mask, converted)
+    v = journeys.groupBy("mask").agg(
+        F.sum("converted").cast("long").alias("conv")
+    )
+    const = spark.createDataFrame(
+        _shapley_const_rows(),
+        "channel string, mask_with int, mask_without int, w double",
+    )
+    contrib = const.crossJoin(F.broadcast(v)).selectExpr(
+        "channel", f"{_SHAPLEY_DELTA} AS term"
+    )
+    phi = contrib.groupBy("channel").agg(
+        det_sum("term").alias("shapley_conversions")
+    )
+    tot = journeys.agg(
+        F.sum("converted").cast("double").alias("total")
+    )
+    return (
+        phi.crossJoin(F.broadcast(tot))
+        .select(
+            "channel",
+            "shapley_conversions",
+            (F.col("shapley_conversions") / F.col("total")).alias("share"),
+        )
+        .orderBy("channel")
+    )
+
 
 #: value-iteration depth: the statistic is DEFINED as the K-step
 #: absorption probability — "P(convert within K touches)" — so
@@ -214,7 +373,7 @@ def markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
     )
-    # Single-pass journey fold (round 9): the former shape — row_number
+    # Single-pass journey fold: the former shape — row_number
     # window, first-purchase rollup, join-back, lag window + max window
     # union — derived the windowed path FOUR times (two windows, a join
     # probe and a union branch) over the same (user_id, day)

@@ -36,9 +36,8 @@ _REGISTRY: dict[str, QuerySpec] = {}
 #: Queries allowed to return ZERO rows on the verification fixtures.
 #: Everything else must produce output at every tested SF: the hash
 #: gate is blind to a query that degenerates to empty on BOTH engines
-#: (round-6 lesson — the first winnowing version shipped as a no-op
-#: that returned zero rows on every corpus and every oracle
-#: comparison "passed"). Consumed by tests/test_catalog_oracle.py and
+#: (a winnowing miner that returns zero rows on every corpus passes
+#: every oracle comparison). Consumed by tests/test_catalog_oracle.py and
 #: tools/census.py. q22: the fixtures hold no dormant high-balance
 #: customer until sf0.1 (verified directly against the parquet), so
 #: its emptiness is a data property, not a plan defect.

@@ -25,6 +25,10 @@ apply to windows).
 The deterministic changelog here is derived from the orders fixture
 (version 1 = insert, md5-gated update and delete versions) so the
 whole apply path is hash-verifiable in DuckDB.
+
+`q_table_diff_audit` is the snapshot-diff primitive beside the apply
+path: added / removed / changed / unchanged keys between two dataset
+versions, as one full-outer-join aggregate.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
@@ -145,4 +150,114 @@ def q_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_live"),
         F.sum((F.col("op") == "U").cast("bigint")).alias("n_updated"),
         F.sum("price").alias("live_value"),
+    )
+
+
+# --------------------------------------------------------------------------
+# snapshot diff audit
+
+#: md5 bucket on the key — the house deterministic split (reshape.py)
+_DIFF_BUCKET_SPARK = (
+    "cast(conv(substring(md5(cast(c_custkey AS STRING)), 1, 15), 16, 10)"
+    " AS BIGINT) % 100"
+)
+_DIFF_BUCKET_SQL = (
+    "CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT)"
+    " % 100"
+)
+#: restatement on the exact cent grid (see mllite SCD2 note: round()
+#: disagrees between engines on .5-cent midpoints; floor(x*110+0.5)/100
+#: evaluates identically)
+_RESTATE = "floor(c_acctbal * 110.0 + 0.5) / 100.0"
+
+_DIFF_ORACLE = f"""
+WITH b AS (
+    SELECT c_custkey, c_mktsegment, c_acctbal,
+           {_DIFF_BUCKET_SQL} AS bk
+    FROM customer
+),
+v1 AS (
+    SELECT c_custkey, c_mktsegment, c_acctbal FROM b WHERE bk < 95
+),
+v2 AS (
+    SELECT c_custkey, c_mktsegment,
+           CASE WHEN bk >= 5 AND bk < 10 THEN {_RESTATE}
+                ELSE c_acctbal END AS c_acctbal
+    FROM b WHERE bk >= 5
+),
+d AS (
+    SELECT COALESCE(v1.c_mktsegment, v2.c_mktsegment) AS segment,
+           CASE WHEN v1.c_custkey IS NULL THEN 'added'
+                WHEN v2.c_custkey IS NULL THEN 'removed'
+                WHEN v1.c_acctbal <> v2.c_acctbal THEN 'changed'
+                ELSE 'unchanged' END AS status,
+           COALESCE(v1.c_acctbal, 0.0) AS bal_v1,
+           COALESCE(v2.c_acctbal, 0.0) AS bal_v2
+    FROM v1 FULL OUTER JOIN v2 ON v1.c_custkey = v2.c_custkey
+)
+SELECT segment, status, CAST(count(*) AS BIGINT) AS n_keys,
+       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                   list_sort(list(bal_v1))), (a, b) -> a + b) AS bal_v1,
+       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                   list_sort(list(bal_v2))), (a, b) -> a + b) AS bal_v2
+FROM d GROUP BY segment, status
+"""
+
+
+@register(
+    "q_table_diff_audit",
+    oracle=_DIFF_ORACLE,
+    tags=("cdc", "diff", "audit", "join"),
+)
+def q_table_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot-diff audit between two deterministic versions of the
+    customer dimension (v1 = md5 buckets 0-94; v2 = buckets 5-99 with
+    buckets 5-9 restated ×1.1 on the cent grid): per (segment, status ∈
+    added/removed/changed/unchanged) key counts and balance mass per
+    side — the "what changed between table versions" reconciliation
+    every CDC/MERGE pipeline runs before applying a batch.
+
+    Scale: one full outer join on the key (shuffle both sides by
+    c_custkey — co-locatable via bucketing, see
+    q_bucketed_colocated_join) followed by a small-cardinality
+    aggregate. No row ever reaches the driver.
+    """
+    b = load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        "c_mktsegment",
+        "c_acctbal",
+        F.expr(_DIFF_BUCKET_SPARK).alias("bk"),
+    )
+    v1 = b.filter(F.col("bk") < 95).select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
+    )
+    v2 = b.filter(F.col("bk") >= 5).select(
+        "c_custkey",
+        "c_mktsegment",
+        F.when(
+            (F.col("bk") >= 5) & (F.col("bk") < 10), F.expr(_RESTATE)
+        )
+        .otherwise(F.col("c_acctbal"))
+        .alias("c_acctbal"),
+    )
+    d = v1.alias("v1").join(
+        v2.alias("v2"),
+        F.col("v1.c_custkey") == F.col("v2.c_custkey"),
+        "full_outer",
+    ).select(
+        F.coalesce("v1.c_mktsegment", "v2.c_mktsegment").alias("segment"),
+        F.when(F.col("v1.c_custkey").isNull(), F.lit("added"))
+        .when(F.col("v2.c_custkey").isNull(), F.lit("removed"))
+        .when(
+            F.col("v1.c_acctbal") != F.col("v2.c_acctbal"), F.lit("changed")
+        )
+        .otherwise(F.lit("unchanged"))
+        .alias("status"),
+        F.coalesce("v1.c_acctbal", F.lit(0.0)).alias("b1"),
+        F.coalesce("v2.c_acctbal", F.lit(0.0)).alias("b2"),
+    )
+    return d.groupBy("segment", "status").agg(
+        F.count(F.lit(1)).cast("long").alias("n_keys"),
+        det_sum("b1").alias("bal_v1"),
+        det_sum("b2").alias("bal_v2"),
     )

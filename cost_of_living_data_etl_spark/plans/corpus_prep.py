@@ -24,6 +24,12 @@ makes the funnel incremental: only new ingest batches re-run stages.
 The reference has no multi-stage data-quality pipeline at all
 (SURVEY §2.5 — its three transforms are schema conforming only,
 reference app.py:33-103); this is a north-star composite.
+
+Corpus length and vocabulary statistics sit beside the pipeline:
+exact length order statistics and decile concentration (distributed
+ranks, no single-task window), the Hill tail index of document
+lengths, tokenizer fertility per language, distinct-n diversity and
+the top-k vocabulary coverage curve.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.operators.decontam import (
     EVAL_MOD,
     NGRAM_N,
@@ -445,5 +452,452 @@ def q_chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_doc_tokens",
             F.expr(f"size({chunk})").cast("int").alias("n_chunk_tokens"),
             F.md5(F.expr(f"array_join({chunk}, ' ')")).alias("chunk_hash"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# tokenizer fertility by language (BPE-ish regex vs whitespace)
+# --------------------------------------------------------------------------
+
+#: GPT-2-style pretokenizer shape, shared by both engines: word pieces,
+#: number runs, or single non-space symbols.
+_BPEISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+
+_FERTILITY_ORACLE = f"""
+WITH t AS (
+    SELECT lang,
+           CAST(length(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+             AS n_words,
+           CAST(length(regexp_extract_all(text, '{_BPEISH}')) AS BIGINT)
+             AS n_tokens,
+           CAST(length(text) AS BIGINT) AS n_chars
+    FROM documents
+)
+SELECT lang,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_words) AS BIGINT) AS total_words,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+       sum(n_tokens) * 1.0 / sum(n_words) AS tokens_per_word,
+       sum(n_chars) * 1.0 / nullif(sum(n_tokens), 0) AS chars_per_token
+FROM t GROUP BY lang
+"""
+
+
+@register(
+    "q_tokenizer_fertility_by_lang",
+    oracle=_FERTILITY_ORACLE,
+    tags=("text", "tokens", "tokenizer"),
+)
+def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility per language: BPE-ish tokens per whitespace
+    word and characters per token — the numbers that expose when a
+    tokenizer trained on one language explodes another into symbol
+    soup (fertility 3× ⇒ that language pays 3× the context budget for
+    the same text). One regex pass in the scan projection (counts
+    only cross the Exchange), exact-integer sums, |langs| output rows.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    # Spark SQL string literals process backslash escapes ('\s' parses
+    # as plain 's'!) while DuckDB's keep them — same regex, doubled
+    # backslashes on the Spark side only (house convention for every
+    # \s+ split above).
+    bpeish_spark = _BPEISH.replace("\\", "\\\\")
+    t = docs.selectExpr(
+        "lang",
+        r"CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_words",
+        f"CAST(size(regexp_extract_all(text, '{bpeish_spark}', 0)) AS BIGINT)"
+        " AS n_tokens",
+        "CAST(length(text) AS BIGINT) AS n_chars",
+    )
+    return t.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_words").cast("long").alias("total_words"),
+        F.sum("n_tokens").cast("long").alias("total_tokens"),
+        (F.sum("n_tokens") * 1.0 / F.sum("n_words")).alias("tokens_per_word"),
+        # n_words >= 1 always (split yields at least one element) but
+        # n_tokens CAN sum to 0 for a lang of all-whitespace/symbol-free
+        # docs — nullif on both engines instead of ANSI crash-vs-NULL
+        # divergence (round-6 review catch)
+        (
+            F.sum("n_chars") * 1.0 / F.nullif(F.sum("n_tokens"), F.lit(0))
+        ).alias("chars_per_token"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Corpus distinct-n diversity per source
+# --------------------------------------------------------------------------
+
+_DIVERSITY_ORACLE = r"""
+WITH ws AS (
+    SELECT source,
+           list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS w
+    FROM documents
+),
+g AS (
+    SELECT source, n,
+           unnest(CASE WHEN length(w) >= n
+                  THEN list_transform(
+                         range(1, length(w) - n + 2),
+                         i -> array_to_string(
+                                w[CAST(i AS INT):CAST(i + n - 1 AS INT)], ' '))
+                  ELSE [] END) AS gram
+    FROM ws, (SELECT unnest(range(1, 4)) AS n)
+)
+SELECT source,
+       CAST(n AS BIGINT) AS n,
+       CAST(count(*) AS BIGINT) AS total_ngrams,
+       CAST(count(DISTINCT gram) AS BIGINT) AS distinct_ngrams,
+       count(DISTINCT gram) * 1.0 / count(*) AS distinct_ratio
+FROM g
+GROUP BY source, n
+"""
+
+
+@register(
+    "q_distinct_ngram_diversity",
+    oracle=_DIVERSITY_ORACLE,
+    tags=("text", "diversity", "diagnostics", "training-prep"),
+)
+def q_distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-level distinct-n diversity per source for n ∈ {1,2,3}:
+    distinct n-grams / total n-grams over the WHOLE source — the NLG
+    "distinct-n" degeneracy metric applied to training data. A
+    template-generated source shows a collapsing distinct-2/3 ratio
+    long before doc-level dedup fires; q_text_repetition measures
+    within-doc duplication, this measures cross-doc sameness.
+
+    Scale: tokenize once per doc, emit (n, gram) pairs map-side,
+    ONE shuffle keyed (source, n, gram-ish) for the count-distinct
+    partial aggregation — gram strings cross the exchange (like the
+    novelty query), so the 100-TB variant swaps grams for 64-bit
+    hashes with an identical plan shape. Integer counts, one final
+    division. North-star extension (SURVEY.md §2.8 text analysis);
+    no reference analogue.
+    """
+    # parallel=True (round 10): the tokenize + triple-gram explode is
+    # the dominant serial kernel on single-split fixtures; outputs are
+    # exact counts (count, count_distinct) and one LONG/LONG division —
+    # order-insensitive, so the scan re-key is parity-safe. Interleaved
+    # A/B: med 1.93 s (off) → 1.39 s (on), −28%. (The sibling novelty
+    # query REJECTED the same re-key at +27% — there the
+    # groupBy(shingle) exchange dominates, here the 3×-gram explode
+    # does.)
+    docs = load_table(spark, sf_dir, "documents", parallel=True)
+
+    def grams(n: int) -> str:
+        return (
+            f"CASE WHEN size(ws) >= {n} THEN "
+            f"transform(sequence(1, size(ws) - {n} + 1),"
+            f" i -> concat_ws(' ', slice(ws, i, {n})))"
+            " ELSE array() END"
+        )
+
+    exploded = (
+        docs.select(
+            "source",
+            # drop the phantom '' token an empty/whitespace-only text
+            # produces from split (house corpus_prep guard), so empty
+            # docs contribute zero n-grams at every n
+            F.expr(
+                r"filter(split(trim(text), '\\s+'), x -> x != '')"
+            ).alias("ws"),
+        )
+        .select(
+            "source",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(n).cast("long").alias("n"),
+                            F.expr(grams(n)).alias("grams"),
+                        )
+                        for n in (1, 2, 3)
+                    ]
+                )
+            ).alias("g"),
+        )
+        .select("source", F.col("g.n").alias("n"), F.explode("g.grams").alias("gram"))
+    )
+    return exploded.groupBy("source", "n").agg(
+        F.count(F.lit(1)).cast("long").alias("total_ngrams"),
+        F.countDistinct("gram").cast("long").alias("distinct_ngrams"),
+        (F.countDistinct("gram") * F.lit(1.0) / F.count(F.lit(1))).alias(
+            "distinct_ratio"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# exact corpus length order statistics (distributed selection)
+# --------------------------------------------------------------------------
+
+LEN_QS = (0.5, 0.9, 0.99)
+
+_LEN_STATS_ORACLE = f"""
+WITH r AS (
+    SELECT n_chars,
+           row_number() OVER (ORDER BY n_chars, doc_id) AS rn,
+           count(*) OVER () AS n
+    FROM documents
+),
+grid AS (SELECT unnest([{", ".join(f"({q})" for q in LEN_QS)}]) AS q)
+SELECT g.q,
+       CAST(max(CASE WHEN r.rn = greatest(1, CAST(ceil(g.q * r.n) AS BIGINT))
+                THEN r.n_chars END) AS BIGINT) AS n_chars_cut,
+       CAST(max(r.n) AS BIGINT) AS n_docs
+FROM grid g CROSS JOIN r
+GROUP BY g.q
+"""
+
+
+@register(
+    "q_doc_length_order_stats",
+    oracle=_LEN_STATS_ORACLE,
+    tags=("text", "order-statistics", "distributed-rank"),
+)
+def q_doc_length_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT p50/p90/p99 document length (chars) — the numbers a
+    context-window / truncation policy is set from, as true order
+    statistics rather than approx_percentile sketches (the sketch's
+    error bound is fine for monitoring but not for a contractual
+    "99% of documents fit" claim).
+
+    Distributed selection, not a global rank window: positions come
+    from the bucket-partitioned zipWithIndex
+    (operators/distributed_rank.py — n_chars div 64 monotone bucket,
+    doc_id tiebreak), the 3 target ranks are a broadcast grid, and
+    the lookup is a broadcast join on position. Same plan family as
+    q_ppl_filter_retention_curve.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_position,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("n_chars", "doc_id")
+    n_tot = docs.agg(F.count(F.lit(1)).alias("n"))
+    ranked = with_global_position(
+        docs,
+        ["n_chars", "doc_id"],
+        F.floor(F.col("n_chars") / F.lit(64)),
+        pos_col="__rnk_pos",
+    )
+    grid = spark.createDataFrame([(q,) for q in LEN_QS], "q double")
+    targets = grid.crossJoin(F.broadcast(n_tot)).selectExpr(
+        "q", "n", "greatest(1, CAST(ceil(q * n) AS BIGINT)) AS k"
+    )
+    return (
+        ranked.join(F.broadcast(targets), F.col("__rnk_pos") == F.col("k") - 1)
+        .groupBy("q")
+        .agg(
+            F.max("n_chars").cast("long").alias("n_chars_cut"),
+            F.max("n").cast("long").alias("n_docs"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# length-decile concentration (who holds the corpus' character mass)
+# --------------------------------------------------------------------------
+
+_LEN_DECILE_ORACLE = """
+WITH tiled AS (
+    SELECT n_chars,
+           CAST(ntile(10) OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS decile
+    FROM documents
+),
+tot AS (SELECT sum(n_chars) AS total_chars FROM tiled)
+SELECT decile,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_chars) AS BIGINT) AS chars_total,
+       sum(n_chars) * 1.0 / max(t.total_chars) AS chars_share
+FROM tiled CROSS JOIN tot t
+GROUP BY decile
+"""
+
+
+@register(
+    "q_length_decile_concentration",
+    oracle=_LEN_DECILE_ORACLE,
+    tags=("text", "concentration", "mixture", "distributed-rank"),
+)
+def q_length_decile_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Character-mass concentration across length deciles — the
+    Lorenz-curve table behind "the longest 10% of documents hold X%
+    of the corpus": decides whether long-document handling (chunking,
+    truncation, packing) dominates the token budget or is a tail
+    concern. Deciles are the EXACT distributed ntile
+    (operators/distributed_rank.py), shares are one division of exact
+    BIGINT sums."""
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_ntile,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("n_chars", "doc_id")
+    tiled = with_global_ntile(
+        docs,
+        10,
+        ["n_chars", "doc_id"],
+        F.floor(F.col("n_chars") / F.lit(64)),
+        out_col="__tile",
+    ).select(F.col("__tile").cast("long").alias("decile"), "n_chars")
+    tot = tiled.agg(F.sum("n_chars").alias("total_chars"))
+    return (
+        tiled.crossJoin(F.broadcast(tot))
+        .groupBy("decile")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("chars_total"),
+            (
+                F.sum("n_chars") * F.lit(1.0) / F.max("total_chars")
+            ).alias("chars_share"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Hill tail-index of document lengths
+# --------------------------------------------------------------------------
+
+HILL_K = 100  # top-k order statistics (fixture-sized; 10^4-10^5 at corpus scale)
+
+_HILL_ORACLE = f"""
+WITH top AS (
+    SELECT n_chars FROM documents ORDER BY n_chars DESC, doc_id LIMIT {HILL_K + 1}
+),
+ref AS (SELECT min(n_chars) AS x_ref, count(*) AS c FROM top)
+SELECT CAST(r.c - 1 AS BIGINT)   AS k,
+       CAST(r.x_ref AS BIGINT)   AS x_ref,
+       (r.c - 1) / list_reduce(
+           list_prepend(CAST(0.0 AS DOUBLE),
+                        list_sort(list(ln(CAST(t.n_chars AS DOUBLE) / r.x_ref)))),
+           (a, b) -> a + b
+       ) AS hill_alpha
+FROM top t CROSS JOIN ref r
+GROUP BY r.c, r.x_ref
+"""
+
+
+@register(
+    "q_hill_tail_index_lengths",
+    oracle=_HILL_ORACLE,
+    tags=("text", "statistics", "tail"),
+)
+def q_hill_tail_index_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hill tail-index α of the document-length distribution from the
+    top-k order statistics: α ≤ 1 means the length tail is so heavy
+    the MEAN is unstable (mean-based token budgeting is then wrong;
+    use the exact deciles of q_doc_length_order_stats instead); α ≈ 2+
+    means a tame tail. The standard heavy-tail diagnostic before
+    trusting any per-source average length.
+
+    Exactness: the top-(k+1) frame comes from TakeOrderedAndProject
+    (k+1 rows per partition to the driver — no global sort, no
+    unpartitioned window); x_ref is its min; every tied boundary doc
+    contributes ln(1)=0, so tie selection inside the cut cannot change
+    the sum; logs fold via the sorted det_sum against DuckDB's
+    list_sort fold.
+
+    Scale: k is a constant; the only full pass is the scan feeding
+    top-k.
+    """
+    docs = load_table(spark, sf_dir, "documents").select("n_chars", "doc_id")
+    top = docs.orderBy(F.col("n_chars").desc(), "doc_id").limit(HILL_K + 1)
+    ref = top.groupBy().agg(
+        F.min("n_chars").alias("x_ref"), F.count(F.lit(1)).alias("c")
+    )
+    terms = top.crossJoin(F.broadcast(ref)).select(
+        "x_ref",
+        "c",
+        F.log(F.col("n_chars").cast("double") / F.col("x_ref")).alias("lt"),
+    )
+    return terms.groupBy("c", "x_ref").agg(
+        (F.col("c") - 1).cast("long").alias("k"),
+        F.max("x_ref").cast("long").alias("x_ref2"),
+        ((F.col("c") - 1) / det_sum("lt")).alias("hill_alpha"),
+    ).select(
+        "k",
+        F.col("x_ref2").alias("x_ref"),
+        "hill_alpha",
+    )
+
+
+# --------------------------------------------------------------------------
+# vocabulary coverage curve
+# --------------------------------------------------------------------------
+
+COVERAGE_KS = (5, 25, 1000)
+
+_COVERAGE_ORACLE = f"""
+WITH counts AS (
+    SELECT word, CAST(count(*) AS BIGINT) AS cnt
+    FROM (
+        SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
+        FROM documents WHERE trim(text) <> ''
+    )
+    GROUP BY word
+),
+ranked AS (
+    SELECT cnt,
+           row_number() OVER (ORDER BY cnt DESC, word) - 1 AS pos
+    FROM counts
+),
+tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM counts),
+ks AS (SELECT unnest([{", ".join(str(k) for k in COVERAGE_KS)}]) AS k)
+SELECT CAST(k AS INT)                      AS k,
+       CAST(sum(cnt) AS BIGINT)            AS covered_tokens,
+       CAST(max(t.t) AS BIGINT)            AS total_tokens,
+       sum(cnt) * 1.0 / max(t.t)           AS coverage
+FROM ks JOIN ranked ON pos < k CROSS JOIN tot t
+GROUP BY k
+"""
+
+
+@register(
+    "q_vocab_coverage_curve",
+    oracle=_COVERAGE_ORACLE,
+    tags=("text", "tokenizer", "coverage", "distributed-rank"),
+)
+def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-mass coverage of the top-k vocabulary (the same
+    whitespace tokenization as q_word_frequency_topk): for each k,
+    what fraction of all corpus tokens the k most frequent words
+    cover — the curve a tokenizer/vocab-size decision reads (where it
+    flattens, bigger vocabularies stop paying).
+
+    Exactness: word ranks come from the distributed zipWithIndex over
+    (cnt DESC, word) — bucket −cnt, total order, BIGINT counts;
+    coverage is one division of exact sums.
+
+    Scale: the vocabulary grows with the corpus (Heaps' law), so the
+    rank MUST NOT be a single-task window — the bucket-partitioned
+    position replaces it; the k-grid is a broadcast literal.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_position,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    counts = (
+        docs.select(F.trim(F.col("text")).alias("t"))
+        .filter(F.col("t") != "")
+        .select(F.explode(F.split("t", r"\s+")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    ranked = with_global_position(
+        counts, [F.desc("cnt"), F.asc("word")], -F.col("cnt")
+    )
+    tot = counts.groupBy().agg(F.sum("cnt").cast("long").alias("t"))
+    ks = spark.createDataFrame([(k,) for k in COVERAGE_KS], "k int")
+    return (
+        ranked.join(F.broadcast(ks), F.col("pos") < F.col("k"))
+        .crossJoin(F.broadcast(tot))
+        .groupBy("k")
+        .agg(
+            F.sum("cnt").cast("long").alias("covered_tokens"),
+            F.max("t").cast("long").alias("total_tokens"),
+            (F.sum("cnt") / F.max("t")).alias("coverage"),
         )
     )

@@ -28,6 +28,13 @@ All of these are single text passes whose shuffles carry only short keys
 and counts (never document text), so they scale like the rest of the
 dedup/textstats families: 100 TB in, map-side feature extraction,
 vocab- or bucket-bounded aggregation out.
+
+Mixture design and LM-based filtering live here too: the bigram-LM
+perplexity score (`lm_scored_docs`, shared by
+`q_bigram_lm_perplexity` and `q_ppl_filter_retention_curve`),
+n-gram novelty and boilerplate coverage per source, quality-decile
+mix, language entropy, effective source count, pairwise unigram JSD
+and temperature-scaled mixture weights.
 """
 
 from __future__ import annotations
@@ -39,7 +46,12 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
+from cost_of_living_data_etl_spark.operators.dedup import (
+    _SHINGLES_FROM_WS,
+    SHINGLES_SQL,
+)
 from cost_of_living_data_etl_spark.plans.catalog import register
+from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -696,3 +708,833 @@ def q_encoding_anomaly_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     aggs.append(F.sum((any_rule > 0).cast("int")).cast("long").alias("n_any"))
     return checks.groupBy("source").agg(*aggs)
+
+
+# --------------------------------------------------------------------------
+# language-mixture entropy per source
+# --------------------------------------------------------------------------
+
+_LANG_ENTROPY_ORACLE = f"""
+WITH c AS (
+    SELECT source, lang, CAST(count(*) AS BIGINT) AS cnt
+    FROM documents GROUP BY source, lang
+),
+tot AS (
+    SELECT source, sum(cnt) AS n FROM c GROUP BY source
+)
+SELECT c.source,
+       CAST(max(t.n) AS BIGINT) AS n_docs,
+       CAST(count(*) AS BIGINT) AS n_langs,
+       {_DSUM_SQL.format(
+           x="-(cnt * 1.0 / t.n) * log2(cnt * 1.0 / t.n)"
+       )} AS lang_entropy_bits
+FROM c JOIN tot t USING (source)
+GROUP BY c.source
+"""
+
+
+@register(
+    "q_lang_entropy_by_source",
+    oracle=_LANG_ENTROPY_ORACLE,
+    tags=("text", "mixture", "diagnostics"),
+)
+def q_lang_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shannon entropy of each source's language mix — the one-number
+    diagnostic for corpus mixture design: 0 bits = monolingual source,
+    log2(k) = uniform over k languages. Pretraining mixture tooling
+    watches this per-snapshot to catch crawls whose language balance
+    drifted. Two tiny grouped aggregates (|source×lang| then |source|
+    rows); the entropy sum folds ≤|langs| terms via det_sum for
+    bit-replay.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    c = docs.groupBy("source", "lang").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    )
+    tot = c.groupBy("source").agg(F.sum("cnt").alias("n"))
+    return (
+        c.join(tot, "source")
+        .groupBy("source")
+        .agg(
+            F.expr("CAST(max(n) AS BIGINT)").alias("n_docs"),
+            F.count(F.lit(1)).cast("long").alias("n_langs"),
+            det_sum("-(cnt * 1.0 / n) * log2(cnt * 1.0 / n)").alias(
+                "lang_entropy_bits"
+            ),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# quantile normalization of quality scores → decile mix per source
+# --------------------------------------------------------------------------
+
+_QNORM_ORACLE = """
+WITH scored AS (
+    SELECT doc_id, source, n_chars * 1.0 AS score,
+           percent_rank() OVER (ORDER BY n_chars, doc_id) AS pr
+    FROM documents
+)
+SELECT source,
+       CAST(least(CAST(floor(pr * 10) AS BIGINT), 9) AS BIGINT) AS decile,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM scored
+GROUP BY source, least(CAST(floor(pr * 10) AS BIGINT), 9)
+"""
+
+
+@register(
+    "q_quality_decile_mix",
+    oracle=_QNORM_ORACLE,
+    tags=("curation", "quantile-normalization", "mixture"),
+)
+def q_quality_decile_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile-normalize a quality proxy (n_chars) over the WHOLE
+    corpus, then show each source's decile mix — the table a curation
+    team reads to set per-source sampling weights ("src7 is 40%
+    bottom-decile"). percent_rank with a doc_id tiebreak is fully
+    deterministic cross-engine, and under a TOTAL order it reduces to
+    (row_number − 1) / (n − 1) — which the distributed zipWithIndex
+    (operators/distributed_rank.py, n_chars div 64 monotone bucket)
+    computes with the IDENTICAL single IEEE division, no
+    single-partition rank window over the corpus.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_position,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    scored = (
+        with_global_position(
+            docs.select("source", "n_chars", "doc_id"),
+            ["n_chars", "doc_id"],
+            F.floor(F.col("n_chars") / F.lit(64)),
+            n_col="n",
+        )
+        .selectExpr(
+            "source",
+            # percent_rank == (rank-1)/(n-1) and rank == row_number
+            # under the total (n_chars, doc_id) order; single-row edge
+            # pinned to percent_rank's defined 0.0
+            "CASE WHEN n > 1 THEN CAST(pos AS DOUBLE) / (n - 1)"
+            " ELSE 0.0 END AS pr",
+        )
+    )
+    return (
+        scored.selectExpr(
+            "source",
+            "CAST(least(CAST(floor(pr * 10) AS BIGINT), 9) AS BIGINT)"
+            " AS decile",
+        )
+        .groupBy("source", "decile")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    )
+
+
+# --------------------------------------------------------------------------
+# effective number of sources (inverse Simpson over token shares)
+# --------------------------------------------------------------------------
+
+_EFFSRC_ORACLE = """
+WITH t AS (
+    SELECT source,
+           CAST(sum(length(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
+             AS toks
+    FROM documents GROUP BY source
+),
+tot AS (SELECT sum(toks) AS n FROM t)
+SELECT CAST(count(*) AS BIGINT) AS n_sources,
+       CAST(max(tot.n) AS BIGINT) AS total_tokens,
+       1.0 / list_reduce(
+           list_sort(list((toks * 1.0 / tot.n) * (toks * 1.0 / tot.n))),
+           (a, b) -> a + b)
+         AS effective_sources,
+       max(toks) * 1.0 / max(tot.n) AS max_share
+FROM t CROSS JOIN tot
+"""
+
+
+@register(
+    "q_effective_source_count",
+    oracle=_EFFSRC_ORACLE,
+    tags=("mixture", "diversity", "diagnostics"),
+)
+def q_effective_source_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inverse-Simpson "effective number of sources" over token
+    shares: 1/Σs² — equals k when k sources contribute equally,
+    collapses toward 1 as one source dominates. The single number a
+    mixture design review asks for first (20 sources at effective 2.3
+    is a monoculture). The Simpson sum is det_sum-folded on both
+    engines (the house double-sum discipline — a plain partial-agg
+    sum adds in partition order and last-ulp drift depends on the
+    scheduler); count/total are exact BIGINTs.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    t = docs.groupBy("source").agg(
+        F.expr(
+            r"CAST(sum(size(split(trim(text), '\\s+'))) AS BIGINT)"
+        ).alias("toks")
+    )
+    tot = t.agg(F.sum("toks").alias("n"))
+    terms = t.crossJoin(F.broadcast(tot)).select(
+        "toks",
+        "n",
+        (
+            (F.col("toks") * 1.0 / F.col("n"))
+            * (F.col("toks") * 1.0 / F.col("n"))
+        ).alias("sq"),
+    )
+    return terms.agg(
+        F.count(F.lit(1)).cast("long").alias("n_sources"),
+        F.expr("CAST(max(n) AS BIGINT)").alias("total_tokens"),
+        (F.lit(1.0) / det_sum("sq")).alias("effective_sources"),
+        (F.max("toks") * 1.0 / F.max("n")).alias("max_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# bigram-LM perplexity scoring (CCNet-style LM quality filter)
+# --------------------------------------------------------------------------
+
+LM_BUCKETS = 1024  # hashed vocab (collisions merge identically cross-engine)
+LM_TOPK = 25
+
+#: ln P(w2|w1) with add-one smoothing over the hashed vocab — ONE text.
+_LM_LOGP = "ln((c2 + 1.0) / (c1 + CAST({B} AS DOUBLE)))".format(B=LM_BUCKETS)
+
+# Shared CTE chain: per-doc bigram-LM score (reused by the
+# perplexity-filter retention curve — keep ONE text of the model)
+_LM_SCORED_CTES = f"""
+WITH toks AS (
+    SELECT doc_id,
+           list_transform(string_split_regex(trim(lower(text)), '\\s+'),
+               w -> CAST('0x' || substr(md5(w), 1, 13) AS BIGINT)
+                    % {LM_BUCKETS}) AS ws
+    FROM documents
+),
+big AS (
+    SELECT doc_id, unnest(ws[1:length(ws) - 1]) AS w1,
+           unnest(ws[2:length(ws)]) AS w2
+    FROM toks WHERE length(ws) >= 2
+),
+c2t AS (
+    SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM big GROUP BY w1, w2
+),
+c1t AS (
+    SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM big GROUP BY w1
+),
+scored AS (
+    SELECT b.doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           {_DSUM_SQL.format(x=f"-({_LM_LOGP})")} AS nll
+    FROM big b JOIN c2t USING (w1, w2) JOIN c1t USING (w1)
+    GROUP BY b.doc_id
+)
+"""
+
+_LM_ORACLE = f"""{_LM_SCORED_CTES}
+SELECT CAST(doc_id AS BIGINT) AS doc_id, n_bigrams,
+       nll / n_bigrams AS cross_entropy,
+       exp(nll / n_bigrams) AS perplexity
+FROM scored
+ORDER BY perplexity DESC, doc_id
+LIMIT {LM_TOPK}
+"""
+
+
+def lm_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc bigram-LM score frame (doc_id, n_bigrams, nll): the
+    corpus-trained add-one-smoothed hashed-bigram model shared by
+    q_bigram_lm_perplexity and q_ppl_filter_retention_curve. One
+    model, one Spark shape, one oracle CTE text (_LM_SCORED_CTES)."""
+    from pyspark import StorageLevel
+
+    # Scan re-key tried and REJECTED: det_sum folds make it
+    # parity-safe, but the chain's cost is the persisted bigram explode
+    # + vocab-bounded joins, not the tokenize scan — interleaved A/B
+    # med 1.73 → 1.77 s on q_bigram_lm_perplexity and 2.34 → 2.79 s on
+    # q_ppl_filter_retention_curve with parallel=True.
+    docs = load_table(spark, sf_dir, "documents")
+    # \\s doubled for Spark's escape-processing string literals
+    toks = docs.selectExpr(
+        "doc_id",
+        r"transform(split(trim(lower(text)), '\\s+'),"
+        f" w -> CAST(conv(substr(md5(w), 1, 13), 16, 10) AS BIGINT)"
+        f" % {LM_BUCKETS}) AS ws",
+    )
+    big = (
+        toks.filter("size(ws) >= 2")
+        .selectExpr(
+            "doc_id",
+            "explode(arrays_zip(slice(ws, 1, size(ws) - 1),"
+            " slice(ws, 2, size(ws) - 1))) AS bg",
+        )
+        .selectExpr("doc_id", "bg.`0` AS w1", "bg.`1` AS w2")
+        # three consumers (c2t, c1t, the scoring join) — persist so the
+        # text scan + per-word md5 + explode runs once, not three times
+        # (the minhash_pair_plan multi-consumer discipline)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    c2t = big.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("c2")
+    )
+    c1t = big.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("c1"))
+    return (
+        big.join(c2t, ["w1", "w2"])
+        .join(c1t, ["w1"])
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            det_sum(f"-({_LM_LOGP})").alias("nll"),
+        )
+    )
+
+
+@register(
+    "q_bigram_lm_perplexity",
+    oracle=_LM_ORACLE,
+    tags=("curation", "language-model", "perplexity"),
+)
+def q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-trained bigram-LM perplexity per document — the
+    {LM_TOPK} least-corpus-like docs. The CCNet/Gopher recipe class:
+    train a cheap LM on the corpus itself (here add-one-smoothed
+    bigrams over a {LM_BUCKETS}-bucket hashed vocab), score every doc
+    by cross-entropy, and the tail is gibberish / lorem / wrong-
+    language material no single-doc heuristic flags. Complements the
+    word-level unigram surprisal and char-trigram entropy filters
+    with CONTEXT (a doc of real words in impossible ORDER scores high
+    here and normal there).
+
+    Scale shape: words hash to bucket ids inside the scan projection
+    (no strings cross an Exchange); bigram extraction is an in-row
+    zip + one explode; the two count tables are vocab-bounded
+    (≤ {LM_BUCKETS}² and ≤ {LM_BUCKETS} rows) so the scoring joins
+    shuffle bounded model state plus (doc_id, w1, w2) triples —
+    linear in corpus tokens. Per-doc NLL is a det_sum fold; the final
+    top-k is a TakeOrdered, not a global sort.
+    """
+    return (
+        lm_scored_docs(spark, sf_dir).selectExpr(
+            "CAST(doc_id AS BIGINT) AS doc_id",
+            "n_bigrams",
+            "nll / n_bigrams AS cross_entropy",
+            "exp(nll / n_bigrams) AS perplexity",
+        )
+        .orderBy(F.col("perplexity").desc(), "doc_id")
+        .limit(LM_TOPK)
+    )
+
+
+# --------------------------------------------------------------------------
+# n-gram novelty by source: who contributes NEW text?
+# --------------------------------------------------------------------------
+
+_NOVELTY_ORACLE = f"""
+WITH sh AS (
+    SELECT source, doc_id, unnest({SHINGLES_SQL}) AS shingle FROM documents
+),
+occ AS (
+    SELECT source, CAST(count(*) AS BIGINT) AS n_shingles
+    FROM sh GROUP BY source
+),
+novel AS (
+    SELECT first_source AS source, CAST(count(*) AS BIGINT) AS n_novel
+    FROM (
+        SELECT shingle, arg_min(source, doc_id) AS first_source
+        FROM sh GROUP BY shingle
+    ) GROUP BY first_source
+),
+nd AS (
+    SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+    FROM documents GROUP BY source
+)
+SELECT nd.source, nd.n_docs, occ.n_shingles,
+       CAST(COALESCE(novel.n_novel, 0) AS BIGINT) AS n_novel,
+       COALESCE(novel.n_novel, 0) * 1.0 / occ.n_shingles AS novelty_rate
+FROM nd JOIN occ USING (source) LEFT JOIN novel USING (source)
+"""
+
+
+@register(
+    "q_ngram_novelty_by_source",
+    oracle=_NOVELTY_ORACLE,
+    tags=("llm-pipeline", "novelty", "mixture-design"),
+)
+def q_ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source n-gram novelty: of each source's word-3-gram shingle
+    occurrences (the dedup family's shingle recipe, doc-distinct), how
+    many are introduced by that doc — i.e. their global first
+    occurrence (min doc_id) IS this doc. A source full of boilerplate
+    already seen elsewhere scores low; a source of genuinely new text
+    scores high — the curve a mixture designer reads before weighting
+    sources, complementing q_dedup_inflation_factor (how much is
+    duplicated) with WHERE novelty originates.
+
+    Scale shape (rewritten after the first bench draft measured 9.5 s
+    at sf0.1 for a join-back formulation): every shingle contributes
+    exactly ONE novel occurrence — at its global min doc — so the
+    per-source novel count is just "shingles whose min_by(source,
+    doc_id) is this source". Two partial aggregations, NO join of two
+    exploded-size sides, no window sort: occurrences per source
+    (map-side combine) + min_by per shingle (the same groupBy(shingle)
+    shuffle class the MinHash build pays) reduced to a |sources|-row
+    frame. Counts are exact ints; the single ratio divides two BIGINTs
+    once. Measured 9.5 s → 2.2 s warm at sf0.1.
+    """
+    # Scan re-key tried and REJECTED (round 10): outputs are exact ints
+    # + one BIGINT ratio and min_by is a total-order argmin, so
+    # parallel=True would be parity-safe — but the interleaved A/B says
+    # the groupBy(shingle) exchange dominates and the re-key only adds
+    # a shuffle ahead of it: med 1.31 s (off) vs 1.66 s (on), +27%.
+    docs = load_table(spark, sf_dir, "documents")
+    sh = (
+        docs.select("source", "doc_id", F.trim(F.col("text")).alias("t"))
+        .select("source", "doc_id", "t", F.split("t", r"\s+").alias("ws"))
+        .select(
+            "source",
+            "doc_id",
+            F.explode(F.expr(_SHINGLES_FROM_WS)).alias("shingle"),
+        )
+    )
+    occ = sh.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shingles")
+    )
+    novel = (
+        sh.groupBy("shingle")
+        .agg(F.expr("min_by(source, doc_id)").alias("source"))
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_novel"))
+    )
+    nd = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    )
+    return (
+        nd.join(occ, "source")
+        # LEFT join: a source whose every shingle first occurred in an
+        # earlier source has NO novel row — it must surface as 0.0
+        # novelty, not vanish from the curve (round-6 review catch)
+        .join(novel, "source", "left")
+        .select(
+            "source",
+            "n_docs",
+            "n_shingles",
+            F.coalesce(F.col("n_novel"), F.lit(0)).cast("long").alias("n_novel"),
+            (
+                F.coalesce(F.col("n_novel"), F.lit(0))
+                * F.lit(1.0)
+                / F.col("n_shingles")
+            ).alias("novelty_rate"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# boilerplate n-gram coverage by source
+# --------------------------------------------------------------------------
+
+BOILER_DF_FRAC = 0.01  # a gram in >1% of docs is boilerplate
+
+_BOILER_ORACLE = f"""
+WITH sh AS (
+    SELECT source, doc_id, unnest({SHINGLES_SQL}) AS shingle FROM documents
+),
+nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+df AS (
+    SELECT shingle, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+    FROM sh GROUP BY shingle
+),
+flagged AS (
+    SELECT sh.source,
+           CAST(count(*) AS BIGINT) AS n_occ,
+           CAST(sum(CASE WHEN df.df >= ceil({BOILER_DF_FRAC} * nd.n_docs)
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler
+    FROM sh JOIN df USING (shingle) CROSS JOIN nd
+    GROUP BY sh.source
+)
+SELECT source, n_occ, n_boiler,
+       CAST(n_boiler AS DOUBLE) / n_occ AS boiler_share
+FROM flagged
+"""
+
+
+@register(
+    "q_boilerplate_ngram_coverage",
+    oracle=_BOILER_ORACLE,
+    tags=("curation", "boilerplate", "quality"),
+)
+def q_boilerplate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source boilerplate load: the share of word-3-gram
+    occurrences whose document frequency exceeds {BOILER_DF_FRAC:.0%}
+    of the corpus — the repeated-span mass (navboxes, legal footers,
+    templates) that survives DOC-level dedup because each hosting doc
+    is unique. The CCNet line-dedup pass generalized to n-grams
+    (fixture text has no line structure); a source scoring high here
+    needs span-level cleanup before training, however novel its docs
+    look to q_ngram_novelty_by_source.
+
+    Scale shape: one groupBy(shingle) distinct-doc count (the MinHash
+    shuffle class) re-joined to the occurrence stream; the corpus doc
+    count is a 1-row broadcast. Counts exact ints, one division.
+    """
+    # parallel=True: the shingle build is the serial map kernel; all
+    # outputs are exact counts and one int ratio (order-free). ONE
+    # shingle pass (round 9; previously the occurrence stream was
+    # derived twice — df rollup + row-level join-back): aggregate to
+    # (shingle, source) CELLS first — a document has exactly ONE
+    # source, so per-shingle df = Σ_source per-cell distinct docs —
+    # then the df join runs over |cells| rows, not |occurrences|.
+    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    sh = (
+        docs.select("source", "doc_id", F.trim(F.col("text")).alias("t"))
+        .select("source", "doc_id", "t", F.split("t", r"\s+").alias("ws"))
+        .select(
+            "source",
+            "doc_id",
+            F.explode(F.expr(_SHINGLES_FROM_WS)).alias("shingle"),
+        )
+    )
+    cell = (
+        sh.groupBy("shingle", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_occ_cell"),
+            F.count_distinct("doc_id").alias("nd_cell"),
+        )
+        .transform(eager_checkpoint)
+    )
+    dfr = cell.groupBy("shingle").agg(F.sum("nd_cell").alias("df"))
+    nd = (
+        load_table(spark, sf_dir, "documents")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    )
+    return (
+        cell.join(dfr, "shingle")
+        .crossJoin(F.broadcast(nd))
+        .groupBy("source")
+        .agg(
+            F.sum("n_occ_cell").cast("long").alias("n_occ"),
+            F.sum(
+                F.when(
+                    F.col("df")
+                    >= F.ceil(F.lit(BOILER_DF_FRAC) * F.col("n_docs")),
+                    F.col("n_occ_cell"),
+                ).otherwise(0)
+            ).cast("long").alias("n_boiler"),
+        )
+        .selectExpr(
+            "source",
+            "n_occ",
+            "n_boiler",
+            "CAST(n_boiler AS DOUBLE) / n_occ AS boiler_share",
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# perplexity-filter retention curve
+# --------------------------------------------------------------------------
+
+PPL_GRID = (0.5, 0.75, 0.9, 0.95, 0.99)
+
+
+def _ppl_curve_oracle() -> str:
+    qs = ", ".join(f"({q})" for q in PPL_GRID)
+    return f"""{_LM_SCORED_CTES}
+, ppl AS (
+    SELECT doc_id, n_bigrams, exp(nll / n_bigrams) AS perplexity
+    FROM scored
+),
+r AS (
+    SELECT *, row_number() OVER (ORDER BY perplexity, doc_id) AS rn,
+           count(*) OVER () AS n
+    FROM ppl
+),
+grid AS (SELECT unnest([{qs}]) AS q),
+thresholds AS (
+    SELECT g.q,
+           max(CASE WHEN r.rn = greatest(1, CAST(ceil(g.q * r.n) AS BIGINT))
+               THEN r.perplexity END) AS ppl_cut
+    FROM grid g CROSS JOIN r
+    GROUP BY g.q
+),
+tot AS (
+    SELECT CAST(count(*) AS BIGINT) AS docs_total,
+           CAST(sum(n_bigrams) AS BIGINT) AS tokens_total
+    FROM ppl
+)
+SELECT t.q, t.ppl_cut,
+       CAST(sum(CASE WHEN p.perplexity <= t.ppl_cut THEN 1 ELSE 0 END)
+            AS BIGINT) AS docs_kept,
+       CAST(sum(CASE WHEN p.perplexity <= t.ppl_cut THEN p.n_bigrams
+                ELSE 0 END) AS BIGINT) AS tokens_kept,
+       CAST(sum(CASE WHEN p.perplexity <= t.ppl_cut THEN p.n_bigrams
+                ELSE 0 END) AS DOUBLE) / tot.tokens_total AS token_share
+FROM thresholds t CROSS JOIN ppl p CROSS JOIN tot
+GROUP BY t.q, t.ppl_cut, tot.tokens_total
+"""
+
+
+@register(
+    "q_ppl_filter_retention_curve",
+    oracle=_ppl_curve_oracle(),
+    tags=("curation", "perplexity", "filter-tuning"),
+)
+def q_ppl_filter_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perplexity-filter tuning curve: for cutoffs at the corpus ppl
+    quantiles {PPL_GRID}, how many documents and TOKENS survive a
+    "drop everything above the cutoff" filter. The decision instrument
+    behind every CCNet/Gopher-style ppl gate — the question is never
+    "is 1200 a good perplexity" but "what fraction of my token budget
+    does each cutoff keep". Reuses the exact bigram-LM score frame of
+    q_bigram_lm_perplexity (lm_scored_docs — one
+    model, one SQL text).
+
+    Scale shape: inherits the LM's vocab-bounded shuffles; the ppl
+    frame is |docs| rows; cutoffs are ceil-rank order statistics
+    (doc_id tiebreak — identical row on both engines) extracted by the
+    distributed order-statistic path: positions come from the
+    bucket-partitioned zipWithIndex (operators/distributed_rank.py;
+    floor(perplexity·8) is the monotone bucket), the 5 target ranks
+    are a broadcast grid, and the threshold lookup is a broadcast join
+    on position — no single-partition rank window over |docs| rows.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_position,
+    )
+
+    ppl = (
+        lm_scored_docs(spark, sf_dir)
+        .selectExpr("doc_id", "n_bigrams", "exp(nll / n_bigrams) AS perplexity")
+        # slim 3-col per-doc frame consumed by FOUR branches (ranking
+        # rollup, rank join, total, final curve join) — materialize so
+        # the bigram-LM scoring pipeline runs once (dedup-family
+        # persist discipline)
+        .transform(eager_checkpoint)
+    )
+    ranked = with_global_position(
+        ppl,
+        ["perplexity", "doc_id"],
+        F.floor(F.col("perplexity") * 8),
+        pos_col="__rnk_pos",
+    )
+    # ONE totals text serves both the rank grid (docs_total) and the
+    # final token-share denominator (round 9). Round 10: the r9 EAGER
+    # CHECKPOINT on this 1-row aggregate was the round-9 PERF
+    # regression (driver 2.73 → 3.02 s): it added a synchronous job
+    # barrier before the two consuming broadcasts, which otherwise
+    # evaluate the cheap agg-over-checkpointed-ppl inside their own
+    # jobs. Interleaved A/B: fold+ckpt 3.25 s med / fold-lazy 2.93 /
+    # r8 two-agg 2.98 — the fold stays, the checkpoint goes.
+    tot = ppl.agg(
+        F.count(F.lit(1)).cast("long").alias("docs_total"),
+        F.sum("n_bigrams").cast("long").alias("tokens_total"),
+    )
+    grid = spark.createDataFrame([(q,) for q in PPL_GRID], "q double")
+    targets = grid.crossJoin(F.broadcast(tot)).selectExpr(
+        "q", "greatest(1, CAST(ceil(q * docs_total) AS BIGINT)) AS k"
+    )
+    thresholds = (
+        ranked.join(
+            F.broadcast(targets),
+            F.col("__rnk_pos") == F.col("k") - 1,
+        )
+        .groupBy("q")
+        .agg(F.max("perplexity").alias("ppl_cut"))
+    )
+    return (
+        F.broadcast(thresholds)
+        .crossJoin(ppl)
+        .crossJoin(F.broadcast(tot))
+        .groupBy("q", "ppl_cut", "tokens_total")
+        .agg(
+            F.sum(
+                F.when(F.col("perplexity") <= F.col("ppl_cut"), 1).otherwise(0)
+            ).cast("long").alias("docs_kept"),
+            F.sum(
+                F.when(
+                    F.col("perplexity") <= F.col("ppl_cut"),
+                    F.col("n_bigrams"),
+                ).otherwise(0)
+            ).cast("long").alias("tokens_kept"),
+        )
+        .selectExpr(
+            "q",
+            "ppl_cut",
+            "docs_kept",
+            "tokens_kept",
+            "CAST(tokens_kept AS DOUBLE) / tokens_total AS token_share",
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Pairwise source unigram Jensen-Shannon divergence
+# --------------------------------------------------------------------------
+
+_JSD_ORACLE = r"""
+WITH w AS (
+    SELECT source, unnest(string_split_regex(trim(text), '\s+')) AS word
+    FROM documents
+),
+c AS (SELECT source, word, CAST(count(*) AS BIGINT) AS cnt
+      FROM w WHERE word <> '' GROUP BY source, word),
+tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS total FROM c GROUP BY source),
+p AS (
+    SELECT c.source, c.word, c.cnt * 1.0 / tot.total AS p
+    FROM c JOIN tot ON c.source = tot.source
+),
+terms AS (
+    SELECT a.source AS source_a, b.source AS source_b,
+           a.p * log2(a.p / (a.p + b.p)) + b.p * log2(b.p / (a.p + b.p)) AS term
+    FROM p a JOIN p b ON a.word = b.word AND a.source < b.source
+)
+SELECT source_a, source_b,
+       CAST(count(*) AS BIGINT) AS n_shared_words,
+       1.0 + 0.5 * list_reduce(list_sort(list(term)), (x, y) -> x + y) AS jsd_bits
+FROM terms
+GROUP BY source_a, source_b
+"""
+
+
+@register(
+    "q_source_unigram_jsd",
+    oracle=_JSD_ORACLE,
+    tags=("text", "mixture-design", "divergence", "training-prep"),
+)
+def q_source_unigram_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jensen-Shannon divergence (bits, base-2, in [0,1]) between every
+    source pair's unigram distributions — the distributional
+    redundancy matrix a mixture designer reads next to the dup-flow
+    matrix: near-0 JSD says two sources are interchangeable mass,
+    near-1 says they cover disjoint vocabulary (DoReMi-style domain
+    weighting starts from such a table).
+
+    Uses the identity JSD = 1 + ½·Σ_{w: both>0} [p·log2(p/(p+q)) +
+    q·log2(q/(p+q))] — words unique to one source contribute exactly
+    their mass through the leading 1 (since Σp = Σq = 1), so the plan
+    needs only an INNER self-join on shared words, never an outer
+    join. Pairs sharing zero words are omitted (their JSD is exactly
+    1). Shuffles are vocabulary-bounded: (source, word) counts are
+    partial-aggregated map-side; the word self-join carries
+    |V|·k²/2 rows worst case for k sources. The per-pair double sum
+    is det_sum-folded for oracle replay. North-star extension
+    (SURVEY.md §2.8 text analysis / mixture design); no reference
+    analogue.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    words = docs.select(
+        "source",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
+    ).filter(
+        # empty/whitespace-only texts split to [''] — a phantom token
+        # that would make two otherwise-disjoint sources "share" a word
+        F.col("word")
+        != ""
+    )
+    c = words.groupBy("source", "word").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    )
+    tot = c.groupBy("source").agg(F.sum("cnt").cast("long").alias("total"))
+    p = c.join(tot, "source").select(
+        "source", "word", (F.col("cnt") * F.lit(1.0) / F.col("total")).alias("p")
+    )
+    a, b = p.alias("a"), p.alias("b")
+    terms = a.join(
+        b,
+        (F.col("a.word") == F.col("b.word"))
+        & (F.col("a.source") < F.col("b.source")),
+    ).select(
+        F.col("a.source").alias("source_a"),
+        F.col("b.source").alias("source_b"),
+        F.expr(
+            "a.p * log2(a.p / (a.p + b.p)) + b.p * log2(b.p / (a.p + b.p))"
+        ).alias("term"),
+    )
+    return terms.groupBy("source_a", "source_b").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shared_words"),
+        (F.lit(1.0) + F.lit(0.5) * det_sum("term")).alias("jsd_bits"),
+    )
+
+
+# --------------------------------------------------------------------------
+# temperature-scaled mixture weights
+
+
+#: shared texts: sqrt / * / / are IEEE correctly rounded, so identical
+#: operands give identical bits on both engines — no det_sum needed
+#: beyond the source-level totals.
+_W_HALF = "sqrt(CAST(n_chars AS DOUBLE)) / t_half"
+_W_QUARTER = "sqrt(sqrt(CAST(n_chars AS DOUBLE))) / t_quarter"
+_EPOCHS = "CAST(total_chars AS DOUBLE) * {w} / CAST(n_chars AS DOUBLE)"
+
+_MIXTURE_ORACLE = f"""
+WITH per AS (
+    SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_chars
+    FROM documents GROUP BY source
+),
+tot AS (
+    SELECT CAST(sum(n_chars) AS BIGINT) AS total_chars,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                       list_sort(list(sqrt(CAST(n_chars AS DOUBLE))))),
+                       (a, b) -> a + b) AS t_half,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                       list_sort(list(sqrt(sqrt(CAST(n_chars AS DOUBLE)))))),
+                       (a, b) -> a + b) AS t_quarter
+    FROM per
+),
+w AS (
+    SELECT source, n_chars,
+           {_W_HALF}    AS w_half,
+           {_W_QUARTER} AS w_quarter,
+           total_chars
+    FROM per CROSS JOIN tot
+)
+SELECT source, n_chars, w_half, w_quarter,
+       {_EPOCHS.format(w="w_half")}    AS epochs_half,
+       {_EPOCHS.format(w="w_quarter")} AS epochs_quarter
+FROM w
+"""
+
+
+@register(
+    "q_mixture_temperature_weights",
+    oracle=_MIXTURE_ORACLE,
+    tags=("corpus", "mixture", "sampling", "llm-pipeline"),
+)
+def q_mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source temperature-sampling weights ``w_i ∝ n_i^α`` over
+    character mass, at α = 0.5 and 0.25, plus the effective epochs each
+    source is replayed for under a one-total-pass budget
+    (``total · w_i / n_i`` — the low-resource upsampling factor the
+    mixture implies). The standard multilingual-corpus balancing rule
+    (mT5 §3.2, XLM-R §3.1) as one aggregate + broadcast-scalar join.
+
+    Scale: the per-source rollup is a tiny aggregate; the totals row is
+    a broadcast scalar. Everything after the groupBy is arithmetic on
+    ≤ |sources| rows.
+    """
+    per = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(F.sum("n_chars").cast("long").alias("n_chars"))
+    )
+    tot = per.agg(
+        F.sum("n_chars").cast("long").alias("total_chars"),
+        det_sum("sqrt(CAST(n_chars AS DOUBLE))").alias("t_half"),
+        det_sum("sqrt(sqrt(CAST(n_chars AS DOUBLE)))").alias("t_quarter"),
+    )
+    w = per.crossJoin(F.broadcast(tot)).selectExpr(
+        "source",
+        "n_chars",
+        f"{_W_HALF} AS w_half",
+        f"{_W_QUARTER} AS w_quarter",
+        "total_chars",
+    )
+    return w.selectExpr(
+        "source",
+        "n_chars",
+        "w_half",
+        "w_quarter",
+        f"{_EPOCHS.format(w='w_half')} AS epochs_half",
+        f"{_EPOCHS.format(w='w_quarter')} AS epochs_quarter",
+    )

@@ -2,6 +2,12 @@
 gap-based sessionization, per-user activity — the batch twins of the
 Structured Streaming jobs in ``streaming/events.py`` (same logical
 windows, so streaming output can be validated against these).
+
+The typed-state streaming operators get batch twins here as well
+(`q_tws_ewma_user_twin`, `q_tws_user_profile_twin`,
+`q_watermark_dedup_twin`): they share the streaming kernels' constants
+and fold order, so streamed final state == batch twin is pinned by
+tests/test_streaming.py and the twins' values are hash-verified.
 """
 
 from __future__ import annotations
@@ -9,8 +15,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.sources.tables import load_table
+from cost_of_living_data_etl_spark.streaming.events import EWMA_STREAM_ALPHA, RECENT_K
 
 SESSION_GAP_MIN = 30
 
@@ -508,4 +516,256 @@ def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .orderBy(F.col("n_sessions").desc(), "path")
         .limit(PATH_TOPK)
+    )
+
+
+# --------------------------------------------------------------------------
+# TWS batch twin: lifetime per-user EWMA of event values
+# --------------------------------------------------------------------------
+
+_EWMA_TWIN_ORACLE = f"""
+SELECT user_id,
+       CAST(count(*) AS BIGINT) AS n_events,
+       list_reduce(
+           list_prepend(CAST(0.0 AS DOUBLE),
+                        list(value ORDER BY ts, event_id)),
+           (acc, x) -> {EWMA_STREAM_ALPHA} * x
+                       + {1 - EWMA_STREAM_ALPHA} * acc
+       ) AS ewma_value
+FROM events
+GROUP BY user_id
+"""
+
+
+@register(
+    "q_tws_ewma_user_twin",
+    oracle=_EWMA_TWIN_ORACLE,
+    tags=("streaming-twin", "typed-state", "recurrence"),
+)
+def q_tws_ewma_user_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of streaming/events.py::ewma_user_value: the FINAL
+    per-user (n_events, ewma) the TWS ValueState holds after the whole
+    events table has streamed through. Same α (EWMA_STREAM_ALPHA),
+    same fold order (ts, event_id) — the streaming kernel sorts each
+    micro-batch on exactly these keys, and chaining ordered batch
+    folds is associative over concatenation, so final streaming state
+    == one batch fold (pinned by
+    tests/test_streaming.py::test_tws_ewma_final_state_equals_batch_twin).
+
+    Scale: one groupBy(user) — per-key state is the value list for the
+    fold; the streaming form is the one that holds O(1) state per key,
+    this twin exists to hash-verify the kernel's arithmetic.
+    """
+    events = load_table(spark, sf_dir, "events")
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.expr(
+            "aggregate("
+            "  transform(array_sort(collect_list(struct(ts, event_id, value))),"
+            "            s -> s.value),"
+            "  CAST(0.0 AS DOUBLE),"
+            f"  (acc, x) -> {EWMA_STREAM_ALPHA} * x"
+            f"              + {1 - EWMA_STREAM_ALPHA} * acc"
+            ")"
+        ).alias("ewma_value"),
+    )
+
+
+# --------------------------------------------------------------------------
+# TWS batch twin: typed-state user profile (Value+List+Map states)
+# --------------------------------------------------------------------------
+
+_PROFILE_TWIN_ORACLE = f"""
+WITH vs AS (
+    SELECT user_id, list(value ORDER BY ts, event_id) AS v
+    FROM events GROUP BY user_id
+),
+base AS (
+    SELECT user_id,
+           CAST(length(v) AS BIGINT) AS n_events,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE), v),
+                       (a, x) -> a + x) AS total_value,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE), v[-{RECENT_K}:]),
+                       (a, x) -> a + x)
+               / least(length(v), {RECENT_K}) AS recent_mean
+    FROM vs
+),
+tc AS (
+    SELECT user_id, event_type, count(*) AS cnt
+    FROM events GROUP BY user_id, event_type
+),
+top AS (
+    SELECT user_id, event_type AS top_type,
+           CAST(cnt AS BIGINT) AS top_type_count,
+           row_number() OVER (
+               PARTITION BY user_id ORDER BY cnt DESC, event_type ASC
+           ) AS rn
+    FROM tc
+),
+nt AS (
+    SELECT user_id, CAST(count(*) AS BIGINT) AS n_types FROM tc GROUP BY user_id
+)
+SELECT b.user_id, b.n_events, b.total_value, b.recent_mean,
+       nt.n_types, top.top_type, top.top_type_count
+FROM base b
+JOIN nt USING (user_id)
+JOIN top ON top.user_id = b.user_id AND top.rn = 1
+"""
+
+
+@register(
+    "q_tws_user_profile_twin",
+    oracle=_PROFILE_TWIN_ORACLE,
+    tags=("streaming-twin", "typed-state", "profile"),
+)
+def q_tws_user_profile_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of streaming/events.py::user_profile_typed_state —
+    the final profile all three TWS state kinds hold after the full
+    table streams through: lifetime count + det-ordered value total
+    (ValueState), mean of the last RECENT_K values in (ts, event_id)
+    order (ListState), distinct-type count and the deterministic top
+    type — count desc, name asc (MapState). Equality with the
+    streaming operator's last emission per user is pinned by
+    tests/test_streaming.py::test_tws_profile_final_state_equals_batch_twin.
+
+    Scale: one groupBy(user) + one groupBy(user, type) + a per-user
+    top-1 window on the tiny type rollup; no raw-event re-shuffle
+    beyond the two grouped passes.
+    """
+    events = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id", "value"
+    )
+    vs = events.groupBy("user_id").agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(ts, event_id, value))),"
+            " s -> s.value)"
+        ).alias("v")
+    )
+    base = vs.select(
+        "user_id",
+        F.expr("CAST(size(v) AS BIGINT)").alias("n_events"),
+        F.expr(
+            "aggregate(v, CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
+        ).alias("total_value"),
+        F.expr(
+            f"aggregate(slice(v, greatest(1, size(v) - {RECENT_K - 1}),"
+            f" {RECENT_K}), CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
+            f" / least(size(v), {RECENT_K})"
+        ).alias("recent_mean"),
+    )
+    tc = events.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    top = (
+        tc.selectExpr(
+            "user_id",
+            "event_type AS top_type",
+            "CAST(cnt AS BIGINT) AS top_type_count",
+            "row_number() OVER (PARTITION BY user_id"
+            " ORDER BY cnt DESC, event_type ASC) AS rn",
+        )
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    nt = tc.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_types")
+    )
+    return base.join(nt, "user_id").join(top, "user_id")
+
+
+# --------------------------------------------------------------------------
+# batch twin of dropDuplicatesWithinWatermark
+# --------------------------------------------------------------------------
+
+#: simulated duplicate-arrival delay — inside the operator's 60-minute
+#: watermark, so the streamed dedup is REQUIRED to drop every copy
+DUP_DELAY_MIN = 10
+
+_WATERMARK_DEDUP_ORACLE = f"""
+WITH ingest AS (
+    SELECT event_id, event_type, ts, value FROM events
+    UNION ALL
+    SELECT event_id, event_type,
+           ts + INTERVAL {DUP_DELAY_MIN} MINUTE, value
+    FROM events
+),
+kept AS (
+    -- dropDuplicatesWithinWatermark(event_id) semantics on an ingest
+    -- where every id re-arrives within the watermark: exactly one row
+    -- per event_id survives; the twin pins the EARLIEST arrival (the
+    -- payload is identical across copies, so only ts needs the rule)
+    SELECT event_id, event_type, value, min(ts) AS ts
+    FROM ingest GROUP BY event_id, event_type, value
+)
+SELECT k.event_type,
+       CAST(count(*) AS BIGINT) AS n_unique,
+       CAST((SELECT count(*) FROM ingest i
+             WHERE i.event_type = k.event_type) AS BIGINT) AS n_ingested,
+       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(list(value))),
+                   (a, b) -> a + b) AS value_total,
+       min(ts) AS first_ts,
+       max(ts) AS last_ts
+FROM kept k
+GROUP BY k.event_type
+"""
+
+
+@register(
+    "q_watermark_dedup_twin",
+    oracle=_WATERMARK_DEDUP_ORACLE,
+    tags=("streaming-twin", "dedup", "watermark", "exactly-once"),
+)
+def q_watermark_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of streaming/events.py::dedup_within_watermark
+    (``dropDuplicatesWithinWatermark(["event_id"])``): every event
+    re-arrives {DUP_DELAY_MIN} minutes late — INSIDE the 60-minute
+    watermark, so the streaming operator guarantees each duplicate is
+    dropped while its id is still in state — and the twin keeps the
+    earliest arrival per event_id, then emits the per-type ingest
+    audit (unique vs ingested counts, value total, ts span) an
+    exactly-once pipeline checks after the dedup stage.
+
+    Kept-row determinism: within one micro-batch the streaming
+    operator keeps an ARBITRARY copy, so the twin pins the
+    ts-independent projection (ids, counts, value sums — the copies'
+    payloads are identical) plus the earliest-arrival ts as the batch
+    rule; tests/test_streaming.py asserts the streamed output matches
+    the twin on the deterministic projection.
+
+    Scale: the dedup is one groupBy(event_id) — partial-aggregated,
+    no window; state in the STREAMING form is watermark-bounded
+    (only ids younger than 60 minutes), which is the whole point of
+    dropDuplicatesWithinWatermark over a global dropDuplicates.
+    """
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "ts", "value"
+    )
+    ingest = ev.unionAll(
+        ev.withColumn(
+            "ts", F.col("ts") + F.expr(f"INTERVAL {DUP_DELAY_MIN} MINUTES")
+        )
+    )
+    kept = ingest.groupBy("event_id", "event_type", "value").agg(
+        F.min("ts").alias("ts")
+    )
+    ingested = ingest.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_ingested")
+    )
+    return (
+        kept.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_unique"),
+            det_sum("value").alias("value_total"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+        )
+        .join(ingested, "event_type")
+        .select(
+            "event_type",
+            "n_unique",
+            F.col("n_ingested").cast("long").alias("n_ingested"),
+            "value_total",
+            "first_ts",
+            "last_ts",
+        )
     )

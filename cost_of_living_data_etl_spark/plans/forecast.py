@@ -16,6 +16,10 @@ abs_err_sum] — identical operations in identical order on both
 engines (the CUSUM/KM fold convention); Laspeyres per-part terms are
 (int base-qty) × (exact-int ratio unit price), summed with the
 sorted-fold det_sum.
+
+`q_ewma_daily_revenue` is the truncated-lag EWMA of daily revenue:
+``EWMA_LAGS`` explicit weights, so its weight mass is the documented
+truncation bound.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from cost_of_living_data_etl_spark.plans.analytics_extra import (
     _daily_revenue,
 )
 from cost_of_living_data_etl_spark.plans.catalog import register
+from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 HOLT_A = "0.3"  # level smoothing (SQL literal, CAST AS DOUBLE at use)
@@ -362,4 +367,72 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
             (F.col("s") / F.col("d")).alias("acf"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# truncated EWMA of daily revenue (unrolled 10-lag kernel)
+# --------------------------------------------------------------------------
+
+EWMA_ALPHA = 0.3
+EWMA_LAGS = 10  # (1-α)^10 ≈ 0.028: documented truncation
+
+#: exact literal weights shared by both engines: α·(1-α)^j
+_EWMA_TERMS = " + ".join(
+    f"({EWMA_ALPHA * (1 - EWMA_ALPHA) ** j!r} * lag(rev, {j}) OVER w)"
+    for j in range(EWMA_LAGS)
+)
+
+_EWMA_ORACLE = f"""
+WITH daily AS (
+    SELECT CAST(o_orderdate AS DATE) AS day,
+           {_DSUM_SQL.format(x="o_totalprice")} AS rev
+    FROM orders GROUP BY 1
+),
+seq AS (
+    SELECT day, rev,
+           {_EWMA_TERMS} AS ewma,
+           row_number() OVER w AS rn
+    FROM daily
+    WINDOW w AS (ORDER BY day)
+)
+SELECT day, rev, ewma
+FROM seq WHERE rn > {EWMA_LAGS - 1}
+ORDER BY day
+"""
+
+
+@register(
+    "q_ewma_daily_revenue",
+    oracle=_EWMA_ORACLE,
+    tags=("forecast", "ewma", "time-series"),
+)
+def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Truncated exponentially-weighted moving average of daily
+    revenue: ewma_t = Σ_{j<10} α(1-α)^j · rev_{t-j}, the smoothing
+    line every revenue dashboard draws. Truncation at 10 lags drops
+    (1-α)^10 ≈ 2.8% of the weight mass — documented, and what makes
+    the recursion a FIXED windowed kernel both engines evaluate
+    identically (the exact recursive form needs running state; its
+    streaming twin is the transformWithStateInPandas EWMA operator).
+
+    The weights are Python-repr'd float literals interpolated into ONE
+    SQL text — bit-identical coefficients cross-engine. Scale: daily
+    pre-aggregate (det_sum fold for replay) then a single ordered
+    window over |days| rows.
+    """
+    orders = load_table(spark, sf_dir, "orders")
+    daily = orders.groupBy(
+        F.expr("CAST(o_orderdate AS DATE)").alias("day")
+    ).agg(det_sum("o_totalprice").alias("rev"))
+    seq = daily.selectExpr(
+        "day",
+        "rev",
+        f"{_EWMA_TERMS.replace('OVER w', 'OVER (ORDER BY day)')} AS ewma",
+        "row_number() OVER (ORDER BY day) AS rn",
+    )
+    return (
+        seq.filter(F.col("rn") > EWMA_LAGS - 1)
+        .select("day", "rev", "ewma")
+        .orderBy("day")
     )

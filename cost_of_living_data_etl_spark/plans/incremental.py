@@ -14,6 +14,10 @@ extract date; at 100 TB you never recompute from scratch):
   as any commutative aggregate; it is an ordered fold. Per-key state is
   tiny (one double), the input per key is the pre-aggregated daily
   series — never raw facts.
+
+`q_ivm_merge_equivalence` proves the merge: per-batch partial
+aggregates re-aggregated equal the from-scratch answer, with money on
+an exact BIGINT cent grid so merge order can never drift a ulp.
 """
 
 from __future__ import annotations
@@ -141,4 +145,71 @@ def q_ewma_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"  (acc, x) -> {EWMA_ALPHA} * x + {1 - EWMA_ALPHA} * acc"
             ")"
         ).alias("ewma_revenue"),
+    )
+
+
+# --------------------------------------------------------------------------
+# incremental view maintenance: partial-merge ≡ recompute
+
+#: money on the exact integer cent grid: o_totalprice is generated on
+#: 2 decimals, so floor(x*100+0.5) recovers exact cents as BIGINT and
+#: every partial sum / merge is integer-exact in ANY order
+_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
+
+_IVM_ORACLE = f"""
+SELECT o_orderstatus,
+       CAST(count(*) AS BIGINT)      AS n_orders,
+       CAST(sum({_CENTS}) AS BIGINT) AS revenue_cents,
+       CAST(CAST(sum({_CENTS}) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+       CAST(CAST(max({_CENTS}) AS BIGINT) AS DOUBLE) / 100.0 AS max_order_value
+FROM orders GROUP BY o_orderstatus
+"""
+
+
+@register(
+    "q_ivm_merge_equivalence",
+    oracle=_IVM_ORACLE,
+    tags=("incremental", "ivm", "mergeable", "aggregate"),
+)
+def q_ivm_merge_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental view maintenance by partial-aggregate merge: the
+    orders table arrives as three deterministic batches
+    (``o_orderkey % 3``); each batch contributes a PARTIAL aggregate
+    (count, integer-cent revenue, integer-cent max) and the maintained
+    view is the re-aggregation of the partials — count by sum, sum by
+    sum, max by max. The oracle recomputes from scratch, so the hash
+    match proves merge(partials) ≡ recompute EXACTLY — possible only
+    because money rides a BIGINT cent grid (double partial sums would
+    drift an ulp per merge order).
+
+    This is the state discipline of every streaming sink /
+    materialized view at 100 TB: ingest updates the view in O(delta),
+    never rescanning history, and a midnight recompute can verify the
+    maintained state bit-for-bit.
+    """
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", F.expr(_CENTS).alias("cents")
+    )
+    partials = [
+        orders.filter(F.col("o_orderkey") % 3 == i)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("pn"),
+            F.sum("cents").cast("long").alias("pcents"),
+            F.max("cents").cast("long").alias("pmax"),
+        )
+        for i in range(3)
+    ]
+    merged = partials[0].unionByName(partials[1]).unionByName(partials[2])
+    view = merged.groupBy("o_orderstatus").agg(
+        F.sum("pn").cast("long").alias("n_orders"),
+        F.sum("pcents").cast("long").alias("revenue_cents"),
+        F.max("pmax").cast("long").alias("max_cents"),
+    )
+    return view.selectExpr(
+        "o_orderstatus",
+        "n_orders",
+        "revenue_cents",
+        "CAST(revenue_cents AS DOUBLE) / 100.0 AS revenue",
+        "CAST(max_cents AS DOUBLE) / 100.0 AS max_order_value",
     )

@@ -16,6 +16,9 @@ DuckDB's int128 on the oracle side — both exact — with ONE cast to
 double at the end; randomness is md5-derived (the house convention:
 reproducible everywhere, replayable in SQL); sequential LLR walks are
 day-ordered prefix sums snapped to a fixed grid (the CUSUM pattern).
+
+`q_james_stein_brand_price` adds empirical-Bayes shrinkage: per-brand
+mean prices pulled toward the grand mean by the James-Stein factor.
 """
 
 from __future__ import annotations
@@ -23,7 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
+from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 # --- TWAP -------------------------------------------------------------------
@@ -524,3 +529,108 @@ def q_bootstrap_ci_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("significant"),
         )
     )
+
+
+# --- James-Stein / empirical-Bayes shrinkage ---------------------------------
+
+#: final-stage shrinkage math, ONE shared text over the moment columns:
+#: within-group variance s2 (pooled), between-group moment tau2 by
+#: method of moments (clamped at 0), per-group B = (s2/n_g) /
+#: (s2/n_g + tau2). tau2 = 0 ⇒ B = 1 ⇒ full shrink to the grand mean.
+_JS_TAU2 = (
+    "greatest(CAST(0.0 AS DOUBLE),"
+    " (ssd_means / (k - 1.0)) - (s2 / (nn / k)))"
+)
+
+_JS_ORACLE = f"""
+WITH g AS (
+    SELECT p_brand AS brand,
+           CAST(count(*) AS DOUBLE) AS n_g,
+           {_DSUM_SQL.format(x="p_retailprice")} AS sx,
+           {_DSUM_SQL.format(x="p_retailprice * p_retailprice")} AS sxx
+    FROM part GROUP BY p_brand
+),
+tot AS (
+    SELECT CAST(count(*) AS DOUBLE) AS k,
+           {_DSUM_SQL.format(x="n_g")} AS nn,
+           {_DSUM_SQL.format(x="sx")} AS sx_all,
+           {_DSUM_SQL.format(x="sxx - sx * sx / n_g")} AS ssw,
+           {_DSUM_SQL.format(x="n_g * (sx / n_g) * (sx / n_g)")} AS snm2
+    FROM g
+),
+wide AS (
+    SELECT g.brand, g.n_g, g.sx / g.n_g AS mean_raw,
+           t.sx_all / t.nn AS grand_mean,
+           t.ssw / (t.nn - t.k) AS s2,
+           t.k, t.nn,
+           (t.snm2 - t.nn * (t.sx_all / t.nn) * (t.sx_all / t.nn)) / t.nn
+             * t.k AS ssd_means
+    FROM g, tot t
+)
+SELECT brand,
+       CAST(n_g AS BIGINT) AS n_parts,
+       mean_raw,
+       (s2 / n_g) / (s2 / n_g + {_JS_TAU2}) AS shrinkage_b,
+       grand_mean
+       + (1.0 - (s2 / n_g) / (s2 / n_g + {_JS_TAU2}))
+         * (mean_raw - grand_mean) AS mean_shrunk
+FROM wide ORDER BY brand
+"""
+
+
+@register(
+    "q_james_stein_brand_price",
+    oracle=_JS_ORACLE,
+    tags=("statistics", "empirical-bayes", "shrinkage", "estimation"),
+)
+def q_james_stein_brand_price(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Empirical-Bayes (James-Stein-style) shrinkage of per-brand mean
+    retail prices toward the grand mean: small or noisy groups borrow
+    strength from the ensemble — the estimator that DOMINATES the raw
+    per-group means in total squared error whenever ≥ 3 groups exist
+    (Stein's paradox), and the standard fix for small-cell dashboards
+    and per-segment price/quality estimates.
+
+    Normal-normal method of moments in moment space: per-group
+    (n, Σx, Σx²) → pooled within-variance s², between-group τ² clamped
+    at 0, per-group shrinkage B_g = (s²/n_g)/(s²/n_g + τ²), shrunk
+    mean = m + (1−B_g)(mean_g − m). The entire estimator is ONE shared
+    expression text over eight moment scalars; τ² = 0 (groups
+    indistinguishable) collapses every group to the grand mean.
+
+    Scale: one partial-aggregated pass to |brands| moment rows, a
+    2-level rollup over those rows, and a broadcast join back —
+    nothing beyond group count ever shuffles (det_sums are the
+    oracle-replay form of plain sums).
+    """
+    part = load_table(spark, sf_dir, "part")
+    g = part.groupBy(F.col("p_brand").alias("brand")).agg(
+        F.count(F.lit(1)).cast("double").alias("n_g"),
+        det_sum("p_retailprice").alias("sx"),
+        det_sum("p_retailprice * p_retailprice").alias("sxx"),
+    )
+    tot = g.agg(
+        F.count(F.lit(1)).cast("double").alias("k"),
+        det_sum("n_g").alias("nn"),
+        det_sum("sx").alias("sx_all"),
+        det_sum("sxx - sx * sx / n_g").alias("ssw"),
+        det_sum("n_g * (sx / n_g) * (sx / n_g)").alias("snm2"),
+    )
+    wide = g.crossJoin(F.broadcast(tot)).selectExpr(
+        "brand",
+        "n_g",
+        "sx / n_g AS mean_raw",
+        "sx_all / nn AS grand_mean",
+        "ssw / (nn - k) AS s2",
+        "k",
+        "nn",
+        "(snm2 - nn * (sx_all / nn) * (sx_all / nn)) / nn * k AS ssd_means",
+    )
+    return wide.selectExpr(
+        "brand",
+        "CAST(n_g AS BIGINT) AS n_parts",
+        "mean_raw",
+        f"(s2 / n_g) / (s2 / n_g + {_JS_TAU2}) AS shrinkage_b",
+        f"grand_mean + (1.0 - (s2 / n_g) / (s2 / n_g + {_JS_TAU2}))"
+        " * (mean_raw - grand_mean) AS mean_shrunk",
+    ).orderBy("brand")

@@ -15,6 +15,10 @@ moment/rank sum is integer until one final shared float expression.
 Rank construction runs on the DISTINCT-VALUE rollup (value, count),
 never on raw rows: the cumulative window is bounded by |distinct
 values|, and rows only join back to fetch their value's rank.
+
+The two-sample pair, Mann-Whitney U (`q_mann_whitney_order_value`) and
+the Hodges-Lehmann shift (`q_hodges_lehmann_uplift`), use the same
+doubled midranks.
 """
 
 from __future__ import annotations
@@ -782,8 +786,8 @@ def antitonic_fit(binned: DataFrame) -> DataFrame:
     # materialization each branch re-derived the caller's WHOLE
     # upstream (for the isotonic query: the LSH pair chain + quality
     # text pass, 4×). One eager checkpoint of the constant-size grid
-    # collapses that to a single derivation (round 9; the dedup-
-    # signature idiom).
+    # collapses that to a single derivation (the dedup-signature
+    # idiom).
     idx = binned.withColumn(
         "r", F.row_number().over(Window.orderBy("bin"))
     ).transform(eager_checkpoint)
@@ -1041,3 +1045,214 @@ def q_brier_murphy_quality_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(eager_checkpoint)
     )
     return brier_murphy(scored)
+
+
+# --------------------------------------------------------------------------
+# Mann-Whitney U with midranks + tie correction
+# --------------------------------------------------------------------------
+
+MW_GROUP_X = "1-URGENT"
+MW_GROUP_Y = "5-LOW"
+
+_MW_ORACLE = f"""
+WITH v AS (
+    SELECT round(o_totalprice, 2) AS val,
+           CAST(count(*) FILTER (WHERE o_orderpriority = '{MW_GROUP_X}') AS BIGINT) AS cx,
+           CAST(count(*) FILTER (WHERE o_orderpriority = '{MW_GROUP_Y}') AS BIGINT) AS cy
+    FROM orders
+    WHERE o_orderpriority IN ('{MW_GROUP_X}', '{MW_GROUP_Y}')
+    GROUP BY 1
+),
+scanned AS (
+    SELECT val, cx, cy, cx + cy AS cnt,
+           CAST(coalesce(sum(cx + cy) OVER (
+               ORDER BY val ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+           ), 0) AS BIGINT) AS cb
+    FROM v
+),
+agg AS (
+    SELECT CAST(sum(cx) AS BIGINT) AS nx,
+           CAST(sum(cy) AS BIGINT) AS ny,
+           CAST(sum(cx * (2 * cb + cnt + 1)) AS BIGINT) AS r2x,
+           CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT)   AS ties
+    FROM scanned
+)
+SELECT nx, ny,
+       (r2x - nx * (nx + 1)) / 2.0 AS u_stat,
+       ((r2x - nx * (nx + 1)) / 2.0 - nx * ny / 2.0)
+       / sqrt(nx * ny / 12.0
+              * ((nx + ny + 1) - ties / (CAST(nx + ny AS DOUBLE) * (nx + ny - 1))))
+           AS z_score
+FROM agg
+"""
+
+
+@register(
+    "q_mann_whitney_order_value",
+    oracle=_MW_ORACLE,
+    tags=("statistics", "nonparametric", "ab", "distributed-rank"),
+)
+def q_mann_whitney_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Whitney U rank-sum test: do URGENT orders carry larger
+    values than LOW ones, without assuming normality (the
+    nonparametric companion to q_ab_test_welch; robust to the heavy
+    right tail of money amounts). Midranks handle ties exactly; the
+    z-score uses the tie-corrected variance.
+
+    Exactness: ranks never materialize per row — the rollup groups by
+    the money-grid value with per-group (cx, cy) counts, the rank-sum
+    is the DOUBLED-midrank identity 2·Rx = Σ cx·(2·cum_before+cnt+1)
+    (every term BIGINT), and cum_before is an exclusive prefix sum
+    over value order (operators/distributed_rank.py — no single-task
+    window over the |distinct values| frame). U, μ, σ, z are single
+    double divisions of exact integers, structured identically in the
+    oracle.
+
+    Scale: one shuffle to the value rollup (map-side combined), the
+    prefix-sum primitive's bounded exchanges, then a 1-row aggregate.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_prefix_sums,
+    )
+
+    orders = load_table(spark, sf_dir, "orders")
+    v = (
+        orders.filter(F.col("o_orderpriority").isin(MW_GROUP_X, MW_GROUP_Y))
+        .groupBy(F.round("o_totalprice", 2).alias("val"))
+        .agg(
+            F.sum((F.col("o_orderpriority") == MW_GROUP_X).cast("long")).alias("cx"),
+            F.sum((F.col("o_orderpriority") == MW_GROUP_Y).cast("long")).alias("cy"),
+        )
+        .withColumn("cnt", F.col("cx") + F.col("cy"))
+    )
+    # /1024 bucket grid: floor(val) is ~one bucket per distinct money
+    # value (rollup as large as the frame); coarser stays monotone
+    scanned = with_prefix_sums(
+        v, ["val"], F.floor(F.col("val") / F.lit(1024.0)), {"cnt": "cb"}
+    )
+    agg = scanned.groupBy().agg(
+        F.sum("cx").cast("long").alias("nx"),
+        F.sum("cy").cast("long").alias("ny"),
+        F.sum(F.col("cx") * (2 * F.col("cb") + F.col("cnt") + 1))
+        .cast("long")
+        .alias("r2x"),
+        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
+        .cast("long")
+        .alias("ties"),
+    )
+    u = (F.col("r2x") - F.col("nx") * (F.col("nx") + 1)) / F.lit(2.0)
+    mu = F.col("nx") * F.col("ny") / F.lit(2.0)
+    sigma = F.sqrt(
+        F.col("nx") * F.col("ny") / F.lit(12.0)
+        * (
+            (F.col("nx") + F.col("ny") + 1)
+            - F.col("ties")
+            / (
+                (F.col("nx") + F.col("ny")).cast("double")
+                * (F.col("nx") + F.col("ny") - 1)
+            )
+        )
+    )
+    return agg.select(
+        "nx",
+        "ny",
+        u.alias("u_stat"),
+        ((u - mu) / sigma).alias("z_score"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Hodges-Lehmann shift estimate (median of pairwise differences)
+# --------------------------------------------------------------------------
+
+_HL_ORACLE = f"""
+WITH dx AS (
+    SELECT date_trunc('day', o_orderdate) AS d, round(sum(o_totalprice), 2) AS r
+    FROM orders WHERE o_orderpriority = '{MW_GROUP_X}' GROUP BY 1
+),
+dy AS (
+    SELECT date_trunc('day', o_orderdate) AS d, round(sum(o_totalprice), 2) AS r
+    FROM orders WHERE o_orderpriority = '{MW_GROUP_Y}' GROUP BY 1
+),
+diffs AS (SELECT dx.r - dy.r AS diff FROM dx CROSS JOIN dy),
+ranked AS (
+    SELECT diff,
+           row_number() OVER (ORDER BY diff) AS rk,
+           count(*) OVER () AS n
+    FROM diffs
+)
+SELECT CAST(n AS BIGINT) AS n_pairs,
+       diff              AS hl_shift
+FROM ranked WHERE rk = (n + 1) // 2
+"""
+
+
+@register(
+    "q_hodges_lehmann_uplift",
+    oracle=_HL_ORACLE,
+    tags=("statistics", "robust", "ab", "distributed-rank"),
+)
+def q_hodges_lehmann_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hodges-Lehmann shift: the median of ALL pairwise differences
+    between URGENT and LOW daily revenues — the robust "how much
+    bigger" companion to the Mann-Whitney "is it bigger" test
+    (outlier days cannot move it, unlike a difference of means).
+
+    Exactness: the q_theilsen_revenue_trend selection discipline —
+    bare money-grid doubles ride the scan (ties share the VALUE and
+    only the value is emitted, so tiebreak columns are unnecessary),
+    the lower median is an exact order statistic from the distributed
+    zipWithIndex, and n comes free from its per-bucket rollup.
+
+    Scale honesty: the pair frame is |days_x|·|days_y| — calendar² (a
+    7-year corpus ⇒ ~6M pairs over the DAILY rollups), invariant in
+    row count; the median selection is bucket-partitioned, so no task
+    holds the pair frame.
+    """
+    from cost_of_living_data_etl_spark.functions.checkpoints import (
+        eager_checkpoint,
+    )
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        select_global_ranks,
+    )
+
+    orders = load_table(spark, sf_dir, "orders")
+
+    def daily(priority: str, out: str) -> DataFrame:
+        # materialized: the position helper reads the pair frame twice
+        # (bucket rollup + position join); without the checkpoint each
+        # read re-runs BOTH full orders scans + aggregates underneath
+        # the cross join (measured 21 s -> ~6 s at sf0.1)
+        return (
+            orders.filter(F.col("o_orderpriority") == priority)
+            .groupBy(F.date_trunc("day", "o_orderdate").alias("d"))
+            .agg(F.round(F.sum("o_totalprice"), 2).alias(out))
+            .transform(eager_checkpoint)
+        )
+
+    diffs = (
+        daily(MW_GROUP_X, "rx")
+        .crossJoin(daily(MW_GROUP_Y, "ry"))
+        .select((F.col("rx") - F.col("ry")).alias("diff"))
+    )
+    # bucket on the ~$4k grid: floor(diff) would mint ~one bucket per
+    # pair (money diffs are near-unique), making the per-bucket rollup
+    # as large as the pair frame itself; /4096 keeps buckets ~100s of
+    # rows while staying monotone (measured 9.8 s -> see SCALE.md)
+    # bucket-pruned selection: only the bucket holding the lower-median
+    # rank pays the position exchange+sort; the other ~6M pair rows are
+    # dropped right after the map-side rollup (select_global_ranks —
+    # bit-identical to the former position+filter)
+    sel = select_global_ranks(
+        diffs,
+        ["diff"],
+        F.floor(F.col("diff") / F.lit(4096.0)),
+        lambda nd: nd.select(
+            (F.floor((F.col("n") + 1) / 2) - 1).cast("long").alias("__drank_k")
+        ),
+        n_col="n",
+    )
+    return sel.select(
+        F.col("n").cast("long").alias("n_pairs"),
+        F.col("diff").alias("hl_shift"),
+    )

@@ -197,8 +197,8 @@ def fs_candidates(
         .join(_modal(part, "p_size", "size"), "name")
         .transform(eager_checkpoint)  # vocabulary-bounded; read 4× below
     )
-    # ONE job for all three u-estimators + the profile count (round 9;
-    # previously prof.count() plus one groupBy+collect PER FIELD = 4
+    # ONE job for all three u-estimators + the profile count (instead
+    # of prof.count() plus one groupBy+collect PER FIELD = 4
     # driver round-trips): melt the three fields into (field, value)
     # rows, count per cell, fold Σn·(n−1) and Σn per field. All exact
     # integers; the string cast is injective per field, so the value

@@ -7,6 +7,13 @@ cluster size), so assignment is a pure function of a stable key
 (md5-derived integer mod 100) rather than Bernoulli RNG — that is what
 makes the DuckDB oracles able to match bit-for-bit, and what makes a
 100 TB re-run reproducible after adding data.
+
+Systematic samples (`q_systematic_sample_stride`, and the
+probability-proportional-to-size `q_pps_char_weighted_sample`) and the
+batching layouts (`q_corpus_packing_offsets`, the token-stream offset
+manifest; `q_padding_waste_buckets`, pad-to-power-of-2 waste per
+length bucket) take positions and prefix sums from
+operators/distributed_rank.py.
 """
 
 from __future__ import annotations
@@ -634,4 +641,291 @@ def q_mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         w.alias("mix_weight"),
         assigned.alias("tokens_assigned"),
         (assigned / F.col("tokens_available")).alias("epochs"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Padding-waste buckets (length-bucketed batching efficiency)
+# --------------------------------------------------------------------------
+
+_PADDING_ORACLE = r"""
+WITH t AS (
+    SELECT CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+                ELSE length(string_split_regex(trim(text), '\s+')) END
+           AS BIGINT) AS n_tokens
+    FROM documents
+),
+b AS (
+    SELECT n_tokens,
+           CASE WHEN n_tokens <= 1 THEN CAST(1 AS BIGINT)
+                ELSE CAST(1 AS BIGINT) << length(bin(n_tokens - 1)) END
+             AS bucket_cap
+    FROM t
+)
+SELECT bucket_cap,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS token_sum,
+       CAST(count(*) * bucket_cap AS BIGINT) AS slot_sum,
+       CAST(count(*) * bucket_cap - sum(n_tokens) AS BIGINT) AS padding_tokens,
+       (count(*) * bucket_cap - sum(n_tokens)) * 1.0
+         / (count(*) * bucket_cap) AS waste_frac
+FROM b
+GROUP BY bucket_cap
+"""
+
+
+@register(
+    "q_padding_waste_buckets",
+    oracle=_PADDING_ORACLE,
+    tags=("training-prep", "tokens", "batching"),
+)
+def q_padding_waste_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-bucketed batching waste: pad every doc to the next
+    power-of-2 token length and report slots, padding tokens, and the
+    waste fraction per bucket — the numbers that decide between
+    bucketed dynamic batching and q_pack_sequences-style packing for
+    a pretraining run (packing wastes ~0 but splits docs; bucketing
+    keeps docs intact at the cost measured here).
+
+    The bucket cap is computed in INTEGER arithmetic on both engines
+    (bit-length of n_tokens−1, then a shift) — no float log2 at the
+    exact-power-of-two boundaries. Map-only until a
+    |buckets|-cardinality aggregate; integer sums, one division.
+    North-star extension (SURVEY.md §2.8 training-data prep); no
+    reference analogue.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    t = docs.selectExpr(
+        "CAST(CASE WHEN length(trim(text)) = 0 THEN 0"
+        r" ELSE size(split(trim(text), '\\s+')) END AS BIGINT) AS n_tokens"
+    )
+    b = t.selectExpr(
+        "n_tokens",
+        "CASE WHEN n_tokens <= 1 THEN CAST(1 AS BIGINT)"
+        " ELSE shiftleft(CAST(1 AS BIGINT), length(bin(n_tokens - 1)))"
+        " END AS bucket_cap",
+    )
+    cap = F.col("bucket_cap")  # grouping key, directly referencable
+    return b.groupBy("bucket_cap").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("token_sum"),
+        (F.count(F.lit(1)) * cap).cast("long").alias("slot_sum"),
+        (F.count(F.lit(1)) * cap - F.sum("n_tokens"))
+        .cast("long")
+        .alias("padding_tokens"),
+        (
+            (F.count(F.lit(1)) * cap - F.sum("n_tokens"))
+            * F.lit(1.0)
+            / (F.count(F.lit(1)) * cap)
+        ).alias("waste_frac"),
+    )
+
+
+# --------------------------------------------------------------------------
+# contiguous token-stream packing manifest (distributed prefix sums)
+# --------------------------------------------------------------------------
+
+_TOKENS_SQL = (
+    "CAST(CASE WHEN length(trim(text)) = 0 THEN 0"
+    " ELSE length(string_split_regex(trim(text), '\\s+')) END AS BIGINT)"
+)
+
+_PACKING_ORACLE = f"""
+WITH t AS (
+    SELECT doc_id, source, {_TOKENS_SQL} AS n_tokens FROM documents
+),
+off AS (
+    SELECT doc_id, source, n_tokens,
+           coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS t0
+    FROM t
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
+       CAST(min(t0) AS BIGINT) AS first_offset,
+       CAST(max(t0 + n_tokens) AS BIGINT) AS last_offset
+FROM off GROUP BY source
+"""
+
+
+@register(
+    "q_corpus_packing_offsets",
+    oracle=_PACKING_ORACLE,
+    tags=("training-prep", "packing", "distributed-rank"),
+)
+def q_corpus_packing_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contiguous token-stream layout manifest: pack the doc_id-ordered
+    corpus into one token stream (the pretraining data-loader view) and
+    report each source's span in it — first/last global token offset,
+    token mass, doc count. The offsets are what an index-based loader
+    (sample i ↦ token range) needs; materializing them is a
+    distributed EXCLUSIVE prefix sum over per-doc token counts
+    (operators/distributed_rank.py — doc_id div 4096 bucket, exact
+    BIGINT arithmetic), never a single-partition running-total window.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_prefix_sums,
+    )
+    from cost_of_living_data_etl_spark.operators.textstats import (
+        whitespace_token_count,
+    )
+
+    t = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        whitespace_token_count(F.col("text")).cast("long").alias("n_tokens"),
+    )
+    off = with_prefix_sums(
+        t, ["doc_id"], F.floor(F.col("doc_id") / F.lit(4096)), {"n_tokens": "t0"}
+    )
+    return off.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("tokens_total"),
+        F.min("t0").cast("long").alias("first_offset"),
+        F.max(F.col("t0") + F.col("n_tokens")).cast("long").alias("last_offset"),
+    )
+
+
+# --------------------------------------------------------------------------
+# systematic (every k-th) corpus sample
+# --------------------------------------------------------------------------
+
+SAMPLE_STRIDE = 7
+
+_SYSTEMATIC_ORACLE = f"""
+WITH r AS (
+    SELECT doc_id, source, n_chars,
+           row_number() OVER (ORDER BY doc_id) - 1 AS pos
+    FROM documents
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_sampled,
+       CAST(sum(n_chars) AS BIGINT) AS chars_sampled,
+       CAST(min(doc_id) AS BIGINT) AS first_doc_id
+FROM r WHERE pos % {SAMPLE_STRIDE} = 0
+GROUP BY source
+"""
+
+
+@register(
+    "q_systematic_sample_stride",
+    oracle=_SYSTEMATIC_ORACLE,
+    tags=("sampling", "eval-prep", "distributed-rank"),
+)
+def q_systematic_sample_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Systematic sample — every {SAMPLE_STRIDE}-th document of the
+    doc_id-ordered corpus — summarized per source. Systematic sampling
+    is the human-eval / spot-audit draw when you want deterministic,
+    evenly-spaced coverage of the corpus ORDER (hash sampling is
+    uniform but order-blind; this catches position-correlated drift
+    like "the last shard is garbage"). Positions come from the
+    distributed zipWithIndex (operators/distributed_rank.py), so the
+    stride filter is map-side after one bucketed scan — no
+    single-partition row_number."""
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_global_position,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    pos = with_global_position(
+        docs, ["doc_id"], F.floor(F.col("doc_id") / F.lit(4096))
+    )
+    return (
+        pos.filter(F.col("pos") % SAMPLE_STRIDE == 0)
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_sampled"),
+            F.sum("n_chars").cast("long").alias("chars_sampled"),
+            F.min("doc_id").cast("long").alias("first_doc_id"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# PPS systematic sample over character mass
+# --------------------------------------------------------------------------
+
+PPS_DRAWS = 20
+
+_PPS_ORACLE = f"""
+WITH c AS (
+    SELECT doc_id, n_chars,
+           CAST(coalesce(sum(n_chars) OVER (
+               ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+           ), 0) AS BIGINT) AS cb
+    FROM documents
+),
+tot AS (SELECT CAST(sum(n_chars) AS BIGINT) AS w FROM documents),
+grid AS (
+    SELECT i, CAST(((2 * i + 1) * (SELECT w FROM tot)) // {2 * PPS_DRAWS} AS BIGINT) AS g
+    FROM range({PPS_DRAWS}) t(i)
+)
+SELECT CAST(i AS INT)        AS draw_idx,
+       doc_id,
+       CAST(n_chars AS BIGINT) AS n_chars,
+       cb                    AS cum_before
+FROM grid JOIN c ON g >= cb AND g < cb + n_chars
+"""
+
+
+@register(
+    "q_pps_char_weighted_sample",
+    oracle=_PPS_ORACLE,
+    tags=("corpus", "sampling", "pps", "distributed-rank"),
+)
+def q_pps_char_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Systematic PPS sample: lay PPS_DRAWS centered grid points over
+    the cumulative character mass (ordered by doc_id) and select the
+    document whose [cum_before, cum_before+n_chars) interval contains
+    each point — every document drawn with probability ∝ its size, the
+    right audit draw when inspection cost scales with length (a
+    doc longer than the stride can absorb several draws; that is the
+    PPS contract, not a bug).
+
+    Exactness: all-BIGINT — grid points are integer DIV of exact char
+    totals, intervals are exclusive prefix sums
+    (operators/distributed_rank.py), membership is integer compares.
+
+    Scale: prefix sums are the bucket-partitioned scan (no single-task
+    window); the PPS_DRAWS-row grid broadcast-joins against the
+    interval frame (BroadcastNestedLoopJoin over a constant-size build
+    side), so the pass stays one scan + the primitive's bounded
+    exchanges at any corpus size.
+    """
+    from cost_of_living_data_etl_spark.operators.distributed_rank import (
+        with_prefix_sums,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    c = with_prefix_sums(
+        docs,
+        ["doc_id"],
+        F.floor(F.col("doc_id") / F.lit(4096)),
+        {"n_chars": "cum_before"},
+    )
+    tot = docs.groupBy().agg(F.sum("n_chars").cast("long").alias("w"))
+    grid = (
+        spark.range(PPS_DRAWS)
+        .crossJoin(F.broadcast(tot))
+        .select(
+            F.col("id").cast("int").alias("draw_idx"),
+            F.expr(f"(2 * id + 1) * w DIV {2 * PPS_DRAWS}").alias("g"),
+        )
+    )
+    return (
+        c.join(
+            F.broadcast(grid),
+            (F.col("g") >= F.col("cum_before"))
+            & (F.col("g") < F.col("cum_before") + F.col("n_chars")),
+        )
+        .select(
+            "draw_idx",
+            "doc_id",
+            F.col("n_chars").cast("long").alias("n_chars"),
+            F.col("cum_before").cast("long").alias("cum_before"),
+        )
     )

@@ -29,6 +29,9 @@ Reference scope: the reference engine (app.py) has no sequence
 operator; this extends the events/funnel family (SURVEY §2.8 events
 analytics) the way `q_events_funnel` and `q_event_transition_matrix`
 do.
+
+`q_markov_event_transitions` gives the first-order transition
+probabilities of the same per-user sequences.
 """
 
 from __future__ import annotations
@@ -147,4 +150,66 @@ def q_session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_SHARE_EXPR).alias("share"),
         )
         .orderBy("pattern_name")
+    )
+
+
+# --------------------------------------------------------------------------
+# Markov transition matrix over per-user event sequences
+# --------------------------------------------------------------------------
+
+_MARKOV_ORACLE = """
+WITH seq AS (
+    SELECT user_id, event_type,
+           lead(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+           ) AS next_type
+    FROM events
+),
+c AS (
+    SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS n
+    FROM seq WHERE next_type IS NOT NULL
+    GROUP BY event_type, next_type
+),
+tot AS (
+    SELECT event_type, sum(n) AS row_n FROM c GROUP BY event_type
+)
+SELECT c.event_type, c.next_type, c.n,
+       c.n * 1.0 / t.row_n AS p_transition
+FROM c JOIN tot t USING (event_type)
+"""
+
+
+@register(
+    "q_markov_event_transitions",
+    oracle=_MARKOV_ORACLE,
+    tags=("sequence", "markov", "behavior"),
+)
+def q_markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order Markov transition matrix over per-user event
+    sequences: P(next event type | current), from lead() pairs ordered
+    by (ts, event_id). The behavioral fingerprint behind next-action
+    prediction and funnel-anomaly detection (a sudden drop in
+    view→purchase probability is a checkout regression). Scale: one
+    window shuffle on user_id, then a |types|²-bounded aggregate;
+    probabilities are single divisions of exact BIGINTs — bit-identical
+    cross-engine.
+    """
+    events = load_table(spark, sf_dir, "events")
+    seq = events.selectExpr(
+        "user_id",
+        "event_type",
+        "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+        " AS next_type",
+    )
+    c = (
+        seq.filter("next_type IS NOT NULL")
+        .groupBy("event_type", "next_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    tot = c.groupBy("event_type").agg(F.sum("n").alias("row_n"))
+    return c.join(tot, "event_type").select(
+        "event_type",
+        "next_type",
+        "n",
+        (F.col("n") * 1.0 / F.col("row_n")).alias("p_transition"),
     )

@@ -23,6 +23,11 @@ The decimal-literal trap (third sighting, see SPRT): the iteration
 init MUST be ``CAST(0.125 AS DOUBLE)`` in the oracle — a bare
 ``0.125`` makes v₀ a DECIMAL list and the first matvec diverges from
 the double path.
+
+Two embedding audits sit beside PCA: the Johnson-Lindenstrauss
+distortion of the deterministic ±1 projection
+(`q_jl_projection_distortion`) and per-label norm outliers
+(`q_embedding_norm_outliers`), the cheap check before any ANN stage.
 """
 
 from __future__ import annotations
@@ -388,4 +393,243 @@ def q_embedding_dim_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         psi.orderBy(F.col("psi").desc(), "dim")
         .limit(DRIFT_TOPK)
         .select(F.col("dim").cast("long").alias("dim"), "psi")
+    )
+
+
+# --------------------------------------------------------------------------
+# embedding-norm outlier audit per label
+# --------------------------------------------------------------------------
+
+_NORM_SQL = (
+    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), embedding),"
+    " (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+)
+
+_NORM_ORACLE = f"""
+WITH norms AS (
+    SELECT label, vec_id, {_NORM_SQL} AS nrm FROM embeddings
+),
+r AS (
+    SELECT label, nrm,
+           row_number() OVER (PARTITION BY label ORDER BY nrm, vec_id) AS rn,
+           count(*) OVER (PARTITION BY label) AS n
+    FROM norms
+),
+q AS (
+    SELECT label,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.25 * n) AS BIGINT))
+               THEN nrm END) AS q1,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.75 * n) AS BIGINT))
+               THEN nrm END) AS q3
+    FROM r GROUP BY label
+)
+SELECT r.label,
+       CAST(max(r.n) AS BIGINT) AS n_vecs,
+       max(q.q1) AS q1,
+       max(q.q3) AS q3,
+       CAST(sum(CASE WHEN r.nrm < q.q1 - 1.5 * (q.q3 - q.q1)
+                       OR r.nrm > q.q3 + 1.5 * (q.q3 - q.q1)
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+FROM r JOIN q USING (label)
+GROUP BY r.label
+"""
+
+
+@register(
+    "q_embedding_norm_outliers",
+    oracle=_NORM_ORACLE,
+    tags=("llm-pipeline", "embeddings", "hygiene"),
+)
+def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding L2-norm outlier audit per label: exact rank-based
+    Q1/Q3 of the norms (ceil(q·n) order statistic, vec_id tiebreak —
+    the q_iqr_outlier_fences recipe) and the count outside Tukey
+    1.5·IQR fences. Norm pathologies (zero vectors, exploded scales)
+    are the cheapest early signal of a broken encoder batch — this is
+    the first-pass hygiene gate before any ANN / SemDeDup stage
+    trusts the vectors.
+
+    Float parity: the norm is a fold over the vector in INDEX order
+    seeded with 0.0 on both engines (same float32→double widening,
+    same add order → bit-identical), so the rank order and quartiles
+    agree exactly.
+
+    Scale: map-side norm + one per-label window sort of scalar norms
+    (vectors never cross the Exchange) + one grouped pass.
+    """
+    emb = load_table(spark, sf_dir, "embeddings")
+    norms = emb.select(
+        "label",
+        "vec_id",
+        F.expr(
+            "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE),"
+            " (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+        ).alias("nrm"),
+    )
+    r = norms.selectExpr(
+        "label",
+        "nrm",
+        "row_number() OVER (PARTITION BY label ORDER BY nrm, vec_id) AS rn",
+        "count(*) OVER (PARTITION BY label) AS n",
+    )
+    q = r.groupBy("label").agg(
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.25 * n) AS BIGINT))"
+            " THEN nrm END)"
+        ).alias("q1"),
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.75 * n) AS BIGINT))"
+            " THEN nrm END)"
+        ).alias("q3"),
+    )
+    return (
+        r.join(q, "label")
+        .groupBy("label")
+        .agg(
+            F.expr("CAST(max(n) AS BIGINT)").alias("n_vecs"),
+            F.max("q1").alias("q1"),
+            F.max("q3").alias("q3"),
+            F.expr(
+                "CAST(sum(CASE WHEN nrm < q1 - 1.5 * (q3 - q1)"
+                " OR nrm > q3 + 1.5 * (q3 - q1) THEN 1 ELSE 0 END)"
+                " AS BIGINT)"
+            ).alias("n_outliers"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Johnson-Lindenstrauss projection distortion audit
+# --------------------------------------------------------------------------
+
+JL_K = 16          # projected dims = the sign-LSH plane count
+JL_PANEL = 50      # audit panel: the 50 lowest vec_ids -> 1225 pairs
+_JL_SCALE = 0.25   # 1/sqrt(JL_K), exact in binary
+
+
+def _jl_proj_spark() -> str:
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        _planes_literal,
+    )
+
+    return (
+        f"transform(sequence(1, {JL_K}), j -> aggregate("
+        f"zip_with(embedding, element_at({_planes_literal(64)}, j),"
+        " (x, p) -> CAST(x AS DOUBLE) * p),"
+        " CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
+        f" * {_JL_SCALE})"
+    )
+
+
+def _jl_proj_duckdb() -> str:
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        _plane_sql_literal,
+    )
+
+    planes = "[" + ", ".join(_plane_sql_literal(j, 64) for j in range(JL_K)) + "]"
+    return (
+        f"list_transform(range(1, {JL_K} + 1), j -> list_reduce("
+        f"list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),"
+        f" i -> CAST(embedding[i] AS DOUBLE) * (({planes})[j])[i])),"
+        f" (a, v) -> a + v) * {_JL_SCALE})"
+    )
+
+
+def _sq_dist(a: str, b: str, n: int, engine: str) -> str:
+    """Σ(a_i - b_i)² folded in INDEX order — the same IEEE op sequence
+    on both engines (shared-literal house recipe)."""
+    if engine == "spark":
+        return (
+            f"aggregate(transform(sequence(1, {n}), i ->"
+            f" (CAST(element_at({a}, i) AS DOUBLE) - CAST(element_at({b}, i) AS DOUBLE))"
+            f" * (CAST(element_at({a}, i) AS DOUBLE) - CAST(element_at({b}, i) AS DOUBLE))),"
+            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, {n} + 1), i ->"
+        f" (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))),"
+        " (acc, v) -> acc + v)"
+    )
+
+
+def _jl_oracle() -> str:
+    from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
+
+    return f"""
+WITH p AS (
+    SELECT vec_id, embedding, {_jl_proj_duckdb()} AS proj
+    FROM embeddings WHERE vec_id < {JL_PANEL}
+),
+pairs AS (
+    SELECT sqrt({_sq_dist('b.proj', 'a.proj', JL_K, 'duckdb')}
+                / {_sq_dist('b.embedding', 'a.embedding', 64, 'duckdb')}) AS ratio
+    FROM p a JOIN p b ON a.vec_id < b.vec_id
+    WHERE {_sq_dist('b.embedding', 'a.embedding', 64, 'duckdb')} > 0
+)
+SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+       {_DSUM_SQL.format(x='ratio')} / count(*) AS mean_ratio,
+       min(ratio) AS min_ratio,
+       max(ratio) AS max_ratio,
+       CAST(sum(CASE WHEN ratio BETWEEN 0.7 AND 1.3 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_within_30pct
+FROM pairs
+"""
+
+
+@register(
+    "q_jl_projection_distortion",
+    oracle=_jl_oracle(),
+    tags=("llm-pipeline", "dim-reduction", "johnson-lindenstrauss"),
+)
+def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Johnson-Lindenstrauss audit of the engine's deterministic ±1
+    projection: project 64-d embeddings to JL_K=16 dims with the SAME
+    md5-derived hyperplanes the sign-LSH index uses (scaled 1/√k), and
+    measure pairwise-distance distortion ||y_a−y_b||/||x_a−x_b|| on a
+    fixed {JL_PANEL}-vector panel. This certifies the dim-reduction
+    half of the LSH design: if the ratio concentrates near 1, the
+    16-plane projection preserves geometry and a 4× cheaper prefilter
+    distance (16 mults vs 64) is available to every ANN consumer.
+
+    Scale: the projection is a map-side expression over literal
+    planes (zero shuffle — same shape as the LSH signature); the
+    audit panel is fixed-size regardless of corpus (1,225 pairs), so
+    the pair join is broadcast-trivial at any SF.
+
+    Float parity: projection, squared distances, and the mean fold
+    all run in INDEX order from shared literals on both engines.
+    """
+    from cost_of_living_data_etl_spark.functions.columns import det_sum
+
+    e = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < JL_PANEL)
+        .select("vec_id", "embedding", F.expr(_jl_proj_spark()).alias("proj"))
+    )
+    a = e.select(
+        F.col("vec_id").alias("vid_a"),
+        F.col("embedding").alias("emb_a"),
+        F.col("proj").alias("proj_a"),
+    )
+    b = e.select(
+        F.col("vec_id").alias("vid_b"),
+        F.col("embedding").alias("emb_b"),
+        F.col("proj").alias("proj_b"),
+    )
+    d2o = _sq_dist("emb_b", "emb_a", 64, "spark")
+    d2p = _sq_dist("proj_b", "proj_a", JL_K, "spark")
+    pairs = (
+        a.join(F.broadcast(b), F.col("vid_a") < F.col("vid_b"))
+        .filter(F.expr(d2o) > 0)
+        .select(F.expr(f"sqrt(({d2p}) / ({d2o}))").alias("ratio"))
+    )
+    return pairs.agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        (det_sum("ratio") / F.count(F.lit(1))).alias("mean_ratio"),
+        F.min("ratio").alias("min_ratio"),
+        F.max("ratio").alias("max_ratio"),
+        F.sum(
+            F.when(F.col("ratio").between(0.7, 1.3), 1).otherwise(0)
+        ).cast("long").alias("n_within_30pct"),
     )

@@ -8,6 +8,11 @@ screen feature engineering starts from. All three reduce to moment
 sums, so the catalog's sorted-fold ``det_sum`` discipline makes them
 bit-identical across engines; splits reuse the md5-bucket determinism
 of plans/reshape.py (no RNG state anywhere).
+
+Robust statistics ride along: winsorized means
+(`q_winsorized_price_by_brand`), Tukey IQR fences
+(`q_iqr_outlier_fences`) and the log-log price-elasticity slope
+(`q_price_elasticity_by_brand`).
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from cost_of_living_data_etl_spark.plans.analytics_extra import (
     _daily_revenue,
 )
 from cost_of_living_data_etl_spark.plans.catalog import register
+from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 # md5-derived 2-arm assignment: the SHARED reshape.py bucket pair with
@@ -459,4 +465,253 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(SAMPLE_BUDGET * F.col("weight") / F.col("tot"))
         .cast("long")
         .alias("alloc_n"),
+    )
+
+
+# --------------------------------------------------------------------------
+# winsorized mean price per brand (exact rank-based 5/95 clamp)
+# --------------------------------------------------------------------------
+
+_WINSOR_ORACLE = f"""
+WITH r AS (
+    SELECT p_brand, p_retailprice AS price,
+           row_number() OVER (
+               PARTITION BY p_brand ORDER BY p_retailprice, p_partkey
+           ) AS rn,
+           count(*) OVER (PARTITION BY p_brand) AS n
+    FROM part
+),
+fences AS (
+    SELECT p_brand,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.05 * n) AS BIGINT))
+                    THEN price END) AS lo,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.95 * n) AS BIGINT))
+                    THEN price END) AS hi
+    FROM r GROUP BY p_brand
+)
+SELECT r.p_brand,
+       CAST(max(r.n) AS BIGINT) AS n_parts,
+       {_DSUM_SQL.format(x="least(greatest(r.price, f.lo), f.hi)")}
+         / max(r.n) AS winsorized_mean,
+       {_DSUM_SQL.format(x="r.price")} / max(r.n) AS raw_mean
+FROM r JOIN fences f USING (p_brand)
+GROUP BY r.p_brand
+"""
+
+
+@register(
+    "q_winsorized_price_by_brand",
+    oracle=_WINSOR_ORACLE,
+    tags=("robust-stats", "winsorize", "aggregation"),
+)
+def q_winsorized_price_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """5/95-winsorized mean retail price per brand next to the raw
+    mean — the robust location estimate a pricing dashboard should
+    show when a handful of luxury SKUs drag the arithmetic mean.
+
+    Exact rank-based fences (the value at ceil(q·n), ties broken by
+    p_partkey so both engines pick the identical row), then one
+    grouped pass clamping into [lo, hi]. Scale shape: one window sort
+    per brand partition + one grouped aggregate; fences are 2 doubles
+    per brand. det_sum folds make the double sums oracle-replayable.
+    """
+    part = load_table(spark, sf_dir, "part")
+    r = part.selectExpr(
+        "p_brand",
+        "p_retailprice AS price",
+        "row_number() OVER (PARTITION BY p_brand "
+        "ORDER BY p_retailprice, p_partkey) AS rn",
+        "count(*) OVER (PARTITION BY p_brand) AS n",
+    )
+    fences = r.groupBy("p_brand").agg(
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.05 * n) AS BIGINT))"
+            " THEN price END)"
+        ).alias("lo"),
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.95 * n) AS BIGINT))"
+            " THEN price END)"
+        ).alias("hi"),
+    )
+    return (
+        r.join(fences, "p_brand")
+        .groupBy("p_brand")
+        .agg(
+            F.expr("CAST(max(n) AS BIGINT)").alias("n_parts"),
+            (
+                det_sum("least(greatest(price, lo), hi)") / F.expr("max(n)")
+            ).alias("winsorized_mean"),
+            (det_sum("price") / F.expr("max(n)")).alias("raw_mean"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# log-log price elasticity per brand (closed-form OLS)
+# --------------------------------------------------------------------------
+
+# nullif on the variance term: a brand whose kept lines all share one
+# exact unit price has n*sxx - sx*sx == 0.0 EXACTLY (n > 1 does not
+# exclude it) — ANSI Spark raises on /0 while DuckDB NULLs, so both
+# engines emit a NULL slope for the no-price-variation brand instead
+# of crash-vs-row divergence
+_ELASTICITY_SLOPE = (
+    "(n * sxy - sx * sy) / nullif(n * sxx - sx * sx, 0.0)"
+)
+
+_ELASTICITY_ORACLE = f"""
+WITH obs AS (
+    SELECT p.p_brand,
+           ln(l.l_extendedprice / l.l_quantity) AS x,
+           ln(l.l_quantity) AS y
+    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE l.l_quantity > 0 AND l.l_extendedprice > 0
+),
+m AS (
+    SELECT p_brand,
+           CAST(count(*) AS DOUBLE) AS n,
+           {_DSUM_SQL.format(x="x")} AS sx,
+           {_DSUM_SQL.format(x="y")} AS sy,
+           {_DSUM_SQL.format(x="x * x")} AS sxx,
+           {_DSUM_SQL.format(x="x * y")} AS sxy
+    FROM obs GROUP BY p_brand
+)
+SELECT p_brand,
+       CAST(n AS BIGINT) AS n_lines,
+       {_ELASTICITY_SLOPE} AS elasticity,
+       (sy - {_ELASTICITY_SLOPE} * sx) / n AS log_intercept
+FROM m WHERE n > 1
+"""
+
+
+@register(
+    "q_price_elasticity_by_brand",
+    oracle=_ELASTICITY_ORACLE,
+    tags=("econometrics", "regression", "elasticity"),
+)
+def q_price_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-brand price elasticity of demand: OLS slope of ln(quantity)
+    on ln(unit price) over order lines — THE pricing-analytics number
+    (elasticity < -1 ⇒ revenue rises when price drops). Closed-form
+    moment solution: one partial-aggregated pass to five moments per
+    brand (det_sum folds for replay), slope/intercept as ONE shared
+    expression text. The broadcast dim join (part → brand) is the
+    standard fact-enrichment shape; nothing after the moment pass
+    scales with data.
+    """
+    line = load_table(spark, sf_dir, "lineitem").filter(
+        "l_quantity > 0 AND l_extendedprice > 0"
+    )
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    obs = line.join(
+        F.broadcast(part), line["l_partkey"] == part["p_partkey"]
+    ).selectExpr(
+        "p_brand",
+        "ln(l_extendedprice / l_quantity) AS x",
+        "ln(l_quantity) AS y",
+    )
+    m = obs.groupBy("p_brand").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        det_sum("x").alias("sx"),
+        det_sum("y").alias("sy"),
+        det_sum("x * x").alias("sxx"),
+        det_sum("x * y").alias("sxy"),
+    )
+    return m.filter("n > 1").selectExpr(
+        "p_brand",
+        "CAST(n AS BIGINT) AS n_lines",
+        f"{_ELASTICITY_SLOPE} AS elasticity",
+        f"(sy - {_ELASTICITY_SLOPE} * sx) / n AS log_intercept",
+    )
+
+
+# --------------------------------------------------------------------------
+# IQR outlier fences per market segment
+# --------------------------------------------------------------------------
+
+_IQR_ORACLE = """
+WITH r AS (
+    SELECT c.c_mktsegment, o.o_totalprice AS v,
+           row_number() OVER (
+               PARTITION BY c.c_mktsegment ORDER BY o.o_totalprice, o.o_orderkey
+           ) AS rn,
+           count(*) OVER (PARTITION BY c.c_mktsegment) AS n
+    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+),
+q AS (
+    SELECT c_mktsegment,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.25 * n) AS BIGINT))
+                    THEN v END) AS q1,
+           max(CASE WHEN rn = greatest(1, CAST(ceil(0.75 * n) AS BIGINT))
+                    THEN v END) AS q3
+    FROM r GROUP BY c_mktsegment
+)
+SELECT r.c_mktsegment,
+       CAST(max(r.n) AS BIGINT) AS n_orders,
+       max(q.q1) AS q1, max(q.q3) AS q3,
+       max(q.q1) - 1.5 * (max(q.q3) - max(q.q1)) AS lo_fence,
+       max(q.q3) + 1.5 * (max(q.q3) - max(q.q1)) AS hi_fence,
+       CAST(sum(CASE WHEN r.v < q.q1 - 1.5 * (q.q3 - q.q1)
+                       OR r.v > q.q3 + 1.5 * (q.q3 - q.q1)
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+FROM r JOIN q USING (c_mktsegment)
+GROUP BY r.c_mktsegment
+"""
+
+
+@register(
+    "q_iqr_outlier_fences",
+    oracle=_IQR_ORACLE,
+    tags=("robust-stats", "outliers", "iqr"),
+)
+def q_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tukey IQR outlier fences per market segment: exact rank-based
+    Q1/Q3 (ceil(q·n) order statistic, orderkey tiebreak — both
+    engines pick the identical row), fences at 1.5·IQR, and the
+    outlier count — the boxplot-whisker rule as a distributed
+    aggregate, complementing the MAD robust-outlier scan
+    (q_mad_robust_outlier_days) with the segment-grain version.
+    Scale: one per-segment window sort + one grouped pass; fences are
+    scalars per segment.
+    """
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    r = (
+        orders.join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
+        .selectExpr(
+            "c_mktsegment",
+            "o_totalprice AS v",
+            "row_number() OVER (PARTITION BY c_mktsegment "
+            "ORDER BY o_totalprice, o_orderkey) AS rn",
+            "count(*) OVER (PARTITION BY c_mktsegment) AS n",
+        )
+    )
+    q = r.groupBy("c_mktsegment").agg(
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.25 * n) AS BIGINT))"
+            " THEN v END)"
+        ).alias("q1"),
+        F.expr(
+            "max(CASE WHEN rn = greatest(1, CAST(ceil(0.75 * n) AS BIGINT))"
+            " THEN v END)"
+        ).alias("q3"),
+    )
+    return (
+        r.join(q, "c_mktsegment")
+        .groupBy("c_mktsegment")
+        .agg(
+            F.expr("CAST(max(n) AS BIGINT)").alias("n_orders"),
+            F.max("q1").alias("q1"),
+            F.max("q3").alias("q3"),
+            F.expr("max(q1) - 1.5 * (max(q3) - max(q1))").alias("lo_fence"),
+            F.expr("max(q3) + 1.5 * (max(q3) - max(q1))").alias("hi_fence"),
+            F.expr(
+                "CAST(sum(CASE WHEN v < q1 - 1.5 * (q3 - q1)"
+                " OR v > q3 + 1.5 * (q3 - q1) THEN 1 ELSE 0 END) AS BIGINT)"
+            ).alias("n_outliers"),
+        )
     )

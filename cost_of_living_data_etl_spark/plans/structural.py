@@ -151,7 +151,7 @@ def setsim_pairs(
             ).alias("hs"),
         )
         .withColumn("n_h", F.size("hs"))
-        # EAGER (round 9; was lazy): with a lazy checkpoint the first
+        # EAGER, not lazy: with a lazy checkpoint the first
         # job computes `sh` once per consuming stage — the prefix
         # chain AND both verify-join sides each re-ran the shingle +
         # xxhash kernel (stage decomposition: full pass cost ~1.7 s

@@ -20,6 +20,10 @@ cancellation in the moment form costs common precision, not parity
 100 TB: the decomposition is calendar-bounded after its daily rollup;
 this adds one ≤|days|-row aggregate on top — constant cost at any
 corpus size.
+
+`q_rolling_zscore_anomaly_days` flags days whose revenue sits at
+least ``Z_CUT`` standard deviations from the mean of the prior
+``ROLL_WIN`` days.
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ from cost_of_living_data_etl_spark.plans.analytics_extra import (
 )
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.mllite import _DSUM_SQL
+from cost_of_living_data_etl_spark.sources.tables import load_table
 
 #: shared texts: population variance from det-summed moments, and the
 #: clamped strength ratio (variance-0 guard ⇒ strength 0: a flat
@@ -117,3 +122,103 @@ def q_ts_strength_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal model, and how much of it is trend vs noise?". See the
     module docstring for formulas and the parity contract."""
     return ts_strength(q_seasonal_decompose_revenue(spark, sf_dir))
+
+
+# --------------------------------------------------------------------------
+# rolling z-score anomaly days on daily revenue
+# --------------------------------------------------------------------------
+
+ROLL_WIN = 28  # trailing window (days), current day EXCLUDED
+Z_CUT = "3.0"
+
+_ROLLZ_ORACLE = f"""
+WITH daily AS (
+    SELECT CAST(o_orderdate AS DATE) AS day,
+           {_DSUM_SQL.format(x="o_totalprice")} AS rev
+    FROM orders GROUP BY 1
+),
+wl AS (
+    SELECT day, rev,
+           count(*) OVER trail AS n_win,
+           list(rev) OVER trail AS l1,
+           list(rev * rev) OVER trail AS l2
+    FROM daily
+    WINDOW trail AS (ORDER BY day ROWS BETWEEN {ROLL_WIN} PRECEDING
+                     AND 1 PRECEDING)
+),
+w AS (
+    SELECT day, rev, n_win,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(l1)),
+                       (a, b) -> a + b) AS s,
+           list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(l2)),
+                       (a, b) -> a + b) AS ssq
+    FROM wl
+)
+SELECT day, rev, z_score
+FROM (
+    SELECT day, rev,
+           CASE WHEN n_win >= {ROLL_WIN} THEN
+               (rev - s / n_win)
+                 / sqrt(greatest(ssq / n_win - (s / n_win) * (s / n_win),
+                                 CAST(1e-12 AS DOUBLE)))
+           END AS z_score
+    FROM w
+)
+WHERE z_score IS NOT NULL AND abs(z_score) >= CAST({Z_CUT} AS DOUBLE)
+ORDER BY day
+"""
+
+
+@register(
+    "q_rolling_zscore_anomaly_days",
+    oracle=_ROLLZ_ORACLE,
+    tags=("anomaly", "rolling", "time-series"),
+)
+def q_rolling_zscore_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-window z-score anomalies: days whose revenue sits
+    ≥{Z_CUT}σ from the mean of the PRIOR {ROLL_WIN} days (current day
+    excluded, so an anomaly can't suppress its own alarm — the
+    leave-current-out discipline the seasonal detector
+    q_seasonal_adjusted_anomalies applies by residual). Windowed
+    det_sum folds keep the rolling moments bit-replayable; variance
+    floored at 1e-12 so a flat window can't divide by zero. One daily
+    pre-aggregate, one ordered window over |days| rows.
+    """
+    orders = load_table(spark, sf_dir, "orders")
+    daily = orders.groupBy(
+        F.expr("CAST(o_orderdate AS DATE)").alias("day")
+    ).agg(det_sum("o_totalprice").alias("rev"))
+    trail = (
+        f"OVER (ORDER BY day ROWS BETWEEN {ROLL_WIN} PRECEDING"
+        " AND 1 PRECEDING)"
+    )
+    dsum_rev = (
+        "aggregate(array_sort(collect_list(rev) {w}), CAST(0.0 AS DOUBLE),"
+        " (a, x) -> a + x)"
+    )
+    dsum_rev2 = (
+        "aggregate(array_sort(collect_list(rev * rev) {w}),"
+        " CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
+    )
+    w = daily.selectExpr(
+        "day",
+        "rev",
+        f"count(*) {trail} AS n_win",
+        f"{dsum_rev.format(w=trail)} AS s",
+        f"{dsum_rev2.format(w=trail)} AS ssq",
+    )
+    # the CASE guard keeps the division out of empty leading frames
+    # (n_win = 0): ANSI Spark raises DIVIDE_BY_ZERO even when a later
+    # filter would discard the row — predicate order is not guaranteed
+    z = (
+        f"CASE WHEN n_win >= {ROLL_WIN} THEN"
+        " (rev - s / n_win) / sqrt(greatest(ssq / n_win"
+        " - (s / n_win) * (s / n_win), CAST(1e-12 AS DOUBLE))) END"
+    )
+    return (
+        w.selectExpr("day", "rev", f"{z} AS z_score")
+        .filter(
+            f"z_score IS NOT NULL AND abs(z_score) >= CAST({Z_CUT} AS DOUBLE)"
+        )
+        .orderBy("day")
+    )

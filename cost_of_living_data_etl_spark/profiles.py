@@ -1,7 +1,7 @@
 """Engine execution profiles: oracle-parity vs production guards.
 
-The skew/scale guards grew up where each was proven (round-7 verdict
-item 6 asked for one switch):
+The skew/scale guards live where each was proven; one switch selects
+them all:
 
 - ``lsh_max_bucket`` — MinHash-LSH band buckets larger than the cap
   are dropped BEFORE the b² self-join (``operators/dedup.py::

@@ -43,8 +43,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # spark.sql.join.preferSortMergeJoin=false was A/B'd in round 10
-        # (closing the r9 backlog item) and REJECTED as a no-op here:
+        # spark.sql.join.preferSortMergeJoin=false was A/B'd and
+        # REJECTED as a no-op here:
         # the catalog's non-broadcast joins are size-SYMMETRIC self-
         # joins, so SHJ's muchSmaller(3×) condition never fires — the
         # executed post-AQE plans are byte-identical modulo expr ids

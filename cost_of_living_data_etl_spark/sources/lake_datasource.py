@@ -294,8 +294,8 @@ class LakeObjectsStreamReader(DataSourceStreamReader):
 
 class LakeManifestLogStreamReader(DataSourceStreamReader):
     """Manifest-log / position-offset variant of the stream reader
-    (round-7 verdict item 7 — the encoding the listing reader's
-    docstring promises for production), selected with
+    (the encoding the listing reader's docstring promises for
+    production), selected with
     ``.option("offset_mode", "manifest_log")``.
 
     Instead of relisting the lake and carrying the FULL seen-object

@@ -14,7 +14,7 @@ over a filesystem layout, and ``sources/lake_datasource.py`` onto a
 filesystem-backed Python Data Source. What neither executes is the
 actual S3 WIRE PROTOCOL — listing pagination, GET-object bodies, real
 endpoint/credential plumbing — which is the one reference behavior
-that had never run here (round-8 verdict, "What's missing" item 1).
+that had never run here.
 This module closes that gap: the same Data Source shape, but the
 listing and reads go through boto3 against any S3-compatible endpoint
 (AWS itself, MinIO, moto). The round-trip test

@@ -84,7 +84,7 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-# --- scan-parallelism floor (optimization round 9) ---------------------------
+# --- scan-parallelism floor ---------------------------------------------------
 #
 # The driver fixtures are ONE parquet file with ONE row group per
 # table, so Spark's split computation yields a SINGLE scan task and
@@ -116,8 +116,6 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
 # The decision derives from input size vs cores — at real scale (many
 # files/splits) the condition is false and the plan is untouched, so
 # this is scale-adaptive, not a local[32] constant.
-# ``SPARK_GRAFT_SCAN_PARALLELIZE=off`` force-disables it (A/B hook).
-SCAN_PARALLELIZE_ENV = "SPARK_GRAFT_SCAN_PARALLELIZE"  # auto (default) | off
 
 #: below this input size the repartition exchange costs more than the
 #: serial scan it parallelizes (tiny dims: region/nation/supplier).
@@ -191,8 +189,6 @@ def _max_partition_bytes(spark: SparkSession) -> int:
 def _scan_parallelized(
     spark: SparkSession, df: DataFrame, path: str, name: str
 ) -> DataFrame:
-    if os.environ.get(SCAN_PARALLELIZE_ENV, "auto") == "off":
-        return df
     key = _REPARTITION_KEY.get(name)
     if key is None:
         return df
@@ -247,7 +243,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 #: decimal(22,2) — Spark's sum(p,s) → (p+10,s) rule — so ~1e8 rows of
 #: max-magnitude values cannot overflow). Exactness is oracle-verified
 #: end-to-end by q_decimal_revenue_by_priority /
-#: q_decimal_warehouse_roundtrip (plans/round4.py), which emit the
+#: q_decimal_warehouse_roundtrip (plans/etl_shaped.py), which emit the
 #: money answer as a canonical scale-2 string because pandas flattens
 #: DECIMAL to float64 on the DuckDB side — the string is the exact
 #: value, engine-independently.

@@ -836,12 +836,12 @@ def click_purchase_attribution_outer(
 
 # ---------------------------------------------------------------------------
 # streaming point-in-time feature enrichment (twin of the batch
-# plans/round5.py::pit_feature_assembly)
+# plans/feature_prep.py::pit_feature_assembly)
 # ---------------------------------------------------------------------------
 
 
 class _PitEnrichProcessor:
-    """Streaming twin of ``plans/round5.pit_feature_assembly``: the
+    """Streaming twin of ``plans/feature_prep.pit_feature_assembly``: the
     same strictly-before feature contract, maintained as O(1) typed
     state per entity instead of a corpus-wide window. Input is the
     UNION stream (events kind=1, order probes kind=0); per micro-batch

@@ -1,6 +1,6 @@
 """Streaming maintenance of the dataset content-version manifest.
 
-The batch manifest (`plans/round9b.py::q_dataset_version_manifest`) is
+The batch manifest (`plans/layout.py::q_dataset_version_manifest`) is
 per-partition ``(n_rows, fp_lo, fp_hi)`` where the fingerprints are
 BIGINT sums of per-row md5 halves. Integer sums are associative and
 commutative, so the manifest is a perfect mergeable streaming state:
@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from cost_of_living_data_etl_spark.plans.round9b import version_partials
+from cost_of_living_data_etl_spark.plans.layout import version_partials
 
 
 def read_orders_stream(

@@ -1,12 +1,12 @@
-"""Plan-fingerprint-aware driver-verification gate (round-8 item 1).
+"""Plan-fingerprint-aware driver-verification gate.
 
 The driver hash-verifies a bounded SAMPLE of ``queries()`` per round,
 sampling in dict order; ``__spark_entry__.queries()`` therefore sorts
 not-yet-verified names first so the sample converges to full catalog
-coverage. Round 7 exposed the blind spot: "verified" meant *a green
-hash in ANY past round*, so a query whose PLAN was rewritten kept its
-verified status and sorted to the back — the 16 round-7
-distributed-rank rewrites shipped with no fresh driver hash.
+coverage. The blind spot: if "verified" meant *a green hash in ANY
+past round*, a query whose PLAN was rewritten would keep its verified
+status and sort to the back, so a rewrite could ship with no fresh
+driver hash.
 
 This module closes the hole by making "verified" mean *a green hash
 for the CURRENT plan*:
@@ -39,10 +39,9 @@ staleness window is one round: a plan edited and committed WITHOUT any
 bench run keeps its old fingerprint until the driver's own round-end
 bench refreshes the file, after which the mismatch re-queues it.
 
-The round-7 rewrites themselves are seeded with an explicit
-``stale:`` sentinel (see ``history/verified_fingerprints.json``),
-which can never equal a real fingerprint, so all 16 re-queue in round
-8's sample.
+A name can be seeded with an explicit ``stale:`` sentinel (see
+``history/verified_fingerprints.json``), which can never equal a real
+fingerprint, so it re-queues in the next sample.
 
 Bootstrap rule (ADVICE r08): when ``verified_fingerprints.json`` is
 MISSING, only the NEWEST correctness round's greens may be stamped
@@ -51,12 +50,12 @@ plans that may since have been rewritten, so they get a ``stale:``
 sentinel and re-queue for a fresh driver hash. When the file EXISTS
 but cannot be parsed, the sync fails loudly instead of silently
 re-marking every historical green as current (which would reopen the
-round-7 blind spot this module closes).
+blind spot this module closes).
 
-``q_bucketed_colocated_join`` was a perpetual re-queuer through round
-8 (session-keyed managed-table name churned its fingerprint per bench
-run); round 9 made the name content-deterministic (plans/mllite.py),
-so its fingerprint is now stable like every other query's.
+A fingerprint must be a function of the query alone: a builder that
+names a managed table per session re-queues on every bench run, which
+is why ``q_bucketed_colocated_join`` derives its table name from
+content (plans/mllite.py).
 """
 
 from __future__ import annotations

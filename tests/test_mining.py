@@ -159,11 +159,11 @@ def test_mutual_nn_ann_guard_refuses_fixed_k_blowup(spark, monkeypatch):
     the bound it must refuse and instruct k ∝ N scaling."""
     import pytest
 
-    import cost_of_living_data_etl_spark.plans.round4 as round4
+    import cost_of_living_data_etl_spark.plans.mining as mining
 
-    monkeypatch.setattr(round4, "MAX_MNN_ANN_ROWS", 10)
+    monkeypatch.setattr(mining, "MAX_MNN_ANN_ROWS", 10)
     with pytest.raises(ValueError, match="k ∝ N"):
-        round4.q_mutual_nn_ann(spark, f"{TESTDATA}/sf0.01")
+        mining.q_mutual_nn_ann(spark, f"{TESTDATA}/sf0.01")
 
 
 def test_clustering_profile_triangle_plus_pendant(spark):

@@ -22,7 +22,9 @@ runs in seconds.
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
 
@@ -843,3 +845,47 @@ def test_threshold_curve_reuses_checkpointed_pairs(spark, sf_smoke):
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
     # one logical scan = two formatted-explain mentions (tree + details)
     assert plan.count("Scan parquet") == 2  # the n_docs denominator only
+
+
+_PKG = Path(__file__).resolve().parent.parent / "cost_of_living_data_etl_spark"
+
+
+def test_no_round_named_plan_modules():
+    """Queries live in the module for their domain. The one round-named
+    module left is the import path ``perfbench/workloads.py`` still
+    loads ``star_components`` from, and it defines nothing else."""
+    left = sorted(p.name for p in (_PKG / "plans").glob("round*.py"))
+    assert left == ["round5.py"]
+    tree = ast.parse((_PKG / "plans" / "round5.py").read_text())
+    stmts = [n for n in tree.body if not isinstance(n, ast.Expr)]
+    assert len(stmts) == 1
+    (imp,) = stmts
+    assert isinstance(imp, ast.ImportFrom)
+    assert imp.module == "cost_of_living_data_etl_spark.operators.dedup"
+    assert [(a.name, a.asname) for a in imp.names] == [("star_components", None)]
+
+
+def test_every_registering_module_is_imported():
+    """A module that registers queries but is missing from
+    plans/all_queries.py would drop its queries from the catalog
+    without any error."""
+    registering = set()
+    for path in _PKG.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        if any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef)
+            for d in n.decorator_list
+        ):
+            rel = path.relative_to(_PKG.parent).with_suffix("")
+            registering.add(".".join(rel.parts))
+    assert registering
+    tree = ast.parse((_PKG / "plans" / "all_queries.py").read_text())
+    imported = {
+        f"{n.module}.{a.name}"
+        for n in tree.body
+        if isinstance(n, ast.ImportFrom)
+        for a in n.names
+    }
+    assert registering <= imported, sorted(registering - imported)

@@ -759,7 +759,7 @@ def test_dp_laplace_inverse_cdf_reference(spark, u_int):
     near-1 extremes where the decimal-literal bug used to diverge."""
     import math
 
-    from cost_of_living_data_etl_spark.plans.round6 import _DP_NOISE, DP_EPSILON
+    from cost_of_living_data_etl_spark.operators.pii import _DP_NOISE, DP_EPSILON
 
     row = (
         spark.range(1)

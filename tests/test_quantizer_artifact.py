@@ -115,16 +115,16 @@ def test_guards_stand_down_only_for_scale_path_primes(
     import pytest
 
     from cost_of_living_data_etl_spark.operators import similarity
-    from cost_of_living_data_etl_spark.plans import round4
+    from cost_of_living_data_etl_spark.plans import mining
 
     # make the tiny fixture look "oversized" to both guards
     monkeypatch.setattr(similarity, "SEMDEDUP_MAX_ROWS", 3)
-    monkeypatch.setattr(round4, "MAX_MNN_ANN_ROWS", 3)
+    monkeypatch.setattr(mining, "MAX_MNN_ANN_ROWS", 3)
     clear_quantizer_caches()
     with pytest.raises(ValueError, match="fit a k ∝ N quantizer"):
         similarity.q_semdedup_cluster_prune(spark, SF).collect()
     with pytest.raises(ValueError, match="fit a k ∝ N quantizer"):
-        round4.q_mutual_nn_ann(spark, SF).collect()
+        mining.q_mutual_nn_ann(spark, SF).collect()
 
     # a standard-k prime does NOT stand the guards down: same fixed-k
     # quadratic geometry, same refusal
@@ -136,7 +136,7 @@ def test_guards_stand_down_only_for_scale_path_primes(
     with pytest.raises(ValueError, match="fit a k ∝ N quantizer"):
         similarity.q_semdedup_cluster_prune(spark, SF).collect()
     with pytest.raises(ValueError, match="fit a k ∝ N quantizer"):
-        round4.q_mutual_nn_ann(spark, SF).collect()
+        mining.q_mutual_nn_ann(spark, SF).collect()
 
     # a k ∝ N prime (through the documented escape hatch the guard
     # message spells out) IS the scale path — guards stand down
@@ -146,7 +146,7 @@ def test_guards_stand_down_only_for_scale_path_primes(
     use_quantizer_artifact(spark, SF, out_scaled, allow_nonstandard_k=True)
     assert similarity.is_artifact_primed(SF, scale_path_only=True)
     assert similarity.q_semdedup_cluster_prune(spark, SF).count() >= 0
-    assert round4.q_mutual_nn_ann(spark, SF).count() >= 0
+    assert mining.q_mutual_nn_ann(spark, SF).count() >= 0
     clear_quantizer_caches()
 
 
@@ -157,8 +157,8 @@ def test_guard_messages_advertise_a_runnable_priming_call():
     import inspect
 
     from cost_of_living_data_etl_spark.operators import similarity
-    from cost_of_living_data_etl_spark.plans import round4
+    from cost_of_living_data_etl_spark.plans import mining
 
-    for fn in (similarity.q_semdedup_cluster_prune, round4.q_mutual_nn_ann):
+    for fn in (similarity.q_semdedup_cluster_prune, mining.q_mutual_nn_ann):
         src = inspect.getsource(fn)
         assert "allow_nonstandard_k=True" in src, fn.__name__

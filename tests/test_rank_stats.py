@@ -145,9 +145,7 @@ def test_bh_fdr_rejects_only_the_shifted_family_member(spark, tmp_path):
     types — the family-wise discipline a per-test flag lacks."""
     import datetime
 
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
-        q_bh_fdr_event_tests,
-    )
+    from cost_of_living_data_etl_spark.plans.ab_guardrails import q_bh_fdr_event_tests
 
     base = datetime.datetime(2024, 1, 1)
     users0 = [u for u in range(200) if _arm(u) == 0][:30]
@@ -179,9 +177,7 @@ def test_logistic_irls_separates_constructed_classes(spark, tmp_path):
     """Orders with status F get systematically larger quantities: after
     2 Newton rounds the quantity coefficient must be positive and the
     in-sample accuracy far above the 50% base rate."""
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
-        q_logistic_irls_status,
-    )
+    from cost_of_living_data_etl_spark.plans.mllite import q_logistic_irls_status
 
     import datetime
 
@@ -217,7 +213,7 @@ def test_cuped_removes_baseline_variance(spark, tmp_path):
     reduction — the whole point of the adjustment."""
     import datetime
 
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
+    from cost_of_living_data_etl_spark.plans.ab_guardrails import (
         q_cuped_adjusted_uplift,
     )
 
@@ -255,7 +251,7 @@ def test_cuped_biased_when_treatment_precedes_split(spark, tmp_path):
     (and the contract) as executable semantics, not a docstring."""
     import datetime
 
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
+    from cost_of_living_data_etl_spark.plans.ab_guardrails import (
         CUPED_SPLIT_DAY,
         q_cuped_adjusted_uplift,
     )
@@ -293,7 +289,7 @@ def test_shapley_credits_only_the_converting_channel(spark, tmp_path):
     violates with negative credit)."""
     import datetime
 
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
+    from cost_of_living_data_etl_spark.plans.attribution_markov import (
         q_shapley_channel_attribution,
     )
 
@@ -328,9 +324,7 @@ def test_james_stein_shrinks_small_groups_harder(spark, tmp_path):
     """A 3-part brand at an extreme mean must get a LARGER shrinkage
     factor than a 100-part brand, and its shrunk mean moves strictly
     toward the grand mean while staying on its own side of it."""
-    from cost_of_living_data_etl_spark.plans.round4_stats import (
-        q_james_stein_brand_price,
-    )
+    from cost_of_living_data_etl_spark.plans.inference import q_james_stein_brand_price
 
     rows = []
     pk = 0

@@ -77,10 +77,7 @@ def test_winsorized_mean_resists_one_outlier(spark, tmp_path):
 def test_ewma_constant_series_hits_truncated_weight_mass(spark, tmp_path):
     """On a constant daily series c, the truncated 10-lag EWMA equals
     c · (1 − (1−α)^10) exactly — the documented truncation bound."""
-    from cost_of_living_data_etl_spark.plans.round5 import (
-        EWMA_ALPHA,
-        EWMA_LAGS,
-    )
+    from cost_of_living_data_etl_spark.plans.forecast import EWMA_ALPHA, EWMA_LAGS
 
     rows = []
     for d in range(30):
@@ -319,7 +316,7 @@ def test_pit_features_exclude_at_tick_events_and_handle_cold_start(spark):
     exact zeros with NULL recency."""
     import datetime as dt
 
-    from cost_of_living_data_etl_spark.plans.round5 import pit_feature_assembly
+    from cost_of_living_data_etl_spark.plans.feature_prep import pit_feature_assembly
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     events = spark.createDataFrame(

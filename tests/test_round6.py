@@ -14,8 +14,8 @@ import hashlib
 import math
 
 from cost_of_living_data_etl_spark.plans.catalog import catalog
-from cost_of_living_data_etl_spark.plans.round6 import (
-    DP_EPSILON,
+from cost_of_living_data_etl_spark.operators.pii import DP_EPSILON
+from cost_of_living_data_etl_spark.plans.dedup_graph import (
     WINNOW_K,
     WINNOW_MIN_SHARED,
     WINNOW_W,

@@ -8,12 +8,9 @@ from __future__ import annotations
 import math
 
 from cost_of_living_data_etl_spark.plans import catalog
-from cost_of_living_data_etl_spark.plans.round8 import (
-    COVERAGE_KS,
-    CURRICULUM_PHASES,
-    HILL_K,
-    PPS_DRAWS,
-)
+from cost_of_living_data_etl_spark.plans.corpus_prep import COVERAGE_KS, HILL_K
+from cost_of_living_data_etl_spark.plans.feature_prep import CURRICULUM_PHASES
+from cost_of_living_data_etl_spark.plans.reshape import PPS_DRAWS
 
 
 def _write_docs(spark, tmp_path, rows):

@@ -11,7 +11,7 @@ import hashlib
 
 import pyspark.sql.functions as F
 
-from cost_of_living_data_etl_spark.plans.round9b import (
+from cost_of_living_data_etl_spark.plans.layout import (
     COMPACT_TARGET_CHARS,
     DELETE_COHORT_PCT,
     VERSION_PARTS,
@@ -19,8 +19,8 @@ from cost_of_living_data_etl_spark.plans.round9b import (
     q_dataset_version_manifest,
     q_delete_cascade_audit,
     q_zorder_incremental_rewrite,
+    zorder_files,
 )
-from cost_of_living_data_etl_spark.plans.layout import zorder_files
 
 
 def _write_orders(spark, path, rows, *, shuffle_partitions=1):
@@ -189,7 +189,7 @@ def test_incremental_rewrite_set_is_consistent_with_the_manifest(
     """Every planned rewrite references a real base-manifest file and
     carries that file's exact row count; the new-point mass never
     exceeds the append batch."""
-    from cost_of_living_data_etl_spark.plans.round9b import _APPEND_SPARK
+    from cost_of_living_data_etl_spark.plans.layout import _APPEND_SPARK
 
     plan = {
         r["file_id"]: (r["n_rows"], r["n_new_points"])

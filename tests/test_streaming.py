@@ -947,7 +947,7 @@ def test_tws_pit_enrichment_equals_batch_assembly(spark, tmp_path):
     training-set features of q_pit_feature_assembly for every order —
     same strictly-before counts, same tie rule, same cold-start
     zeros/NULL recency."""
-    from cost_of_living_data_etl_spark.plans.round5 import pit_feature_assembly
+    from cost_of_living_data_etl_spark.plans.feature_prep import pit_feature_assembly
     from cost_of_living_data_etl_spark.sources.tables import load_table
     from cost_of_living_data_etl_spark.streaming.events import (
         PIT_UNION_SCHEMA,
@@ -1282,7 +1282,7 @@ def test_tws_ewma_final_state_equals_batch_twin(spark, tmp_path):
     """The catalog's q_tws_ewma_user_twin (driver-hash-verified vs
     DuckDB) must equal the FINAL streamed TWS state — this chains the
     typed-state operator into the oracle gate (round-5 verdict item 5)."""
-    from cost_of_living_data_etl_spark.plans.round6 import q_tws_ewma_user_twin
+    from cost_of_living_data_etl_spark.plans.events_queries import q_tws_ewma_user_twin
     from cost_of_living_data_etl_spark.streaming.events import ewma_user_value
 
     rows = _stream_tws_over_two_batches(spark, tmp_path, ewma_user_value, "ewma")
@@ -1303,7 +1303,7 @@ def test_tws_ewma_final_state_equals_batch_twin(spark, tmp_path):
 def test_tws_profile_final_state_equals_batch_twin(spark, tmp_path):
     """q_tws_user_profile_twin must equal the final streamed profile
     across all three TWS state kinds (Value+List+Map)."""
-    from cost_of_living_data_etl_spark.plans.round6 import (
+    from cost_of_living_data_etl_spark.plans.events_queries import (
         q_tws_user_profile_twin,
     )
     from cost_of_living_data_etl_spark.streaming.events import (
@@ -1341,7 +1341,7 @@ def test_watermark_dedup_stream_equals_twin(spark, tmp_path):
     operator keeps an arbitrary copy; the copies' payloads are
     identical, so ids / per-type counts / value totals are the
     deterministic contract — the twin's docstring spells this out)."""
-    from cost_of_living_data_etl_spark.plans.round7 import DUP_DELAY_MIN
+    from cost_of_living_data_etl_spark.plans.events_queries import DUP_DELAY_MIN
 
     d = tmp_path / "dup_ingest"
     d.mkdir()

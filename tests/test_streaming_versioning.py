@@ -12,7 +12,7 @@ import shutil
 
 import pytest
 
-from cost_of_living_data_etl_spark.plans.round9b import version_partials
+from cost_of_living_data_etl_spark.plans.layout import version_partials
 from cost_of_living_data_etl_spark.streaming.versioning import (
     read_orders_stream,
     read_version_manifest,
