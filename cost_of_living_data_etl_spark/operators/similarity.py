@@ -9,9 +9,9 @@
   nearest Voronoi cells
 - k-means cell profiling: per-cell size / cohesion / label purity
   over the same shared quantizer fit
-- product quantization: per-subspace Lloyd codebooks, vectors encoded
-  to PQ_M codes (64x memory cut vs float32), ADC top-k ranking —
-  the billion-vector-index memory path
+- product quantization: Lloyd codebooks for the PQ_M subspaces from
+  the same fit, vectors encoded to PQ_M codes (64x memory cut vs
+  float32), ADC top-k ranking — the billion-vector-index memory path
 - hard-negative mining: per-anchor most-similar different-label
   vector for contrastive training
 
@@ -27,6 +27,8 @@ shuffle signatures not vectors, verify only candidates.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -71,8 +73,7 @@ def clear_quantizer_caches() -> None:
     """Explicit invalidation hook for tests/benches that rewrite
     fixture dirs (mtime-granularity rewrites within the same ns are
     theoretical, but the hook makes intent explicit and free)."""
-    _IVF_CENT_CACHE.clear()
-    _PQ_BOOK_CACHE.clear()
+    _QUANTIZER_CACHE.clear()
     _ARTIFACT_PRIMED.clear()
 
 # cosine(a, b) with double accumulation, written identically on both engines
@@ -489,58 +490,64 @@ IVF_NPROBE = 3  # cells scanned per query
 IVF_ITERS = 4  # Lloyd refinement rounds (fixed — part of the contract)
 
 
+#: a centroid score as SQL: (vector expression, centroid) -> expression
+Score = Callable[[str, list[float]], str]
+
+
+def _nearest_cell_sql(
+    vec: str, cents: list[tuple[int, list[float]]], dist: Score
+) -> str:
+    """SQL for the id of the centroid nearest to the array ``vec``: an
+    in-row argmin, ``array_min`` over one ``struct(score, cell)`` per
+    centroid, with ``score = dist(vec, c)``. Ties go to the smaller
+    cell id by struct ordering. The IVF assignment, every Lloyd round
+    and the PQ encode all build their argmin here.
+
+    The centroids are a driver-side constant (the offline quantizer
+    artifact), so the argmin is a pure projection: no crossJoin, no
+    groupBy(vec_id), no vector leaves its partition. It is ONE SQL
+    string because built-up Column trees cost a py4j round trip per
+    literal (8×64 of them measured ~0.6 s of driver latency per query
+    build; one expr() call is free)."""
+    structs = ",".join(
+        f"struct({dist(vec, c)} AS score, {int(cell)} AS cell)" for cell, c in cents
+    )
+    return f"array_min(array({structs})).cell"
+
+
+def _ivf_score(vec: str, c: list[float]) -> str:
+    """|c|² − 2·⟨x, c⟩: argmin-equivalent to Euclidean distance (|x|²
+    is constant per vector). |c|² is a left-to-right Python float64
+    fold, matching the engine's aggregate fold, and the dot is the
+    shared zip_with/aggregate tree, so the DuckDB oracle replays it
+    bit for bit. repr() doubles round-trip exactly; the D suffix keeps
+    the parser in DoubleType (bare decimal literals parse as decimal)."""
+    cc = 0.0
+    for v in c:
+        cc += float(v) * float(v)
+    arr = "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
+    dot = _DOT.format(a=vec, b=arr)
+    return f"CAST({cc!r} AS DOUBLE) - CAST(2.0 AS DOUBLE) * {dot}"
+
+
 def _assign_cells(
     e: DataFrame, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """Nearest-centroid assignment as a PURE PROJECTION (zero shuffle).
-
-    The centroid matrix is a driver-side constant (≤ k×dims doubles —
-    the offline quantizer artifact), so each vector's cell is an
-    in-row argmin over k literal-array fold expressions:
-    score_k = |c_k|² − 2·⟨x, c_k⟩ (argmin-equivalent to Euclidean —
-    the |x|² term is constant per vector), tie-broken toward the
-    smaller cell id by struct ordering.
-
-    The earlier form (crossJoin(broadcast) ×k then groupBy(vec_id)
-    min(struct)) re-shuffled every VECTOR through an Exchange just to
-    reduce the k scores — at 100 TB that is a full-corpus embedding
-    shuffle per assignment pass (and per Lloyd round inside the fit).
-    This computes the same numbers in the same IEEE order (|c|² is a
-    left-to-right Python float64 fold, matching the engine's aggregate
-    fold; the dot is the same zip_with/aggregate tree) inside one
-    whole-stage-codegen projection, so results are bit-identical and
-    the DuckDB oracle replay is unchanged.
-    """
-    # ONE SQL expression string for the whole argmin (built-up Column
-    # trees cost a py4j round trip per literal — 8×64 of them measured
-    # ~0.6 s of driver latency per QUERY BUILD; one expr() call is
-    # free). repr() doubles round-trip exactly; the D suffix keeps the
-    # parser in DoubleType (bare decimal literals parse as decimal).
-    structs = []
-    for cell, c in cents:
-        cc = 0.0
-        for v in c:
-            cc += float(v) * float(v)
-        arr = "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
-        dot = _DOT.format(a="embedding", b=arr)
-        structs.append(
-            f"struct(CAST({cc!r} AS DOUBLE) - CAST(2.0 AS DOUBLE) * {dot}"
-            f" AS score, {int(cell)} AS cell)"
-        )
-    m = f"array_min(array({','.join(structs)}))"
-    return e.select(
-        "vec_id", F.expr(f"{m}.cell").alias("cell"), "embedding", "norm"
-    )
+    """Nearest-centroid assignment under the IVF score, as a pure
+    projection (zero shuffle; see ``_nearest_cell_sql``)."""
+    cell = _nearest_cell_sql("embedding", cents, _ivf_score)
+    return e.select("vec_id", F.expr(cell).alias("cell"), "embedding", "norm")
 
 
-#: memoized deterministic Lloyd fits, keyed by corpus (sf_dir). The
-#: fit is pure in the corpus (fixed init, fixed rounds, no RNG), so
-#: caching is semantics-free — it is the in-session stand-in for the
-#: parquet centroid artifact an offline quantizer job would publish.
-#: Same idiom as _PQ_BOOK_CACHE; without it every consumer of the
-#: shared quantizer (IVF probe, cell profile, SemDeDup) re-ran the
-#: 2·IVF_ITERS+1 fit jobs — 5-9 s each at sf0.1, measured.
-_IVF_CENT_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
+#: memoized deterministic Lloyd fits, keyed by (corpus_cache_key,
+#: spaces): spaces=1 holds the IVF coarse quantizer, spaces=PQ_M the PQ
+#: codebooks. The fit is pure in the corpus (fixed init, fixed rounds,
+#: no RNG), so caching is semantics-free — it is the in-session stand-in
+#: for the parquet artifact an offline quantizer job would publish, and
+#: without it every consumer of the shared quantizer refits. k and
+#: iters are not in the key: use_quantizer_artifact primes a k != IVF_K
+#: artifact that consumers calling with the default k must find.
+_QUANTIZER_CACHE: dict[tuple[str, int], list[list[tuple[int, list[float]]]]] = {}
 #: corpus keys primed from an OFFLINE artifact (use_quantizer_artifact)
 #: → whether that artifact's k SCALES WITH THE CORPUS (k != IVF_K,
 #: which requires the allow_nonstandard_k escape hatch). The
@@ -566,60 +573,101 @@ def is_artifact_primed(
     return _ARTIFACT_PRIMED[key] if scale_path_only else True
 
 
+def _lloyd_fit(
+    e: DataFrame,
+    spaces: int,
+    k: int,
+    iters: int,
+    dist: Score,
+    cache_key: str | None = None,
+) -> list[list[tuple[int, list[float]]]]:
+    """Deterministic Lloyd's k-means of ``k`` centroids in each of
+    ``spaces`` equal slices of ``embedding``; returns, per space, the
+    ``(cell, centroid)`` pairs sorted by cell. ``dist(vec_sql, c)`` is
+    the caller's score expression, which its DuckDB oracle replays.
+
+    Init is the k lowest vec_ids' vectors (one collect, sliced in
+    Python); then each of ``iters`` rounds is one projection computing
+    every space's cell, ``posexplode`` → one ``groupBy(space, cell,
+    dim)`` mean → one collect of k·dims means. No RNG, so the oracles
+    replay the fit with unrolled CTEs. Cells keep their init ids: a
+    cell that empties leaves a hole, as the oracles' CTE chains do, and
+    is never renumbered.
+
+    Only the centroid matrix reaches the driver; the assignment scan
+    and the per-dimension means stay distributed, over a fixed number
+    of groups regardless of corpus size."""
+    if cache_key is not None and (cache_key, spaces) in _QUANTIZER_CACHE:
+        return _QUANTIZER_CACHE[(cache_key, spaces)]
+    from pyspark import StorageLevel
+
+    # every round re-reads the vectors: persist the projection so the
+    # source is scanned once (at 100 TB, the offline job's checkpoint)
+    base = e.select("vec_id", "embedding").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        init = sorted(
+            (int(r["vec_id"]), [float(v) for v in r["embedding"]])
+            for r in base.filter(F.col("vec_id") < k).collect()
+        )
+        if not init:
+            raise ValueError(f"no vectors with vec_id < {k} to initialise from")
+        sub = len(init[0][1]) // spaces
+        fits = [
+            [(c, v[s * sub : (s + 1) * sub]) for c, v in init] for s in range(spaces)
+        ]
+        # one space scores the whole vector as it is: a slice would be
+        # copied once per centroid per row per round
+        vecs = (
+            ["embedding"]
+            if spaces == 1
+            else [_sub_spark("embedding", s, sub) for s in range(spaces)]
+        )
+        for _ in range(iters):
+            codes = ",".join(
+                _nearest_cell_sql(vecs[s], fits[s], dist) for s in range(spaces)
+            )
+            # the codes are computed in their own select, BEFORE the
+            # posexplode: in the same select Spark evaluates the argmin
+            # once per exploded element (an sf0.1 fit then measured
+            # ~30 s instead of ~2 s on 4 cores)
+            rows = (
+                base.select(F.expr(f"array({codes})").alias("codes"), "embedding")
+                .select("codes", F.posexplode("embedding").alias("d", "x"))
+                .selectExpr(
+                    f"d div {sub} AS space",
+                    f"codes[d div {sub}] AS cell",
+                    f"d % {sub} AS dim",
+                    "x",
+                )
+                .groupBy("space", "cell", "dim")
+                .agg(F.avg("x").alias("av"))
+                .collect()
+            )
+            means: list[dict[int, dict[int, float]]] = [{} for _ in range(spaces)]
+            for r in rows:
+                means[r["space"]].setdefault(r["cell"], {})[r["dim"]] = float(r["av"])
+            fits = [
+                [(c, [by_dim[d] for d in range(sub)]) for c, by_dim in sorted(m.items())]
+                for m in means
+            ]
+    finally:
+        base.unpersist()
+    if cache_key is not None:
+        _QUANTIZER_CACHE[(cache_key, spaces)] = fits
+    return fits
+
+
 def _fit_ivf_centroids(
     e: DataFrame,
     cache_key: str | None = None,
     k: int = IVF_K,
     iters: int = IVF_ITERS,
 ) -> list[tuple[int, list[float]]]:
-    """Deterministic Lloyd's k-means: init = the k lowest vec_ids'
-    vectors (default IVF_K), then ``iters`` rounds of assign →
-    per-cell mean (default IVF_ITERS). No RNG, no seed-dependent init,
-    so the DuckDB oracle replays the identical fit with unrolled CTEs.
-    The offline k ∝ N path (``fit_quantizer``) calls this with a large
-    k; the catalog queries keep the pinned defaults for oracle replay.
-
-    Each round collects only the k×dims centroid matrix (≤ 8×64
-    doubles) to the driver — the quantizer is an offline artifact at
-    scale, and the heavy work (assignment scan, per-dimension means)
-    stays distributed: posexplode → groupBy(cell, dim) is a partial
-    aggregate over k·dims groups regardless of corpus size."""
-    from pyspark import StorageLevel
-
-    if cache_key is not None and cache_key in _IVF_CENT_CACHE:
-        return _IVF_CENT_CACHE[cache_key]
-
-    spark = e.sparkSession
-    # The fit makes 2·IVF_ITERS+1 passes over the vectors (assign +
-    # mean per round, final assignment); persist so the source is
-    # scanned once — at 100 TB this frame is the parquet checkpoint
-    # the offline quantizer job reads.
-    e.persist(StorageLevel.MEMORY_AND_DISK)
-    cents = [
-        (int(r["vec_id"]), [float(v) for v in r["embedding"]])
-        for r in e.filter(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    for _ in range(iters):
-        members = _assign_cells(e, cents).select(
-            "cell", F.posexplode("embedding").alias("dim", "v")
-        )
-        newc = (
-            members.groupBy("cell", "dim")
-            .agg(F.avg("v").alias("av"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, av))), s -> s.av)"
-                ).alias("c")
-            )
-            .collect()
-        )
-        cents = [(int(r["cell"]), [float(v) for v in r["c"]]) for r in newc]
-    if cache_key is not None:
-        _IVF_CENT_CACHE[cache_key] = cents
-    return cents
+    """The IVF coarse quantizer: the one-space ``_lloyd_fit`` under the
+    IVF score. The offline k ∝ N path (``fit_quantizer``) calls this
+    with a large k; the catalog queries keep the pinned defaults for
+    oracle replay."""
+    return _lloyd_fit(e, 1, k, iters, _ivf_score, cache_key)[0]
 
 
 def fit_quantizer(
@@ -713,9 +761,9 @@ def use_quantizer_artifact(
             f"production path (no oracle replay)."
         )
     key = corpus_cache_key(sf_dir, table)
-    _IVF_CENT_CACHE[key] = cents
+    _QUANTIZER_CACHE[(key, 1)] = [cents]
     # guards consult THIS map, not the fit cache: ordinary in-session
-    # fits memoize into _IVF_CENT_CACHE under the same keys, and an
+    # fits memoize into _QUANTIZER_CACHE under the same keys, and an
     # incidental fit must not stand a size guard down. The recorded
     # bool is whether k scales with the corpus — only such primes are
     # the guards' named scale path; a standard-k artifact keeps the
@@ -1136,7 +1184,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_M = 4  # subspaces
 PQ_SUB = 16  # dims per subspace (PQ_M * PQ_SUB = embedding dims)
 PQ_K = 8  # codebook entries per subspace
-PQ_ITERS = 2  # deterministic Lloyd rounds per subspace
+PQ_ITERS = 2  # deterministic Lloyd rounds of the codebook fit
 
 # identical left-fold squared-L2 on both engines (see _DOT rationale)
 _SQDIST_SPARK = (
@@ -1150,84 +1198,25 @@ _SQDIST_SQL = (
 )
 
 
-def _sub_spark(col: str, s: int) -> str:
-    """Subspace s of an array<float> column, as double."""
+def _sub_spark(col: str, s: int, sub: int = PQ_SUB) -> str:
+    """Subspace s (``sub`` dims wide) of an array<float> column, as double."""
     return (
-        f"transform(slice({col}, {s * PQ_SUB + 1}, {PQ_SUB}),"
+        f"transform(slice({col}, {s * sub + 1}, {sub}),"
         " x -> cast(x AS DOUBLE))"
     )
 
 
-#: deterministic fit ⇒ memoizing per corpus dir is semantics-free; at
-#: scale this cache is the parquet codebook artifact an offline fit
-#: job writes once and every encode/query job reads.
-_PQ_BOOK_CACHE: dict[str, list[list[list[float]]]] = {}
+def _pq_score(vec: str, c: list[float]) -> str:
+    """Σ(x − c)², the PQ score, as the left fold the oracle replays."""
+    return _SQDIST_SPARK.format(a=vec, b=_pq_lit(c))
 
 
-def _fit_pq_codebooks(e: DataFrame, cache_key: str | None = None) -> list[list[list[float]]]:
-    """Per-subspace deterministic Lloyd fit (same discipline as
-    _fit_ivf_centroids: init = lowest vec_ids' sub-vectors, fixed
-    rounds, no RNG — DuckDB replays it with unrolled CTEs).
-
-    Collects only PQ_M × PQ_K × PQ_SUB doubles (the codebook — an
-    offline shared artifact at scale); assignment scans and
-    per-dimension means stay distributed, over PQ_K×PQ_SUB groups
-    regardless of corpus size.
-    """
-    from pyspark import StorageLevel
-
-    if cache_key is not None and cache_key in _PQ_BOOK_CACHE:
-        return _PQ_BOOK_CACHE[cache_key]
-
-    books: list[list[list[float]]] = []
-    for s in range(PQ_M):
-        sub = e.selectExpr("vec_id", f"{_sub_spark('embedding', s)} AS v").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # centroids carry their ORIGINAL code ids throughout (same
-        # discipline as _fit_ivf_centroids): if a cluster empties
-        # during a round, its id simply disappears — renumbering here
-        # would diverge from the oracle's CTE chain, which keeps
-        # original ids with a hole.
-        cents = [
-            (int(r["vec_id"]), [float(x) for x in r["v"]])
-            for r in sub.filter(F.col("vec_id") < PQ_K)
-            .orderBy("vec_id")
-            .collect()
-        ]
-        for _ in range(PQ_ITERS):
-            # in-row argmin over literal centroid arrays — same
-            # zero-shuffle rationale and bit-identical math as
-            # _assign_cells (no crossJoin, no groupBy(vec_id): the
-            # sub-vectors never leave their partition)
-            structs = ",".join(
-                f"struct({_SQDIST_SPARK.format(a='v', b=_pq_lit(c))}"
-                f" AS d, {int(code)} AS code)"
-                for code, c in cents
-            )
-            assigned = sub.select(
-                F.expr(f"array_min(array({structs})).code").alias("code"),
-                F.posexplode("v").alias("dim", "x"),
-            )
-            newc = (
-                assigned.groupBy("code", "dim")
-                .agg(F.avg("x").alias("av"))
-                .groupBy("code")
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list(struct(dim, av))),"
-                        " t -> t.av)"
-                    ).alias("c")
-                )
-                .collect()
-            )
-            by_code = {int(r["code"]): [float(x) for x in r["c"]] for r in newc}
-            cents = sorted(by_code.items())
-        sub.unpersist()
-        books.append(cents)
-    if cache_key is not None:
-        _PQ_BOOK_CACHE[cache_key] = books
-    return books
+def _fit_pq_codebooks(
+    e: DataFrame, cache_key: str | None = None
+) -> list[list[tuple[int, list[float]]]]:
+    """The PQ codebooks: the ``PQ_M``-space ``_lloyd_fit`` under the PQ
+    score, ``PQ_K`` codes per subspace, fitted in one pass per round."""
+    return _lloyd_fit(e, PQ_M, PQ_K, PQ_ITERS, _pq_score, cache_key)
 
 
 def _pq_lit(vals: list[float]) -> str:
@@ -1327,48 +1316,39 @@ def _pq_oracle() -> str:
     tags=("similarity", "ann", "pq", "quantization"),
 )
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN: per-subspace deterministic-Lloyd
-    codebooks, vectors encoded to PQ_M codes, top-k by asymmetric
-    distance (ADC) against the vec_id=0 query.
+    """Product-quantization ANN: deterministic-Lloyd codebooks for the
+    PQ_M subspaces from one fit, vectors encoded to PQ_M codes, top-k
+    by asymmetric distance (ADC) against the vec_id=0 query.
 
     Scale shape: the fit collects only the PQ_M×PQ_K×PQ_SUB codebook
     (offline shared artifact); ENCODE is map-only — codebooks are
-    embedded as literal arrays, so each vector's codes come from a
-    codegen'd argmin with no join and no shuffle of vectors; the ADC
-    ranking shuffles one (vec_id, codes, dist) row per vector into a
-    top-k. At 100 TB the 4-byte codes (64× smaller than float32
-    vectors) are what sits in memory — this is how a billion-vector
-    index fits a cluster.
+    embedded as literal arrays, so each vector's codes come from the
+    shared nearest-centroid argmin with no join and no shuffle of
+    vectors; the ADC ranking shuffles one (vec_id, codes, dist) row per
+    vector into a top-k. At 100 TB the 4-byte codes (64× smaller than
+    float32 vectors) are what sits in memory — this is how a
+    billion-vector index fits a cluster.
 
-    The oracle unrolls all PQ_M Lloyd fits, the encoding argmin, and
+    The oracle unrolls the PQ_M subspace fits, the encoding argmin, and
     the ADC sum with structurally identical folds; codebook values
     differ only by partial-agg ulps, absorbed by the strict-mode
     envelope.
     """
     e = load_table(spark, sf_dir, "embeddings")
     books = _fit_pq_codebooks(e, cache_key=corpus_cache_key(sf_dir))
-    code_exprs = []
-    adc_terms = []
-    for s in range(PQ_M):
-        codes = [code for code, _ in books[s]]
-        cb = "array(" + ", ".join(_pq_lit(c) for _, c in books[s]) + ")"
-        code_ids = "array(" + ", ".join(str(code) for code in codes) + ")"
-        sub = _sub_spark("embedding", s)
-        # argmin over the SURVIVING codebook entries (a Lloyd cluster
-        # can empty out), tie-broken by code id; i indexes the literal
-        # arrays, element_at maps back to the original code id
-        dist_k = _SQDIST_SPARK.format(a=sub, b=f"element_at({cb}, i + 1)")
-        code_exprs.append(
-            f"element_at(array_sort(transform(sequence(0, {len(codes) - 1}),"
-            f" i -> named_struct('d', {dist_k},"
-            f" 'k', element_at({code_ids}, i + 1)))), 1).k AS code{s}"
-        )
+    # argmin over the SURVIVING codebook entries (a Lloyd cluster can
+    # empty out), tie-broken by code id
+    code_exprs = [
+        f"{_nearest_cell_sql(_sub_spark('embedding', s), books[s], _pq_score)} AS code{s}"
+        for s in range(PQ_M)
+    ]
     enc = e.filter(F.col("vec_id") != 0).selectExpr("vec_id", *code_exprs)
     qrow = (
         e.filter(F.col("vec_id") == 0)
         .selectExpr(*[f"{_sub_spark('embedding', s)} AS q{s}" for s in range(PQ_M)])
         .collect()[0]
     )
+    adc_terms = []
     for s in range(PQ_M):
         qlit = _pq_lit([float(x) for x in qrow[f"q{s}"]])
         # look the centroid up by CODE ID via a literal map-style CASE

@@ -40,7 +40,7 @@ and temperature-scaled mixture weights.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from cost_of_living_data_etl_spark.functions.checkpoints import (
     eager_checkpoint,

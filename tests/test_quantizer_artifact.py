@@ -14,7 +14,7 @@ from __future__ import annotations
 from cost_of_living_data_etl_spark.operators.similarity import (
     IVF_K,
     _fit_ivf_centroids,
-    _IVF_CENT_CACHE,
+    _QUANTIZER_CACHE,
     clear_quantizer_caches,
     corpus_cache_key,
     fit_quantizer,
@@ -55,9 +55,9 @@ def test_consumers_accept_artifact_and_skip_refit(spark, tmp_path):
     use_quantizer_artifact(spark, SF, out)
     # the cache is primed — the query must NOT refit (the artifact
     # object stays the exact list use_quantizer_artifact installed)
-    primed = _IVF_CENT_CACHE[corpus_cache_key(SF)]
+    primed = _QUANTIZER_CACHE[(corpus_cache_key(SF), 1)]
     got = sorted(map(tuple, q_ann_ivf_probe(spark, SF).collect()))
-    assert _IVF_CENT_CACHE[corpus_cache_key(SF)] is primed
+    assert _QUANTIZER_CACHE[(corpus_cache_key(SF), 1)] is primed
     assert got == baseline
     clear_quantizer_caches()
 
@@ -97,9 +97,9 @@ def test_nonstandard_k_requires_explicit_escape_hatch(spark, tmp_path):
     clear_quantizer_caches()
     with pytest.raises(ValueError, match="allow_nonstandard_k"):
         use_quantizer_artifact(spark, SF, out)
-    assert corpus_cache_key(SF) not in _IVF_CENT_CACHE  # refusal primes nothing
+    assert (corpus_cache_key(SF), 1) not in _QUANTIZER_CACHE  # refusal primes nothing
     use_quantizer_artifact(spark, SF, out, allow_nonstandard_k=True)
-    assert len(_IVF_CENT_CACHE[corpus_cache_key(SF)]) == 5
+    assert len(_QUANTIZER_CACHE[(corpus_cache_key(SF), 1)][0]) == 5
     clear_quantizer_caches()
 
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from cost_of_living_data_etl_spark.operators import dedup
 from cost_of_living_data_etl_spark.operators.dedup import star_components

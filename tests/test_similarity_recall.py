@@ -208,3 +208,104 @@ def test_nprobe_curve_monotone_and_bounded(spark, sf_smoke):
     for a, b in zip(rows, rows[1:]):
         assert b["recall_at_10"] >= a["recall_at_10"]
         assert b["scanned_frac"] > a["scanned_frac"]
+
+
+def test_lloyd_fit_makes_one_collect_per_round(spark, monkeypatch):
+    """The quantizer fit collects the init vectors once and then once
+    per Lloyd round, for every space at once: the PQ_M subspaces share
+    each round's pass instead of taking PQ_M of them."""
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        IVF_ITERS,
+        PQ_ITERS,
+        _fit_ivf_centroids,
+        _fit_pq_codebooks,
+        with_norm,
+    )
+    from cost_of_living_data_etl_spark.sources.tables import load_table
+
+    e = with_norm(load_table(spark, SF_SMALL, "embeddings"))
+    # patch the concrete DataFrame class: it overrides the base's collect
+    calls = []
+    real = type(e).collect
+
+    def counting(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(type(e), "collect", counting)
+    _fit_pq_codebooks(e)
+    assert len(calls) == 1 + PQ_ITERS
+    calls.clear()
+    _fit_ivf_centroids(e)
+    assert len(calls) == 1 + IVF_ITERS
+
+
+def test_quantizer_fits_leave_nothing_persisted(spark):
+    """Each fit persists its own projection of the vectors and
+    unpersists it when done; the caller's frame is never cached."""
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        _fit_ivf_centroids,
+        _fit_pq_codebooks,
+        with_norm,
+    )
+    from cost_of_living_data_etl_spark.sources.tables import load_table
+
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    e = with_norm(load_table(spark, SF_SMALL, "embeddings"))
+    _fit_ivf_centroids(e)
+    _fit_pq_codebooks(e)
+    assert not e.is_cached
+    assert set(persistent().keys()) == before
+
+
+def test_multi_space_fit_equals_one_fit_per_slice(spark):
+    """Fitting PQ_M spaces in one pass gives, bit for bit, the
+    centroids of PQ_M one-space fits on the subspace slices."""
+    import pyspark.sql.functions as F
+
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        PQ_ITERS,
+        PQ_K,
+        PQ_M,
+        PQ_SUB,
+        _lloyd_fit,
+        _pq_score,
+    )
+    from cost_of_living_data_etl_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_SMALL, "embeddings")
+    joint = _lloyd_fit(e, PQ_M, PQ_K, PQ_ITERS, _pq_score)
+    for s in range(PQ_M):
+        sliced = e.select(
+            "vec_id",
+            F.slice("embedding", s * PQ_SUB + 1, PQ_SUB).alias("embedding"),
+        )
+        assert _lloyd_fit(sliced, 1, PQ_K, PQ_ITERS, _pq_score) == [joint[s]]
+
+
+def test_lloyd_fit_keeps_the_hole_of_an_emptied_cell(spark):
+    """Two identical init vectors tie on every row, and the tie goes to
+    the smaller id, so cell 1 empties. Cells keep their init ids, as
+    the oracles' CTE chains do: the fit returns cells 0 and 2."""
+    from cost_of_living_data_etl_spark.operators.similarity import (
+        _ivf_score,
+        _lloyd_fit,
+        _pq_score,
+    )
+
+    e = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0]),
+            (1, [0.0, 0.0]),
+            (2, [10.0, 10.0]),
+            (3, [1.0, 0.0]),
+            (4, [9.0, 10.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    for dist in (_ivf_score, _pq_score):
+        (fit,) = _lloyd_fit(e, 1, 3, 2, dist)
+        assert [cell for cell, _ in fit] == [0, 2]
+        assert fit[1][1] == [9.5, 10.0]
