@@ -1053,8 +1053,9 @@ def q_crossdoc_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # triangle counting over the near-dup pair graph
 # ---------------------------------------------------------------------------
 
-_TRIANGLE_ORACLE = f"""
-WITH pairs AS MATERIALIZED (
+#: DuckDB twin of ``triangle_memberships`` over the near-dup pair graph:
+#: ``members`` holds one doc_id row per (triangle, member)
+_TRIANGLE_MEMBERS_CTE = f"""pairs AS MATERIALIZED (
     SELECT doc_id_1, doc_id_2 FROM ( {_MINHASH_ORACLE} )
 ),
 tri AS (
@@ -1067,11 +1068,29 @@ members AS (
     SELECT a AS doc_id FROM tri
     UNION ALL SELECT b FROM tri
     UNION ALL SELECT c FROM tri
-)
+)"""
+
+_TRIANGLE_ORACLE = f"""
+WITH {_TRIANGLE_MEMBERS_CTE}
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST(count(*) AS BIGINT) AS n_triangles
 FROM members GROUP BY doc_id
 """
+
+
+def triangle_memberships(pairs: DataFrame) -> DataFrame:
+    """One ``doc_id`` row per (triangle, member) of an oriented
+    (doc_id_1 < doc_id_2) edge list. Each triangle a<b<c is found once,
+    as the two-path a-b-c closed by the edge a-c: two self-joins of the
+    slim (id, id) edge list."""
+    ab = pairs.select(F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
+    bc = pairs.select(F.col("doc_id_1").alias("b"), F.col("doc_id_2").alias("c"))
+    ac = pairs.select(F.col("doc_id_1").alias("a2"), F.col("doc_id_2").alias("c2"))
+    return (
+        ab.join(bc, "b")
+        .join(ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")))
+        .select(F.explode(F.array("a", "b", "c")).alias("doc_id"))
+    )
 
 
 @register(
@@ -1095,23 +1114,15 @@ def q_triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are on 8-byte keys, and skew (one giant clique) is exactly what
     the LSH bucket cap already bounds upstream.
     """
-    # persisted for the three self-join consumers below; like the
-    # pagerank edge cache, the blocks live until session end — at
-    # 100 TB this is a parquet checkpoint of the (tiny) pair graph,
+    # persisted for the three self-join inputs of triangle_memberships;
+    # like the pagerank edge cache, the blocks live until session end —
+    # at 100 TB this is a parquet checkpoint of the (tiny) pair graph,
     # not an in-memory cache
     pairs = (
         minhash_pair_plan(spark, sf_dir).select("doc_id_1", "doc_id_2").persist()
     )
-    ab = pairs.select(F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
-    bc = pairs.select(F.col("doc_id_1").alias("b"), F.col("doc_id_2").alias("c"))
-    ac = pairs.select(F.col("doc_id_1").alias("a2"), F.col("doc_id_2").alias("c2"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")))
-        .select("a", "b", "c")
-    )
     return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("doc_id"))
+        triangle_memberships(pairs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
@@ -1127,25 +1138,12 @@ def q_triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CC_EXPR = "CAST(2 * t AS DOUBLE) / (d * (d - 1))"
 
 _CLUSTERING_ORACLE = f"""
-WITH pairs AS MATERIALIZED (
-    SELECT doc_id_1, doc_id_2 FROM ( {_MINHASH_ORACLE} )
-),
+WITH {_TRIANGLE_MEMBERS_CTE},
 deg AS (
     SELECT doc_id, count(*) AS d
     FROM (SELECT doc_id_1 AS doc_id FROM pairs
           UNION ALL SELECT doc_id_2 FROM pairs) e
     GROUP BY 1
-),
-tri AS (
-    SELECT ab.doc_id_1 AS a, ab.doc_id_2 AS b, bc.doc_id_2 AS c
-    FROM pairs ab
-    JOIN pairs bc ON bc.doc_id_1 = ab.doc_id_2
-    JOIN pairs ac ON ac.doc_id_1 = ab.doc_id_1 AND ac.doc_id_2 = bc.doc_id_2
-),
-members AS (
-    SELECT a AS doc_id FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
 ),
 tcnt AS (SELECT doc_id, count(*) AS t FROM members GROUP BY 1),
 nodes AS (
@@ -1181,16 +1179,8 @@ def clustering_profile(pairs: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    ab = pairs.select(F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
-    bc = pairs.select(F.col("doc_id_1").alias("b"), F.col("doc_id_2").alias("c"))
-    ac = pairs.select(F.col("doc_id_1").alias("a2"), F.col("doc_id_2").alias("c2"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")))
-        .select("a", "b", "c")
-    )
     tcnt = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("doc_id"))
+        triangle_memberships(pairs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("t"))
     )

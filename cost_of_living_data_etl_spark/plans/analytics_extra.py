@@ -38,6 +38,10 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
+from cost_of_living_data_etl_spark.plans.events_queries import (
+    SESSIONS_CTE,
+    with_session_seq,
+)
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 MIN_CO = 3  # association rules: minimum co-occurrence count
@@ -476,30 +480,11 @@ def q_ndcg_ranker_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- shared session-interval building block --------------------------------
-# ONE definition of the gap rule's application here (constant imported
-# from events_queries so the catalog has a single source of truth);
-# both session-derived queries below consume it, oracle and Spark side.
+# Per-session intervals over the one gap rule in events_queries
+# (``with_session_seq`` / ``SESSIONS_CTE``); the session-derived queries
+# here and in customer_analytics consume them, oracle and Spark side.
 
-from cost_of_living_data_etl_spark.plans.events_queries import SESSION_GAP_MIN
-
-_SESSIONS_CTE = f"""
-marked AS (
-    SELECT user_id, ts, event_id,
-        CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                  > INTERVAL {SESSION_GAP_MIN} MINUTE
-             OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-             THEN 1 ELSE 0 END AS new_session
-    FROM events
-),
-sessions AS (
-    SELECT user_id,
-           sum(new_session) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS session_seq,
-           ts
-    FROM marked
-),
+_PER_SESSION_CTE = f"""{SESSIONS_CTE},
 per_session AS (
     SELECT user_id, session_seq, min(ts) AS s, max(ts) AS e,
            count(*) AS n_events
@@ -509,7 +494,7 @@ per_session AS (
 
 def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session (user_id, session_seq, s, e, n_events) under the
-    shared 30-min gap rule — the Spark twin of ``_SESSIONS_CTE``.
+    shared 30-min gap rule — the Spark twin of ``_PER_SESSION_CTE``.
 
     NOTE: scan-parallelization + an eager checkpoint of the
     interval frame were A/B-tested on the concurrency consumer and
@@ -517,40 +502,21 @@ def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     already rides one user_id exchange and ReuseExchange dedups the
     interval derivations, so the extra re-key + materialization job
     only added cost."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_ts = F.lag("ts").over(w)
-    marked = events.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            prev_ts.isNull()
-            | (
-                F.col("ts")
-                > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")
-            ),
-            F.lit(1),
+    return (
+        with_session_seq(load_table(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_seq")
+        .agg(
+            F.min("ts").alias("s"),
+            F.max("ts").alias("e"),
+            F.count(F.lit(1)).alias("n_events"),
         )
-        .otherwise(F.lit(0))
-        .alias("new_session"),
-    ).withColumn("session_seq", F.sum("new_session").over(run))
-    return marked.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("s"),
-        F.max("ts").alias("e"),
-        F.count(F.lit(1)).alias("n_events"),
     )
 
 
 # --- peak session concurrency (interval sweep) -----------------------------
 
 _CONCURRENCY_ORACLE = f"""
-WITH {_SESSIONS_CTE},
+WITH {_PER_SESSION_CTE},
 bounds AS (
     SELECT s AS ts, 1 AS delta FROM per_session
     UNION ALL
@@ -670,7 +636,7 @@ def q_concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize so sessionization runs once (the checkpoint hides
     # lineage behind a Scan ExistingRDD even when lazy, so the plan
     # test audits the factored pre-checkpoint builder the query calls:
-    # _concurrency_bounds, ADVICE r07)
+    # _concurrency_bounds)
     blocks = concurrency_blocks(
         _concurrency_bounds(spark, sf_dir)
     ).transform(eager_checkpoint)
@@ -1038,7 +1004,7 @@ def q_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- session bounce rate ---------------------------------------------------
 
 _BOUNCE_ORACLE = f"""
-WITH {_SESSIONS_CTE}
+WITH {_PER_SESSION_CTE}
 SELECT date_trunc('day', s)                                       AS day,
        CAST(count(*) AS BIGINT)                                   AS n_sessions,
        CAST(count(*) FILTER (WHERE n_events = 1) AS BIGINT)       AS n_bounces,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.plans.analytics_extra import (
-    _SESSIONS_CTE,
+    _PER_SESSION_CTE,
     _session_intervals,
 )
 from cost_of_living_data_etl_spark.sources.tables import load_table
@@ -228,7 +228,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- inter-session return time ---------------------------------------------
 
 _RETURN_ORACLE = f"""
-WITH {_SESSIONS_CTE},
+WITH {_PER_SESSION_CTE},
 gaps AS (
     SELECT user_id,
            datediff('day',

@@ -18,9 +18,59 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
 from cost_of_living_data_etl_spark.sources.tables import load_table
-from cost_of_living_data_etl_spark.streaming.events import EWMA_STREAM_ALPHA, RECENT_K
+from cost_of_living_data_etl_spark.streaming.events import (
+    EWMA_STREAM_ALPHA,
+    RECENT_K,
+    click_purchase_attribution,
+)
 
 SESSION_GAP_MIN = 30
+
+#: DuckDB twin of ``with_session_seq``: ``marked`` adds ``new_session``
+#: and ``sessions`` adds ``session_seq`` to every events column.
+SESSIONS_CTE = f"""
+marked AS (
+    SELECT *,
+        CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                  > INTERVAL {SESSION_GAP_MIN} MINUTE
+             OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+             THEN 1 ELSE 0 END AS new_session
+    FROM events
+),
+sessions AS (
+    SELECT *,
+           sum(new_session) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS session_seq
+    FROM marked
+)"""
+
+
+def with_session_seq(events: DataFrame) -> DataFrame:
+    """``events`` plus ``new_session`` (1 when the user's previous event
+    is missing or more than SESSION_GAP_MIN minutes earlier, else 0)
+    and ``session_seq`` (the user's running count of session starts).
+
+    Both windows order by (ts, event_id): with ts alone, two events at
+    the same timestamp would make the running-sum row order (hence
+    session_seq of the tied rows) engine-dependent. One shuffle on
+    user_id, sort within user.
+    """
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    prev_ts = F.lag("ts").over(w)
+    # full-precision gap test (ts carries microseconds): cast("long")
+    # would truncate to whole seconds and disagree with the oracle's
+    # INTERVAL comparison for gaps within 1s of exactly 30min
+    new_session = F.when(
+        prev_ts.isNull()
+        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")),
+        1,
+    ).otherwise(0)
+    return events.withColumn("new_session", new_session).withColumn(
+        "session_seq", F.sum("new_session").over(run)
+    )
 
 
 @register(
@@ -102,24 +152,7 @@ def q_events_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_events_sessionization",
     oracle=f"""
-    WITH marked AS (
-        SELECT
-            user_id, ts, value, event_id,
-            CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > INTERVAL {SESSION_GAP_MIN} MINUTE
-                 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                 THEN 1 ELSE 0 END AS new_session
-        FROM events
-    ),
-    sessions AS (
-        SELECT
-            user_id, ts, value,
-            sum(new_session) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            ) AS session_seq
-        FROM marked
-    )
+    WITH {SESSIONS_CTE}
     SELECT
         user_id,
         CAST(session_seq AS BIGINT)                   AS session_seq,
@@ -138,28 +171,11 @@ def q_events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The same sessions Structured Streaming's session_window produces;
     here derived with plain windows so it is oracle-checkable. Scale:
-    one shuffle on user_id, sort within user — the canonical pattern.
+    one shuffle on user_id, sort within user — the canonical pattern
+    (``with_session_seq``).
     """
-    # BOTH windows tie-break on event_id: with ts-only ordering, two
-    # events at the same timestamp would make the running-sum row order
-    # (hence session_seq of the tied rows) engine-dependent.
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    prev_ts = F.lag("ts").over(w)
-    # full-precision gap test (ts carries microseconds): cast("long")
-    # would truncate to whole seconds and disagree with the oracle's
-    # INTERVAL comparison for gaps within 1s of exactly 30min
-    new_session = F.when(
-        prev_ts.isNull()
-        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")),
-        1,
-    ).otherwise(0)
     return (
-        load_table(spark, sf_dir, "events")
-        .withColumn("new_session", new_session)
-        .withColumn("session_seq", F.sum("new_session").over(run).cast("long"))
+        with_session_seq(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_seq")
         .agg(
             F.min("ts").alias("session_start"),
@@ -196,36 +212,11 @@ def q_events_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns so streaming results are validated against this.
 
     Scale: equi-key on user_id carries the shuffle; the time-range
-    predicate is a post-join filter within each user's partition.
+    predicate is a post-join filter within each user's partition. The
+    streaming function's watermarks are dropped from a batch plan by
+    the optimizer, so the batch and streaming joins share one builder.
     """
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")
-        ),
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
+    return click_purchase_attribution(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -439,24 +430,7 @@ PATH_TOPK = 20
 @register(
     "q_session_path_topk",
     oracle=f"""
-    WITH marked AS (
-        SELECT
-            user_id, ts, event_id, event_type,
-            CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > INTERVAL {SESSION_GAP_MIN} MINUTE
-                 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                 THEN 1 ELSE 0 END AS new_session
-        FROM events
-    ),
-    sessions AS (
-        SELECT
-            user_id, ts, event_id, event_type,
-            sum(new_session) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            ) AS session_seq
-        FROM marked
-    ),
+    WITH {SESSIONS_CTE},
     paths AS (
         SELECT user_id, session_seq,
                array_to_string(list(event_type ORDER BY ts, event_id), '>') AS path
@@ -486,23 +460,8 @@ def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered. Paths longer than any real session would indicate a
     broken gap rule, not a bigger shuffle.
     """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    prev_ts = F.lag("ts").over(w)
-    # full-precision gap test (ts carries microseconds): cast("long")
-    # would truncate to whole seconds and disagree with the oracle's
-    # INTERVAL comparison for gaps within 1s of exactly 30min
-    new_session = F.when(
-        prev_ts.isNull()
-        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")),
-        1,
-    ).otherwise(0)
     paths = (
-        load_table(spark, sf_dir, "events")
-        .withColumn("new_session", new_session)
-        .withColumn("session_seq", F.sum("new_session").over(run))
+        with_session_seq(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_seq")
         .agg(
             F.expr(

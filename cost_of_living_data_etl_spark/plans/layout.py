@@ -663,7 +663,7 @@ def q_zorder_incremental_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     files must be REWRITTEN to restore clustering, and how much new
     data lands in each? Both sides are bucket-coded against the FULL
     table's bounds (table stats stay fixed as data arrives — the
-    `zorder_code`/`zorder_bounds` seam in plans/layout.py), the base
+    `zorder_code`/`zorder_bounds` seam above), the base
     manifest is laid out over base rows only, and a file is hit when
     its (price, day) bucket rectangle contains an append point's cell.
 
@@ -678,8 +678,6 @@ def q_zorder_incremental_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = load_table(spark, sf_dir, "orders")
     bounds = zorder_bounds(full)
     is_append = F.expr(_APPEND_SPARK)
-    from cost_of_living_data_etl_spark.plans.layout import zorder_files
-
     manifest = zorder_files(
         full.filter(~is_append), _Z_FILE_ROWS, bounds_from=full
     )

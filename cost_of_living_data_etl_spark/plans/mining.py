@@ -67,18 +67,9 @@ from cost_of_living_data_etl_spark.sources.tables import load_table
 #: variant (q_mutual_nn_ann, below) is the supported path.
 MAX_MUTUAL_NN_ROWS = 100_000
 
-_MNN_ORACLE = """
-WITH e AS (
-    SELECT vec_id, embedding::DOUBLE[] AS emb,
-           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-             AS norm
-    FROM embeddings
-),
-pairs AS (
-    SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           list_inner_product(a.emb, b.emb) / (a.norm * b.norm) AS cos_sim
-    FROM e a JOIN e b ON a.vec_id % 4 = 0 AND b.vec_id % 4 = 1
-),
+#: DuckDB twin of ``mutual_best``, over a ``pairs`` (a_id, b_id,
+#: cos_sim) relation: the pairs that are each side's best match
+_MUTUAL_BEST_SQL = """
 best_a AS (
     SELECT a_id, b_id, cos_sim FROM (
         SELECT *, row_number() OVER (PARTITION BY a_id
@@ -96,6 +87,53 @@ SELECT CAST(x.a_id AS BIGINT) AS a_id, CAST(x.b_id AS BIGINT) AS b_id,
 FROM best_a x JOIN best_b y ON x.a_id = y.a_id AND x.b_id = y.b_id
 ORDER BY a_id
 """
+
+
+def mutual_best(pairs: DataFrame) -> DataFrame:
+    """The (a_id, b_id, cos_sim) rows of a scored pair stream in which
+    b is a's best match AND a is b's, ordered by a_id. Each argmax is
+    a ``max(struct(cos, -id))`` partial aggregate (map-side combined),
+    so ties go to the smaller id, as in ``_MUTUAL_BEST_SQL``."""
+    best_a = (
+        pairs.groupBy("a_id")
+        .agg(F.max(F.struct("cos_sim", (-F.col("b_id")).alias("nb"))).alias("m"))
+        .select(
+            "a_id",
+            (-F.col("m.nb")).alias("b_id"),
+            F.col("m.cos_sim").alias("cos_sim"),
+        )
+    )
+    best_b = (
+        pairs.groupBy("b_id")
+        .agg(F.max(F.struct("cos_sim", (-F.col("a_id")).alias("na"))).alias("m"))
+        .select(F.col("b_id").alias("bb_id"), (-F.col("m.na")).alias("ba_id"))
+    )
+    return (
+        best_a.join(
+            best_b,
+            (best_a.a_id == best_b.ba_id) & (best_a.b_id == best_b.bb_id),
+        )
+        .select(
+            F.col("a_id").cast("long").alias("a_id"),
+            F.col("b_id").cast("long").alias("b_id"),
+            "cos_sim",
+        )
+        .orderBy("a_id")
+    )
+
+_MNN_ORACLE = f"""
+WITH e AS (
+    SELECT vec_id, embedding::DOUBLE[] AS emb,
+           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+             AS norm
+    FROM embeddings
+),
+pairs AS (
+    SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+           list_inner_product(a.emb, b.emb) / (a.norm * b.norm) AS cos_sim
+    FROM e a JOIN e b ON a.vec_id % 4 = 0 AND b.vec_id % 4 = 1
+),
+{_MUTUAL_BEST_SQL}"""
 
 
 @register(
@@ -121,9 +159,9 @@ def q_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key argmax states move), and the builder REFUSES inputs above
     MAX_MUTUAL_NN_ROWS so it cannot silently go quadratic. At corpus
     scale the mutual filter is UNCHANGED but consumes ANN candidates —
-    that production path is shipped as `q_mutual_nn_ann`
-    (plans/round4.py): the same reciprocal argmax over IVF-cell
-    candidate lists, exactly the CCMatrix recipe.
+    that production path is shipped as `q_mutual_nn_ann` (below): the
+    same reciprocal argmax (``mutual_best``) over IVF-cell candidate
+    lists, exactly the CCMatrix recipe.
     """
     e = with_norm(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -140,7 +178,7 @@ def q_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"q_mutual_nn_ann (same reciprocal filter over IVF-cell "
             f"candidates, the CCMatrix-style production path) at this scale."
         )
-    # parallel=True on the PROBE side only (round 9): the dense a×b
+    # parallel=True on the PROBE side only: the dense a×b
     # cosine pass is the serial kernel and both argmaxes are struct-max
     # partial aggregates (order-free), so the re-key is parity-safe
     # (measured 2.28→1.53 s interleaved); the broadcast b side and the
@@ -171,32 +209,7 @@ def q_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot_expr("a_emb", "b_emb") / (F.col("a_norm") * F.col("b_norm"))
         ).alias("cos_sim"),
     ).transform(eager_checkpoint)
-    best_a = (
-        pairs.groupBy("a_id")
-        .agg(F.max(F.struct("cos_sim", (-F.col("b_id")).alias("nb"))).alias("m"))
-        .select(
-            "a_id",
-            (-F.col("m.nb")).alias("b_id"),
-            F.col("m.cos_sim").alias("cos_sim"),
-        )
-    )
-    best_b = (
-        pairs.groupBy("b_id")
-        .agg(F.max(F.struct("cos_sim", (-F.col("a_id")).alias("na"))).alias("m"))
-        .select(F.col("b_id").alias("bb_id"), (-F.col("m.na")).alias("ba_id"))
-    )
-    return (
-        best_a.join(
-            best_b,
-            (best_a.a_id == best_b.ba_id) & (best_a.b_id == best_b.bb_id),
-        )
-        .select(
-            F.col("a_id").cast("long").alias("a_id"),
-            F.col("b_id").cast("long").alias("b_id"),
-            "cos_sim",
-        )
-        .orderBy("a_id")
-    )
+    return mutual_best(pairs)
 
 
 # --- MAD-robust outlier days -------------------------------------------------
@@ -746,22 +759,7 @@ def _mnn_ann_oracle() -> str:
                {ip}(a_emb, b_emb) / (a_norm * b_norm) AS cos_sim
         FROM ea JOIN eb USING (cell)
     ),
-    best_a AS (
-        SELECT a_id, b_id, cos_sim FROM (
-            SELECT *, row_number() OVER (PARTITION BY a_id
-                                         ORDER BY cos_sim DESC, b_id) AS rk
-            FROM pairs) WHERE rk = 1
-    ),
-    best_b AS (
-        SELECT a_id, b_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY b_id
-                                         ORDER BY cos_sim DESC, a_id) AS rk
-            FROM pairs) WHERE rk = 1
-    )
-    SELECT CAST(x.a_id AS BIGINT) AS a_id, CAST(x.b_id AS BIGINT) AS b_id,
-           x.cos_sim AS cos_sim
-    FROM best_a x JOIN best_b y ON x.a_id = y.a_id AND x.b_id = y.b_id
-    ORDER BY a_id"""
+{_MUTUAL_BEST_SQL}"""
     )
 
 
@@ -851,29 +849,4 @@ def q_mutual_nn_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(eager_checkpoint)
     )
-    best_a = (
-        pairs.groupBy("a_id")
-        .agg(F.max(F.struct("cos_sim", (-F.col("b_id")).alias("nb"))).alias("m"))
-        .select(
-            "a_id",
-            (-F.col("m.nb")).alias("b_id"),
-            F.col("m.cos_sim").alias("cos_sim"),
-        )
-    )
-    best_b = (
-        pairs.groupBy("b_id")
-        .agg(F.max(F.struct("cos_sim", (-F.col("a_id")).alias("na"))).alias("m"))
-        .select(F.col("b_id").alias("bb_id"), (-F.col("m.na")).alias("ba_id"))
-    )
-    return (
-        best_a.join(
-            best_b,
-            (best_a.a_id == best_b.ba_id) & (best_a.b_id == best_b.bb_id),
-        )
-        .select(
-            F.col("a_id").cast("long").alias("a_id"),
-            F.col("b_id").cast("long").alias("b_id"),
-            "cos_sim",
-        )
-        .orderBy("a_id")
-    )
+    return mutual_best(pairs)

@@ -34,7 +34,7 @@ plus a 3-vector, solved by the same Cramer text as ridge.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from cost_of_living_data_etl_spark.functions.checkpoints import eager_checkpoint
 from cost_of_living_data_etl_spark.functions.columns import det_sum
@@ -84,6 +84,34 @@ _DSUM_SQL = (
     " (a, b) -> a + b)"
 )
 
+#: the Gram entries of the (1, x1, x2) design against y, each with the
+#: term its sorted-fold sum adds up; ``nd`` is the row count
+_GRAM_TERMS = {
+    "s1": "x1",
+    "s2": "x2",
+    "s11": "x1 * x1",
+    "s12": "x1 * x2",
+    "s22": "x2 * x2",
+    "sy": "y",
+    "s1y": "x1 * y",
+    "s2y": "x2 * y",
+}
+_GRAM_COLS = ("nd", *_GRAM_TERMS)
+
+#: DuckDB twin of ``_gram_aggs``: the Gram select list
+_GRAM_SQL = ",\n           ".join(
+    ["CAST(count(*) AS DOUBLE) AS nd"]
+    + [f"{_DSUM_SQL.format(x=t)} AS {c}" for c, t in _GRAM_TERMS.items()]
+)
+
+
+def _gram_aggs() -> list[Column]:
+    """The nine Gram aggregates, in ``_GRAM_COLS`` order."""
+    return [F.count(F.lit(1)).cast("double").alias("nd")] + [
+        det_sum(t).alias(c) for c, t in _GRAM_TERMS.items()
+    ]
+
+
 _RIDGE_ORACLE = f"""
 WITH feats AS (
     SELECT o.o_totalprice AS y,
@@ -96,15 +124,7 @@ WITH feats AS (
     JOIN orders o ON o.o_orderkey = f.l_orderkey
 ),
 gram AS (
-    SELECT CAST(count(*) AS DOUBLE)          AS nd,
-           {_DSUM_SQL.format(x="x1")}        AS s1,
-           {_DSUM_SQL.format(x="x2")}        AS s2,
-           {_DSUM_SQL.format(x="x1 * x1")}   AS s11,
-           {_DSUM_SQL.format(x="x1 * x2")}   AS s12,
-           {_DSUM_SQL.format(x="x2 * x2")}   AS s22,
-           {_DSUM_SQL.format(x="y")}         AS sy,
-           {_DSUM_SQL.format(x="x1 * y")}    AS s1y,
-           {_DSUM_SQL.format(x="x2 * y")}    AS s2y
+    SELECT {_GRAM_SQL}
     FROM feats
 )
 SELECT CAST(nd AS BIGINT)           AS n_orders,
@@ -155,17 +175,7 @@ def q_ridge_gram_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("x2_raw").cast("double").alias("x2"),
         )
     )
-    gram = feats.agg(
-        F.count(F.lit(1)).cast("double").alias("nd"),
-        det_sum("x1").alias("s1"),
-        det_sum("x2").alias("s2"),
-        det_sum("x1 * x1").alias("s11"),
-        det_sum("x1 * x2").alias("s12"),
-        det_sum("x2 * x2").alias("s22"),
-        det_sum("y").alias("sy"),
-        det_sum("x1 * y").alias("s1y"),
-        det_sum("x2 * y").alias("s2y"),
-    )
+    gram = feats.agg(*_gram_aggs())
     return gram.selectExpr(
         "CAST(nd AS BIGINT) AS n_orders",
         f'{_RIDGE_BETA["beta0"]} / {_RIDGE_DET} AS beta0',
@@ -195,8 +205,6 @@ _CV_BETA = {
     "beta2": _det3(_R_C0, _R_C1, _R_B),
 }
 
-_GRAM_COLS = ("nd", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y")
-
 _CV_ORACLE = f"""
 WITH feats AS (
     SELECT o.o_totalprice AS y,
@@ -211,15 +219,7 @@ WITH feats AS (
 ),
 fold_gram AS (
     SELECT fold,
-           CAST(count(*) AS DOUBLE)          AS nd,
-           {_DSUM_SQL.format(x="x1")}        AS s1,
-           {_DSUM_SQL.format(x="x2")}        AS s2,
-           {_DSUM_SQL.format(x="x1 * x1")}   AS s11,
-           {_DSUM_SQL.format(x="x1 * x2")}   AS s12,
-           {_DSUM_SQL.format(x="x2 * x2")}   AS s22,
-           {_DSUM_SQL.format(x="y")}         AS sy,
-           {_DSUM_SQL.format(x="x1 * y")}    AS s1y,
-           {_DSUM_SQL.format(x="x2 * y")}    AS s2y
+           {_GRAM_SQL}
     FROM feats GROUP BY fold
 ),
 total_gram AS (
@@ -294,7 +294,7 @@ def q_ridge_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("x2_raw").cast("double").alias("x2"),
             F.expr(_FOLD_SPARK).alias("fold"),
         )
-        # NOTE (round 9): an eager checkpoint of this design matrix
+        # NOTE: an eager checkpoint of this design matrix
         # was A/B-tested and REJECTED (3.98 s old vs 4.76 s new min,
         # interleaved) — materializing 150k rows costs more than the
         # second derivation of the cheap scan+agg+join it would save.
@@ -308,19 +308,7 @@ def q_ridge_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matrix (pinned in test_plans.py).
     fold_rows = [
         tuple(r)
-        for r in feats.groupBy("fold")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("nd"),
-            det_sum("x1").alias("s1"),
-            det_sum("x2").alias("s2"),
-            det_sum("x1 * x1").alias("s11"),
-            det_sum("x1 * x2").alias("s12"),
-            det_sum("x2 * x2").alias("s22"),
-            det_sum("y").alias("sy"),
-            det_sum("x1 * y").alias("s1y"),
-            det_sum("x2 * y").alias("s2y"),
-        )
-        .collect()
+        for r in feats.groupBy("fold").agg(*_gram_aggs()).collect()
     ]
     fold_gram = spark.createDataFrame(
         fold_rows,
@@ -1318,15 +1306,7 @@ WITH feats AS (
     JOIN orders o ON o.o_orderkey = f.l_orderkey
 ),
 gram AS (
-    SELECT CAST(count(*) AS DOUBLE)          AS nd,
-           {_DSUM_SQL.format(x="x1")}        AS s1,
-           {_DSUM_SQL.format(x="x2")}        AS s2,
-           {_DSUM_SQL.format(x="x1 * x1")}   AS s11,
-           {_DSUM_SQL.format(x="x1 * x2")}   AS s12,
-           {_DSUM_SQL.format(x="x2 * x2")}   AS s22,
-           {_DSUM_SQL.format(x="y")}         AS sy,
-           {_DSUM_SQL.format(x="x1 * y")}    AS s1y,
-           {_DSUM_SQL.format(x="x2 * y")}    AS s2y
+    SELECT {_GRAM_SQL}
     FROM feats WHERE bkt < {_CONF_TRAIN_CUT}
 ),
 beta AS (
@@ -1426,20 +1406,8 @@ def q_conformal_interval_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # coverage) — materialize so the lineitem join runs once
         .transform(eager_checkpoint)
     )
-    gram = (
-        feats.filter(F.col("bkt") < _CONF_TRAIN_CUT)
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("nd"),
-            det_sum("x1").alias("s1"),
-            det_sum("x2").alias("s2"),
-            det_sum("x1 * x1").alias("s11"),
-            det_sum("x1 * x2").alias("s12"),
-            det_sum("x2 * x2").alias("s22"),
-            det_sum("y").alias("sy"),
-            det_sum("x1 * y").alias("s1y"),
-            det_sum("x2 * y").alias("s2y"),
-        )
+    gram = feats.filter(F.col("bkt") < _CONF_TRAIN_CUT).groupBy().agg(
+        *_gram_aggs()
     )
     beta = gram.select(
         F.col("nd").cast("long").alias("n_train"),
@@ -1473,7 +1441,7 @@ def q_conformal_interval_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the calibration residuals (floor(resid) is the monotone bucket;
     # ties rank arbitrarily but the value at the target rank is unique).
     # n_cal rides along from the helper's own bucket rollup (n_col) —
-    # no separate cal.agg job + broadcast (round 9)
+    # no separate cal.agg job + broadcast
     qhat = (
         with_global_position(
             cal,

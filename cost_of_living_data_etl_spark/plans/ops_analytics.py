@@ -16,7 +16,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
-from cost_of_living_data_etl_spark.plans.events_queries import SESSION_GAP_MIN
+from cost_of_living_data_etl_spark.plans.events_queries import (
+    SESSIONS_CTE,
+    with_session_seq,
+)
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 ROLLING_DAYS = 7  # trailing active-user window
@@ -290,22 +293,7 @@ def q_readability_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- session entry-point conversion ----------------------------------------
 
 _ENTRY_CONV_ORACLE = f"""
-WITH marked AS (
-    SELECT user_id, ts, event_id, event_type,
-        CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                  > INTERVAL {SESSION_GAP_MIN} MINUTE
-             OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-             THEN 1 ELSE 0 END AS new_session
-    FROM events
-),
-sessions AS (
-    SELECT user_id, event_type, ts, event_id,
-           sum(new_session) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS session_seq
-    FROM marked
-),
+WITH {SESSIONS_CTE},
 per_session AS (
     SELECT user_id, session_seq,
            first(event_type ORDER BY ts, event_id)                  AS entry_type,
@@ -338,31 +326,9 @@ def q_session_entry_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional max; both partial-aggregate map-side. Integer counts,
     one final division.
     """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_ts = F.lag("ts").over(w)
-    marked = events.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            prev_ts.isNull()
-            | (
-                F.col("ts")
-                > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("new_session"),
-    ).withColumn("session_seq", F.sum("new_session").over(run))
-    per_session = marked.groupBy("user_id", "session_seq").agg(
+    per_session = with_session_seq(
+        load_table(spark, sf_dir, "events")
+    ).groupBy("user_id", "session_seq").agg(
         F.min(
             F.struct(F.struct("ts", "event_id").alias("o"), F.col("event_type"))
         )["event_type"].alias("entry_type"),

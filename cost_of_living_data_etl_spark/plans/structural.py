@@ -240,23 +240,55 @@ def setsim_pairs(
 
 # --- interval coalescing (gaps-and-islands) ---------------------------------
 
-_ISLANDS_ORACLE = f"""
-WITH e AS (SELECT user_id, epoch_us(ts) AS s,
+def _islands(ev: DataFrame, part_cols: list[str]) -> DataFrame:
+    """Gaps-and-islands over [s, en) intervals; returns one row per
+    island with (part_cols..., isl, st, e2). An interval starts a new
+    island iff its start exceeds the running max end of all earlier
+    intervals (a cumulative max, so a contained interval breaks
+    nothing); the island id is the running count of such breaks."""
+    order = Window.partitionBy(*part_cols).orderBy("s", "en")
+    prev = order.rowsBetween(Window.unboundedPreceding, -1)
+    run = order.rowsBetween(Window.unboundedPreceding, 0)
+    flagged = ev.withColumn("pmax", F.max("en").over(prev)).withColumn(
+        "brk",
+        F.when(
+            F.col("pmax").isNull() | (F.col("s") > F.col("pmax")), 1
+        ).otherwise(0),
+    )
+    return (
+        flagged.withColumn("isl", F.sum("brk").over(run))
+        .groupBy(*part_cols, "isl")
+        .agg(F.min("s").alias("st"), F.max("en").alias("e2"))
+    )
+
+
+def _islands_sql(src: str, part_cols: list[str]) -> str:
+    """DuckDB twin of ``_islands``: a subquery over the (part_cols...,
+    s, en) rows of relation ``src`` with one row per island,
+    (part_cols..., isl, st, e2)."""
+    keep = "".join(f"{c}, " for c in part_cols)
+    over = f"PARTITION BY {', '.join(part_cols)} " if part_cols else ""
+    return f"""(
+    SELECT {keep}isl, min(s) AS st, max(en) AS e2
+    FROM (SELECT {keep}s, en,
+                 sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+                   OVER ({over}ORDER BY s, en ROWS UNBOUNDED PRECEDING) AS isl
+          FROM (SELECT {keep}s, en,
+                       max(en) OVER ({over}ORDER BY s, en
+                                     ROWS BETWEEN UNBOUNDED PRECEDING
+                                              AND 1 PRECEDING) AS pmax
+                FROM {src}) m) g
+    GROUP BY {keep}isl)"""
+
+
+#: per-user activity islands ``i`` over the [ts, ts+5min) intervals ``e``
+_USER_ISLANDS_CTE = f"""e AS (SELECT user_id, epoch_us(ts) AS s,
                   epoch_us(ts) + {IDLE_GAP_US} AS en
            FROM events),
-m AS (SELECT user_id, s, en,
-             max(en) OVER (PARTITION BY user_id ORDER BY s, en
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS pmax
-      FROM e),
-f AS (SELECT user_id, s, en,
-             CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS brk
-      FROM m),
-g AS (SELECT user_id, s, en,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY s, en
-                            ROWS UNBOUNDED PRECEDING) AS isl
-      FROM f),
-i AS (SELECT user_id, isl, min(s) AS st, max(en) AS e2 FROM g GROUP BY 1, 2)
+i AS {_islands_sql("e", ["user_id"])}"""
+
+_ISLANDS_ORACLE = f"""
+WITH {_USER_ISLANDS_CTE}
 SELECT CAST(user_id AS BIGINT) AS user_id,
        CAST(count(*) AS BIGINT) AS n_islands,
        CAST(sum(e2 - st) AS BIGINT) AS covered_us
@@ -295,22 +327,9 @@ def q_interval_merge_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("s"),
         (F.unix_micros("ts") + F.lit(IDLE_GAP_US)).alias("en"),
     )
-    order = Window.partitionBy("user_id").orderBy("s", "en")
-    prev = order.rowsBetween(Window.unboundedPreceding, -1)
-    run = order.rowsBetween(Window.unboundedPreceding, 0)
-    flagged = ev.withColumn("pmax", F.max("en").over(prev)).withColumn(
-        "brk",
-        F.when(
-            F.col("pmax").isNull() | (F.col("s") > F.col("pmax")), 1
-        ).otherwise(0),
-    )
-    islands = (
-        flagged.withColumn("isl", F.sum("brk").over(run))
-        .groupBy("user_id", "isl")
-        .agg(F.min("s").alias("st"), F.max("en").alias("e2"))
-    )
     return (
-        islands.groupBy("user_id")
+        _islands(ev, ["user_id"])
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_islands"),
             F.sum(F.col("e2") - F.col("st")).alias("covered_us"),
@@ -559,37 +578,15 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 OVERLAP_CELL_US = 3_600_000_000  # 1-hour grid cells for the bucketed join
 
 _OVERLAP_ORACLE = f"""
-WITH e AS (SELECT user_id, epoch_us(ts) AS s,
-                  epoch_us(ts) + {IDLE_GAP_US} AS en
-           FROM events),
-m AS (SELECT user_id, s, en,
-             max(en) OVER (PARTITION BY user_id ORDER BY s, en
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS pmax
-      FROM e),
-g AS (SELECT user_id, s, en,
-             sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s, en
-                     ROWS UNBOUNDED PRECEDING) AS isl
-      FROM m),
-sess AS (SELECT user_id, isl, min(s) AS st, max(en) AS e2
-         FROM g GROUP BY 1, 2),
+WITH {_USER_ISLANDS_CTE},
 be AS (SELECT epoch_us(ts) AS s, epoch_us(ts) + {IDLE_GAP_US} AS en
        FROM events WHERE event_type = 'error'),
-bm AS (SELECT s, en,
-              max(en) OVER (ORDER BY s, en
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                AS pmax
-       FROM be),
-bg AS (SELECT s, en,
-              sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-                OVER (ORDER BY s, en ROWS UNBOUNDED PRECEDING) AS bid
-       FROM bm),
-burst AS (SELECT bid, min(s) AS bs, max(en) AS b2 FROM bg GROUP BY 1),
+burst AS (SELECT isl AS bid, st AS bs, e2 AS b2
+          FROM {_islands_sql("be", [])} b),
 hits AS (
     SELECT s.user_id, s.isl,
            sum(least(s.e2, b.b2) - greatest(s.st, b.bs)) AS ov_us
-    FROM sess s JOIN burst b
+    FROM i s JOIN burst b
       ON s.st < b.b2 AND b.bs < s.e2
     GROUP BY 1, 2
 )
@@ -598,31 +595,10 @@ SELECT CAST(s.user_id AS BIGINT) AS user_id,
        CAST(sum(CASE WHEN h.isl IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_hit_sessions,
        CAST(coalesce(sum(h.ov_us), 0) AS BIGINT) AS overlap_us
-FROM sess s LEFT JOIN hits h
+FROM i s LEFT JOIN hits h
   ON h.user_id = s.user_id AND h.isl = s.isl
 GROUP BY s.user_id
 """
-
-
-def _islands(ev: DataFrame, part_cols: list[str]) -> DataFrame:
-    """Gaps-and-islands over [s, en) intervals; returns one row per
-    island with (part_cols..., isl, st, e2). Factored from
-    q_interval_merge_islands so both interval sets of the overlap join
-    derive from the SAME tested merge logic."""
-    order = Window.partitionBy(*part_cols).orderBy("s", "en")
-    prev = order.rowsBetween(Window.unboundedPreceding, -1)
-    run = order.rowsBetween(Window.unboundedPreceding, 0)
-    flagged = ev.withColumn("pmax", F.max("en").over(prev)).withColumn(
-        "brk",
-        F.when(
-            F.col("pmax").isNull() | (F.col("s") > F.col("pmax")), 1
-        ).otherwise(0),
-    )
-    return (
-        flagged.withColumn("isl", F.sum("brk").over(run))
-        .groupBy(*part_cols, "isl")
-        .agg(F.min("s").alias("st"), F.max("en").alias("e2"))
-    )
 
 
 @register(

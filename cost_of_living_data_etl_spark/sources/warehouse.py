@@ -14,8 +14,11 @@ hand-encodes in its SQL strings (app.py:140,143, S5/S6).
 
 from __future__ import annotations
 
+import shutil
+import uuid
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -124,6 +127,15 @@ class Warehouse:
             .parquet(self.path(table))
         )
 
+    def _swap_in(self, writer: DataFrameWriter, table: str) -> None:
+        """Copy-on-write swap: write ``writer`` to a side directory, then
+        remove ``table``'s directory and move the side directory into
+        its place."""
+        tmp_path = f"{self.root}/.staging-{table}-{uuid.uuid4().hex[:8]}"
+        writer.parquet(tmp_path)
+        shutil.rmtree(self.path(table))
+        shutil.move(tmp_path, self.path(table))
+
     def compact(
         self,
         spark: SparkSession,
@@ -138,24 +150,17 @@ class Warehouse:
         Streaming/incremental appends accrete thousands of KB-sized
         files per partition; at 100 TB the resulting driver listing +
         per-file open overhead dominates scan time. The rewrite stages
-        to a side directory before the swap — same pattern as
-        ``merge_upsert``. On Delta/Iceberg this binds to OPTIMIZE /
+        to a side directory before the swap (``_swap_in``, as in
+        ``merge_upsert``). On Delta/Iceberg this binds to OPTIMIZE /
         rewrite_data_files.
         """
-        import shutil
-        import uuid
-
-        target_path = self.path(table)
-        df = spark.read.parquet(target_path)
+        df = spark.read.parquet(self.path(table))
         if partition_cols:
             compacted = df.repartition(*[F.col(c) for c in partition_cols])
             writer = compacted.write.mode("overwrite").partitionBy(*partition_cols)
         else:
             writer = df.repartition(target_files).write.mode("overwrite")
-        tmp_path = f"{self.root}/.compact-{table}-{uuid.uuid4().hex[:8]}"
-        writer.parquet(tmp_path)
-        shutil.rmtree(target_path)
-        shutil.move(tmp_path, target_path)
+        self._swap_in(writer, table)
 
     def merge_upsert(
         self,
@@ -179,9 +184,6 @@ class Warehouse:
         On a real deployment this binds to ``MERGE INTO`` on a
         Delta/Iceberg catalog; the call signature is the contract.
         """
-        import shutil
-        import uuid
-
         target_path = self.path(table)
         staged = updates.select(*updates.columns)
         target = _read_target_or_none(spark, target_path)
@@ -193,10 +195,7 @@ class Warehouse:
             on=key_cols,
             how="left_anti",
         ).unionByName(staged)
-        tmp_path = f"{self.root}/.staging-{table}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        shutil.rmtree(target_path)
-        shutil.move(tmp_path, target_path)
+        self._swap_in(merged.write.mode("overwrite"), table)
 
     def delete_where(
         self,
@@ -214,9 +213,6 @@ class Warehouse:
         100 TB bind it to a catalog DELETE; the audit contract (the
         numbers a privacy officer files) is what this layer owns.
         """
-        import shutil
-        import uuid
-
         target_path = self.path(table)
         target = _read_target_or_none(spark, target_path)
         if target is None:
@@ -226,10 +222,7 @@ class Warehouse:
         after = kept.count()
         if after == before:
             return {"before": before, "deleted": 0, "after": after}
-        tmp_path = f"{self.root}/.staging-{table}-{uuid.uuid4().hex[:8]}"
-        kept.write.mode("overwrite").parquet(tmp_path)
-        shutil.rmtree(target_path)
-        shutil.move(tmp_path, target_path)
+        self._swap_in(kept.write.mode("overwrite"), table)
         return {"before": before, "deleted": before - after, "after": after}
 
     def forget_subject(
@@ -315,9 +308,6 @@ class Warehouse:
         Idempotent for the same ``as_of``: re-running with an already-
         applied batch changes nothing (the change predicate is false).
         """
-        import shutil
-        import uuid
-
         target_path = self.path(table)
         open_updates = (
             updates.withColumn("valid_from", F.lit(as_of).cast("date"))
@@ -372,10 +362,7 @@ class Warehouse:
             .unionByName(closed)
             .unionByName(opened)
         )
-        tmp_path = f"{self.root}/.scd2-{table}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        shutil.rmtree(target_path)
-        shutil.move(tmp_path, target_path)
+        self._swap_in(merged.write.mode("overwrite"), table)
 
     def append_evolve(
         self,

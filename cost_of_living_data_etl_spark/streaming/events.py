@@ -183,20 +183,12 @@ def session_aggregation(
     )
 
 
-def click_purchase_attribution(
-    events: DataFrame,
-    horizon_min: int = 30,
-    watermark: str = "60 minutes",
+def _click_purchase_join(
+    events: DataFrame, horizon_min: int, watermark: str, how: str
 ) -> DataFrame:
-    """Stream-stream join: attribute each purchase to the same user's
-    clicks in the preceding ``horizon_min`` minutes.
-
-    Both sides are watermarked and the join carries an event-time range
-    condition — that PAIR is what lets Spark bound the join state
-    (clicks older than watermark+horizon are evicted; without the time
-    bound, stream-stream join state grows forever). Batch twin:
-    q_events_click_attribution.
-    """
+    """Purchases joined (``how``: "inner" or "left_outer") to the same
+    user's clicks in the ``horizon_min`` minutes up to the purchase,
+    both sides watermarked; the two public attribution joins below."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -224,7 +216,7 @@ def click_purchase_attribution(
             F.col("click_ts")
             >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_min} MINUTES")
         ),
-        "inner",
+        how,
     ).select(
         F.col("p_user").alias("user_id"),
         "purchase_id",
@@ -233,6 +225,24 @@ def click_purchase_attribution(
         "click_id",
         "click_ts",
     )
+
+
+def click_purchase_attribution(
+    events: DataFrame,
+    horizon_min: int = 30,
+    watermark: str = "60 minutes",
+) -> DataFrame:
+    """Stream-stream join: attribute each purchase to the same user's
+    clicks in the preceding ``horizon_min`` minutes.
+
+    Both sides are watermarked and the join carries an event-time range
+    condition — that PAIR is what lets Spark bound the join state
+    (clicks older than watermark+horizon are evicted; without the time
+    bound, stream-stream join state grows forever). The batch query
+    q_events_click_attribution calls this function on the events table;
+    a batch plan drops the watermarks.
+    """
+    return _click_purchase_join(events, horizon_min, watermark, "inner")
 
 
 def dedup_within_watermark(events: DataFrame, watermark: str = "60 minutes") -> DataFrame:
@@ -486,15 +496,6 @@ class _EwmaValueProcessor:
             {"user_id": [int(key[0])], "n_events": [int(n)], "ewma_value": [ewma]}
         )
 
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
 
 def ewma_user_value(events: DataFrame) -> DataFrame:
     """Lifetime per-user EWMA of ``value`` via transformWithStateInPandas.
@@ -602,15 +603,6 @@ class _UserProfileProcessor:
             }
         )
 
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
 
 def user_profile_typed_state(events: DataFrame) -> DataFrame:
     """Per-user activity profile via transformWithStateInPandas using
@@ -675,12 +667,6 @@ class _SeededTotalsProcessor:
             }
         )
 
-    def close(self) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
 
 def seeded_user_totals(events: DataFrame, snapshot: DataFrame) -> DataFrame:
     """Running per-user totals seeded from ``snapshot`` (columns
@@ -742,12 +728,6 @@ class _InactivityTimerProcessor:
             }
         )
 
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
 
 def user_inactivity_flags(
     events: DataFrame, watermark_delay: str = "1 second"
@@ -796,42 +776,7 @@ def click_purchase_attribution_outer(
     ever conclude "no match". Spark emits the null rows during
     no-data/state-cleanup micro-batches after the watermark advances.
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_min} MINUTES")
-        ),
-        "left_outer",
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
+    return _click_purchase_join(events, horizon_min, watermark, "left_outer")
 
 
 # ---------------------------------------------------------------------------
@@ -903,15 +848,6 @@ class _PitEnrichProcessor:
                     ),
                 }
             )
-
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
 
 
 #: schema of the union stream pit_enrich_stream consumes
@@ -996,15 +932,6 @@ class _JourneyStringProcessor:
                 "s": [s],
             }
         )
-
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
 
 
 def journey_strings_stream(events: DataFrame) -> DataFrame:

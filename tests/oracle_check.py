@@ -22,44 +22,29 @@ from __future__ import annotations
 
 import datetime
 import math
-import os
 
 import duckdb
 import pandas as pd
 
-#: Strict mode (the DEFAULT; opt out with ORACLE_STRICT=0) tightens
-#: float comparison from rel_tol=1e-6 to rel_tol=1e-9 — empirically
-#: calibrated to the driver's value hash: every driver-green query
-#: measured ≤ 2.1e-10 max relative drift vs its oracle (pure
-#: partial-agg ulp noise the driver's float canonicalization absorbs),
-#: while the one driver-red float case (q_embedding_dim_stats, rounds
-#: 1-2) came from a float32-vs-float64 aggregation divergence in the
-#: 1e-7 class. 1e-9 sits between: it catches the driver-red class
-#: without false-alarming on ulp noise. At 1e-6 a query can be locally
-#: green yet driver-red — which is exactly how that one stayed
-#: undetected for two rounds — so strict is on by default and local
-#: green predicts driver green.
-STRICT = os.environ.get("ORACLE_STRICT", "1") not in ("", "0")
+from cost_of_living_data_etl_spark.sources.tables import TABLE_NAMES
+
+#: Float comparison tolerance, empirically calibrated to the driver's
+#: value hash: every driver-green query measured ≤ 2.1e-10 max relative
+#: drift vs its oracle (pure partial-agg ulp noise the driver's float
+#: canonicalization absorbs), while the one driver-red float case
+#: (q_embedding_dim_stats, rounds 1-2) came from a float32-vs-float64
+#: aggregation divergence in the 1e-7 class. 1e-9 sits between: it
+#: catches the driver-red class without false-alarming on ulp noise.
+#: At 1e-6 a query can be locally green yet driver-red — which is
+#: exactly how that one stayed undetected for two rounds — so local
+#: green must use this tolerance to predict driver green.
 STRICT_REL_TOL = 1e-9
 STRICT_ABS_TOL = 1e-12
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
@@ -123,13 +108,7 @@ def _dtype_tag(s: pd.Series) -> str:
     return "object"
 
 
-def assert_matches_oracle(
-    spark_df,
-    oracle: str,
-    sf_dir: str,
-    rel_tol: float = 1e-6,
-    strict: bool | None = None,
-):
+def assert_matches_oracle(spark_df, oracle: str, sf_dir: str):
     got = _canon(spark_df.toPandas())
     con = duckdb_con(sf_dir)
     try:
@@ -150,8 +129,6 @@ def assert_matches_oracle(
             f"add an explicit CAST to the oracle SQL or the Spark plan"
         )
 
-    if strict is None:
-        strict = STRICT
     for c in got.columns:
         g, w = got[c], want[c]
         if pd.api.types.is_float_dtype(g) or pd.api.types.is_float_dtype(w):
@@ -160,21 +137,16 @@ def assert_matches_oracle(
             for i, (x, y) in enumerate(zip(ga, wa)):
                 if math.isnan(x) and math.isnan(y):
                     continue
-                if strict:
-                    assert math.isclose(
-                        x, y, rel_tol=STRICT_REL_TOL, abs_tol=STRICT_ABS_TOL
-                    ), (
-                        f"col {c} row {i} (STRICT float mode): "
-                        f"spark={x!r} oracle={y!r} — drift above the "
-                        f"driver-green envelope; pin with a deterministic-"
-                        f"order fold or grid-aligned rounding on both "
-                        f"engines (see q_embedding_dim_stats / "
-                        f"q_revenue_anomaly_days)"
-                    )
-                else:
-                    assert math.isclose(x, y, rel_tol=rel_tol, abs_tol=1e-9), (
-                        f"col {c} row {i}: spark={x!r} oracle={y!r}"
-                    )
+                assert math.isclose(
+                    x, y, rel_tol=STRICT_REL_TOL, abs_tol=STRICT_ABS_TOL
+                ), (
+                    f"col {c} row {i}: "
+                    f"spark={x!r} oracle={y!r} — drift above the "
+                    f"driver-green envelope; pin with a deterministic-"
+                    f"order fold or grid-aligned rounding on both "
+                    f"engines (see q_embedding_dim_stats / "
+                    f"q_revenue_anomaly_days)"
+                )
         else:
             mism = (g.astype(str) != w.astype(str))
             if mism.any():

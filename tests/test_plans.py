@@ -889,3 +889,53 @@ def test_every_registering_module_is_imported():
         for a in n.names
     }
     assert registering <= imported, sorted(registering - imported)
+
+
+#: per shared algorithm, a regex that matches its Spark spelling and one
+#: that matches its DuckDB spelling (None: the algorithm has one oracle)
+_SHARED_ALGORITHM_MARKERS = {
+    "30-minute gap sessionization": (
+        r'INTERVAL \{SESSION_GAP_MIN\} MINUTES"',
+        r"> INTERVAL \{SESSION_GAP_MIN\} MINUTE\n",
+    ),
+    "gaps-and-islands": (
+        r'F\.max\("en"\)\.over\(prev\)',
+        r"max\(en\) OVER \(",
+    ),
+    "triangle membership": (
+        r'pairs\.select\(F\.col\("doc_id_1"\)\.alias\("a2"\)',
+        r"JOIN pairs ac ON ac\.doc_id_1 = ab\.doc_id_1",
+    ),
+    "mutual best match": (
+        r'\(-F\.col\("b_id"\)\)\.alias\("nb"\)',
+        r"PARTITION BY a_id\s+ORDER BY cos_sim DESC, b_id\)",
+    ),
+    "click -> purchase attribution": (
+        r'F\.col\("p_user"\) == F\.col\("c_user"\)',
+        None,
+    ),
+    # the row count ``nd`` followed by the sorted-fold sums
+    "ridge Gram": (
+        r'F\.count\(F\.lit\(1\)\)\.cast\("double"\)\.alias\("nd"\)\W+det_sum',
+        r"CAST\(count\(\*\) AS DOUBLE\)\s+AS nd\W+[^\n]*_DSUM_SQL",
+    ),
+}
+
+
+def test_one_spelling_per_shared_algorithm():
+    """Each shared algorithm is written once for Spark and once for
+    DuckDB; every consumer calls those. A second copy would let the
+    two drift apart while both still pass their own oracle."""
+    sources = {
+        str(p.relative_to(_PKG)): p.read_text() for p in _PKG.rglob("*.py")
+    }
+    for algo, markers in _SHARED_ALGORITHM_MARKERS.items():
+        for side, pattern in zip(("Spark", "DuckDB"), markers):
+            if pattern is None:
+                continue
+            hits = [
+                path
+                for path, src in sorted(sources.items())
+                for _ in re.finditer(pattern, src)
+            ]
+            assert len(hits) == 1, f"{algo}, {side} side: {hits}"
