@@ -10,11 +10,15 @@ from __future__ import annotations
 import datetime as dt
 import threading
 
+import pyspark.sql.functions as F
 import pytest
 
 from cost_of_living_data_etl_spark.plans.etl import (
+    FACTS,
     audit_unmatched,
     build_pipeline,
+    conform_to_facts,
+    dim_keys,
     run_pipeline,
     transform_annual_expense,
     transform_living_wage,
@@ -224,6 +228,147 @@ def test_state_filter_excludes_other_states(spark, lake_root, warehouse):
     )
     ids = {r["LOCATION_ID"] for r in res.fact_living_wage.collect()}
     assert 4 not in ids
+
+
+@pytest.fixture(scope="module")
+def edge_lake(tmp_path_factory):
+    """Lake rows for the lookup-vs-join oracle: a null county, a county
+    no dim lists, and a county name with a quote character."""
+    root = tmp_path_factory.mktemp("edge_lake")
+    d = root / LAKE_PREFIX / EXTRACT
+    d.mkdir(parents=True)
+    (d / "living_wage.csv").write_text(
+        "wage_level,num_adults,num_children,num_working,county,usd_amount\n"
+        "LIVING WAGE,2,2,1,Kent,21.34\n"
+        "LIVING WAGE,1,0,1,,15.50\n"
+        "LIVING WAGE,2,3,2,Atlantis,33.00\n"
+        "LIVING WAGE,1,1,1,O'Brien,18.25\n"
+        "POVERTY WAGE,1,1,1,O'Brien,9.00\n"
+    )
+    (d / "expenses.csv").write_text(
+        "expense_category,num_adults,num_children,num_working,county,usd_amount\n"
+        'HOUSING,2,2,1,Kent,"12,345.67"\n'
+        'FOOD,1,0,1,,"9,876.54"\n'
+        'CHILDCARE,1,0,1,Atlantis,"1,000.00"\n'
+        'MEDICAL,2,1,2,O\'Brien,"4,321.00"\n'
+    )
+    (d / "typical_salaries.csv").write_text(
+        "occupational_area,typical_annual_salary,county\n"
+        "Healthcare Support,34780.0,Kent\n"
+        "Legal,98500.0,\n"
+        "Sales,41000.0,Atlantis\n"
+        "Production,52000.0,O'Brien\n"
+    )
+    return str(root)
+
+
+@pytest.fixture(scope="module")
+def edge_dims(spark):
+    """A DE county listed twice, a null county, a quoted county name,
+    and two dim_date rows for ``AS_OF``."""
+    loc = spark.createDataFrame(
+        [
+            (5, "Kent COUNTY", "DE"),
+            (7, "Kent COUNTY", "DE"),
+            (4, "Kent COUNTY", "MD"),
+            (8, "O'Brien COUNTY", "DE"),
+            (9, None, "DE"),
+        ],
+        schema=DIM_LOCATION_SCHEMA,
+    )
+    dd = spark.createDataFrame(
+        [
+            (20240601, AS_OF),
+            (20240699, AS_OF),
+            (20240602, AS_OF + dt.timedelta(days=1)),
+        ],
+        schema=DIM_DATE_SCHEMA,
+    )
+    return loc, dd
+
+
+def _broadcast_join_facts(spark, lake_root, dim_location, dim_date):
+    """The facts as two broadcast inner joins on the dims: the plan the
+    key lookup replaces, kept here as its oracle."""
+    loc = dim_location.filter(F.col("STATE") == "DE").select("LOCATION_ID", "COUNTY")
+    dd = dim_date.filter(F.col("DATE") == F.lit(AS_OF)).select("DATE_ID", "DATE")
+    return {
+        table: transform(read_lake_csv(spark, lake_root, category, EXTRACT), AS_OF)
+        .join(F.broadcast(loc), "COUNTY")
+        .join(F.broadcast(dd), F.col("SNAPSHOT_DATE") == F.col("DATE"))
+        .withColumnRenamed("DATE_ID", "SNAPSHOT_DATE_ID")
+        .select(*keep_cols)
+        for table, category, transform, keep_cols in FACTS
+    }
+
+
+def test_key_lookup_matches_broadcast_join(spark, edge_lake, edge_dims):
+    dim_location, dim_date = edge_dims
+    want = _broadcast_join_facts(spark, edge_lake, dim_location, dim_date)
+    res = build_pipeline(spark, edge_lake, EXTRACT, dim_location, dim_date, as_of=AS_OF)
+    for table, oracle in want.items():
+        got = getattr(res, table.lower())
+        assert got.schema == oracle.schema, table
+        assert got.exceptAll(oracle).count() == 0, table
+        assert oracle.exceptAll(got).count() == 0, table
+    # Kent: 2 DE locations x 2 dates; O'Brien: 1 x 2; null and Atlantis drop
+    counts = {t: df.count() for t, df in want.items()}
+    assert counts == {
+        "FACT_ANNUAL_EXPENSE": 6,
+        "FACT_LIVING_WAGE": 6,
+        "FACT_TYPICAL_ANNUAL_SALARY": 6,
+    }
+
+
+def test_dim_keys_resolves_today_when_as_of_is_none(spark):
+    """``as_of=None`` looks up the dim_date row of the session's
+    current date."""
+    today = spark.sql("SELECT current_date()").first()[0]
+    dd = spark.createDataFrame(
+        [(1, today), (2, today - dt.timedelta(days=400))], schema=DIM_DATE_SCHEMA
+    )
+    loc = spark.createDataFrame([(5, "Kent COUNTY", "DE")], schema=DIM_LOCATION_SCHEMA)
+    facts = spark.createDataFrame([("Kent COUNTY", 7)], "COUNTY string, X int")
+    rows = conform_to_facts(facts, dim_keys(loc, dd), ["X", "SNAPSHOT_DATE_ID", "LOCATION_ID"])
+    assert [tuple(r) for r in rows.collect()] == [(7, 1, 5)]
+
+
+def test_conform_rejects_keep_list_without_dim_keys(spark, edge_dims):
+    """A raise, not an assert: the guard holds under ``python -O``."""
+    keys = dim_keys(*edge_dims, as_of=AS_OF)
+    facts = spark.createDataFrame([("Kent COUNTY", 1)], "COUNTY string, X int")
+    with pytest.raises(ValueError, match="must end with"):
+        conform_to_facts(facts, keys, ["X", "LOCATION_ID", "SNAPSHOT_DATE_ID"])
+
+
+def test_load_submits_five_jobs(spark, lake_root, warehouse, tmp_path):
+    """Two dim collects and three appends; the declared-schema dim
+    reads themselves submit no job (no footer read)."""
+    wh = _fresh_warehouse(spark, warehouse, Warehouse, tmp_path / "wh")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("test-etl-dim-reads", "declared-schema dim reads")
+        wh.read(spark, "dim_location", DIM_LOCATION_SCHEMA)
+        wh.read(spark, "dim_date", DIM_DATE_SCHEMA)
+        sc.setJobGroup("test-etl-load", "one run_pipeline call")
+        run_pipeline(spark, lake_root, wh, EXTRACT, as_of=AS_OF)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(tracker.getJobIdsForGroup("test-etl-dim-reads")) == []
+    assert len(tracker.getJobIdsForGroup("test-etl-load")) == 5
+
+
+def test_declared_dim_schemas_match_written_dims(spark, tmp_path):
+    """The declared dim schemas are the ones the dims have on disk, so a
+    declared read cannot drift from an inferred one."""
+    from tools.bench_etl_vs_pandas import write_dims
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    write_dims(spark, wh)
+    assert wh.read(spark, "dim_location").schema == DIM_LOCATION_SCHEMA
+    assert wh.read(spark, "dim_date").schema == DIM_DATE_SCHEMA
 
 
 def test_main_event_wrapper_end_to_end(spark, lake_root, warehouse, tmp_path):

@@ -176,19 +176,24 @@ def pandas_etl(lake_root: str, out_dir: str) -> dict[str, int]:
     return out
 
 
+def write_dims(spark, wh) -> None:
+    """Overwrite ``dims()`` into the warehouse ``wh`` as parquet tables."""
+    import pyspark.sql.functions as F
+
+    dim_location, dim_date = dims()
+    wh.overwrite(spark.createDataFrame(dim_location), "dim_location")
+    wh.overwrite(
+        spark.createDataFrame(dim_date).withColumn("DATE", F.col("DATE").cast("date")),
+        "dim_date",
+    )
+
+
 def spark_etl(spark, lake_root: str, wh_dir: str) -> dict[str, int]:
     from cost_of_living_data_etl_spark.plans.etl import run_pipeline
     from cost_of_living_data_etl_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(wh_dir)
-    dim_location, dim_date = dims()
-    wh.overwrite(spark.createDataFrame(dim_location), "dim_location")
-    wh.overwrite(
-        spark.createDataFrame(dim_date).withColumn(
-            "DATE", __import__("pyspark.sql.functions", fromlist=["col"]).col("DATE").cast("date")
-        ),
-        "dim_date",
-    )
+    write_dims(spark, wh)
     return run_pipeline(spark, lake_root, wh, EXTRACT_DATE, as_of=AS_OF)
 
 
