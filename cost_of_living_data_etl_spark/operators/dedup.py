@@ -43,7 +43,6 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
 )
 from cost_of_living_data_etl_spark.functions.columns import det_sum
 from cost_of_living_data_etl_spark.plans.catalog import register
-from cost_of_living_data_etl_spark.profiles import USE_PROFILE, resolve
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -276,21 +275,23 @@ def signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lsh_candidates(
     mh: DataFrame,
-    max_bucket=USE_PROFILE,
+    max_bucket: int | None = None,
     touching_only: str | None = None,
 ) -> DataFrame:
     """Candidate generation: distinct (doc_id_1 < doc_id_2) pairs that
     share at least one band bucket of the signature table ``mh``.
 
-    ``max_bucket`` is the production skew guard: band buckets larger
-    than the cap are dropped BEFORE the self-join (a bucket of size b
-    emits b² candidate pairs — boilerplate/empty documents at 100 TB
-    produce million-row buckets that would dominate the join). Capped
-    buckets are near-exact-dup families, which exact dedup already
-    catches upstream. Defaults to the active profile's
-    ``lsh_max_bucket`` (profiles.py): None under parity — exact oracle
-    replay — and capped under SPARK_GRAFT_PROFILE=production; an
-    explicit value, including None for lossless, always wins.
+    ``max_bucket`` is the skew guard: band buckets larger than the cap
+    are dropped BEFORE the self-join (a bucket of size b emits b²
+    candidate pairs — boilerplate/empty documents at 100 TB produce
+    million-row buckets that would dominate the join). Capped buckets
+    are near-exact-dup families, which exact dedup already catches
+    upstream. The default None is lossless, which the oracles replay
+    exactly. For callers that want a cap, 1000 is the recommended
+    value: it bounds any bucket to ≤ ~500k candidate pairs (on the
+    50k-doc hostile corpus the 5k-doc boilerplate family emits 12.5M
+    pairs lossless and 10 organic pairs capped; SCALE.md "Skew
+    guards").
 
     ``touching_only``: name of a boolean column in ``mh``; when given,
     only pairs where at least one side has it true are mined — the
@@ -300,7 +301,6 @@ def lsh_candidates(
     With 16 perms in 4×4 bands, a 0.9-Jaccard pair is caught with
     p≈0.986. The join shuffles (doc_id, band_hash) rows only.
     """
-    max_bucket = resolve(max_bucket, "lsh_max_bucket")
     # one row → BANDS rows via posexplode: minhashes computed once per
     # doc (a union of per-band branches would recompute them per band)
     band_cols = ["doc_id"] + ([touching_only] if touching_only else [])
@@ -375,7 +375,7 @@ def hset_containment():
 
 def neardup_pairs_from_sigs(
     mh: DataFrame,
-    max_bucket=USE_PROFILE,
+    max_bucket: int | None = None,
     touching_only: str | None = None,
 ) -> DataFrame:
     """(doc_id_1, doc_id_2, jaccard) near-dup pairs over a signature
@@ -390,7 +390,7 @@ def neardup_pairs_from_sigs(
 
 
 def minhash_pair_plan(
-    spark: SparkSession, sf_dir: str, max_bucket=USE_PROFILE
+    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs of the fixture corpus,
     Jaccard-verified: neardup_pairs_from_sigs over signature_table."""

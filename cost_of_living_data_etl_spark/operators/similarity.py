@@ -137,13 +137,8 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# all-pairs refusal threshold (~5e9 candidate pairs at the default);
-# centralized in profiles.py (exact_pairs_max_rows) so one switch
-# carries every guard — module constant kept as the parity alias for
-# the existing call sites/tests
-from cost_of_living_data_etl_spark.profiles import PARITY, active_profile
-
-MAX_EXACT_PAIRS_ROWS = PARITY.exact_pairs_max_rows
+# all-pairs refusal threshold (~5e9 candidate pairs at this size)
+MAX_EXACT_PAIRS_ROWS = 100_000
 
 
 @register(
@@ -187,12 +182,11 @@ def q_embed_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # bounded guard action: scans at most MAX+1 rows (a full count()
     # here would double-scan the table on every plan construction)
-    max_rows = active_profile().exact_pairs_max_rows
-    n = e.limit(max_rows + 1).count()
-    if n > max_rows:
+    n = e.limit(MAX_EXACT_PAIRS_ROWS + 1).count()
+    if n > MAX_EXACT_PAIRS_ROWS:
         raise ValueError(
             f"q_embed_neardup_pairs is an O(n²) validation baseline and the "
-            f"input has > {max_rows} vectors — use "
+            f"input has > {MAX_EXACT_PAIRS_ROWS} vectors — use "
             f"q_embed_neardup_lsh (sign-LSH blocked, same cosine predicate) "
             f"at this scale."
         )

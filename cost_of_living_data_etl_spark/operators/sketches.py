@@ -1,6 +1,6 @@
 """Sketch-based operators: bounded-memory heavy hitters, mergeable
-HyperLogLog rollup tables (engine-native and portable deterministic
-forms), and Bloom-filter join pruning.
+HyperLogLog rollup tables (a portable deterministic register form),
+and Bloom-filter join pruning.
 
 These are the patterns a 100 TB pipeline reaches for when the KEY
 SPACE itself is too large to shuffle, broadcast, or hold exactly:
@@ -23,17 +23,16 @@ SPACE itself is too large to shuffle, broadcast, or hold exactly:
   memory safety. At fixture scale the cap is never hit and the summary
   is exact-then-truncate, the tightest bound.)
 
-- **HLL sketch rollup**: ``hll_sketch_agg`` (Datasketches HLL)
-  produces a fixed-size binary sketch per group that is *mergeable*:
-  unioning the sketches of A and B estimates |A ∪ B| within the same
-  error bound as sketching A ∪ B directly (the registers merge
-  exactly; only the estimator mode can differ for tiny inputs).
-  Persist per-(day, dim) sketches once, then answer any coarser
-  rollup (per-month, per-dim, grand total) by ``hll_union_agg`` over
-  the sketch table — no re-scan of raw data, ever. This is the
-  incremental-analytics pattern: each new ingest batch appends its
-  sketches and every historical rollup stays queryable at sketch
-  cost.
+- **HLL sketch rollup**: ``det_hll_registers`` builds a fixed-size
+  HyperLogLog register table per group that is *mergeable*: the
+  max-merge of the registers of A and B equals the registers of
+  A ∪ B exactly, so the estimate of a union is bit-identical to the
+  estimate of a direct sketch. Persist per-(day, dim) registers once,
+  then answer any coarser rollup (per-month, per-dim, grand total) by
+  ``det_hll_merge`` over the register table — no re-scan of raw data,
+  ever. This is the incremental-analytics pattern: each new ingest
+  batch appends its registers and every historical rollup stays
+  queryable at sketch cost.
 
 The reference has no aggregation layer at all (SURVEY §2.5 — verified
 absent, reference app.py:1-206); both operators are north-star
@@ -272,69 +271,24 @@ def q_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HLL sketch rollup: persisted per-day sketches, union-merged rollups
-# ---------------------------------------------------------------------------
-
-
-def build_hll_rollup(
-    df: DataFrame, group_cols: list[str], distinct_col: str, lgk: int = 12
-) -> DataFrame:
-    """Fine-grained sketch table: one Datasketches-HLL binary sketch of
-    ``distinct_col`` per ``group_cols`` cell, plus the exact row count.
-
-    Intended to be PERSISTED (parquet handles the binary column); each
-    ingest batch appends its cells and coarser rollups are answered by
-    ``merge_hll_rollup`` without re-reading raw data.
-    """
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(distinct_col, F.lit(lgk)).alias("hll_sketch"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def merge_hll_rollup(sketches: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Roll a sketch table up to coarser ``group_cols``: union the
-    sketches (register-exact merge; estimates stay within HLL error of
-    a direct sketch of the union) and sum the exact row counts. Input
-    and output are both sketch-table-shaped, so rollups compose
-    (day → month → year)."""
-    agg = [
-        F.hll_union_agg("hll_sketch").alias("hll_sketch"),
-        F.sum("n_rows").alias("n_rows"),
-    ]
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(*agg)
-    return sketches.agg(*agg)
-
-
-def estimate_distinct(sketches: DataFrame) -> DataFrame:
-    """Replace the binary sketch column with its cardinality estimate."""
-    other = [c for c in sketches.columns if c != "hll_sketch"]
-    return sketches.select(
-        *other, F.hll_sketch_estimate("hll_sketch").alias("n_distinct_est")
-    )
-
-
-# ---------------------------------------------------------------------------
 # deterministic portable HLL: md5-derived registers in an exploded
-# (group, idx, reg) table — the same algorithm, but every step is plain
-# relational algebra, so ANY engine replays it bit-for-bit
+# (group, idx, reg) table — every step is plain relational algebra, so
+# ANY engine replays it bit-for-bit
 # ---------------------------------------------------------------------------
 #
-# Why a second HLL: ``hll_sketch_agg`` above is the production variant
-# (opaque Datasketches binary, fastest, engine-native) but its register
-# layout is engine-SPECIFIC, so no cross-engine oracle can check it.
-# This variant fixes the hash (md5 → 60-bit int: low p bits pick the
-# register, the leading-zero count of the remaining 48 bits is the
-# rank) and stores registers as ROWS. All three sketch operations are
-# then vanilla SQL — build = GROUP BY max(rho), merge = GROUP BY
-# max(reg) (max is associative ⇒ rollups compose exactly like the
-# binary union), estimate = one aggregate over ≤ m rows per group —
-# which makes the whole pipeline hash-verifiable against DuckDB and
-# portable across warehouses (the "HLL in pure SQL" interop pattern).
-# Cost: ~9 bytes/register-row vs 1 byte/register packed; at lgK=12
-# that is ≤ 36 KB per persisted cell, still thousands of times smaller
-# than re-scanning raw data at 100 TB.
+# Why registers as rows: an engine-native sketch (an opaque binary
+# register layout) is engine-SPECIFIC, so no cross-engine oracle can
+# check it. This form fixes the hash (md5 → 60-bit int: low p bits
+# pick the register, the leading-zero count of the remaining 48 bits
+# is the rank) and stores registers as ROWS. All three sketch
+# operations are then vanilla SQL — build = GROUP BY max(rho), merge =
+# GROUP BY max(reg) (max is associative ⇒ rollups compose exactly),
+# estimate = one aggregate over ≤ m rows per group — which makes the
+# whole pipeline hash-verifiable against DuckDB and portable across
+# warehouses (the "HLL in pure SQL" interop pattern). Cost: ~9
+# bytes/register-row vs 1 byte/register packed; at p=12 that is ≤ 36
+# KB per persisted cell, still thousands of times smaller than
+# re-scanning raw data at 100 TB.
 
 DET_HLL_P = 12
 DET_HLL_M = 1 << DET_HLL_P  # 4096 registers
@@ -490,9 +444,7 @@ def q_sketch_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists per ingest batch, and every coarser rollup (this one
     collapses ~2400 days) reads only sketches. Uses the deterministic
     portable HLL so the whole sketch→merge→estimate path hash-matches
-    the DuckDB oracle; ``build_hll_rollup`` (Datasketches) is the
-    engine-native drop-in with identical mergeability, covered in
-    tests/test_sketches.py."""
+    the DuckDB oracle."""
     orders = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
         F.col("o_orderpriority").alias("priority"),

@@ -135,8 +135,7 @@ def q_containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         signature_table,
     )
 
-    # max_bucket=None: the oracle replays the uncapped band join under
-    # every profile
+    # max_bucket=None: the oracle replays the uncapped band join
     mh = signature_table(spark, sf_dir)
     return (
         join_hsets(lsh_candidates(mh, max_bucket=None), mh)

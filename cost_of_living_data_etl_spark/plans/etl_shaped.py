@@ -71,10 +71,12 @@ from cost_of_living_data_etl_spark.sources.tables import (
 def q_etl_shaped_conform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference pipeline shape (app.py:33-192) over customer⋈nation.
 
-    Same plan as transform_*→conform_to_facts: pushed substring
-    filter, native renames/casts/concat, a constant snapshot column,
-    broadcast dim join, final projection. Zero shuffles besides the
-    (map-side) broadcast probe at any scale.
+    Keeps the reference's broadcast-join shape on purpose (the load
+    itself, plans/etl.py::conform_to_facts, conforms by a literal key
+    lookup instead): pushed substring filter, native
+    renames/casts/concat, a constant snapshot column, broadcast dim
+    join, final projection. Zero shuffles besides the (map-side)
+    broadcast probe at any scale.
     """
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")

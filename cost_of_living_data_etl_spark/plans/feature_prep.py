@@ -647,20 +647,12 @@ def q_column_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile to Spark's Expand strategy (|cols|× row expansion, then
     one partial-aggregated shuffle); the output unpivots |cols| rows
     driver-side from a 1-row aggregate. The oracle's 5-scan UNION ALL
-    shows what the single-pass form replaces. At 100 TB you swap
-    exact count_distinct for approx_count_distinct (HLL, one pass, no
-    Expand) — the profile consumer tolerates ±2%: that swap is the
-    ``approx_distinct`` guard of SPARK_GRAFT_PROFILE=production
-    (profiles.py); parity keeps the exact, oracle-pinnable variant.
+    shows what the single-pass form replaces. At 100 TB a profiling
+    consumer that tolerates ±2% can swap exact count_distinct for
+    approx_count_distinct (HLL, one pass, no Expand); this entry keeps
+    the exact, oracle-pinnable variant.
     """
-    from cost_of_living_data_etl_spark.profiles import active_profile
-
     orders = load_table(spark, sf_dir, "orders")
-    nd = (
-        F.approx_count_distinct
-        if active_profile().approx_distinct
-        else F.count_distinct
-    )
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
     for c in PROFILE_COLS:
         aggs.append(
@@ -668,7 +660,7 @@ def q_column_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias(f"nulls_{c}")
         )
-        aggs.append(nd(F.col(c)).cast("long").alias(f"nd_{c}"))
+        aggs.append(F.count_distinct(F.col(c)).cast("long").alias(f"nd_{c}"))
     one = orders.agg(*aggs)
     stack = ", ".join(
         f"'{c}', nulls_{c}, nd_{c}" for c in PROFILE_COLS

@@ -43,7 +43,6 @@ from cost_of_living_data_etl_spark.functions.checkpoints import (
 )
 from cost_of_living_data_etl_spark.operators.dedup import SHINGLES_SQL, shingle_docs
 from cost_of_living_data_etl_spark.plans.catalog import register
-from cost_of_living_data_etl_spark.profiles import USE_PROFILE, resolve
 from cost_of_living_data_etl_spark.sources.tables import load_table
 
 SETSIM_T = 0.5  # exact-join Jaccard threshold
@@ -109,27 +108,25 @@ def q_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setsim_pairs(load_table(spark, sf_dir, "documents"))
 
 
-def setsim_pairs(
-    docs: DataFrame, max_prefix_df=USE_PROFILE
-) -> DataFrame:
+def setsim_pairs(docs: DataFrame, max_prefix_df: int | None = None) -> DataFrame:
     """Exact Jaccard >= SETSIM_T pair miner (PPJoin prefix filtering)
     over a (doc_id, text) frame — the engine behind
     ``q_setsim_prefix_join`` and the threshold-curve consumer.
 
-    ``max_prefix_df`` is the production skew guard the docstring above
-    names: tokens with document frequency above the cap are dropped
-    from PREFIXES (the candidate generator) — a boilerplate family
-    whose every token is df-heavy generates NO candidates instead of a
-    b² bucket. Candidates that are generated still verify on the full
+    ``max_prefix_df`` is the skew guard the docstring above names:
+    tokens with document frequency above the cap are dropped from
+    PREFIXES (the candidate generator) — a boilerplate family whose
+    every token is df-heavy generates NO candidates instead of a b²
+    bucket. Candidates that are generated still verify on the full
     hashed-shingle sets, so surviving pairs are exact; the trade is
     recall on pairs whose ONLY shared prefix token is df-heavy (i.e.
-    boilerplate families — which exact dedup catches upstream).
-    Defaults to the active profile's ``setsim_max_prefix_df``
-    (profiles.py): None under parity — the lossless contract and exact
-    oracle replay — and capped under SPARK_GRAFT_PROFILE=production;
-    an explicit argument (including None) always wins.
+    boilerplate families — which exact dedup catches upstream). The
+    default None is lossless, which the oracles replay exactly. For
+    callers that want a cap, 1000 is the recommended value: a token
+    matching d documents emits up to d² candidates, so 1000 bounds
+    any token's contribution to ≤ ~500k pairs, the same bound as
+    ``lsh_candidates(max_bucket=1000)``.
     """
-    max_prefix_df = resolve(max_prefix_df, "setsim_max_prefix_df")
     # ONE shingling pass: the regex split + 3-gram build is the
     # expensive kernel and this plan consumes its output on THREE
     # branches (df counts, prefix ranking, verification) — Catalyst

@@ -159,31 +159,10 @@ def _input_bytes(path: str) -> list[int]:
     return []
 
 
-#: byte-string suffixes accepted by Spark's byteStringAsBytes (JEC-style)
-_BYTE_SUFFIX = {
-    "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
-
-
 def _max_partition_bytes(spark: SparkSession) -> int:
-    """``spark.sql.files.maxPartitionBytes`` in bytes, honoring Spark's
-    byte-suffix forms ('128m', '1g', …) — a digit-strip here turned
-    '128m' into 128 bytes, inflating est_splits and silently disabling
-    the re-key for any unit-suffixed session conf (ADVICE r09)."""
-    raw = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    ).strip().lower()
-    num = raw.rstrip("bkmgtp")
-    suffix = raw[len(num):]
-    try:
-        return int(num) * _BYTE_SUFFIX.get(suffix, 1)
-    except ValueError:
-        return 128 * 1024 * 1024
+    """``spark.sql.files.maxPartitionBytes`` in bytes, as Spark's own
+    conf parses it (so '128m' and '1g' read as Spark reads them)."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
 def _scan_parallelized(

@@ -40,7 +40,6 @@ from cost_of_living_data_etl_spark.operators.dedup import (
     minhash_signatures,
     neardup_pairs_from_sigs,
 )
-from cost_of_living_data_etl_spark.profiles import USE_PROFILE
 
 
 def ingest_dedup_batch(
@@ -48,7 +47,7 @@ def ingest_dedup_batch(
     batch_docs: DataFrame,
     root: str,
     batch_id: int,
-    max_bucket=USE_PROFILE,
+    max_bucket: int | None = None,
 ) -> None:
     """Process one micro-batch: persist its signatures, mine pairs
     touching it. Factored out of the foreachBatch closure so replay
@@ -72,7 +71,7 @@ def dedup_ingest_sink(
     docs_stream: DataFrame,
     root: str,
     checkpoint: str,
-    max_bucket=USE_PROFILE,
+    max_bucket: int | None = None,
 ):
     """foreachBatch writer: dedup-at-ingest over a documents stream
     (needs ``doc_id`` and ``text`` columns). Start with

@@ -207,6 +207,32 @@ def test_signature_consumers_rekey_documents_scan(spark, sf_smoke, name):
         assert bool(over_rekey) == rekeyed, (name, lines[i - 1].strip())
 
 
+@pytest.mark.parametrize(
+    "conf,expected",
+    [
+        ("134217728", 134217728),
+        ("128m", 134217728),
+        ("1g", 1073741824),
+        ("64k", 65536),
+        ("7", 7),
+    ],
+)
+def test_max_partition_bytes_reads_spark_parse(spark, conf, expected):
+    """The scan re-key sizes splits with the byte count Spark itself
+    parses from ``spark.sql.files.maxPartitionBytes``, suffixes
+    included: '128m' misread as 128 bytes inflates the split estimate
+    and silently disables the re-key."""
+    from cost_of_living_data_etl_spark.sources import tables
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, conf)
+    try:
+        assert tables._max_partition_bytes(spark) == expected
+    finally:
+        spark.conf.set(key, prior)
+
+
 HEADLINE_NO_PYTHON_ROW_UDF = [
     "q1_pricing_summary",
     "q5_region_nation_revenue",

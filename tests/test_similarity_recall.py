@@ -51,20 +51,11 @@ def test_lsh_neardup_recall_floor(spark):
 def test_exact_pairs_guard_refuses_large_input(spark, monkeypatch):
     """The O(n²) baseline must not be plannable on production-sized
     input from the public catalog."""
-    import dataclasses
-
     import pytest
 
     import cost_of_living_data_etl_spark.operators.similarity as sim
-    from cost_of_living_data_etl_spark.profiles import PARITY
 
-    # the threshold lives in the active profile since round 8
-    # (profiles.py collects every guard behind one switch)
-    monkeypatch.setattr(
-        sim,
-        "active_profile",
-        lambda: dataclasses.replace(PARITY, exact_pairs_max_rows=10),
-    )
+    monkeypatch.setattr(sim, "MAX_EXACT_PAIRS_ROWS", 10)
     with pytest.raises(ValueError, match="q_embed_neardup_lsh"):
         sim.q_embed_neardup_pairs(spark, SF_MED)
 

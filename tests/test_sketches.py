@@ -15,12 +15,11 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from cost_of_living_data_etl_spark.operators.sketches import (
-
-    build_hll_rollup,
-    estimate_distinct,
+    det_hll_estimate,
+    det_hll_merge,
+    det_hll_registers,
     exact_heavy_hitters,
     heavy_hitter_candidates,
-    merge_hll_rollup,
     partition_summaries,
     safe_capacity,
 )
@@ -92,55 +91,6 @@ def test_summary_size_bounded(spark):
     assert summaries.count() <= capacity * parts
 
 
-def test_hll_union_tracks_direct_sketch(spark, sf_oracle):
-    """Union of ~2400 per-day sketches estimates the same cardinality
-    as one sketch over the raw union, within HLL error — rolling up a
-    persisted fine-grained sketch table costs only sketch-mode error
-    (union forces dense HLL; a small direct sketch may still be in
-    near-exact coupon mode, so bit-equality is NOT the contract)."""
-    orders = spark.read.parquet(f"{sf_oracle}/orders.parquet").select(
-        F.to_date("o_orderdate").alias("day"), "o_orderpriority", "o_custkey"
-    )
-    daily = build_hll_rollup(orders, ["day", "o_orderpriority"], "o_custkey")
-    merged = {
-        r["o_orderpriority"]: r["n_distinct_est"]
-        for r in estimate_distinct(
-            merge_hll_rollup(daily, ["o_orderpriority"])
-        ).collect()
-    }
-    direct = {
-        r["o_orderpriority"]: r["n_distinct_est"]
-        for r in estimate_distinct(
-            build_hll_rollup(orders, ["o_orderpriority"], "o_custkey")
-        ).collect()
-    }
-    assert merged.keys() == direct.keys()
-    for k in direct:
-        assert abs(merged[k] - direct[k]) / direct[k] < 0.03
-
-
-def test_hll_rollup_bounded_error_and_counts(spark, sf_oracle):
-    orders = spark.read.parquet(f"{sf_oracle}/orders.parquet")
-    sketches = build_hll_rollup(orders, ["o_orderpriority"], "o_custkey")
-    est = {
-        r["o_orderpriority"]: (r["n_distinct_est"], r["n_rows"])
-        for r in estimate_distinct(sketches).collect()
-    }
-    exact = {
-        r["o_orderpriority"]: (r["d"], r["n"])
-        for r in orders.groupBy("o_orderpriority")
-        .agg(
-            F.count_distinct("o_custkey").alias("d"), F.count(F.lit(1)).alias("n")
-        )
-        .collect()
-    }
-    assert est.keys() == exact.keys()
-    for k in exact:
-        (e_d, e_n), (x_d, x_n) = est[k], exact[k]
-        assert e_n == x_n  # row counts ride along exactly
-        assert abs(e_d - x_d) / x_d < 0.05
-
-
 def test_sketch_table_survives_parquet_roundtrip(spark, sf_oracle, tmp_path):
     """The incremental pattern: persist daily sketches, append a new
     batch's sketches, answer the global rollup from the table alone."""
@@ -150,11 +100,11 @@ def test_sketch_table_survives_parquet_roundtrip(spark, sf_oracle, tmp_path):
     old = orders.filter(F.year("day") <= 1996)
     new = orders.filter(F.year("day") > 1996)
     path = str(tmp_path / "sketches")
-    build_hll_rollup(old, ["day"], "o_custkey").write.parquet(path)
-    build_hll_rollup(new, ["day"], "o_custkey").write.mode("append").parquet(path)
+    det_hll_registers(old, ["day"], "o_custkey").write.parquet(path)
+    det_hll_registers(new, ["day"], "o_custkey").write.mode("append").parquet(path)
 
     table = spark.read.parquet(path)
-    total = estimate_distinct(merge_hll_rollup(table, [])).collect()[0]
+    total = det_hll_estimate(det_hll_merge(table, []), []).collect()[0]
     exact = orders.agg(
         F.count_distinct("o_custkey").alias("d"), F.count(F.lit(1)).alias("n")
     ).collect()[0]
@@ -188,11 +138,6 @@ def test_heavy_hitter_plan_shape(spark, sf_oracle):
 
 
 def test_det_hll_bounded_error_vs_exact(spark, sf_oracle):
-    from cost_of_living_data_etl_spark.operators.sketches import (
-        det_hll_estimate,
-        det_hll_registers,
-    )
-
     li = spark.read.parquet(f"{sf_oracle}/lineitem.parquet").select(
         "l_returnflag", "l_partkey"
     )
@@ -217,15 +162,9 @@ def test_det_hll_bounded_error_vs_exact(spark, sf_oracle):
 def test_det_hll_merge_is_lossless(spark, sf_oracle):
     """max-merging per-day register tables gives BIT-IDENTICAL
     estimates to building the registers at the coarse grain directly —
-    stronger than the Datasketches contract (which only promises
+    stronger than a binary-sketch union (which only promises
     within-error), and exactly why the merged rollup can share one
     DuckDB oracle with the direct form."""
-    from cost_of_living_data_etl_spark.operators.sketches import (
-        det_hll_estimate,
-        det_hll_merge,
-        det_hll_registers,
-    )
-
     orders = spark.read.parquet(f"{sf_oracle}/orders.parquet").select(
         F.to_date("o_orderdate").alias("day"), "o_orderpriority", "o_custkey"
     )
